@@ -3788,8 +3788,8 @@ def q_bm25_search_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents scan and the term state is its partition-pruned 't'
     slice — retrieval then scores from the state zone with zero
     re-tokenization (the shape a deployment reaches after
-    run_corpus_ingest_state_refresh has been maintaining the grain
-    incrementally). Served from the SHARED session corpus zone —
+    run_corpus_ingest(state_refresh=True) has been maintaining the
+    grain incrementally). Served from the SHARED session corpus zone —
     one grain land per session, every state entry reads it. Same
     oracle as bm25_search: the composition is bit-identical."""
     states = _corpus_states(spark, sf_dir)

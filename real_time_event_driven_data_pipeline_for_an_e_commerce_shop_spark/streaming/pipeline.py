@@ -34,6 +34,8 @@ from __future__ import annotations
 import functools
 import logging
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -462,32 +464,190 @@ def _land_epoch(
 
 
 KMEANS_MODEL_DIR = "kmeans_model"
-KMEANS_META_FILE = "_model_meta.json"
+PQ_MODEL_DIR = "pq_model"
+IVFPQ_MODEL_DIR = "ivfpq_model"
+IVF_MODEL_DIR = "ivf_model"
+BINARY_MODEL_DIR = "binary_model"
+BPE_MODEL_DIR = "bpe_model"
+MODEL_META_FILE = "_model_meta.json"
 
 
-def _read_kmeans_meta(zone_dir: str) -> dict | None:
+def _read_model_meta(zone_dir: str, model_dir: str) -> dict | None:
+    """Meta of any generation-tracked model zone (the ``*_MODEL_DIR``
+    names above), or None when no model has been fit yet."""
     import json
 
-    p = os.path.join(zone_dir, KMEANS_MODEL_DIR, KMEANS_META_FILE)
+    p = os.path.join(zone_dir, model_dir, MODEL_META_FILE)
     if not os.path.isfile(p):
         return None
     with open(p) as f:
         return json.load(f)
 
 
-def _write_kmeans_meta(zone_dir: str, meta: dict) -> None:
+def _write_model_meta(zone_dir: str, model_dir: str, meta: dict) -> None:
     """tmp+rename, same atomicity as the epoch commit markers."""
+    import io
     import json
     import tempfile
 
-    d = os.path.join(zone_dir, KMEANS_MODEL_DIR)
+    d = os.path.join(zone_dir, model_dir)
     os.makedirs(d, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    import io
-
     with io.open(fd, "w") as f:
         json.dump(meta, f)
-    os.replace(tmp, os.path.join(d, KMEANS_META_FILE))
+    os.replace(tmp, os.path.join(d, MODEL_META_FILE))
+
+
+def _model_gen_dir(
+    zone_dir: str, model_dir: str, gen: int | None
+) -> str | None:
+    """The landed directory of a model generation (default: the
+    current one per the meta), or None when no model exists yet."""
+    if gen is None:
+        meta = _read_model_meta(zone_dir, model_dir)
+        if meta is None:
+            return None
+        gen = meta["gen"]
+    p = os.path.join(zone_dir, model_dir, f"gen={gen}")
+    return p if os.path.isdir(p) else None
+
+
+def _mean_dist(encoded: DataFrame) -> float | None:
+    """Deterministic mean of an encode's per-row ``dist`` (decimal-
+    summed over the already det-round-8 distances) — the drift
+    statistic of every distance-scored model gate. One scalar
+    aggregate; bounded driver transfer."""
+    row = encoded.agg(
+        (
+            F.sum(F.col("dist").cast("decimal(28,12)"))
+            / F.count(F.lit(1))
+        )
+        .cast("double")
+        .alias("m")
+    ).collect()[0]
+    return None if row["m"] is None else float(row["m"])
+
+
+def _compaction_due(zone_dir: str, name: str, every: int | None) -> bool:
+    """The ``auto_compact_every`` trigger: the zone's committed epoch
+    count reached the threshold (folding resets it to one)."""
+    return bool(every) and len(committed_epochs(zone_dir, name)) >= every
+
+
+@dataclass(frozen=True)
+class _ModelGate:
+    """The per-gate pieces :func:`_run_model_gate` drives.
+
+    * ``fit(fit_input, gen, gdir)`` learns generation ``gen``, lands
+      the model under ``gdir`` and returns the fit-time encode of
+      ``fit_input`` (lazy; the lifecycle persists it). Each fit is a
+      deterministic function of its input, which is what makes every
+      crash window replay to the identical model.
+    * ``encode(batch, gen)`` encodes a batch against the LANDED
+      generation ``gen`` (what serving reads, never an in-memory
+      sibling).
+    * ``refit_input(batch)`` is what a gen ≥ 1 fit learns from: the
+      committed corpus plus the in-flight batch.
+    * ``land(batch, out, gen, epoch_id)`` lands the epoch's zone rows.
+    * ``statistic`` maps an encode to the drift statistic; the meta
+      records its fit-time value under ``stat_key``.
+    """
+
+    zone: str
+    model_dir: str
+    fit: Callable[[DataFrame, int, str], DataFrame]
+    encode: Callable[[DataFrame, int], DataFrame]
+    refit_input: Callable[[DataFrame], DataFrame]
+    land: Callable[[DataFrame, DataFrame, int, int], None]
+    empty_schema: str
+    meta_params: dict
+    statistic: Callable[[DataFrame], float | None] = _mean_dist
+    stat_key: str = "fit_mean_dist"
+
+
+def _run_model_gate(
+    spark: SparkSession,
+    zone_dir: str,
+    gate: _ModelGate,
+    batch: DataFrame,
+    epoch_id: int,
+    drift_refit_factor: float | None,
+) -> None:
+    """The ONE fit / encode / drift / refit / land lifecycle of every
+    streaming model gate (PQ, binary, IVFPQ, IVF, k-means, BPE), run
+    once per epoch:
+
+    * first non-empty epoch FITS gen 0 on the batch (an empty epoch
+      before any model lands an empty frame; the next one fits);
+    * later epochs ENCODE the batch against the landed model — no
+      refit in the steady state, committed rows are never re-encoded;
+    * when the batch's statistic exceeds ``drift_refit_factor ×`` the
+      model's fit-time value, the model REFITS gen+1 over
+      ``refit_input`` and that full re-encode lands in this epoch —
+      the zone readers filter to the current generation, so the swap
+      is atomic at the meta write;
+    * the epoch lands with the generation that produced it (the code
+      and assignment zones tag every row with ``model_gen``; the BPE
+      counts zone lands its counts whatever the decision).
+
+    Crash discipline: the model lands under its gen dir and the meta
+    (with ``fit_epoch``, for replay-stable refit decisions) commits
+    BEFORE the zone epoch. A replay of a committed epoch is a no-op;
+    a replay whose meta names this epoch (meta committed, zone epoch
+    not) redoes the recorded fit rather than re-deciding it.
+
+    One encode pass per epoch (optimization r17, guide §1.2): the
+    statistic and the landing both consume the encode, so it is
+    persisted once (micro-batch-bounded rows) and released after the
+    land — streams are long-lived."""
+    if epoch_id in committed_epochs(zone_dir, gate.zone):
+        return  # replayed, fully landed
+
+    def fit(fit_input: DataFrame, gen: int) -> DataFrame:
+        gdir = os.path.join(zone_dir, gate.model_dir, f"gen={gen}")
+        out = gate.fit(fit_input, gen, gdir).persist()
+        _write_model_meta(
+            zone_dir,
+            gate.model_dir,
+            {
+                "gen": gen,
+                gate.stat_key: gate.statistic(out),
+                "fit_epoch": epoch_id,
+                **gate.meta_params,
+            },
+        )
+        return out
+
+    meta = _read_model_meta(zone_dir, gate.model_dir)
+    if meta is not None and meta.get("fit_epoch") == epoch_id:
+        # crash window: the (re)fit's meta committed but the zone
+        # epoch didn't — redo the recorded decision
+        gen = meta["gen"]
+        out = fit(batch if gen == 0 else gate.refit_input(batch), gen)
+    elif meta is None:
+        if batch.isEmpty():
+            # no model yet; the next non-empty epoch fits
+            gen = -1
+            out = spark.createDataFrame([], gate.empty_schema)
+        else:
+            gen = 0
+            out = fit(batch, gen)
+    else:
+        gen = meta["gen"]
+        out = gate.encode(batch, gen).persist()
+        bm = gate.statistic(out)
+        fit_stat = meta.get(gate.stat_key)
+        if (
+            drift_refit_factor is not None
+            and bm is not None
+            and fit_stat is not None
+            and bm > drift_refit_factor * fit_stat
+        ):
+            out.unpersist()  # the refit replaces the batch encode
+            gen += 1
+            out = fit(gate.refit_input(batch), gen)
+    gate.land(batch, out, gen, epoch_id)
+    out.unpersist()
 
 
 def read_kmeans_centroids(
@@ -495,15 +655,8 @@ def read_kmeans_centroids(
 ) -> DataFrame | None:
     """The landed centroid table for a model generation (default: the
     current one per the model meta), or None when no model exists."""
-    meta = _read_kmeans_meta(zone_dir)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    p = os.path.join(zone_dir, KMEANS_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(p):
-        return None
-    return spark.read.parquet(p)
+    p = _model_gen_dir(zone_dir, KMEANS_MODEL_DIR, gen)
+    return None if p is None else spark.read.parquet(p)
 
 
 def read_cluster_assignment(
@@ -516,7 +669,7 @@ def read_cluster_assignment(
     row per doc (older-generation rows are dead weight until
     compaction, the same trade as superseded data generations in
     ``vacuum_manifest_zone``)."""
-    meta = _read_kmeans_meta(zone_dir)
+    meta = _read_model_meta(zone_dir, KMEANS_MODEL_DIR)
     df = read_manifest_zone(
         spark, {"cluster_assignment": table}, zone_dir
     )["cluster_assignment"]
@@ -687,9 +840,6 @@ def compact_price_histogram(
     )
 
 
-BPE_MODEL_DIR = "bpe_model"
-
-
 def read_bpe_word_counts(
     spark: SparkSession, table: str, zone_dir: str
 ) -> DataFrame:
@@ -737,13 +887,8 @@ def read_bpe_model(
     ``(seq, n)`` the tokenize/apply operators
     (``bpe_doc_token_count_from_vocab`` /
     ``bpe_subword_stats_from_vocab``) serve from."""
-    meta = _read_model_meta(zone_dir, BPE_MODEL_DIR)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    gdir = os.path.join(zone_dir, BPE_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(gdir):
+    gdir = _model_gen_dir(zone_dir, BPE_MODEL_DIR, gen)
+    if gdir is None:
         return None
     return (
         spark.read.parquet(os.path.join(gdir, "merge_table")),
@@ -774,13 +919,6 @@ def compact_cms_cells(
             F.sum("cell").cast("long").alias("cell")
         ),
     )
-
-
-PQ_MODEL_DIR = "pq_model"
-IVFPQ_MODEL_DIR = "ivfpq_model"
-IVF_MODEL_DIR = "ivf_model"
-BINARY_MODEL_DIR = "binary_model"
-PQ_META_FILE = "_model_meta.json"
 
 
 def compact_model_zone(
@@ -817,11 +955,7 @@ def compact_model_zone(
     drop the sample ids' only landed encode. ``model_gen`` survives
     as a column (the multi-gen serve scores each row against its own
     generation's model)."""
-    meta = (
-        _read_kmeans_meta(zone_dir)
-        if model_dir == KMEANS_MODEL_DIR
-        else _read_model_meta(zone_dir, model_dir)
-    )
+    meta = _read_model_meta(zone_dir, model_dir)
     if meta is None:
         raise ValueError(
             f"no model meta under {model_dir!r} — nothing to compact"
@@ -851,54 +985,14 @@ def compact_model_zone(
     )
 
 
-def _read_model_meta(zone_dir: str, model_dir: str) -> dict | None:
-    """Meta for any generation-tracked model zone (pq / ivfpq)."""
-    import json
-
-    p = os.path.join(zone_dir, model_dir, PQ_META_FILE)
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_model_meta(zone_dir: str, model_dir: str, meta: dict) -> None:
-    """tmp+rename, same atomicity as the epoch commit markers."""
-    import io
-    import json
-    import tempfile
-
-    d = os.path.join(zone_dir, model_dir)
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    with io.open(fd, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(d, PQ_META_FILE))
-
-
-def _read_pq_meta(zone_dir: str) -> dict | None:
-    return _read_model_meta(zone_dir, PQ_MODEL_DIR)
-
-
-def _write_pq_meta(zone_dir: str, meta: dict) -> None:
-    _write_model_meta(zone_dir, PQ_MODEL_DIR, meta)
-
-
 def read_pq_codebook(
     spark: SparkSession, zone_dir: str, gen: int | None = None
 ) -> DataFrame | None:
     """The landed PQ codebook ``(s, j, cw)`` for a model generation
     (default: the current one per the model meta), or None when no
     model exists yet."""
-    meta = _read_pq_meta(zone_dir)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    p = os.path.join(zone_dir, PQ_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(p):
-        return None
-    return spark.read.parquet(p)
+    p = _model_gen_dir(zone_dir, PQ_MODEL_DIR, gen)
+    return None if p is None else spark.read.parquet(p)
 
 
 def read_pq_codes(
@@ -910,7 +1004,7 @@ def read_pq_codes(
     own epoch, so the filter sees exactly one live (vec_id, s) row
     per vector (the read_cluster_assignment discipline; older-gen
     rows are dead weight until compaction)."""
-    meta = _read_pq_meta(zone_dir)
+    meta = _read_model_meta(zone_dir, PQ_MODEL_DIR)
     if meta is None:
         return spark.createDataFrame([], "vec_id long, s long, code long")
     df = read_manifest_zone(spark, {"pq_codes": table}, zone_dir)[
@@ -927,15 +1021,8 @@ def read_binary_thresholds(
     """The landed binary-quantization thresholds ``(dim_idx,
     threshold)`` for a model generation (default: current per the
     meta), or None when no model exists yet."""
-    meta = _read_model_meta(zone_dir, BINARY_MODEL_DIR)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    p = os.path.join(zone_dir, BINARY_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(p):
-        return None
-    return spark.read.parquet(p)
+    p = _model_gen_dir(zone_dir, BINARY_MODEL_DIR, gen)
+    return None if p is None else spark.read.parquet(p)
 
 
 def read_binary_codes(
@@ -965,15 +1052,8 @@ def read_ivf_centroids(
     """The landed trained-IVF coarse quantizer ``(cid, centroid_vec)``
     for a model generation (default: current per the meta), or None
     when no model exists yet."""
-    meta = _read_model_meta(zone_dir, IVF_MODEL_DIR)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    p = os.path.join(zone_dir, IVF_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(p):
-        return None
-    return spark.read.parquet(p)
+    p = _model_gen_dir(zone_dir, IVF_MODEL_DIR, gen)
+    return None if p is None else spark.read.parquet(p)
 
 
 def read_ivf_assign(
@@ -1041,13 +1121,8 @@ def read_ivfpq_model(
     """The landed IVFPQ model ``(centroids, codebook)`` for a model
     generation (default: the current one per the model meta), or None
     when no model exists yet."""
-    meta = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
-    if gen is None:
-        if meta is None:
-            return None
-        gen = meta["gen"]
-    gdir = os.path.join(zone_dir, IVFPQ_MODEL_DIR, f"gen={gen}")
-    if not os.path.isdir(gdir):
+    gdir = _model_gen_dir(zone_dir, IVFPQ_MODEL_DIR, gen)
+    if gdir is None:
         return None
     return (
         spark.read.parquet(os.path.join(gdir, "centroids")),
@@ -1752,17 +1827,6 @@ def run_embedding_ingest(
     if store_flat_embeddings:
         tables[name] = f"{table_prefix}embeddings"  # lands LAST
 
-    def _mean_dist(codes_d: DataFrame) -> float | None:
-        row = codes_d.agg(
-            (
-                F.sum(F.col("dist").cast("decimal(28,12)"))
-                / F.count(F.lit(1))
-            )
-            .cast("double")
-            .alias("m")
-        ).collect()[0]
-        return None if row["m"] is None else float(row["m"])
-
     def _committed_vectors() -> DataFrame | None:
         if store_flat_embeddings:
             if not spark.catalog.tableExists(tables[name]):
@@ -1797,478 +1861,188 @@ def run_embedding_ingest(
             "vec_id", "embedding"
         )
 
-    def _fit_and_land_model(
-        fit_vecs: DataFrame, gen: int, epoch_id: int
-    ) -> tuple[DataFrame, float | None]:
-        """One deterministic codebook fit; the codebook lands under
-        gen=N and the meta (with fit_epoch, for replay-stable refit
-        decisions) commits BEFORE the codes epoch."""
-        cb = pq_codebook(
-            fit_vecs, n_subspaces=n_subspaces, n_codes=n_codes,
-            dim=dim, stride=stride,
-        )
-        gdir = os.path.join(zone_dir, PQ_MODEL_DIR, f"gen={gen}")
-        cb.coalesce(1).write.mode("overwrite").parquet(gdir)
-        cb_landed = spark.read.parquet(gdir)
-        # one encode pass per epoch (optimization r17, guide §1.2):
-        # the drift statistic and the codes landing both consume the
-        # encode — a lazy persist materializes it once inside the
-        # gate (micro-batch-bounded rows), so _mean_dist and
-        # _land_epoch read cached blocks instead of each re-running
-        # the full per-row encode; the gate unpersists after landing
-        codes_d = pq_encode(
-            fit_vecs, cb_landed, n_subspaces=n_subspaces, dim=dim,
-            return_dist=True,
-        ).persist()
-        fit_mean = _mean_dist(codes_d)
-        _write_pq_meta(
-            zone_dir,
-            {
-                "gen": gen,
-                "fit_mean_dist": fit_mean,
-                "fit_epoch": epoch_id,
-                "n_subspaces": n_subspaces,
-                "n_codes": n_codes,
-                "dim": dim,
-                "stride": stride,
-            },
-        )
-        return codes_d, fit_mean
+    def _with_committed(vecs: DataFrame) -> DataFrame:
+        """The PQ / binary / IVFPQ / IVF refit input: the full
+        committed corpus plus the in-flight batch."""
+        committed = _committed_vectors()
+        return vecs if committed is None else committed.unionByName(vecs)
 
-    def _pq_gate(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs(zone_dir, "pq_codes"):
-            return  # replayed, fully landed
-        vecs = batch_df.select("vec_id", "embedding")
-        meta = _read_pq_meta(zone_dir)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            # crash window: the (re)fit's meta committed but the codes
-            # epoch didn't — redo the recorded decision
-            gen = meta["gen"]
-            if gen == 0:
-                fit_vecs = vecs
-            else:
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-            out, _ = _fit_and_land_model(fit_vecs, gen, epoch_id)
-        elif meta is None:
-            if vecs.isEmpty():
-                out = spark.createDataFrame(
-                    [], "vec_id long, s long, code long, dist double"
-                )  # no model yet; next non-empty epoch fits
-            else:
-                out, _ = _fit_and_land_model(vecs, 0, epoch_id)
-        else:
-            cb = read_pq_codebook(spark, zone_dir, meta["gen"])
-            # one encode pass (r17): drift check + landing share the
-            # materialized batch encode instead of re-running it
-            encoded = pq_encode(
-                vecs, cb, n_subspaces=n_subspaces, dim=dim,
-                return_dist=True,
-            ).persist()
-            bm = _mean_dist(encoded)
-            fit_mean = meta.get("fit_mean_dist")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                encoded.unpersist()  # refit replaces the batch encode
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-                out, _ = _fit_and_land_model(
-                    fit_vecs, meta["gen"] + 1, epoch_id
-                )
-            else:
-                out = encoded
-        cur = _read_pq_meta(zone_dir)
-        gen_now = -1 if cur is None else cur["gen"]
+    # inverted-list file layout: rows carry the vector (IVF) or codes
+    # (IVFPQ) and the layout carries the cell, so the serving plans'
+    # codes/lists ⋈ broadcast(probes) join reads only the probed
+    # cells' files (DPP)
+    cell_partitioned = {
+        "ivfpq_codes": ("cluster_id",),
+        "ivf_assign": ("cluster_id",),
+    }
+
+    def _land_codes(
+        zname: str, rows: DataFrame, gen: int, epoch_id: int
+    ) -> None:
         _land_epoch(
             spark,
-            out.select("vec_id", "s", "code").withColumn(
-                "model_gen", F.lit(gen_now)
-            ),
-            tables["pq_codes"],
-            os.path.join(zone_dir, "pq_codes"),
+            rows.withColumn("model_gen", F.lit(gen)),
+            tables[zname],
+            os.path.join(zone_dir, zname),
             zone_dir,
-            "pq_codes",
+            zname,
             epoch_id,
             n_buckets,
             bucket_col="vec_id",
+            extra_partition_cols=cell_partitioned.get(zname, ()),
         )
-        out.unpersist()  # batch cache released; streams are long-lived
 
-    def _binary_fit_and_land(
-        fit_vecs: DataFrame, gen: int, epoch_id: int
-    ) -> DataFrame:
-        """One deterministic threshold fit (det-round-6 decimal-exact
-        per-dim means — bit-identical to the batch
-        ``binary_thresholds`` over the same corpus); the d-row
-        threshold table lands under gen=N and the meta (with
-        fit_epoch) commits BEFORE the codes epoch — the PQ gate's
-        crash discipline."""
-        thr = binary_thresholds(fit_vecs)
-        gdir = os.path.join(zone_dir, BINARY_MODEL_DIR, f"gen={gen}")
-        thr.coalesce(1).write.mode("overwrite").parquet(gdir)
-        thr_landed = spark.read.parquet(gdir)
-        # one encode pass per epoch (r17): the fit_mean_dist agg and
-        # the codes landing share the materialized encode
-        codes_d = binary_encode(
-            fit_vecs, thr_landed, dim=dim, return_dist=True
-        ).persist()
-        _write_model_meta(
-            zone_dir, BINARY_MODEL_DIR,
-            {
-                "gen": gen,
-                "fit_mean_dist": _mean_dist(codes_d),
-                "fit_epoch": epoch_id,
-                "dim": dim,
-            },
-        )
-        return codes_d
+    pq_params = {
+        "n_subspaces": n_subspaces,
+        "n_codes": n_codes,
+        "dim": dim,
+        "stride": stride,
+    }
 
-    def _binary_gate(batch_df: DataFrame, epoch_id: int) -> None:
-        """The 1-bit twin of the PQ gate: gen-0 fits the per-dim
-        thresholds on the first non-empty epoch, later epochs ENCODE
-        arrivals against the LANDED thresholds (two 32-bit words per
-        vector — the 24 B/vector serving scan), and when an epoch's
-        mean L1 deviation from the thresholds exceeds
-        ``drift_refit_factor ×`` the fit-time deviation (the data no
-        longer centers where the thresholds were fit), the model
-        refits over the full committed corpus + batch (gen+1) and the
-        full re-encode lands in that epoch — ``read_binary_codes``
-        filters to the current generation."""
-        if epoch_id in committed_epochs(zone_dir, "binary_codes"):
-            return  # replayed, fully landed
-        vecs = batch_df.select("vec_id", "embedding")
-        meta = _read_model_meta(zone_dir, BINARY_MODEL_DIR)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            # crash window: meta committed, codes epoch didn't
-            gen = meta["gen"]
-            if gen == 0:
-                fit_vecs = vecs
-            else:
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-            out = _binary_fit_and_land(fit_vecs, gen, epoch_id)
-        elif meta is None:
-            if vecs.isEmpty():
-                out = spark.createDataFrame(
-                    [],
-                    "vec_id long, code_lo long, code_hi long, "
-                    "dist double",
-                )  # no model yet; next non-empty epoch fits
-            else:
-                out = _binary_fit_and_land(vecs, 0, epoch_id)
-        else:
-            thr = read_binary_thresholds(spark, zone_dir, meta["gen"])
-            # one encode pass (r17): drift check + landing share it
-            encoded = binary_encode(
-                vecs, thr, dim=dim, return_dist=True
-            ).persist()
-            bm = _mean_dist(encoded)
-            fit_mean = meta.get("fit_mean_dist")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                encoded.unpersist()  # refit replaces the batch encode
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-                out = _binary_fit_and_land(
-                    fit_vecs, meta["gen"] + 1, epoch_id
-                )
-            else:
-                out = encoded
-        cur = _read_model_meta(zone_dir, BINARY_MODEL_DIR)
-        gen_now = -1 if cur is None else cur["gen"]
-        _land_epoch(
-            spark,
-            out.select("vec_id", "code_lo", "code_hi").withColumn(
-                "model_gen", F.lit(gen_now)
-            ),
-            tables["binary_codes"],
-            os.path.join(zone_dir, "binary_codes"),
-            zone_dir,
-            "binary_codes",
-            epoch_id,
-            n_buckets,
-            bucket_col="vec_id",
-        )
-        out.unpersist()  # batch cache released; streams are long-lived
+    def _pq_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
+        pq_codebook(vecs, **pq_params).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(gdir)
+        return _pq_encode(vecs, gen)
 
-    def _ivfpq_fit_and_land(
-        fit_vecs: DataFrame, gen: int, epoch_id: int
-    ) -> DataFrame:
-        """One deterministic IVFPQ fit: coarse cells + residual
-        codebook land under gen=N, meta (with fit_epoch) commits
-        BEFORE the codes epoch — the PQ gate's crash discipline."""
-        cent, cb, _ = ivfpq_model(
-            fit_vecs, n_clusters=n_clusters, n_subspaces=n_subspaces,
-            n_codes=n_codes, dim=dim, stride=stride, cb_stride=cb_stride,
+    def _pq_encode(vecs: DataFrame, gen: int) -> DataFrame:
+        return pq_encode(
+            vecs, read_pq_codebook(spark, zone_dir, gen),
+            n_subspaces=n_subspaces, dim=dim, return_dist=True,
         )
-        gdir = os.path.join(zone_dir, IVFPQ_MODEL_DIR, f"gen={gen}")
+
+    def _binary_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
+        binary_thresholds(vecs).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(gdir)
+        return _binary_encode(vecs, gen)
+
+    def _binary_encode(vecs: DataFrame, gen: int) -> DataFrame:
+        return binary_encode(
+            vecs, read_binary_thresholds(spark, zone_dir, gen),
+            dim=dim, return_dist=True,
+        )
+
+    ivfpq_params = {
+        "n_clusters": n_clusters, **pq_params, "cb_stride": cb_stride,
+    }
+
+    def _ivfpq_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
+        cent, cb, _ = ivfpq_model(vecs, **ivfpq_params)
         cent.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(gdir, "centroids")
         )
         cb.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(gdir, "codebook")
         )
-        cent_l = spark.read.parquet(os.path.join(gdir, "centroids"))
-        cb_l = spark.read.parquet(os.path.join(gdir, "codebook"))
-        _, _, codes_d = ivfpq_model(
-            fit_vecs, n_clusters=n_clusters, n_subspaces=n_subspaces,
-            n_codes=n_codes, dim=dim, stride=stride, cb_stride=cb_stride,
-            centroids=cent_l, codebook=cb_l, return_dist=True,
-        )
-        # one encode pass per epoch (r17): the drift statistic and the
-        # codes landing share the materialized encode
-        codes_d = codes_d.persist()
-        fit_mean = _mean_dist(codes_d)
-        _write_model_meta(
-            zone_dir, IVFPQ_MODEL_DIR,
-            {
-                "gen": gen,
-                "fit_mean_dist": fit_mean,
-                "fit_epoch": epoch_id,
-                "n_clusters": n_clusters,
-                "n_subspaces": n_subspaces,
-                "n_codes": n_codes,
-                "dim": dim,
-                "stride": stride,
-                "cb_stride": cb_stride,
-            },
-        )
-        return codes_d
+        return _ivfpq_encode(vecs, gen)
 
-    def _ivfpq_gate(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs(zone_dir, "ivfpq_codes"):
-            return  # replayed, fully landed
-        vecs = batch_df.select("vec_id", "embedding")
-        meta = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            gen = meta["gen"]
-            if gen == 0:
-                fit_vecs = vecs
-            else:
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-            out = _ivfpq_fit_and_land(fit_vecs, gen, epoch_id)
-        elif meta is None:
-            if vecs.isEmpty():
-                out = spark.createDataFrame(
-                    [],
-                    "vec_id long, cluster_id long, s long, code long, "
-                    "dist double",
-                )
-            else:
-                out = _ivfpq_fit_and_land(vecs, 0, epoch_id)
-        else:
-            model = read_ivfpq_model(spark, zone_dir, meta["gen"])
-            _, _, encoded = ivfpq_model(
-                vecs, n_clusters=n_clusters, n_subspaces=n_subspaces,
-                n_codes=n_codes, dim=dim, stride=stride,
-                cb_stride=cb_stride, centroids=model[0],
-                codebook=model[1], return_dist=True,
-            )
-            # one encode pass (r17): drift check + landing share it
-            encoded = encoded.persist()
-            bm = _mean_dist(encoded)
-            fit_mean = meta.get("fit_mean_dist")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                encoded.unpersist()  # refit replaces the batch encode
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else committed.unionByName(vecs)
-                )
-                out = _ivfpq_fit_and_land(
-                    fit_vecs, meta["gen"] + 1, epoch_id
-                )
-            else:
-                out = encoded
-        cur = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
-        gen_now = -1 if cur is None else cur["gen"]
-        _land_epoch(
-            spark,
-            out.select("vec_id", "cluster_id", "s", "code").withColumn(
-                "model_gen", F.lit(gen_now)
-            ),
-            tables["ivfpq_codes"],
-            os.path.join(zone_dir, "ivfpq_codes"),
-            zone_dir,
-            "ivfpq_codes",
-            epoch_id,
-            n_buckets,
-            bucket_col="vec_id",
-            # inverted-list file layout: the ADC serving scan's
-            # codes ⋈ broadcast(probes) join file-prunes via DPP
-            extra_partition_cols=("cluster_id",),
-        )
-        out.unpersist()  # batch cache released; streams are long-lived
+    def _ivfpq_encode(vecs: DataFrame, gen: int) -> DataFrame:
+        cent, cb = read_ivfpq_model(spark, zone_dir, gen)
+        return ivfpq_model(
+            vecs, **ivfpq_params, centroids=cent, codebook=cb,
+            return_dist=True,
+        )[2]
 
-    def _ivf_vecs(batch_df: DataFrame) -> DataFrame:
+    def _ivf_vecs(vecs: DataFrame) -> DataFrame:
         """(vec_id, embedding-as-double) — the exact input shape the
         batch `_ivf_model_zone` build fits on, so gen-0 centroids are
         bit-identical to the session-scoped land."""
-        return batch_df.select(
+        return vecs.select(
             F.col("vec_id"),
             as_double(F.col("embedding")).alias("embedding"),
         )
 
-    def _ivf_lists(vecs_d: DataFrame, cents: DataFrame) -> DataFrame:
+    def _ivf_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
+        kmeans_fixed(
+            _ivf_vecs(vecs), k=n_clusters, iterations=ivf_iterations,
+            dim=dim, id_col="vec_id", vec_col="embedding",
+            return_centroids=True,
+        ).coalesce(1).write.mode("overwrite").parquet(gdir)
+        return _ivf_encode(vecs, gen)
+
+    def _ivf_encode(vecs: DataFrame, gen: int) -> DataFrame:
         """Search-metric inverted-list rows for a batch of vectors —
         :func:`ivf_list_assign` with the drift-gate distortion column:
         cosine membership (bit-identical to the serving plan's own
         corpus assignment), the vector alongside (what IVF-Flat lists
         store), and the scale-sensitive squared-L2 ``dist``."""
         return ivf_list_assign(
-            vecs_d, cents, id_col="vec_id", vec_col="embedding",
-            with_dist=True,
+            _ivf_vecs(vecs), read_ivf_centroids(spark, zone_dir, gen),
+            id_col="vec_id", vec_col="embedding", with_dist=True,
         )
 
-    def _ivf_fit_and_land(
-        fit_vecs: DataFrame, gen: int, epoch_id: int
-    ) -> DataFrame:
-        cent_df = kmeans_fixed(
-            fit_vecs, k=n_clusters, iterations=ivf_iterations, dim=dim,
-            id_col="vec_id", vec_col="embedding",
-            return_centroids=True,
-        )
-        gdir = os.path.join(zone_dir, IVF_MODEL_DIR, f"gen={gen}")
-        cent_df.coalesce(1).write.mode("overwrite").parquet(gdir)
-        # zone-build discipline (ADVICE r10): membership derives from
-        # the LANDED centroid table — exactly what serving reads
-        # beside the lists — not the in-memory sibling. One assignment
-        # pass per epoch (r17): the fit_mean_dist agg and the lists
-        # landing share the materialized assignment.
-        lists = _ivf_lists(
-            fit_vecs, spark.read.parquet(gdir)
-        ).persist()
-        _write_model_meta(
-            zone_dir, IVF_MODEL_DIR,
-            {
-                "gen": gen,
-                "fit_mean_dist": _mean_dist(lists),
-                "fit_epoch": epoch_id,
-                "k": n_clusters,
-                "iterations": ivf_iterations,
-                "dim": dim,
-            },
-        )
-        return lists
-
-    def _ivf_gate(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs(zone_dir, "ivf_assign"):
-            return  # replayed, fully landed
-        vecs = _ivf_vecs(batch_df)
-        meta = _read_model_meta(zone_dir, IVF_MODEL_DIR)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            gen = meta["gen"]
-            if gen == 0:
-                fit_vecs = vecs
-            else:
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else _ivf_vecs(committed.unionByName(
-                        batch_df.select("vec_id", "embedding")
-                    ))
-                )
-            out = _ivf_fit_and_land(fit_vecs, gen, epoch_id)
-        elif meta is None:
-            if vecs.isEmpty():
-                out = spark.createDataFrame(
-                    [], "vec_id long, cluster_id long, dist double"
-                )
-            else:
-                out = _ivf_fit_and_land(vecs, 0, epoch_id)
-        else:
-            cents = read_ivf_centroids(spark, zone_dir, meta["gen"])
-            # one assignment pass (r17): drift check + landing share it
-            assigned = _ivf_lists(vecs, cents).persist()
-            bm = _mean_dist(assigned)
-            fit_mean = meta.get("fit_mean_dist")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                assigned.unpersist()  # refit replaces it
-                committed = _committed_vectors()
-                fit_vecs = (
-                    vecs if committed is None
-                    else _ivf_vecs(committed.unionByName(
-                        batch_df.select("vec_id", "embedding")
-                    ))
-                )
-                out = _ivf_fit_and_land(
-                    fit_vecs, meta["gen"] + 1, epoch_id
-                )
-            else:
-                out = assigned
-        cur = _read_model_meta(zone_dir, IVF_MODEL_DIR)
-        gen_now = -1 if cur is None else cur["gen"]
-        cached = out  # the persisted lists — released after landing
+    def _ivf_land(_vecs, lists: DataFrame, gen: int, epoch_id: int):
         if lists_vector_dtype == "float":
             # lossless for float32-contract inputs (see the knob's
             # docstring); the reader promotes back to double
-            out = out.withColumn(
+            lists = lists.withColumn(
                 "embedding", F.col("embedding").cast("array<float>")
             )
-        _land_epoch(
-            spark,
-            out.withColumn("model_gen", F.lit(gen_now)),
-            tables["ivf_assign"],
-            os.path.join(zone_dir, "ivf_assign"),
-            zone_dir,
-            "ivf_assign",
-            epoch_id,
-            n_buckets,
-            bucket_col="vec_id",
-            # IVF-Flat inverted lists: rows carry the vector and the
-            # layout carries the cell, so ivf_topk(lists=...) reads
-            # only the probed cells' files (DPP on the probe join)
-            extra_partition_cols=("cluster_id",),
-        )
-        cached.unpersist()  # batch cache released; streams long-lived
+        _land_codes("ivf_assign", lists, gen, epoch_id)
+
+    # gate order = land order; every code zone commits before the
+    # flat embeddings zone
+    gates: list[_ModelGate] = []
+    if pq:
+        gates.append(_ModelGate(
+            "pq_codes", PQ_MODEL_DIR, _pq_fit, _pq_encode, _with_committed,
+            land=lambda _v, out, gen, e: _land_codes(
+                "pq_codes", out.select("vec_id", "s", "code"), gen, e
+            ),
+            empty_schema="vec_id long, s long, code long, dist double",
+            meta_params=pq_params,
+        ))
+    if binary:
+        gates.append(_ModelGate(
+            "binary_codes", BINARY_MODEL_DIR, _binary_fit, _binary_encode,
+            _with_committed,
+            land=lambda _v, out, gen, e: _land_codes(
+                "binary_codes",
+                out.select("vec_id", "code_lo", "code_hi"), gen, e,
+            ),
+            empty_schema=(
+                "vec_id long, code_lo long, code_hi long, dist double"
+            ),
+            meta_params={"dim": dim},
+        ))
+    if ivfpq:
+        gates.append(_ModelGate(
+            "ivfpq_codes", IVFPQ_MODEL_DIR, _ivfpq_fit, _ivfpq_encode,
+            _with_committed,
+            land=lambda _v, out, gen, e: _land_codes(
+                "ivfpq_codes",
+                out.select("vec_id", "cluster_id", "s", "code"), gen, e,
+            ),
+            empty_schema=(
+                "vec_id long, cluster_id long, s long, code long, "
+                "dist double"
+            ),
+            meta_params=ivfpq_params,
+        ))
+    if ivf:
+        gates.append(_ModelGate(
+            "ivf_assign", IVF_MODEL_DIR, _ivf_fit, _ivf_encode,
+            _with_committed, land=_ivf_land,
+            empty_schema=(
+                "vec_id long, cluster_id long, dist double, "
+                "embedding array<double>"
+            ),
+            meta_params={
+                "k": n_clusters, "iterations": ivf_iterations, "dim": dim,
+            },
+        ))
 
     def land(batch_df: DataFrame, epoch_id: int) -> None:
         if all(
             epoch_id in committed_epochs(zone_dir, z) for z in tables
         ):
             return  # checkpoint replay of a fully-landed epoch
-        if pq:
-            _pq_gate(batch_df, epoch_id)
-        if binary:
-            _binary_gate(batch_df, epoch_id)
-        if ivfpq:
-            _ivfpq_gate(batch_df, epoch_id)
-        if ivf:
-            _ivf_gate(batch_df, epoch_id)
+        vecs = batch_df.select("vec_id", "embedding")
+        for gate in gates:
+            _run_model_gate(
+                spark, zone_dir, gate, vecs, epoch_id, drift_refit_factor
+            )
         if retain_fit_sample:
             # the strided fit diet, raw — a pure function of the
             # batch, landed AFTER the codes (aux-before-primary is
@@ -2302,48 +2076,22 @@ def run_embedding_ingest(
         threshold (runs after the epoch fully commits — a crash here
         replays as an already-landed epoch and the fold waits for the
         next trigger)."""
-        if not auto_compact_every:
-            return
-        gen_zones = []
-        if pq:
-            gen_zones.append(("pq_codes", PQ_MODEL_DIR, (), False))
-        if binary:
-            gen_zones.append(
-                ("binary_codes", BINARY_MODEL_DIR, (), False)
-            )
-        if ivfpq:
-            gen_zones.append(
-                (
-                    "ivfpq_codes",
-                    IVFPQ_MODEL_DIR,
-                    ("cluster_id",),
-                    retain_fit_sample,
-                )
-            )
-        if ivf:
-            gen_zones.append(
-                ("ivf_assign", IVF_MODEL_DIR, ("cluster_id",), False)
-            )
-        for zname, mdir, extra, retained in gen_zones:
-            if (
-                len(committed_epochs(zone_dir, zname))
-                >= auto_compact_every
-            ):
+        for gate in gates:
+            if _compaction_due(zone_dir, gate.zone, auto_compact_every):
                 compact_model_zone(
-                    spark, tables[zname], zone_dir, zname, mdir,
-                    n_buckets=n_buckets, bucket_col="vec_id",
-                    extra_partition_cols=extra,
-                    retained_sample_mode=retained,
+                    spark, tables[gate.zone], zone_dir, gate.zone,
+                    gate.model_dir, n_buckets=n_buckets,
+                    bucket_col="vec_id",
+                    extra_partition_cols=cell_partitioned.get(
+                        gate.zone, ()
+                    ),
+                    retained_sample_mode=(
+                        retain_fit_sample and gate.zone == "ivfpq_codes"
+                    ),
                 )
-        plain_zones = []
-        if retain_fit_sample:
-            plain_zones.append("fit_sample")
-        if store_flat_embeddings:
-            plain_zones.append(name)
-        for zname in plain_zones:
-            if (
-                len(committed_epochs(zone_dir, zname))
-                >= auto_compact_every
+        for zname in ("fit_sample", name):
+            if zname in tables and _compaction_due(
+                zone_dir, zname, auto_compact_every
             ):
                 compact_manifest_zone(
                     spark, tables[zname], zone_dir, zname,
@@ -2435,11 +2183,7 @@ def stream_zone_freshness(
         if model_dir is None:
             meta, gen, fit_epoch = None, -1, -1
         else:
-            meta = (
-                _read_kmeans_meta(zone_dir)
-                if model_dir == KMEANS_MODEL_DIR
-                else _read_model_meta(zone_dir, model_dir)
-            )
+            meta = _read_model_meta(zone_dir, model_dir)
             gen = -1 if meta is None else meta["gen"]
             fit_epoch = -1 if meta is None else meta.get("fit_epoch", -1)
         zone_exists = spark.catalog.tableExists(table)
@@ -2932,12 +2676,22 @@ def run_corpus_ingest(
       ``text_semantic_neardup`` chain). Lands ``doc_vectors`` and
       ``neardup_pairs`` beside the corpus; with ``drop_dups`` a doc
       near-dupping any committed doc (or a smaller-id batch sibling —
-      the greedy per-edge keeper) is dropped.
+      the greedy per-edge keeper) is dropped. On a within-batch chain
+      x~y, y~z, x<z<y that keeper can keep z where the batch
+      connected-components keeper (``dedup.dedup_clusters``) would
+      not; zero-signal docs (no vector) are always kept. With
+      ``drop_dups=False`` the union of ``neardup_pairs`` over epochs
+      is row-identical to the batch operator on the same corpus. The
+      probe only trusts vector epochs whose DOCUMENTS epoch also
+      committed, so a crash between the two leaves a self-healing
+      cache entry, never phantom corpus members.
     * ``state_refresh`` — maintains the unified token-event grain
       (``corpus_state.token_event_counts``) incrementally as a
       ``token_events`` zone table, so every corpus state family
       (term / feature / shingle / vectors) derives from the committed
-      grain with zero text re-scans.
+      grain with zero text re-scans. The grain is append-only (a
+      document's events are final when it arrives; doc_ids are
+      unique), so the committed union IS the corpus grain.
     * ``cluster_assign`` (requires ``state_refresh``; VERDICT r9 #5)
       — maintains the k-means ``cluster_assignment`` state per epoch:
       the first non-empty epoch FITS (``kmeans_fixed``, gen 0) and
@@ -3018,9 +2772,6 @@ def run_corpus_ingest(
     per-epoch staging dir is removed in a ``finally`` (ADVICE r8).
 
     Returns ``{zone name: catalog table}`` for every landed table.
-    The pre-r9 entries (:func:`run_corpus_ingest_dedup_manifest`,
-    :func:`run_corpus_ingest_semantic_dedup_manifest`,
-    :func:`run_corpus_ingest_state_refresh`) delegate here.
     """
     import glob
     import shutil
@@ -3089,20 +2840,6 @@ def run_corpus_ingest(
         tables["bpe_word_counts"] = f"{table_prefix}bpe_word_counts"
     tables[name] = f"{table_prefix}documents"  # lands LAST — see above
 
-    def _mean_dist(assigned: DataFrame) -> float | None:
-        """Deterministic mean assignment distance (decimal-summed over
-        the already det-round-8 per-doc dists) — the drift statistic.
-        One k-scalar-output aggregate; bounded driver transfer."""
-        row = assigned.agg(
-            (
-                F.sum(F.col("dist").cast("decimal(28,12)"))
-                / F.count(F.lit(1))
-            )
-            .cast("double")
-            .alias("m")
-        ).collect()[0]
-        return None if row["m"] is None else float(row["m"])
-
     def _grain_vectors() -> DataFrame:
         """Full-corpus feature-hash vectors from the COMMITTED grain
         (includes the current epoch — token_events lands before the
@@ -3114,100 +2851,31 @@ def run_corpus_ingest(
             g.select("doc_id", "kind", "s", "h", "h2", "c"), dim=dim
         )
 
-    def _fit_and_land_model(
-        fit_vecs: DataFrame, gen: int, epoch_id: int
-    ) -> DataFrame:
-        """One deterministic Lloyd fit; centroids land under gen=N and
-        the meta (with fit_epoch, for replay-stable refit decisions)
-        commits BEFORE the assignment epoch — a crash in any window
-        replays to the identical model (the fit is a deterministic
-        function of the committed inputs)."""
+    def _kmeans_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
+        # the fit-epoch assignment is kmeans_fixed's own — bit-exact vs
+        # the batch cluster seam over the same docs
         assigned, cent_df = kmeans_fixed(
-            fit_vecs,
+            vecs,
             k=cluster_k,
             iterations=cluster_iterations,
             dim=dim,
             return_model=True,
         )
-        # one assignment pass per epoch (r17): the fit_mean_dist agg
-        # and the assignment landing share the materialized result
-        assigned = assigned.persist()
-        gdir = os.path.join(zone_dir, KMEANS_MODEL_DIR, f"gen={gen}")
         cent_df.coalesce(1).write.mode("overwrite").parquet(gdir)
-        _write_kmeans_meta(
-            zone_dir,
-            {
-                "gen": gen,
-                "fit_mean_dist": _mean_dist(assigned),
-                "fit_epoch": epoch_id,
-                "k": cluster_k,
-                "iterations": cluster_iterations,
-                "dim": dim,
-            },
-        )
         return assigned
 
-    def _cluster_gate(grain, batch_vecs, epoch_id: int) -> None:
-        """Maintain the cluster-assignment state per epoch (VERDICT
-        r9 #5 — the streaming twin of the batch cluster seam):
-
-        * first non-empty epoch FITS (gen 0) on the batch's vectors —
-          the fit-epoch assignment is kmeans_fixed's own, bit-exact vs
-          the batch seam over the same docs;
-        * later epochs ASSIGN arriving docs against the landed
-          centroids (kmeans_assign: broadcast-argmin, k rows — no
-          refit in the steady state);
-        * when the epoch's mean assignment distance exceeds
-          ``drift_refit_factor ×`` the model's fit-time mean, the model
-          REFITS on the full committed grain (gen+1) and the full
-          reassignment lands in this epoch — readers
-          (:func:`read_cluster_assignment`) filter to the current
-          generation, so the swap is atomic at the meta write."""
-        if epoch_id in committed_epochs(zone_dir, "cluster_assignment"):
-            return  # replayed, fully landed
-        vecs = (
-            batch_vecs
-            if batch_vecs is not None
-            else vectors_from_event_counts(grain, dim=dim)
-        )
-        meta = _read_kmeans_meta(zone_dir)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            # crash window: the (re)fit's meta committed but the
-            # assignment epoch didn't — redo the recorded decision
-            gen = meta["gen"]
-            out = _fit_and_land_model(
-                vecs if gen == 0 else _grain_vectors(), gen, epoch_id
-            )
-        elif meta is None:
-            if vecs.isEmpty():
-                out = spark.createDataFrame(
-                    [], "doc_id long, cluster_id long, dist double"
-                )  # no model yet; next non-empty epoch fits
-            else:
-                out = _fit_and_land_model(vecs, 0, epoch_id)
-        else:
-            cents = read_kmeans_centroids(spark, zone_dir, meta["gen"])
-            # one assignment pass (r17): drift check + landing share it
-            assigned = kmeans_assign(vecs, cents).persist()
-            bm = _mean_dist(assigned)
-            fit_mean = meta.get("fit_mean_dist")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                assigned.unpersist()  # refit replaces it
-                out = _fit_and_land_model(
-                    _grain_vectors(), meta["gen"] + 1, epoch_id
-                )
-            else:
-                out = assigned
-        cur = _read_kmeans_meta(zone_dir)
-        gen_now = -1 if cur is None else cur["gen"]
-        _land_epoch(
+    cluster_gate = _ModelGate(
+        "cluster_assignment",
+        KMEANS_MODEL_DIR,
+        _kmeans_fit,
+        # broadcast-argmin against the k landed centroids
+        encode=lambda vecs, gen: kmeans_assign(
+            vecs, read_kmeans_centroids(spark, zone_dir, gen)
+        ),
+        refit_input=lambda _vecs: _grain_vectors(),
+        land=lambda _v, out, gen, epoch_id: _land_epoch(
             spark,
-            out.withColumn("model_gen", F.lit(gen_now)),
+            out.withColumn("model_gen", F.lit(gen)),
             tables["cluster_assignment"],
             os.path.join(zone_dir, "cluster_assignment"),
             zone_dir,
@@ -3215,8 +2883,12 @@ def run_corpus_ingest(
             epoch_id,
             n_buckets,
             bucket_col="doc_id",
-        )
-        out.unpersist()  # batch cache released; streams are long-lived
+        ),
+        empty_schema="doc_id long, cluster_id long, dist double",
+        meta_params={
+            "k": cluster_k, "iterations": cluster_iterations, "dim": dim,
+        },
+    )
 
     def _bpe_batch_words(grain: DataFrame) -> DataFrame:
         """The batch's weighted word-type slice under the training
@@ -3285,18 +2957,14 @@ def run_corpus_ingest(
             )
         return v
 
-    def _bpe_fit_and_land(
-        fit_words: DataFrame, gen: int, epoch_id: int
-    ) -> None:
+    def _bpe_fit(words: DataFrame, gen: int, gdir: str) -> DataFrame:
         """One deterministic merge learn; merge table + final vocab
-        land under gen=N and the meta (with fit_epoch, for
-        replay-stable refit decisions) commits BEFORE the counts
-        epoch — the kmeans-gate crash discipline."""
+        land under the gen dir, and the landed vocab is the fit-time
+        fragmentation input."""
         from ..operators.text import bpe_learn_merges_from_words
 
-        gdir = os.path.join(zone_dir, BPE_MODEL_DIR, f"gen={gen}")
         merges_df, vocab = bpe_learn_merges_from_words(
-            fit_words, gdir, n_merges=bpe_merges, return_vocab=True
+            words, gdir, n_merges=bpe_merges, return_vocab=True
         )
         merges_df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(gdir, "merge_table")
@@ -3304,62 +2972,35 @@ def run_corpus_ingest(
         vocab.write.mode("overwrite").parquet(
             os.path.join(gdir, "vocab_final")
         )
-        fit_mean = _bpe_mean_tokens(
-            spark.read.parquet(os.path.join(gdir, "vocab_final"))
-        )
-        _write_model_meta(
-            zone_dir, BPE_MODEL_DIR,
-            {
-                "gen": gen,
-                "fit_mean_tokens": fit_mean,
-                "fit_epoch": epoch_id,
-                "n_merges": bpe_merges,
-            },
-        )
+        return spark.read.parquet(os.path.join(gdir, "vocab_final"))
 
-    def _bpe_gate(grain: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs(zone_dir, "bpe_word_counts"):
-            return  # replayed, fully landed
-        batch_words = _bpe_batch_words(grain)
-        meta = _read_model_meta(zone_dir, BPE_MODEL_DIR)
-        if meta is not None and meta.get("fit_epoch") == epoch_id:
-            # crash window: the (re)fit's meta committed but the
-            # counts epoch didn't — redo the recorded decision
-            gen = meta["gen"]
-            _bpe_fit_and_land(
-                batch_words
-                if gen == 0
-                else _bpe_folded_words(batch_words),
-                gen,
-                epoch_id,
-            )
-        elif meta is None:
-            if not batch_words.isEmpty():
-                _bpe_fit_and_land(batch_words, 0, epoch_id)
-        else:
-            model = read_bpe_model(spark, zone_dir, meta["gen"])
-            merge_rows = model[0].orderBy("merge_rank").collect()
-            bm = _bpe_mean_tokens(
-                _bpe_apply_merges(batch_words, merge_rows)
-            )
-            fit_mean = meta.get("fit_mean_tokens")
-            if (
-                drift_refit_factor is not None
-                and bm is not None
-                and fit_mean is not None
-                and bm > drift_refit_factor * fit_mean
-            ):
-                _bpe_fit_and_land(
-                    _bpe_folded_words(batch_words),
-                    meta["gen"] + 1,
-                    epoch_id,
-                )
-        _land_epoch(
-            spark, batch_words, tables["bpe_word_counts"],
+    def _bpe_encode(words: DataFrame, gen: int) -> DataFrame:
+        merge_rows = (
+            read_bpe_model(spark, zone_dir, gen)[0]
+            .orderBy("merge_rank")
+            .collect()
+        )
+        return _bpe_apply_merges(words, merge_rows)
+
+    # the counts epoch lands whatever the model decision: the fit
+    # lands no zone rows of its own
+    bpe_gate = _ModelGate(
+        "bpe_word_counts",
+        BPE_MODEL_DIR,
+        _bpe_fit,
+        _bpe_encode,
+        refit_input=_bpe_folded_words,
+        land=lambda words, _out, _gen, epoch_id: _land_epoch(
+            spark, words, tables["bpe_word_counts"],
             os.path.join(zone_dir, "bpe_word_counts"), zone_dir,
             "bpe_word_counts", epoch_id, n_buckets,
             bucket_col="word",
-        )
+        ),
+        empty_schema="seq string, n long",
+        meta_params={"n_merges": bpe_merges},
+        statistic=_bpe_mean_tokens,
+        stat_key="fit_mean_tokens",
+    )
 
     # ADVICE r8: a crash mid-epoch leaves its staging dir behind and a
     # LATER epoch's success would strand it forever (replay only
@@ -3588,7 +3229,15 @@ def run_corpus_ingest(
                     bucket_col="doc_id",
                 )
                 if cluster_assign:
-                    _cluster_gate(grain, batch_vecs, epoch_id)
+                    _run_model_gate(
+                        spark, zone_dir, cluster_gate,
+                        (
+                            batch_vecs
+                            if batch_vecs is not None
+                            else vectors_from_event_counts(grain, dim=dim)
+                        ),
+                        epoch_id, drift_refit_factor,
+                    )
                 if sketch_cms:
                     from ..operators.text import (
                         cms_cells_from_term_counts,
@@ -3632,7 +3281,10 @@ def run_corpus_ingest(
                         bucket_col="r_idx",
                     )
                 if learn_bpe:
-                    _bpe_gate(grain, epoch_id)
+                    _run_model_gate(
+                        spark, zone_dir, bpe_gate, _bpe_batch_words(grain),
+                        epoch_id, drift_refit_factor,
+                    )
             _land_epoch(
                 spark, keep, tables[name],
                 os.path.join(zone_dir, name), zone_dir, name, epoch_id,
@@ -3658,14 +3310,8 @@ def run_corpus_ingest(
         Runs after the epoch fully commits — a crash in the fold
         window replays as an already-landed epoch and the fold waits
         for the next trigger."""
-        if not auto_compact_every:
-            return
-
         def due(zname: str) -> bool:
-            return (
-                len(committed_epochs(zone_dir, zname))
-                >= auto_compact_every
-            )
+            return _compaction_due(zone_dir, zname, auto_compact_every)
 
         if semantic_dedup:
             for zname, bcol in (
@@ -3722,158 +3368,3 @@ def run_corpus_ingest(
         if decontaminate_probes is not None:
             decontaminate_probes.unpersist()
     return dict(tables)
-
-
-def run_corpus_ingest_dedup_manifest(
-    spark: SparkSession,
-    raw_dir: str,
-    zone_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    base_fingerprints: DataFrame | None = None,
-    n_buckets: int = 8,
-    table_prefix: str = "corpus_m_",
-    await_termination: bool = True,
-) -> dict[str, str]:
-    """Exact-fingerprint deduplicating corpus ingest (ROADMAP r6 #3)
-    — :func:`run_corpus_ingest` with only the ``exact_dedup`` gate
-    enabled; kept as the named recipe a deployment reads about first.
-    """
-    return run_corpus_ingest(
-        spark, raw_dir, zone_dir, checkpoint_dir,
-        schema=schema,
-        exact_dedup=True,
-        base_fingerprints=base_fingerprints,
-        n_buckets=n_buckets,
-        table_prefix=table_prefix,
-        await_termination=await_termination,
-    )
-
-
-def run_corpus_ingest_semantic_dedup_manifest(
-    spark: SparkSession,
-    raw_dir: str,
-    zone_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    dim: int = 64,
-    n_planes: int = 8,
-    threshold: float = 0.8,
-    drop_dups: bool = True,
-    n_buckets: int = 8,
-    table_prefix: str = "corpus_s_",
-    await_termination: bool = True,
-    token_events: bool = False,
-) -> dict[str, str]:
-    """:func:`run_corpus_ingest_dedup_manifest` lifted from the
-    exact-fingerprint tier to the SEMANTIC tier (VERDICT r6 #6): every
-    arriving micro-batch feature-hashes into unit vectors
-    (``operators.text.feature_hash_vectors`` — model-free, so a doc's
-    vector never depends on corpus state and incremental maintenance
-    is exact), SRP-buckets, and probes the committed corpus'
-    MATERIALIZED VECTOR ZONE for near-dup pairs (cosine ≥ threshold
-    within LSH blocks — the streaming twin of the batch
-    ``text_semantic_neardup`` chain, same planes, same verify).
-
-    Three manifest-committed zone tables, one epoch id across all:
-
-    * ``{prefix}doc_vectors`` — the vector zone, appended
-      INCREMENTALLY (only the batch's kept vectors; the corpus is
-      never re-vectorized — the materialize-vectors seam's streaming
-      form). Committed BEFORE the docs table; the probe only trusts
-      vector epochs whose DOCS epoch also committed, so a crash in
-      the window leaves a self-healing cache entry, never phantom
-      corpus members.
-    * ``{prefix}neardup_pairs`` — every detected pair
-      ``(vec_a, vec_b, cosine_sim)``, id-ordered. With
-      ``drop_dups=False`` the union over epochs is row-identical to
-      the batch operator on the same corpus (replay-parity-gated):
-      a same-bucket pair lands in the later doc's epoch — via the
-      in-batch self-join if both arrived together, via the zone
-      probe otherwise.
-    * ``{prefix}documents`` — the corpus; with ``drop_dups=True`` a
-      batch doc is dropped when it near-dups ANY committed doc, or a
-      smaller-id doc in its own batch (greedy per-edge keeper —
-      deterministic; on a within-batch chain x~y, y~z, x<z<y it can
-      keep z where the batch connected-components keeper would not,
-      the documented delta vs ``dedup.dedup_clusters``). Zero-signal
-      docs (no vector) are always kept.
-
-    At 100 TB: the per-batch probe scans the narrow vector zone
-    (n_docs × ~520 B — ~0.5 % of a 100 KB/doc corpus), buckets
-    JVM-side, and joins on the 8-byte bucket; within-batch work is
-    |batch|-bounded. The replay key is the DOCS manifest — vectors
-    and pairs land first and are idempotent under their own
-    manifests, so a crash replay reconverges to the identical zone.
-
-    ``token_events=True`` (ROADMAP r8 #2) additionally maintains the
-    unified token-event grain in the same pass: one tokenize per
-    arriving document serves the dedup gate AND the state refresh,
-    and the grain never contains dropped near-dups.
-
-    Delegates to :func:`run_corpus_ingest` with the
-    ``semantic_dedup`` gate (plus ``state_refresh`` when
-    ``token_events``) — kept as the named recipe.
-    """
-    return run_corpus_ingest(
-        spark, raw_dir, zone_dir, checkpoint_dir,
-        schema=schema,
-        semantic_dedup=True,
-        state_refresh=token_events,
-        dim=dim,
-        n_planes=n_planes,
-        threshold=threshold,
-        drop_dups=drop_dups,
-        n_buckets=n_buckets,
-        table_prefix=table_prefix,
-        await_termination=await_termination,
-    )
-
-
-def run_corpus_ingest_state_refresh(
-    spark: SparkSession,
-    raw_dir: str,
-    zone_dir: str,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    n_buckets: int = 8,
-    shingle_n: int = 5,
-    table_prefix: str = "corpus_cs_",
-    await_termination: bool = True,
-) -> dict[str, str]:
-    """Corpus ingest that maintains the unified token-event grain
-    INCREMENTALLY (the single-scan multi-state seam, VERDICT r7 #1,
-    composed with the epoch manifest): each micro-batch lands (1) the
-    documents and (2) the batch's ``corpus_state.token_event_counts``
-    through their own atomic ``_epoch`` commits — so the per-epoch
-    corpus-scale work is exactly ONE tokenize pass over the arriving
-    documents, after which every state family (term / feature /
-    shingle / vectors) is a batch derivation over the committed grain
-    with zero text re-scans.
-
-    The grain is APPEND-ONLY here by construction: counts are keyed
-    per doc_id and a document's events are final when it arrives
-    (this ingest, like the dedup gates, assumes an append-only corpus
-    with unique doc_ids), so no cross-epoch merge is needed — the
-    committed union IS the corpus grain, row-exact vs a full batch
-    ``token_event_counts`` over the landed documents (replay-parity
-    tested).
-
-    Crash-window discipline matches the semantic gate: the grain
-    epoch lands FIRST, documents second; each ``_land_epoch`` is an
-    idempotent no-op once its own manifest holds the epoch, so a
-    crash between the two commits heals on replay (the grain epoch
-    skips, the docs epoch re-lands from the redelivered batch — the
-    grain is always a deterministic function of the same batch).
-
-    Delegates to :func:`run_corpus_ingest` with only the
-    ``state_refresh`` gate — kept as the named recipe."""
-    return run_corpus_ingest(
-        spark, raw_dir, zone_dir, checkpoint_dir,
-        schema=schema,
-        state_refresh=True,
-        n_buckets=n_buckets,
-        shingle_n=shingle_n,
-        table_prefix=table_prefix,
-        await_termination=await_termination,
-    )

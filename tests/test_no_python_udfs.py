@@ -30,11 +30,8 @@ def _plan_params():
 
 
 @pytest.mark.parametrize("name", _plan_params())
-def test_query_plan_has_no_python_udf(spark, name):
-    plan = (
-        QUERIES[name](spark, SF)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+def test_query_plan_has_no_python_udf(executed_plan, name):
+    plan = executed_plan(name, SF)
     assert "BatchEvalPython" not in plan, f"{name} uses a row-wise Python UDF"
     assert "ArrowEvalPython" not in plan, f"{name} uses a scalar pandas UDF"
     if name not in ARROW_BATCHED_OK:

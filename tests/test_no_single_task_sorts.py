@@ -88,11 +88,8 @@ def _plan_params():
 
 
 @pytest.mark.parametrize("name", _plan_params())
-def test_query_plan_has_no_single_task_sort(spark, name):
-    plan = (
-        QUERIES[name](spark, SF)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+def test_query_plan_has_no_single_task_sort(executed_plan, name):
+    plan = executed_plan(name, SF)
     if name in ALLOWED_GLOBAL_SORTS:
         return  # documented bounded-input exception
     assert not _has_single_task_sort(plan), (
@@ -325,17 +322,14 @@ ALLOWED_BNL_JOINS: dict[str, str] = {
 
 
 @pytest.mark.parametrize("name", _plan_params())
-def test_query_plan_has_no_unbounded_cartesian(spark, name):
+def test_query_plan_has_no_unbounded_cartesian(executed_plan, name):
     """No registered plan may contain CartesianProduct (both sides
     large — quadratic, full stop), and BroadcastNestedLoopJoin only
     where the build side is provably tiny (one-row aggregates,
     centroid tables, the documented exact-ANN baseline). A new query
     that trips this either gets an equi-key (banding, bucketing,
     LSH) or a justified allowlist entry — never silence."""
-    plan = (
-        QUERIES[name](spark, SF)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(name, SF)
     assert "CartesianProduct" not in plan, (
         f"{name} plans an unbounded cartesian:\n{plan}"
     )

@@ -33,7 +33,7 @@ from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming
     BPE_MODEL_DIR,
     IVF_MODEL_DIR,
     IVFPQ_MODEL_DIR,
-    _read_kmeans_meta,
+    KMEANS_MODEL_DIR,
     _read_model_meta,
     committed_epochs,
     compact_bpe_word_counts,
@@ -179,7 +179,7 @@ def test_corpus_ingest_soak_all_gates(spark, tmp_path):
         ) == _key(words)
 
         # drift refits actually happened mid-run
-        k_meta = _read_kmeans_meta(zone)
+        k_meta = _read_model_meta(zone, KMEANS_MODEL_DIR)
         b_meta = _read_model_meta(zone, BPE_MODEL_DIR)
         assert k_meta["gen"] >= 1 and k_meta["fit_epoch"] >= DRIFT_WAVE
         assert b_meta["gen"] >= 1 and b_meta["fit_epoch"] >= DRIFT_WAVE
@@ -246,10 +246,6 @@ def test_corpus_ingest_soak_all_gates(spark, tmp_path):
         compact_bpe_word_counts(
             spark, tables["bpe_word_counts"], zone, n_buckets=4
         )
-        from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-            KMEANS_MODEL_DIR,
-        )
-
         compact_model_zone(
             spark, tables["cluster_assignment"], zone,
             "cluster_assignment", KMEANS_MODEL_DIR, n_buckets=4,
@@ -298,7 +294,7 @@ def test_corpus_ingest_soak_all_gates(spark, tmp_path):
         assert before == {
             t: sorted(committed_epochs(zone, t)) for t in tables
         }
-        assert _read_kmeans_meta(zone)["gen"] == k_meta["gen"]
+        assert _read_model_meta(zone, KMEANS_MODEL_DIR)["gen"] == k_meta["gen"]
         assert _read_model_meta(zone, BPE_MODEL_DIR)["gen"] == b_meta["gen"]
     finally:
         for t in tables.values():

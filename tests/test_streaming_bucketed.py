@@ -514,7 +514,7 @@ def test_corpus_ingest_dedup_manifest_end_to_end(spark, tmp_path):
     zone never contains two rows with the same fingerprint."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         read_manifest_zone,
-        run_corpus_ingest_dedup_manifest,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -533,8 +533,9 @@ def test_corpus_ingest_dedup_manifest_end_to_end(spark, tmp_path):
             "doc_id long, text string",
         )
         b1.write.mode("append").parquet(raw)
-        run_corpus_ingest_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, exact_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_df = read_manifest_zone(spark, {"documents": table}, zone)[
             "documents"
@@ -549,8 +550,9 @@ def test_corpus_ingest_dedup_manifest_end_to_end(spark, tmp_path):
             "doc_id long, text string",
         )
         b2.write.mode("append").parquet(raw)
-        run_corpus_ingest_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, exact_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_df = read_manifest_zone(spark, {"documents": table}, zone)[
             "documents"
@@ -558,8 +560,9 @@ def test_corpus_ingest_dedup_manifest_end_to_end(spark, tmp_path):
         assert {r["doc_id"] for r in zone_df.collect()} == {1, 2, 5}
 
         # idempotent: third run with nothing new changes nothing
-        run_corpus_ingest_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, exact_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_df = read_manifest_zone(spark, {"documents": table}, zone)[
             "documents"
@@ -805,7 +808,7 @@ def test_corpus_semantic_dedup_gate_replay_parity(spark, tmp_path):
     )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         read_manifest_zone,
-        run_corpus_ingest_semantic_dedup_manifest,
+        run_corpus_ingest,
     )
 
     docs = (
@@ -839,8 +842,9 @@ def test_corpus_semantic_dedup_gate_replay_parity(spark, tmp_path):
             )
             lo = cut
             chunk.write.mode("append").parquet(raw)
-            tables = run_corpus_ingest_semantic_dedup_manifest(
-                spark, raw, zone, ckpt, drop_dups=False,
+            tables = run_corpus_ingest(
+                spark, raw, zone, ckpt, semantic_dedup=True,
+                drop_dups=False,
                 n_buckets=4, table_prefix=prefix,
             )
         pairs_df = read_manifest_zone(
@@ -856,8 +860,9 @@ def test_corpus_semantic_dedup_gate_replay_parity(spark, tmp_path):
             spark, {"documents": tables["documents"]}, zone
         )["documents"]
         assert zone_docs.count() == docs.count()
-        run_corpus_ingest_semantic_dedup_manifest(
-            spark, raw, zone, ckpt, drop_dups=False,
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, semantic_dedup=True,
+            drop_dups=False,
             n_buckets=4, table_prefix=prefix,
         )
         assert (
@@ -879,7 +884,7 @@ def test_corpus_semantic_dedup_gate_drops_bag_of_words_dups(spark, tmp_path):
     and unrelated docs survive."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         read_manifest_zone,
-        run_corpus_ingest_semantic_dedup_manifest,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -898,8 +903,9 @@ def test_corpus_semantic_dedup_gate_drops_bag_of_words_dups(spark, tmp_path):
             "doc_id long, text string",
         )
         b1.write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_semantic_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        tables = run_corpus_ingest(
+            spark, raw, zone, ckpt, semantic_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_docs = read_manifest_zone(
             spark, {"documents": tables["documents"]}, zone
@@ -915,8 +921,9 @@ def test_corpus_semantic_dedup_gate_drops_bag_of_words_dups(spark, tmp_path):
             "doc_id long, text string",
         )
         b2.write.mode("append").parquet(raw)
-        run_corpus_ingest_semantic_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, semantic_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_docs = read_manifest_zone(
             spark, {"documents": tables["documents"]}, zone
@@ -947,7 +954,7 @@ def test_corpus_semantic_gate_heals_vector_docs_commit_window(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         committed_epochs,
         read_manifest_zone,
-        run_corpus_ingest_semantic_dedup_manifest,
+        run_corpus_ingest,
         _manifest_dir,
         _table_location,
     )
@@ -967,8 +974,9 @@ def test_corpus_semantic_gate_heals_vector_docs_commit_window(spark, tmp_path):
             "doc_id long, text string",
         )
         docs.write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_semantic_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        tables = run_corpus_ingest(
+            spark, raw, zone, ckpt, semantic_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         zone_docs = read_manifest_zone(
             spark, {"documents": tables["documents"]}, zone
@@ -990,8 +998,9 @@ def test_corpus_semantic_gate_heals_vector_docs_commit_window(spark, tmp_path):
 
         # replay: fresh checkpoint redelivers the files as epoch 0
         shutil.rmtree(ckpt)
-        run_corpus_ingest_semantic_dedup_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, semantic_dedup=True,
+            n_buckets=4, table_prefix=prefix,
         )
         spark.catalog.refreshTable(tables["documents"])
         healed = read_manifest_zone(
@@ -1021,7 +1030,7 @@ def test_corpus_semantic_gate_heals_vector_docs_commit_window(spark, tmp_path):
 
 
 def test_corpus_state_refresh_ingest_replay_parity(spark, tmp_path):
-    """run_corpus_ingest_state_refresh: multi-batch ingest maintains
+    """run_corpus_ingest(state_refresh=True): multi-batch ingest maintains
     the token-event grain incrementally (one tokenize pass per
     epoch); the committed union equals a full batch
     token_event_counts over the landed corpus row-exact, every state
@@ -1036,7 +1045,7 @@ def test_corpus_state_refresh_ingest_replay_parity(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         committed_epochs,
         read_manifest_zone,
-        run_corpus_ingest_state_refresh,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -1050,12 +1059,14 @@ def test_corpus_state_refresh_ingest_replay_parity(spark, tmp_path):
         ).select("doc_id", "text")
         # two delivery waves -> two epochs under one checkpoint
         base.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(raw)
-        run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         base.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        tables = run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         assert len(committed_epochs(zone, "documents")) >= 2
 
@@ -1082,8 +1093,9 @@ def test_corpus_state_refresh_ingest_replay_parity(spark, tmp_path):
 
         # idempotent re-delivery: same checkpoint, nothing re-lands
         n_epochs = len(committed_epochs(zone, "token_events"))
-        run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         assert len(committed_epochs(zone, "token_events")) == n_epochs
     finally:
@@ -1105,7 +1117,7 @@ def test_corpus_state_refresh_heals_grain_docs_commit_window(spark, tmp_path):
         _table_location,
         committed_epochs,
         read_manifest_zone,
-        run_corpus_ingest_state_refresh,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -1122,8 +1134,9 @@ def test_corpus_state_refresh_heals_grain_docs_commit_window(spark, tmp_path):
             "doc_id long, text string",
         )
         docs.write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        tables = run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         key = lambda df: sorted(tuple(r) for r in df.collect())
         grain_before = key(
@@ -1142,8 +1155,9 @@ def test_corpus_state_refresh_heals_grain_docs_commit_window(spark, tmp_path):
         assert committed_epochs(zone, "token_events") == {0}
 
         shutil.rmtree(ckpt)
-        run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         spark.catalog.refreshTable(tables["documents"])
         assert committed_epochs(zone, "documents") == {0}
@@ -1179,7 +1193,7 @@ def test_corpus_state_grain_composes_with_compaction(spark, tmp_path):
         committed_epochs,
         compact_manifest_zone,
         read_manifest_zone,
-        run_corpus_ingest_state_refresh,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -1192,12 +1206,14 @@ def test_corpus_state_grain_composes_with_compaction(spark, tmp_path):
             "/root/testdata/sf0.001/documents.parquet"
         ).select("doc_id", "text").limit(60)
         base.filter(F.col("doc_id") % 3 == 0).write.mode("append").parquet(raw)
-        run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         base.filter(F.col("doc_id") % 3 == 1).write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        tables = run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         assert len(committed_epochs(zone, "token_events")) >= 2
         key = lambda df: sorted(tuple(r) for r in df.collect())
@@ -1222,8 +1238,9 @@ def test_corpus_state_grain_composes_with_compaction(spark, tmp_path):
 
         # ingest continues on the compacted zone
         base.filter(F.col("doc_id") % 3 == 2).write.mode("append").parquet(raw)
-        run_corpus_ingest_state_refresh(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        run_corpus_ingest(
+            spark, raw, zone, ckpt, state_refresh=True,
+            n_buckets=4, table_prefix=prefix,
         )
         landed_docs = read_manifest_zone(
             spark, {"documents": tables["documents"]}, zone
@@ -1239,7 +1256,7 @@ def test_corpus_state_grain_composes_with_compaction(spark, tmp_path):
 
 def test_semantic_gate_with_token_events_single_tokenize(spark, tmp_path):
     """ROADMAP r8 #2 — the grain-served semantic gate: with
-    token_events=True the gate's vectors derive from the staged batch
+    state_refresh=True the gate's vectors derive from the staged batch
     grain (one tokenize per arriving batch serves BOTH the dedup gate
     and the corpus-state refresh), the kept docs' grain lands as a
     fourth manifest table, dropped near-dups never enter the grain,
@@ -1252,7 +1269,7 @@ def test_semantic_gate_with_token_events_single_tokenize(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         committed_epochs,
         read_manifest_zone,
-        run_corpus_ingest_semantic_dedup_manifest,
+        run_corpus_ingest,
     )
 
     raw = str(tmp_path / "raw")
@@ -1270,13 +1287,14 @@ def test_semantic_gate_with_token_events_single_tokenize(spark, tmp_path):
             "doc_id long, text string",
         )
         docs.write.mode("append").parquet(raw)
-        tables = run_corpus_ingest_semantic_dedup_manifest(
+        tables = run_corpus_ingest(
             spark, raw, str(tmp_path / "zone_a"), str(tmp_path / "ck_a"),
-            n_buckets=4, table_prefix=prefix_a, token_events=True,
+            semantic_dedup=True, state_refresh=True,
+            n_buckets=4, table_prefix=prefix_a,
         )
-        tables_b = run_corpus_ingest_semantic_dedup_manifest(
+        tables_b = run_corpus_ingest(
             spark, raw, str(tmp_path / "zone_b"), str(tmp_path / "ck_b"),
-            n_buckets=4, table_prefix=prefix_b,
+            semantic_dedup=True, n_buckets=4, table_prefix=prefix_b,
         )
         zone_a = str(tmp_path / "zone_a")
         kept_a = {

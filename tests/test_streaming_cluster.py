@@ -17,7 +17,8 @@ from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators
     text,
 )
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-    _read_kmeans_meta,
+    KMEANS_MODEL_DIR,
+    _read_model_meta,
     read_cluster_assignment,
     read_kmeans_centroids,
     run_corpus_ingest,
@@ -75,7 +76,7 @@ def test_cluster_gate_single_epoch_matches_batch_seam(spark, tmp_path):
             _batch_seam(spark, docs, str(tmp_path / "batch_zone"))
         )
         assert got == want and len(got) == 60
-        meta = _read_kmeans_meta(zone)
+        meta = _read_model_meta(zone, KMEANS_MODEL_DIR)
         assert meta["gen"] == 0 and meta["fit_mean_dist"] is not None
         assert read_kmeans_centroids(spark, zone).count() == 4
     finally:
@@ -109,7 +110,7 @@ def test_cluster_gate_incremental_then_drift_refit(spark, tmp_path):
             state_refresh=True, cluster_assign=True,
             n_buckets=4, table_prefix=prefix,
         )
-        assert _read_kmeans_meta(zone)["gen"] == 0
+        assert _read_model_meta(zone, KMEANS_MODEL_DIR)["gen"] == 0
         cents0 = read_kmeans_centroids(spark, zone)
 
         # wave 2: steady state — assign-only against gen-0 centroids
@@ -119,7 +120,7 @@ def test_cluster_gate_incremental_then_drift_refit(spark, tmp_path):
             state_refresh=True, cluster_assign=True,
             n_buckets=4, table_prefix=prefix,
         )
-        meta = _read_kmeans_meta(zone)
+        meta = _read_model_meta(zone, KMEANS_MODEL_DIR)
         assert meta["gen"] == 0  # no refit
         got_all = read_cluster_assignment(
             spark, tables["cluster_assignment"], zone
@@ -145,7 +146,7 @@ def test_cluster_gate_incremental_then_drift_refit(spark, tmp_path):
             drift_refit_factor=1e-9,
             n_buckets=4, table_prefix=prefix,
         )
-        meta = _read_kmeans_meta(zone)
+        meta = _read_model_meta(zone, KMEANS_MODEL_DIR)
         assert meta["gen"] == 1
         got = _key(
             read_cluster_assignment(
@@ -164,7 +165,7 @@ def test_cluster_gate_incremental_then_drift_refit(spark, tmp_path):
             state_refresh=True, cluster_assign=True,
             n_buckets=4, table_prefix=prefix,
         )
-        assert _read_kmeans_meta(zone)["gen"] == 1
+        assert _read_model_meta(zone, KMEANS_MODEL_DIR)["gen"] == 1
         assert (
             _key(
                 read_cluster_assignment(

@@ -26,8 +26,8 @@ from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
     IVF_MODEL_DIR,
     IVFPQ_MODEL_DIR,
+    PQ_MODEL_DIR,
     _read_model_meta,
-    _read_pq_meta,
     read_ivf_assign,
     read_ivf_centroids,
     read_ivfpq_codes,
@@ -81,7 +81,7 @@ def test_pq_gate_single_epoch_matches_batch_build(spark, tmp_path):
         got = _codes_key(read_pq_codes(spark, tables["pq_codes"], zone))
         want = _codes_key(pq_encode(emb, want_cb))
         assert got == want and len(got) == 200 * 4
-        meta = _read_pq_meta(zone)
+        meta = _read_model_meta(zone, PQ_MODEL_DIR)
         assert meta["gen"] == 0 and meta["fit_mean_dist"] is not None
     finally:
         for t in tables.values():
@@ -118,7 +118,7 @@ def test_pq_gate_incremental_then_drift_refit(spark, tmp_path):
         tables = run_embedding_ingest(
             spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
         )
-        assert _read_pq_meta(zone)["gen"] == 0
+        assert _read_model_meta(zone, PQ_MODEL_DIR)["gen"] == 0
         cb0 = read_pq_codebook(spark, zone)
         assert _cb_key(cb0) == _cb_key(pq_codebook(base))
 
@@ -128,7 +128,7 @@ def test_pq_gate_incremental_then_drift_refit(spark, tmp_path):
         run_embedding_ingest(
             spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
         )
-        assert _read_pq_meta(zone)["gen"] == 0  # no refit
+        assert _read_model_meta(zone, PQ_MODEL_DIR)["gen"] == 0  # no refit
         got = _codes_key(read_pq_codes(spark, tables["pq_codes"], zone))
         want = _codes_key(pq_encode(base, cb0))
         assert got == want and len(got) == 200 * 4
@@ -141,7 +141,7 @@ def test_pq_gate_incremental_then_drift_refit(spark, tmp_path):
         run_embedding_ingest(
             spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
         )
-        meta = _read_pq_meta(zone)
+        meta = _read_model_meta(zone, PQ_MODEL_DIR)
         assert meta["gen"] == 1
         cb1 = read_pq_codebook(spark, zone)
         assert _cb_key(cb1) == _cb_key(pq_codebook(all_vecs))
@@ -154,7 +154,7 @@ def test_pq_gate_incremental_then_drift_refit(spark, tmp_path):
         run_embedding_ingest(
             spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
         )
-        assert _read_pq_meta(zone)["gen"] == 1
+        assert _read_model_meta(zone, PQ_MODEL_DIR)["gen"] == 1
         assert (
             _codes_key(read_pq_codes(spark, tables["pq_codes"], zone))
             == got
@@ -512,7 +512,7 @@ def test_store_once_mode_drops_flat_zone_and_refits_from_lists(
         )
 
         # the PQ refit rode the same lists-sourced fallback
-        assert _read_pq_meta(zone)["gen"] >= 1
+        assert _read_model_meta(zone, PQ_MODEL_DIR)["gen"] >= 1
         cb = read_pq_codebook(spark, zone)
         assert _codes_key(
             read_pq_codes(spark, tables["pq_codes"], zone)
