@@ -414,12 +414,11 @@ def kmeans_fixed(
     cluster-balanced curation recipes (SemDeDup-style: cluster the
     corpus, then cap per-cluster representation).
 
-    The IVF tier already trains a quantizer
-    (``similarity.kmeans_centroids``) but float-summation order makes
-    its centroids engine-dependent, so it cannot be oracle-gated.
-    This operator applies the engine's iterative-determinism
-    discipline instead, trading a few ulps of arithmetic freedom for
-    a bit-exact DuckDB mirror:
+    It is also the IVF tier's one trained quantizer. A float-summed
+    Lloyd makes centroids engine-dependent, so it cannot be
+    oracle-gated; this operator applies the engine's
+    iterative-determinism discipline instead, trading a few ulps of
+    arithmetic freedom for a bit-exact DuckDB mirror:
 
     * seed: the vectors of the ``k`` smallest ids (deterministic,
       SQL-mirrorable — not kmeans++ randomness);
@@ -458,8 +457,8 @@ def kmeans_fixed(
     ``(cid, centroid_vec)`` instead of the assignment — the trained
     coarse quantizer the IVF tier plugs in (``similarity.ivf_topk``'s
     ``centroids`` parameter): det-round-12 decimal-summed means, so
-    unlike ``similarity.kmeans_centroids`` the values are bit-exact
-    cross-engine and the composition stays oracle-gateable (the
+    the values are bit-exact cross-engine and the composition stays
+    oracle-gateable (the
     oracle's final ``c{iterations}`` CTE is exactly this table).
     ``return_model=True`` returns BOTH — ``(assignment, centroids)``
     in one fit, for callers that land the model and its fit-time

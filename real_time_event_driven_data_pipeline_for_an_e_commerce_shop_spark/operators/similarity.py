@@ -542,220 +542,6 @@ def embedding_near_dups_multitable(
     ).filter(F.col("cosine_sim") >= threshold)
 
 
-def kmeans_parallel_seeds(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    dim: int | None = None,
-    rounds: int = 3,
-    oversample: float = 2.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list:
-    """k-means|| oversampling initialization (Bahmani et al., VLDB'12)
-    — the proper distributed seeding for :func:`kmeans_centroids`,
-    deterministic end-to-end.
-
-    Per round: every point is scored by its cosine distance to the
-    current seed set (the same broadcast-argmax subplan as assignment —
-    one pass, no shuffle of vectors), and points enter the seed pool
-    independently with probability ``min(1, l·d/Σd)`` where
-    ``l = oversample·k``. The Bernoulli draw is the deterministic hash
-    coin ``md5_long(vec_id) / 2^48 < p`` — reproducible run-to-run like
-    every other "random" choice in this engine (cf.
-    ``stratified_sample_flags``). After ``rounds`` passes the pool
-    holds O(l·rounds) candidates — KBs — which are weighted by their
-    assignment counts (one aggregation) and reduced to ``n_clusters``
-    centroids driver-side by weighted farthest-first + Lloyd over the
-    tiny candidate set. At 100 TB each round is one linear scan;
-    nothing quadratic, nothing corpus-sized ever reaches the driver.
-
-    Returns ``[(cid, [float, ...]), ...]`` ready to seed
-    :func:`kmeans_centroids` via its ``seeds`` parameter.
-    """
-    spark = embeddings.sparkSession
-    if dim is None:
-        dim = embeddings.select(F.size(vec_col).alias("d")).first()["d"]
-    corpus = embeddings.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("vec")
-    )
-    first = corpus.orderBy("vid").limit(1).collect()[0]["vec"]
-    pool: list[list[float]] = [list(first)]
-    ell = max(1.0, oversample * n_clusters)
-    from ..functions.core import md5_long
-
-    coin = (
-        md5_long(F.col("vid").cast("string")) % F.lit(1 << 48)
-    ).cast("double") / float(1 << 48)
-    for _ in range(rounds):
-        cent_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(pool)],
-            "cid long, centroid_vec array<double>",
-        )
-        # cosine distance to the CLOSEST current seed — a per-row fold
-        # over the broadcast cells array (optimization r17, VERDICT
-        # r16 #8: the same _cells_array projection the IVF tier uses).
-        # The old ×|pool| broadcast-join fan-out + groupBy(min,
-        # first(vec)) planned as SortAggregate and shuffled |corpus|
-        # rows WITH their vectors once per round; the fold is one
-        # shuffle-free pass. array_min over per-cell 1−cos keeps the
-        # aggregate-min NaN semantics (NaN sorts largest, so a
-        # degenerate zero-norm cell never wins either way).
-        dist = corpus.join(F.broadcast(_cells_array(cent_df))).select(
-            "vid",
-            "vec",
-            F.array_min(
-                F.transform(
-                    "_cents",
-                    lambda c: F.lit(1.0) - cosine(F.col("vec"), c["cv"]),
-                )
-            ).alias("d"),
-        )
-        total = dist.agg(F.sum("d").alias("s")).first()["s"] or 0.0
-        if total <= 0:
-            break
-        p = F.least(F.lit(1.0), F.lit(ell) * F.col("d") / F.lit(total))
-        drawn = dist.filter(coin < p).select("vec").collect()
-        pool.extend(list(r["vec"]) for r in drawn)
-    # weight candidates by how many points they'd absorb, then reduce
-    # driver-side (pool is O(l·rounds) — tiny by construction)
-    cand_df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(pool)],
-        "cid long, centroid_vec array<double>",
-    )
-    # per-row argmax cell (same (s, -cid) struct order as the old
-    # groupBy-max, which planned as SortAggregate over the ×|pool|
-    # fan-out), then one map-side-combined count per cid — the only
-    # shuffle is |pool| partial-count rows per task (r17)
-    weights_rows = (
-        corpus.join(F.broadcast(_cells_array(cand_df)))
-        .select(
-            (-_argmax_cell(F.col("vec"), F.col("_cents"))["nc"]).alias(
-                "cid"
-            )
-        )
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .collect()
-    )
-    weights = {r["cid"]: r["w"] for r in weights_rows}
-
-    def _cos(a: list, b: list) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return num / (na * nb) if na and nb else 0.0
-
-    # weighted farthest-first over the candidate pool: greedy, exact,
-    # deterministic; O(pool² · dim) on KB-sized input
-    order = sorted(range(len(pool)), key=lambda i: -weights.get(i, 0))
-    chosen = [order[0]]
-    while len(chosen) < min(n_clusters, len(pool)):
-        best_i, best_score = None, None
-        for i in order:
-            if i in chosen:
-                continue
-            nearest = max(_cos(pool[i], pool[c]) for c in chosen)
-            score = (1.0 - nearest) * weights.get(i, 1)
-            if best_score is None or score > best_score:
-                best_i, best_score = i, score
-        chosen.append(best_i)
-    return [(rank, pool[i]) for rank, i in enumerate(chosen)]
-
-
-def kmeans_centroids(
-    embeddings: DataFrame,
-    n_clusters: int = 16,
-    dim: int | None = None,
-    max_iterations: int = 5,
-    stride: int = 29,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seeds: list | None = None,
-) -> DataFrame:
-    """Lloyd-refined coarse quantizer for :func:`ivf_topk` (VERDICT r3
-    item #9): deterministic strided seeding (the same init the strided
-    quantizer uses — a k-means|| oversampling pass drops into the same
-    slot), then ``max_iterations`` rounds of assign/update, all
-    DataFrame ops.
-
-    Scale shape, per iteration:
-
-    * **assign** — the identical broadcast-join argmax subplan
-      :func:`ivf_topk` uses for corpus assignment: centroids broadcast
-      as DATA (plan size constant in ``n_clusters``), one
-      max-over-struct aggregation, shuffle carries |corpus| rows.
-    * **update** — per-dimension ``avg`` aggregates (``dim`` columns,
-      map-side combined): the shuffle carries n_partitions × n_clusters
-      × dim partial sums, never the vectors themselves. Clusters that
-      lose every member keep their previous centroid.
-
-    Centroids are collected each round — n_clusters × dim doubles, KBs
-    — and re-broadcast, so every iteration runs the same constant-size
-    plan with flat lineage. Centroid values depend on float summation
-    order, so a trained-quantizer IVF is NOT DuckDB-oracle-mirrorable
-    (the registered ``ann_ivf_topk`` keeps the strided quantizer for
-    the exact-value gate); recall is measured by
-    ``scripts/ivf_recall_curve.py`` instead.
-
-    ``seeds`` (``[(cid, vector), ...]``, e.g. from
-    :func:`kmeans_parallel_seeds`) overrides the default strided-sample
-    initialization.
-
-    Returns ``(cid long, centroid_vec array<double>)`` with cids
-    relabeled ``0..n_clusters-1``.
-    """
-    spark = embeddings.sparkSession
-    if dim is None:
-        dim = embeddings.select(F.size(vec_col).alias("d")).first()["d"]
-    corpus = embeddings.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("vec")
-    )
-    if seeds is not None:
-        centroids = [(i, list(v)) for i, (_, v) in enumerate(seeds)]
-    else:
-        seed_rows = (
-            embeddings.filter(F.col(id_col) % stride == 0)
-            .orderBy(F.col(id_col))
-            .limit(n_clusters)
-            .select(as_double(F.col(vec_col)).alias("centroid_vec"))
-            .collect()
-        )
-        centroids = [(i, list(r["centroid_vec"])) for i, r in enumerate(seed_rows)]
-    for _ in range(max_iterations):
-        cent_df = spark.createDataFrame(
-            centroids, "cid long, centroid_vec array<double>"
-        )
-        assigned = (
-            corpus.join(F.broadcast(cent_df))
-            .select(
-                "vid",
-                F.struct(
-                    cosine(F.col("vec"), F.col("centroid_vec")).alias("s"),
-                    (-F.col("cid")).alias("nc"),
-                    F.col("vec").alias("vec"),
-                ).alias("_cand"),
-            )
-            .groupBy("vid")
-            .agg(F.max("_cand").alias("_best"))
-            .select((-F.col("_best.nc")).alias("cid"), F.col("_best.vec").alias("vec"))
-        )
-        new_rows = assigned.groupBy("cid").agg(
-            *[
-                F.avg(F.element_at("vec", i + 1)).alias(f"m_{i}")
-                for i in range(dim)
-            ]
-        ).collect()
-        updated = {
-            r["cid"]: [r[f"m_{i}"] for i in range(dim)] for r in new_rows
-        }
-        centroids = [
-            (cid, updated.get(cid, prev)) for cid, prev in centroids
-        ]
-    return spark.createDataFrame(
-        centroids, "cid long, centroid_vec array<double>"
-    )
-
-
 def _ivf_corpus_lists(
     embeddings: DataFrame,
     cent: DataFrame,
@@ -896,7 +682,7 @@ def ivf_cell_stats(
     occupancy over the uniform expectation (total / n_clusters): a
     cell at 4.0 makes every query probing it pay 4× the expected scan,
     and a crowd of near-empty cells means the quantizer wastes probe
-    budget — the signal to retrain (``kmeans_centroids``) or re-size
+    budget — the signal to retrain (``ml.kmeans_fixed``) or re-size
     ``n_clusters``. Empty cells appear as explicit 0 rows (silently
     missing rows would hide exactly the pathology the report exists
     to catch).
@@ -1008,9 +794,10 @@ def ivf_topk(
     * **Centroids** default to a strided sample (``vec_id % stride ==
       0``, first ``n_clusters`` by id) — model-free, reproducible, and
       mirrorable in the SQL oracle. Pass ``centroids`` (``cid`` +
-      ``centroid_vec``, e.g. from :func:`kmeans_centroids`) to swap in
-      a trained quantizer — the plan shape is identical; only the
-      oracle-mirrorability is lost (float-sum-order-dependent values).
+      ``centroid_vec``, e.g. ``ml.kmeans_fixed(...,
+      return_centroids=True)``) to swap in a trained quantizer — the
+      plan shape is identical, and the exact-sum Lloyd update keeps it
+      oracle-mirrorable (``ann_ivf_trained``).
     * **Corpus assignment** is a per-row argmax fold (optimization
       r16): the centroid DataFrame collapses to ONE broadcast array
       row and each corpus row picks its cell via ``array_max`` over
@@ -1040,10 +827,10 @@ def ivf_topk(
     batch's probed cells, so a many-query batch whose probes union to
     every cell reads the whole zone in one scan. That is the right
     plan for offline scoring; for an ONLINE batch that should keep the
-    n_probe/n_clusters read fraction, serve per cell-affine probe
-    group via :func:`ivf_topk_cell_affine` (result-identical, scans
-    bounded to ``max_cells`` cells each), or keep batches cell-affine
-    upstream — route queries to probe-group queues by coarse cell.
+    n_probe/n_clusters read fraction, keep batches cell-affine
+    upstream — route queries to probe-group queues by coarse cell
+    (:func:`cell_affine_groups`). Splitting a mixed batch after it
+    arrives never reads fewer bytes than the union scan.
     """
     cent = _serve_quantizer(
         embeddings, centroids, n_clusters, stride, id_col, vec_col
@@ -1107,7 +894,7 @@ def ivf_probe_assignments(
     """``(query_id, cluster_id)`` — the cells each query would probe,
     under :func:`ivf_topk`'s exact probe rule (cosine DESC, cid ASC,
     first ``n_probe``). |q| × n_probe rows; the batching seam
-    :func:`ivf_topk_cell_affine` groups on."""
+    :func:`cell_affine_groups` routes on."""
     cent = centroids.select(
         F.col("cid").cast("long").alias("cid"),
         as_double(F.col("centroid_vec")).alias("centroid_vec"),
@@ -1147,13 +934,10 @@ def cell_affine_groups(
     the router's rule — queries sharing a probe signature belong in
     the same batch, and a signature-affine batch's single DPP scan
     reads ~the single-query n_probe/n_clusters fraction regardless of
-    batch size (measured in scripts/bench_ivf_dpp.py). Applied to a
-    MIXED batch that already arrived, per-group serving is the
-    bounded-scan fallback: each group's scan is pruned to ≤ max_cells
-    cells (bounded memory, independently schedulable, early results),
-    at a total-Σ cost the caller sees honestly — when the Σ exceeds
-    the union by much and one big scan is acceptable, plain
-    ``ivf_topk`` over the whole batch is the cheaper plan.
+    batch size (measured in scripts/bench_ivf_dpp.py). A MIXED batch
+    that already arrived is served whole by plain ``ivf_topk``: split
+    into groups it never read fewer bytes nor ran faster at any
+    measured scale (BASELINE.md, round-15/16 affine routing).
 
     Pure driver-side: input is |q| × n_probe (query, cell) pairs — a
     bounded collect of the probe table, the same order as the
@@ -1178,163 +962,6 @@ def cell_affine_groups(
         else:
             groups.append(([qid], set(cells)))
     return [(sorted(qids), sorted(cells)) for qids, cells in groups]
-
-
-def ivf_topk_cell_affine(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    k: int = 5,
-    stride: int = 29,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    lists: DataFrame | None = None,
-    max_cells: int | None = None,
-) -> DataFrame:
-    """:func:`ivf_topk` served per cell-affine probe group — the
-    online-batch serving mode for a cluster_id-partitioned lists zone.
-
-    Result-identical to ``ivf_topk`` over the same batch (each query's
-    top-k is independent; grouping only changes WHICH scan serves it),
-    but each group's plan carries a probe join whose DPP filter admits
-    at most ``max_cells`` cells (default ``2 × n_probe``), so a
-    cell-affine batch reads ~the single-query byte fraction instead of
-    the batch-union fraction. See :func:`cell_affine_groups` for the
-    rule and when to prefer the plain single-scan form."""
-    if max_cells is None:
-        max_cells = 2 * n_probe
-    if centroids is not None:
-        cent = centroids.select(
-            F.col("cid").cast("long").alias("cid"),
-            F.col("centroid_vec").alias("centroid_vec"),
-        )
-    else:
-        cent = (
-            embeddings.filter(F.col(id_col) % stride == 0)
-            .orderBy(F.col(id_col))
-            .limit(n_clusters)
-            .select(
-                F.col(id_col).cast("long").alias("cid"),
-                as_double(F.col(vec_col)).alias("centroid_vec"),
-            )
-        )
-    probe_rows = [
-        (r["query_id"], r["cluster_id"])
-        for r in ivf_probe_assignments(
-            queries, cent, n_probe=n_probe, id_col=id_col, vec_col=vec_col
-        ).collect()
-    ]
-    groups = cell_affine_groups(probe_rows, max_cells)
-    out: DataFrame | None = None
-    for qids, _cells in groups:
-        part = ivf_topk(
-            embeddings,
-            queries.filter(F.col(id_col).isin(qids)),
-            n_clusters=n_clusters,
-            n_probe=n_probe,
-            k=k,
-            stride=stride,
-            id_col=id_col,
-            vec_col=vec_col,
-            centroids=cent,
-            lists=lists,
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return ivf_topk(
-            embeddings, queries, n_clusters=n_clusters, n_probe=n_probe,
-            k=k, stride=stride, id_col=id_col, vec_col=vec_col,
-            centroids=cent, lists=lists,
-        )
-    return out
-
-
-def ivfpq_topk_cell_affine(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-    k: int = 5,
-    stride: int = 29,
-    cb_stride: int = 31,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    codebook: DataFrame | None = None,
-    codes: DataFrame | None = None,
-    max_cells: int | None = None,
-) -> DataFrame:
-    """:func:`ivfpq_topk` served per cell-affine probe group — the ADC
-    twin of :func:`ivf_topk_cell_affine`, for a cluster_id-partitioned
-    codes zone. Same contract: result-identical to the plain serve
-    (each query's top-k is independent), each group's scan DPP-pruned
-    to ≤ ``max_cells`` cells (default ``2 × n_probe``); see
-    :func:`cell_affine_groups` for the router rule and the honest
-    bytes physics."""
-    if max_cells is None:
-        max_cells = 2 * n_probe
-    if centroids is not None:
-        cent = _coarse_centroids(centroids)
-    elif codes is not None and codebook is not None:
-        raise ValueError(
-            "serving from landed codes/codebook needs the landed "
-            "centroids too (probe selection and grouping key off them)"
-        )
-    else:
-        cent = (
-            embeddings.filter(F.col(id_col) % stride == 0)
-            .orderBy(F.col(id_col))
-            .limit(n_clusters)
-            .select(
-                F.col(id_col).cast("long").alias("cid"),
-                as_double(F.col(vec_col)).alias("cvec"),
-            )
-        )
-    probe_rows = [
-        (r["query_id"], r["cluster_id"])
-        for r in ivf_probe_assignments(
-            queries,
-            cent.select("cid", F.col("cvec").alias("centroid_vec")),
-            n_probe=n_probe,
-            id_col=id_col,
-            vec_col=vec_col,
-        ).collect()
-    ]
-    groups = cell_affine_groups(probe_rows, max_cells)
-    out: DataFrame | None = None
-    for qids, _cells in groups:
-        part = ivfpq_topk(
-            embeddings,
-            queries.filter(F.col(id_col).isin(qids)),
-            n_clusters=n_clusters,
-            n_probe=n_probe,
-            n_subspaces=n_subspaces,
-            n_codes=n_codes,
-            dim=dim,
-            k=k,
-            stride=stride,
-            cb_stride=cb_stride,
-            id_col=id_col,
-            vec_col=vec_col,
-            centroids=cent,
-            codebook=codebook,
-            codes=codes,
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return ivfpq_topk(
-            embeddings, queries, n_clusters=n_clusters, n_probe=n_probe,
-            n_subspaces=n_subspaces, n_codes=n_codes, dim=dim, k=k,
-            stride=stride, cb_stride=cb_stride, id_col=id_col,
-            vec_col=vec_col, centroids=cent, codebook=codebook,
-            codes=codes,
-        )
-    return out
 
 
 def quantize_int8(embeddings: DataFrame, err_digits: int = 9) -> DataFrame:

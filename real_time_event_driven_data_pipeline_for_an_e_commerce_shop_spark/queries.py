@@ -5060,8 +5060,8 @@ def _kmeans_ctes(k: int = 4, iterations: int = 3) -> str:
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN with a TRAINED coarse quantizer, oracle-gated
     (VERDICT r8 #5): the strided-sample quantizer of ann_ivf_topk was
-    the mirrorable fallback because the float-order-dependent
-    ``similarity.kmeans_centroids`` could not be hash-checked —
+    the mirrorable fallback because a float-summed Lloyd quantizer
+    could not be hash-checked —
     ``ml.kmeans_fixed`` solved exactly that with det-round-12
     decimal-summed Lloyd arithmetic, so the trained composition
     (``ivf_topk(centroids=kmeans_fixed(..., return_centroids=True))``)
@@ -6635,66 +6635,6 @@ def q_ann_ivfpq_once_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivfpq_topk_streamed(
             spark, tables["ivfpq_codes"], zone,
             emb.filter(F.col("vec_id") < 10), k=5,
-        )
-        res_dir = os.path.join(base, "result")
-        out.write.mode("overwrite").parquet(res_dir)
-        return spark.read.parquet(res_dir)
-    finally:
-        for tb in spark.catalog.listTables():
-            if tb.name.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {tb.name}")
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-@query("ann_ivfpq_affine_stream", oracle=_ivfpq_once_oracle())
-def q_ann_ivfpq_affine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION serving composition (VERDICT r14 #4): a
-    cell-AFFINE batch served over a LIVE multi-generation store-once
-    zone — ``ivfpq_topk_streamed(affine_max_cells=…)`` routes the
-    query batch into probe-signature groups over the composite
-    (generation, cell) grain and serves each group with its own
-    DPP-pruned multigen scores plan. Zone setup is byte-identical to
-    ``ann_ivfpq_once_stream`` (two waves, drift refit, retained-sample
-    live rule) and the SAME dual-chain oracle hash-gates the result —
-    the router is required to change only WHICH scan serves a query,
-    never its top-k. A single query probes n_probe cells in EACH of
-    the two live generations (8 composite cells), so the cap of 12
-    forces real grouping (several groups, each scan pruned to ≤ 12 of
-    the 32 (gen, cell) partitions) rather than one batch-union scan."""
-    import shutil
-
-    from .streaming.pipeline import (
-        ivfpq_topk_streamed,
-        run_embedding_ingest,
-    )
-
-    base = _scratch_zone("q_ivfpq_affine_stream")
-    raw = os.path.join(base, "raw")
-    zone = os.path.join(base, "zone")
-    ckpt = os.path.join(base, "ckpt")
-    prefix = "q_ivfpq_affstream_"
-    emb = _t(spark, sf_dir, "embeddings")["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    drift = emb.select(
-        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: (x * 100).cast("float")
-        ).alias("embedding"),
-    )
-    try:
-        tables = {}
-        for wave in (emb, drift):
-            wave.write.mode("append").parquet(raw)
-            tables = run_embedding_ingest(
-                spark, raw, zone, ckpt,
-                pq=False, ivfpq=True, ivf=False, n_buckets=4,
-                table_prefix=prefix, store_flat_embeddings=False,
-            )
-        out = ivfpq_topk_streamed(
-            spark, tables["ivfpq_codes"], zone,
-            emb.filter(F.col("vec_id") < 10), k=5,
-            affine_max_cells=12,
         )
         res_dir = os.path.join(base, "result")
         out.write.mode("overwrite").parquet(res_dir)
@@ -9498,47 +9438,6 @@ def q_secret_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # item #1). Reorder so the least-proven entries occupy the early slots;
 # the displaced tail is exactly the TPC-H-shaped queries that have been
 # driver-green since round 1 and were judge-re-verified in rounds 2–3.
-
-@query("ann_ivf_affine", oracle=None)
-def q_ann_ivf_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched IVF serving through the cell-affinity router
-    (``ivf_topk_cell_affine`` — VERDICT r12 #4's grouped serve, given
-    its own correctness row in r14): route the 10-query batch into
-    probe-signature groups under a ``max_cells=8`` union cap and serve
-    each group with one DPP-bounded scan. Result-identical to the
-    plain ``ivf_topk`` by contract (grouping only changes WHICH scan
-    serves a query), so the oracle IS ``ann_ivf_topk``'s — a routing
-    bug that drops, duplicates, or re-ranks any query's neighbors
-    hash-mismatches here. Read-fraction physics measured in
-    ``scripts/bench_ivf_dpp.py`` (affine batch 0.51 vs 1.0 unrouted)."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    return similarity.ivf_topk_cell_affine(
-        emb, emb.filter(F.col("vec_id") < 10),
-        n_clusters=16, n_probe=4, k=5, stride=29, max_cells=8,
-    )
-
-
-ORACLES["ann_ivf_affine"] = ORACLES["ann_ivf_topk"]
-
-
-@query("ann_ivfpq_affine", oracle=None)
-def q_ann_ivfpq_affine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ADC twin of ``ann_ivf_affine``: ``ivfpq_topk_cell_affine``
-    routes the batch by probe signature over IVFPQ's own coarse
-    quantizer and serves each group's ADC scan DPP-bounded to
-    ``max_cells`` cells. Result-identical to the plain ``ivfpq_topk``,
-    so the oracle IS ``ann_ivfpq_topk``'s full IVFADC chain; the
-    codes-zone read fraction (0.486 affine vs 1.0 unrouted) is the
-    r14 BASELINE.md line."""
-    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
-    return similarity.ivfpq_topk_cell_affine(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, max_cells=8,
-    )
-
-
-ORACLES["ann_ivfpq_affine"] = ORACLES["ann_ivfpq_topk"]
-
 
 _SWEEP_PRIORITY = [
     # ---- r16 rotation ----------------------------------------------

@@ -21,17 +21,19 @@ Mapping, piece by piece:
   run-per-upload-batch cadence; swap for ``processingTime`` for a
   continuously running deployment.
 
-Incrementality upgrade over the reference: instead of recomputing the
-full snapshot per trigger, each micro-batch recomputes **only the date
-partitions touched by newly arrived items** and upserts them via
-dynamic partition overwrite (``sinks.kv``). At 100 TB a day's arrival
-touches a handful of partitions; the reference's full recompute would
-touch all of them.
+Incrementality is output-side only. Each micro-batch still re-reads
+and re-validates the **full raw history** of all three inputs, as the
+reference does per trigger, so its input work grows with the history
+(about 20 Spark jobs per micro-batch). Only the output is narrowed: the
+KPIs are restricted to the date partitions touched by newly arrived
+items and upserted via dynamic partition overwrite (``sinks.kv``), so
+untouched dates are never rewritten. Making the input side incremental
+too (land validated rows per epoch, recompute from pruned date
+partitions) is ROADMAP direction 2.
 """
 
 from __future__ import annotations
 
-import functools
 import logging
 import os
 from collections.abc import Callable
@@ -60,9 +62,16 @@ def run_event_driven_pipeline(
     zone (``products.csv``, ``orders/``, ``order_items/``).
 
     The order_items stream drives processing (it is the fact at item
-    grain); products/orders are re-read as batch dimensions per
-    micro-batch — the reference does the same full re-read of all
-    three inputs per trigger (``task_2.py:271-273``).
+    grain), but it only decides WHICH dates to recompute. Every
+    non-empty micro-batch re-reads and re-validates the full raw
+    history of ``products``, ``orders`` and ``order_items`` — the
+    reference does the same full re-read per trigger
+    (``task_2.py:271-273``) — builds the item fact over that history,
+    and only then restricts it to the order dates touched by the new
+    items. The input work per micro-batch therefore grows with the
+    history; what stays bounded is the output: only the touched dates'
+    KPI partitions are upserted. ROADMAP direction 2 covers landing
+    validated rows per epoch so the input side is incremental too.
     """
     cat_sink = KeyedParquetUpsertSink(
         os.path.join(out_dir, "category_kpi"), "order_date"
@@ -1218,8 +1227,7 @@ def _load_ivfpq_multigen(
     cb_g)`` with every table carrying a ``gen`` column (codes via the
     retained-sample reader; centroids/codebooks unioned per live
     generation), or None when no model/generations have landed.
-    Shared by :func:`ivfpq_topk_streamed` and the read-fraction
-    measurement harness (scripts/bench_affine_stream.py)."""
+    The model-loading half of :func:`ivfpq_topk_streamed`."""
     from ..operators.similarity import _coarse_centroids
 
     meta = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
@@ -1259,44 +1267,6 @@ def _load_ivfpq_multigen(
     return meta, codes.withColumnRenamed("model_gen", "gen"), cents_g, cb_g
 
 
-def _multigen_probe_rows(
-    queries: DataFrame,
-    cents_g: DataFrame,
-    n_probe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per (query, gen) the top-``n_probe`` probed cells under that
-    generation's centroids — the exact selection rule and tie-break
-    (_csim DESC, cluster_id ASC) ``_ivfpq_scores_multigen`` applies
-    inside the serve, factored out so the affine router and the
-    read-fraction harness group by the same composite cells the scan
-    will actually touch."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import as_double, cosine
-
-    qv = queries.select(
-        F.col(id_col).cast("long").alias("query_id"),
-        as_double(F.col(vec_col)).alias("qvec"),
-    )
-    wprobe = Window.partitionBy("query_id", "gen").orderBy(
-        F.desc("_csim"), F.asc("cluster_id")
-    )
-    return (
-        qv.join(F.broadcast(cents_g))
-        .select(
-            "query_id",
-            "gen",
-            F.col("cid").alias("cluster_id"),
-            cosine(F.col("qvec"), F.col("cvec")).alias("_csim"),
-        )
-        .withColumn("_pr", F.row_number().over(wprobe))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "gen", "cluster_id")
-    )
-
-
 def ivfpq_topk_streamed(
     spark: SparkSession,
     table: str,
@@ -1306,8 +1276,6 @@ def ivfpq_topk_streamed(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    affine_max_cells: int | None = None,
-    affine_sum_guard: float | None = None,
 ) -> DataFrame:
     """Multi-generation ADC top-k over an IVFPQ-only store-once zone.
 
@@ -1337,33 +1305,13 @@ def ivfpq_topk_streamed(
     the loop: scripts/bench_store_once_gens.py) collapses to one
     plan's worth.
 
-    ``affine_max_cells`` composes the cell-affinity router
-    (:func:`operators.similarity.cell_affine_groups`, VERDICT r14 #4)
-    with this serve — the production batch-serving mode over a LIVE
-    multi-generation zone: the batch's (gen, cell) probe signatures
-    (a bounded |q|·G·n_probe collect, the same order as the router's
-    batch form) pack into groups whose composite-cell union never
-    exceeds the cap, and each group runs its own multigen scores plan
-    whose DPP filter admits ≤ ``affine_max_cells`` (gen, cluster_id)
-    partitions. Result-IDENTICAL to the plain serve (each query's
-    top-k is independent; the same dual-chain oracle hash-gates both
-    forms) — only the bytes each scan touches change. A single query
-    probes ``n_probe × G`` composite cells, so the cap must be at
-    least that.
-
-    ``affine_sum_guard`` makes the router SELF-LIMITING on
-    adversarially mixed batches: grouping can never read fewer TOTAL
-    bytes than the batch-union scan (every union cell sits in ≥ 1
-    group — measured Σ 2.07× the union on a random 10-query batch at
-    ×10, scripts/bench_affine_stream.py), so when Σ(group cells) >
-    guard × union cells the serve falls back to the single union-DPP
-    scan — same result, the cheaper plan. The guard trades per-scan
-    boundedness (each group ≤ max_cells) for total bytes; leave it
-    None when bounded per-scan memory/scheduling is the point."""
-    from ..operators.similarity import (
-        _ivfpq_scores_multigen,
-        cell_affine_groups,
-    )
+    A mixed batch is served whole: DPP admits the union of its probed
+    (gen, cell) partitions in one scan. Splitting it into probe-affine
+    groups after it arrived read 2.07× the union's bytes and took
+    longer (BASELINE.md, round-15 affine router); keep batches
+    cell-affine upstream (:func:`operators.similarity.
+    cell_affine_groups`) instead."""
+    from ..operators.similarity import _ivfpq_scores_multigen
     from ..operators.similarity import det_round as _det_round
 
     loaded = _load_ivfpq_multigen(spark, table, zone_dir)
@@ -1376,59 +1324,17 @@ def ivfpq_topk_streamed(
     meta, codes_g, cents_g, cb_g = loaded
     from pyspark.sql import Window
 
-    def _scores(qdf: DataFrame) -> DataFrame:
-        return _ivfpq_scores_multigen(
-            qdf,
-            cents_g,
-            cb_g,
-            codes_g,
-            n_probe=n_probe,
-            n_subspaces=meta["n_subspaces"],
-            dim=meta["dim"],
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-
-    if affine_max_cells is None:
-        sim = _scores(queries)
-    else:
-        # router probe rows: per (query, gen) top-n_probe cells under
-        # that generation's centroids — the identical selection rule
-        # and tie-break _ivfpq_scores_multigen applies inside each
-        # group's plan, so grouping never changes WHICH cells serve a
-        # query, only which scan does
-        probe_rows = _multigen_probe_rows(
-            queries, cents_g, n_probe, id_col, vec_col
-        ).collect()
-        # composite (gen, cell) → dense int, deterministically ordered
-        cell_ids = {
-            gc: i
-            for i, gc in enumerate(
-                sorted({(r["gen"], r["cluster_id"]) for r in probe_rows})
-            )
-        }
-        groups = cell_affine_groups(
-            [
-                (r["query_id"], cell_ids[(r["gen"], r["cluster_id"])])
-                for r in probe_rows
-            ],
-            affine_max_cells,
-        )
-        if affine_sum_guard is not None and groups:
-            # grouped scans can never beat the union's total bytes
-            # (every union cell sits in >= 1 group); on a mixed batch
-            # whose grouped sum overshoots the guard, the single
-            # union-DPP scan is the cheaper identical-result plan
-            total_cells = sum(len(cells) for _qids, cells in groups)
-            if total_cells > affine_sum_guard * len(cell_ids):
-                groups = []
-        sim = None
-        for qids, _cells in groups:
-            part = _scores(queries.filter(F.col(id_col).isin(qids)))
-            sim = part if sim is None else sim.unionByName(part)
-        if sim is None:
-            sim = _scores(queries)
-
+    sim = _ivfpq_scores_multigen(
+        queries,
+        cents_g,
+        cb_g,
+        codes_g,
+        n_probe=n_probe,
+        n_subspaces=meta["n_subspaces"],
+        dim=meta["dim"],
+        id_col=id_col,
+        vec_col=vec_col,
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("_sim"), F.asc("neighbor_id")
     )
@@ -1455,7 +1361,6 @@ def ivfpq_rerank_topk_streamed(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    affine_max_cells: int | None = None,
 ) -> DataFrame:
     """Shortlist → EXACT rerank served from a live streaming zone —
     and the ENFORCED seam of the store-once × rerank deployment rule
@@ -1478,17 +1383,11 @@ def ivfpq_rerank_topk_streamed(
     model + CURRENT-generation codes through the flat deployment's own
     reader (:func:`read_ivfpq_codes` without retained-sample mode — a
     flat refit re-encodes everything, so the store-once accretion
-    predicate would double-serve superseded rows here;
-    ``affine_max_cells`` composes the cell router), and the refine
+    predicate would double-serve superseded rows here), and the refine
     stage broadcasts the |q|·shortlist id set against ONE pass over
     the landed flat zone — the corpus is never crossed, same shape as
     :func:`operators.similarity.ivfpq_rerank_topk`."""
-    from ..operators.similarity import (
-        as_double,
-        cosine,
-        ivfpq_topk,
-        ivfpq_topk_cell_affine,
-    )
+    from ..operators.similarity import as_double, cosine, ivfpq_topk
     from ..operators.similarity import det_round as _det_round
 
     if flat_table is None or not spark.catalog.tableExists(flat_table):
@@ -1512,14 +1411,7 @@ def ivfpq_rerank_topk_streamed(
     flat = read_manifest_zone(
         spark, {"embeddings": flat_table}, zone_dir
     )["embeddings"]
-    adc_fn = (
-        ivfpq_topk
-        if affine_max_cells is None
-        else functools.partial(
-            ivfpq_topk_cell_affine, max_cells=affine_max_cells
-        )
-    )
-    short = adc_fn(
+    short = ivfpq_topk(
         flat, queries, k=shortlist, n_probe=n_probe,
         id_col=id_col, vec_col=vec_col,
         centroids=cent, codebook=cb, codes=codes,

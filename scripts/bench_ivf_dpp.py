@@ -220,15 +220,9 @@ def main() -> None:
         # single-query fraction no matter the batch size. Measured
         # here: a 10-query signature-affine batch (the largest
         # signature bucket of a 200-query pool — what the router
-        # produces) vs the random 10-query batch above; plus
-        # ivf_topk_cell_affine on the random batch — the bounded-scan
-        # fallback for a MIXED batch, whose per-group scans stay
-        # <= max_cells cells each (scheduling/memory boundedness;
-        # its total Σ is reported honestly, >= the union by
-        # construction).
+        # produces) vs the random 10-query batch above.
         from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
             cell_affine_groups,
-            ivf_topk_cell_affine,
         )
 
         sizes = cell_sizes("ivf_assign")
@@ -258,50 +252,11 @@ def main() -> None:
             )
         )
 
-        # the mixed-batch fallback: bounded per-group scans
-        rand_rows = [
-            (qid, c)
-            for qid, cs in probed_cells(cents, queries).items()
-            for c in cs
-        ]
-        groups = cell_affine_groups(rand_rows, max_cells=8)
-        group_fracs = [
-            sum(sizes.get(c, 0) for c in cells) / total
-            for _qids, cells in groups
-        ]
-        out["mixed_batch_n_groups"] = len(groups)
-        out["mixed_batch_max_group_read_fraction"] = round(
-            max(group_fracs), 4
-        )
-        out["mixed_batch_total_grouped_read_fraction"] = round(
-            sum(group_fracs), 4
-        )
-        out["mixed_batch_union_read_fraction"] = out[
-            "ivf_assign_read_fraction_batch10"
-        ]
-
-        # result parity: grouped serve == plain serve on the same batch
-        plain = ivf_topk(
-            emb, queries, n_probe=4, k=5, centroids=cents, lists=lists
-        )
-        grouped = ivf_topk_cell_affine(
-            emb, queries, n_probe=4, k=5,
-            centroids=cents, lists=lists, max_cells=8,
-        )
-        key = lambda df: sorted(  # noqa: E731
-            map(tuple, df.collect())
-        )
-        assert key(plain) == key(grouped), "cell-affine serve diverged"
-
         # the ADC twin (VERDICT r13 #3): the same affinity physics on
         # the cluster_id-partitioned CODES zone — probe signatures come
         # from IVFPQ's own coarse quantizer, routing is the identical
         # rule, and a signature-affine batch's one DPP-pruned ADC scan
         # reads ~the single-query fraction of the codes bytes.
-        from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
-            ivfpq_topk_cell_affine,
-        )
-
         psizes = cell_sizes("ivfpq_codes")
         ptotal = sum(psizes.values())
         ppool_probes = probed_cells(pcent, pool)
@@ -329,19 +284,6 @@ def main() -> None:
                 emb, paffine_q, k=5,
                 centroids=pcent, codebook=pcb, codes=codes,
             )
-        )
-
-        # ADC parity: the grouped codes-zone serve == the plain one
-        p_plain = ivfpq_topk(
-            emb, queries, k=5,
-            centroids=pcent, codebook=pcb, codes=codes,
-        )
-        p_grouped = ivfpq_topk_cell_affine(
-            emb, queries, k=5,
-            centroids=pcent, codebook=pcb, codes=codes, max_cells=8,
-        )
-        assert key(p_plain) == key(p_grouped), (
-            "ivfpq cell-affine serve diverged"
         )
 
         print(json.dumps({"metric": "ivf_dpp", "factor": factor, **out}))

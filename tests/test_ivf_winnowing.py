@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+    ml,
     similarity,
     text,
 )
@@ -33,14 +34,14 @@ def test_ivf_finds_exact_neighbor_in_probed_cluster(spark):
     assert out[0]["cosine_sim"] > out[1]["cosine_sim"]
 
 
-def test_kmeans_centroids_recover_separated_clusters(spark):
+def test_kmeans_fixed_quantizer_recovers_separated_clusters(spark):
     """Trained-quantizer option (VERDICT r3 item #9): on a corpus of
-    three well-separated directions, Lloyd refinement from a BAD strided
-    seed (all three seeds land in cluster A) must still move centroids
-    apart enough that trained-IVF at n_probe=1 beats strided-IVF and
-    matches brute force."""
+    three well-separated directions, ``ml.kmeans_fixed`` Lloyd
+    refinement from a BAD seed (all three seeds land in cluster A)
+    must still move centroids apart enough that trained-IVF at
+    n_probe=1 matches brute force."""
     # 9 vectors: ids 0-2 cluster A, 3-5 cluster B, 6-8 cluster C —
-    # stride=1 seeds = ids 0,1,2: ALL in cluster A
+    # kmeans_fixed seeds from the k smallest ids, 0,1,2: ALL in cluster A
     def v(axis, eps):
         base = [0.0, 0.0, 0.0]
         base[axis] = 1.0
@@ -49,8 +50,9 @@ def test_kmeans_centroids_recover_separated_clusters(spark):
 
     vecs = [v(axis, 0.01 * j) for axis in range(3) for j in range(3)]
     df = _emb_df(spark, vecs)
-    cent = similarity.kmeans_centroids(
-        df, n_clusters=3, dim=3, max_iterations=5, stride=1
+    cent = ml.kmeans_fixed(
+        df, k=3, iterations=3, dim=3, id_col="vec_id",
+        vec_col="embedding", return_centroids=True,
     )
     rows = cent.collect()
     assert len(rows) == 3
@@ -73,45 +75,6 @@ def test_kmeans_centroids_recover_separated_clusters(spark):
         for q in range(9)
     }
     assert got == expected
-
-
-@pytest.mark.slow
-def test_kmeans_parallel_seeds_cover_clusters(spark):
-    """k-means|| oversampling seeding: on three well-separated
-    directions the deterministic hash-coin sampling must pull seed
-    candidates from ALL clusters (distance-weighted probability), and
-    Lloyd from those seeds recovers the three axes — without relying on
-    a lucky strided init."""
-    def v(axis, eps):
-        base = [0.0, 0.0, 0.0]
-        base[axis] = 1.0
-        base[(axis + 1) % 3] = eps
-        return base
-
-    vecs = [v(axis, 0.01 * j) for axis in range(3) for j in range(3)]
-    df = _emb_df(spark, vecs)
-    seeds = similarity.kmeans_parallel_seeds(
-        df, n_clusters=3, dim=3, rounds=3, oversample=2.0
-    )
-    assert len(seeds) == 3
-    # deterministic: second run returns bit-identical seeds
-    again = similarity.kmeans_parallel_seeds(
-        df, n_clusters=3, dim=3, rounds=3, oversample=2.0
-    )
-    assert seeds == again
-    # farthest-first selection must have spread across all three axes
-    seed_axes = sorted(
-        max(range(3), key=lambda i: vec[i]) for _, vec in seeds
-    )
-    assert seed_axes == [0, 1, 2]
-    cent = similarity.kmeans_centroids(
-        df, n_clusters=3, dim=3, max_iterations=3, seeds=seeds
-    )
-    axes = sorted(
-        max(range(3), key=lambda i: r["centroid_vec"][i])
-        for r in cent.collect()
-    )
-    assert axes == [0, 1, 2]
 
 
 def test_srp_multitable_recall_monotone(spark):
@@ -604,15 +567,15 @@ def test_cell_affine_groups_packing_rules():
         cell_affine_groups(rows, max_cells=3)
 
 
-def test_ivf_topk_cell_affine_matches_plain_serve(spark, tmp_path):
-    """Grouped serving is result-identical to the single-scan form —
-    over both the in-plan corpus and a landed lists zone — and the
-    probe-assignment helper mirrors ivf_topk's probe rule exactly."""
+def test_ivf_topk_landed_lists_and_probe_assignments(spark, tmp_path):
+    """Serving from a landed cluster_id-partitioned lists zone is
+    result-identical to the in-plan form, and the probe-assignment
+    helper (the batching seam ``cell_affine_groups`` routes on)
+    returns exactly n_probe cells per query, deterministically."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
         ivf_list_assign,
         ivf_probe_assignments,
         ivf_topk,
-        ivf_topk_cell_affine,
     )
 
     emb = (
@@ -624,15 +587,6 @@ def test_ivf_topk_cell_affine_matches_plain_serve(spark, tmp_path):
 
     def key(df):
         return sorted(map(tuple, df.collect()))
-
-    plain = ivf_topk(emb, queries, n_probe=4, k=5)
-    assert key(
-        ivf_topk_cell_affine(emb, queries, n_probe=4, k=5, max_cells=8)
-    ) == key(plain)
-    # degenerate cap = n_probe: every group is a single signature
-    assert key(
-        ivf_topk_cell_affine(emb, queries, n_probe=4, k=5, max_cells=4)
-    ) == key(plain)
 
     # served from a landed cluster_id-partitioned lists zone
     cent = (
@@ -652,15 +606,11 @@ def test_ivf_topk_cell_affine_matches_plain_serve(spark, tmp_path):
     landed = spark.read.schema(
         "vec_id long, embedding array<double>, cluster_id long"
     ).parquet(zone)
+    in_plan = ivf_topk(emb, queries, n_probe=4, k=5, centroids=cent)
     plain_z = ivf_topk(
         emb, queries, n_probe=4, k=5, centroids=cent, lists=landed
     )
-    assert key(
-        ivf_topk_cell_affine(
-            emb, queries, n_probe=4, k=5, centroids=cent,
-            lists=landed, max_cells=8,
-        )
-    ) == key(plain_z)
+    assert key(plain_z) == key(in_plan)
 
     # the probe helper returns exactly n_probe cells per query, and
     # re-running it is deterministic
@@ -737,105 +687,6 @@ def test_store_once_multigen_serve_file_prunes(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-@pytest.mark.slow
-def test_affine_router_over_multigen_streamed_serve(spark, tmp_path):
-    """VERDICT r14 #4 — the production serving composition: the
-    cell-affinity router over a LIVE multi-generation store-once zone.
-    ``ivfpq_topk_streamed(affine_max_cells=…)`` must be
-    result-IDENTICAL to the plain multigen serve (grouping changes
-    which scan serves a query, never its top-k), each group's plan
-    must keep dynamic partition pruning, and with the cap at the
-    single-query floor (n_probe × G composite cells) distinct probe
-    signatures must yield REAL grouping — several DPP-pruned codes
-    scans, not one batch-union scan."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-        ivfpq_topk_streamed,
-        run_embedding_ingest,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") < 200)
-    )
-    drift = emb.select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: (x * 100).cast("float")
-        ).alias("embedding"),
-    )
-    raw, zone, ckpt = (str(tmp_path / d) for d in ("raw", "zone", "ckpt"))
-    prefix = "t_aff_stream_"
-    tables = {}
-    queries = emb.filter(F.col("vec_id").isin([3, 18, 57, 111, 160]))
-    try:
-        for wave in (emb, drift):
-            wave.write.mode("append").parquet(raw)
-            tables = run_embedding_ingest(
-                spark, raw, zone, ckpt,
-                pq=False, ivfpq=True, ivf=False, n_buckets=4,
-                table_prefix=prefix, store_flat_embeddings=False,
-            )
-        plain = ivfpq_topk_streamed(
-            spark, tables["ivfpq_codes"], zone, queries, k=5,
-        )
-        affine = ivfpq_topk_streamed(
-            spark, tables["ivfpq_codes"], zone, queries, k=5,
-            affine_max_cells=8,  # = n_probe × G: the single-query floor
-        )
-        key = lambda df: sorted(map(tuple, df.collect()))
-        assert key(affine) == key(plain)
-
-        plan = affine._jdf.queryExecution().executedPlan().toString()
-        n_code_scans = sum(
-            1
-            for line in plan.splitlines()
-            if "ivfpq_codes" in line and "Scan" in line
-        )
-        assert n_code_scans >= 2, (
-            f"affine cap at the single-query floor should split "
-            f"distinct probe signatures into several group scans, "
-            f"found {n_code_scans}:\n{plan[:4000]}"
-        )
-        assert plan.lower().count("dynamicpruning") >= n_code_scans, (
-            f"every group scan must keep DPP:\n{plan[:4000]}"
-        )
-
-        # a cap below the single-query floor is a loud error
-        import pytest
-
-        with pytest.raises(ValueError, match="max_cells"):
-            ivfpq_topk_streamed(
-                spark, tables["ivfpq_codes"], zone, queries, k=5,
-                affine_max_cells=7,
-            )
-
-        # the Σ-cost guard: Σ(group cells) ≥ union cells ALWAYS (every
-        # union cell sits in ≥ 1 group), so a sub-1.0 guard must
-        # trigger on any grouping — the serve falls back to ONE
-        # union-DPP scan, result identical
-        guarded = ivfpq_topk_streamed(
-            spark, tables["ivfpq_codes"], zone, queries, k=5,
-            affine_max_cells=8, affine_sum_guard=0.99,
-        )
-        # inspect BEFORE executing: AQE's post-execution plan string
-        # prints extra occurrences of the same scan
-        gplan = guarded._jdf.queryExecution().executedPlan().toString()
-        n_guard_scans = sum(
-            1
-            for line in gplan.splitlines()
-            if "ivfpq_codes" in line and "Scan" in line
-        )
-        assert n_guard_scans == 1, (
-            f"sum-guard should fall back to the single union scan, "
-            f"found {n_guard_scans} scans"
-        )
-        assert key(guarded) == key(plain)
-    finally:
-        for t in tables.values():
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_rerank_streamed_deployment_rule(spark, tmp_path):
     """VERDICT r14 #3, decided by measurement and enforced in code:
     store-once = ADC-only serving; rerank requires
@@ -843,8 +694,7 @@ def test_rerank_streamed_deployment_rule(spark, tmp_path):
     table) must fail LOUDLY at the rerank seam — never silently serve
     ADC-grade results under a rerank name — and the flat deployment's
     streamed rerank must equal the batch refine form bit-for-bit
-    (single-batch delivery reproduces the strided fit), with the
-    affine router composing result-identically."""
+    (single-batch delivery reproduces the strided fit)."""
     import pytest
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
@@ -896,64 +746,6 @@ def test_rerank_streamed_deployment_rule(spark, tmp_path):
         )
         batch = ivfpq_rerank_topk(emb, queries, shortlist=20, k=5)
         assert key(streamed) == key(batch)
-        affine = ivfpq_rerank_topk_streamed(
-            spark, tables2["ivfpq_codes"], zone2, queries,
-            flat_table=tables2["embeddings"], shortlist=20, k=5,
-            affine_max_cells=8,
-        )
-        assert key(affine) == key(batch)
     finally:
         for t in {**tables, **tables2}.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_ivfpq_topk_cell_affine_matches_plain_serve(spark, tmp_path):
-    """The ADC twin of the grouped serve: result-identical to plain
-    ivfpq_topk over both the in-plan form and a landed
-    cluster_id-partitioned codes zone; landed-serve misuse (codes +
-    codebook without the centroids they key off) is rejected."""
-    import pytest
-
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
-        ivfpq_model,
-        ivfpq_topk,
-        ivfpq_topk_cell_affine,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") < 200)
-    )
-    queries = emb.filter(F.col("vec_id").isin([3, 18, 57, 111, 160]))
-
-    def key(df):
-        return sorted(map(tuple, df.collect()))
-
-    plain = ivfpq_topk(emb, queries, k=5)
-    assert key(
-        ivfpq_topk_cell_affine(emb, queries, k=5, max_cells=8)
-    ) == key(plain)
-
-    # landed zone serve
-    cent, cb, codes = ivfpq_model(emb)
-    zone = str(tmp_path / "codes")
-    codes.write.partitionBy("cluster_id").parquet(zone)
-    landed = spark.read.schema(
-        "vec_id long, s long, code long, cluster_id long"
-    ).parquet(zone)
-    plain_z = ivfpq_topk(
-        emb, queries, k=5, centroids=cent, codebook=cb, codes=landed
-    )
-    assert key(
-        ivfpq_topk_cell_affine(
-            emb, queries, k=5, centroids=cent, codebook=cb,
-            codes=landed, max_cells=8,
-        )
-    ) == key(plain_z)
-    assert key(plain_z) == key(plain)
-
-    with pytest.raises(ValueError, match="landed centroids"):
-        ivfpq_topk_cell_affine(
-            emb, queries, k=5, codebook=cb, codes=landed
-        )

@@ -158,15 +158,6 @@ ALLOWED_BNL_JOINS: dict[str, str] = {
         "assignment/encode live in the one-time model-zone build, not "
         "in this plan"
     ),
-    "ann_ivf_affine": (
-        "built on ann_ivf_topk's k-centroid broadcasts (in-plan strided "
-        "quantizer, corpus argmax assign + query probe selection); the "
-        "cell-affinity router adds only bounded grouping and equi-joins"
-    ),
-    "ann_ivfpq_affine": (
-        "built on ann_ivfpq_topk's k coarse-centroid broadcasts; the "
-        "cell-affinity router adds only bounded grouping and equi-joins"
-    ),
     "ann_ivfpq_rerank": (
         "built on ann_ivfpq_topk's k-centroid broadcasts; the rerank "
         "stage adds only an equi-key broadcast hash join of the "
