@@ -290,8 +290,8 @@ def _bucketed_kpi_setup(spark, sf_dir: str, base_dir: str):
         iso_date,
     )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        read_validated_zone_bucketed,
-        write_validated_zone_bucketed,
+        read_zone_tables,
+        write_zone_table,
     )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sources.readers import (
         load_testdata,
@@ -303,13 +303,15 @@ def _bucketed_kpi_setup(spark, sf_dir: str, base_dir: str):
     orders = mapping.orders_from_tpch(t["orders"]).withColumn(
         "order_date", F.to_date("created_at")
     )
-    names = write_validated_zone_bucketed(
-        {"orders": orders, "order_items": items},
-        base_dir,
-        n_buckets=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        table_prefix="bench_bucketed_",
-    )
-    back = read_validated_zone_bucketed(spark, names)
+    n_buckets = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    names = {
+        name: write_zone_table(
+            df, base_dir, name, layout="bucketed",
+            table=f"bench_bucketed_{name}", n_buckets=n_buckets,
+        )["table"]
+        for name, df in (("orders", orders), ("order_items", items))
+    }
+    back = read_zone_tables(spark, base_dir, ["orders", "order_items"])
     products = mapping.products_from_tpch(t["part"])
 
     def _fact():

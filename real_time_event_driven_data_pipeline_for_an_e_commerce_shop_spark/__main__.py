@@ -1,7 +1,8 @@
 """CLI: run the e-commerce KPI pipeline (batch or event-driven).
 
     python -m real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark \
-        --raw /path/raw --out /path/out [--streaming] [--archive]
+        --raw /path/raw --out /path/out [--streaming] [--archive] \
+        [--validated-layout {flat,bucketed,zorder}]
 """
 
 from __future__ import annotations
@@ -20,7 +21,12 @@ def main() -> None:
     ap.add_argument("--streaming", action="store_true", help="event-driven mode (file-source trigger + checkpoint)")
     ap.add_argument("--checkpoint", default=None, help="checkpoint dir (streaming mode)")
     ap.add_argument("--archive", action="store_true", help="archive raw files after processing")
-    ap.add_argument("--materialize-validated", action="store_true")
+    ap.add_argument(
+        "--validated-layout",
+        choices=list(pipeline_batch.VALIDATED_LAYOUTS),
+        default=None,
+        help="also write the validated zone in this layout (batch mode)",
+    )
     args = ap.parse_args()
 
     spark = get_spark("ecommerce-pipeline")
@@ -37,7 +43,7 @@ def main() -> None:
             spark,
             args.raw,
             args.out,
-            materialize_validated=args.materialize_validated,
+            validated_layout=args.validated_layout,
             archive=args.archive,
         )
         for k, v in paths.items():

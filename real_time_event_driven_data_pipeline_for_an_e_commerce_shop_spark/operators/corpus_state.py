@@ -389,9 +389,9 @@ def refresh_corpus_state(
     refresh maintains; every landed table is recorded in the zone
     manifest (``sinks.files.record_zone_layout`` via
     ``write_zone_table``), making the state zone self-describing the
-    same way the validated zone is. Use :func:`read_corpus_state` to
-    reconstruct the full dict (views included) in a later session
-    from disk alone.
+    same way ``pipeline_batch.run``'s validated zone is. Use
+    :func:`read_corpus_state` to reconstruct the full dict (views
+    included) in a later session from disk alone.
 
     Returns DataFrames keyed by :data:`STATE_TABLES` name — the exact
     inputs ``bm25_from_term_state`` / ``lm_perplexity_from_term_state``

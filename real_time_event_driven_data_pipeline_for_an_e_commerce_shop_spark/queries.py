@@ -258,46 +258,41 @@ def q_order_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return iso_date(kpi.order_kpi(fact), "order_date")
 
 
-def _validated_zone_names(spark: SparkSession, sf_dir: str) -> dict:
+def _validated_zone(spark: SparkSession, sf_dir: str) -> str:
     """Land (once per session per input signature) the DEFAULT batch
     layout — the order_id-bucketed validated zone (S5) — and return
-    its catalog table names. The seam behind the two ``*_bucketed``
-    KPI entries (VERDICT r9 #6): the layout was plan-asserted
-    Exchange-free but never hash-checked end-to-end until these."""
-    import json
+    its directory; the zone manifest names the catalog tables. The
+    seam behind the two ``*_bucketed`` KPI entries (VERDICT r9 #6):
+    the layout was plan-asserted Exchange-free but never hash-checked
+    end-to-end until these."""
 
     def build(zone: str) -> None:
-        from .sinks.files import write_validated_zone_bucketed
+        from .sinks.files import write_zone_table
 
         t = _t(spark, sf_dir, "orders", "lineitem")
         items = mapping.order_items_from_tpch(t["lineitem"])
         orders = mapping.orders_from_tpch(t["orders"]).withColumn(
             "order_date", F.to_date("created_at")
         )
-        names = write_validated_zone_bucketed(
-            {"orders": orders, "order_items": items},
-            zone,
-            n_buckets=32,
-            table_prefix="qzone_validated_",
-        )
-        with open(os.path.join(zone, "_tables.json"), "w") as f:
-            json.dump(names, f)
+        for name, df in (("orders", orders), ("order_items", items)):
+            write_zone_table(
+                df, zone, name, layout="bucketed",
+                table=f"qzone_validated_{name}", n_buckets=32,
+            )
 
-    zone = _shared_state_zone(
+    return _shared_state_zone(
         "validated_bucketed", sf_dir, build, table="lineitem"
     )
-    with open(os.path.join(zone, "_tables.json")) as f:
-        return json.load(f)
 
 
 def _bucketed_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The J2+J3 item-grain fact over the bucketed validated zone:
     the items⋈orders equi-join runs Exchange-free off the co-bucketed
     catalog tables; the product dim broadcasts as always."""
-    from .sinks.files import read_validated_zone_bucketed
+    from .sinks.files import read_zone_tables
 
-    back = read_validated_zone_bucketed(
-        spark, _validated_zone_names(spark, sf_dir)
+    back = read_zone_tables(
+        spark, _validated_zone(spark, sf_dir), ["orders", "order_items"]
     )
     products = mapping.products_from_tpch(_t(spark, sf_dir, "part")["part"])
     return kpi.build_item_fact(

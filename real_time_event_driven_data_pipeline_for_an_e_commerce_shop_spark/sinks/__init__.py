@@ -1,4 +1,9 @@
-from .files import write_processed_zone, write_validated_zone
+from .files import read_zone_tables, write_processed_zone, write_zone_table
 from .kv import KeyedParquetUpsertSink
 
-__all__ = ["KeyedParquetUpsertSink", "write_processed_zone", "write_validated_zone"]
+__all__ = [
+    "KeyedParquetUpsertSink",
+    "read_zone_tables",
+    "write_processed_zone",
+    "write_zone_table",
+]

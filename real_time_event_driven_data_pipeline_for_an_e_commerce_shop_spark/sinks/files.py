@@ -2,113 +2,26 @@
 
 * S5 validated zone (``/root/reference/Task_1/task_1.py:148-158``):
   the reference serializes whole DataFrames to CSV strings on the
-  driver and PUTs them to S3; here it is a distributed parquet write
-  (columnar, splittable, statistics for downstream pushdown — CSV kept
-  as an option for drop-in compatibility).
+  driver and PUTs them to S3; here every zone table goes through ONE
+  writer, :func:`write_zone_table` — a distributed parquet write in a
+  recorded physical layout (flat / directory-partitioned, bucketed,
+  sorted or z-ordered), read back layout-aware by
+  :func:`read_zone_tables`.
 * S6 processed zone (``Task_2/task_2.py:200-235``): run-timestamped
   output directory; the timestamp comes from the caller (driver),
   never from data — same as the reference.
 
-At 100 TB the validated zone is partitioned by ``order_date`` so the
-KPI stage and any date-ranged query prune partitions statically; the
-bucketed variant additionally clusters facts by ``order_id`` so the
-items⋈orders join (J2) runs Exchange-free (bucket co-location).
+At 100 TB the layout is the dominant read-cost knob: a date-partitioned
+zone lets the KPI stage and any date-ranged query prune partitions
+statically; the bucketed layout additionally clusters facts by
+``order_id`` so the items⋈orders join (J2) runs Exchange-free (bucket
+co-location). ``pipeline_batch.VALIDATED_LAYOUTS`` names the layouts
+the batch pipeline offers for the validated zone.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_validated_zone(
-    tables: dict[str, DataFrame],
-    base_dir: str,
-    fmt: str = "parquet",
-    partition_facts_by: str | None = "order_date",
-) -> None:
-    """Write validated tables; fact tables partitioned by date when the
-    column exists (dimension tables are written flat)."""
-    for name, df in tables.items():
-        writer = df.write.mode("overwrite").format(fmt)
-        if fmt == "csv":
-            writer = writer.option("header", True)
-        if partition_facts_by and partition_facts_by in df.columns:
-            writer = writer.partitionBy(partition_facts_by)
-        writer.save(f"{base_dir}/{name}")
-
-
-def write_validated_zone_bucketed(
-    tables: dict[str, DataFrame],
-    base_dir: str,
-    n_buckets: int = 32,
-    bucket_col: str = "order_id",
-    table_prefix: str = "validated_",
-    partition_by: str | None = None,
-) -> dict[str, str]:
-    """Validated zone as catalog tables, facts bucketed by the join key.
-
-    Tables carrying ``bucket_col`` (orders, order_items) are written
-    ``bucketBy(n_buckets, bucket_col).sortBy(bucket_col)`` — bucket
-    membership is recorded in the catalog, so every later equi-join or
-    aggregation on ``bucket_col`` between co-bucketed tables runs with
-    NO Exchange on either side (asserted by plan test). Dimension
-    tables are registered flat. Returns ``{name: table_name}``.
-
-    At 100 TB this removes the J2 shuffle from every KPI run against
-    the zone: the shuffle is paid ONCE at write time (validation
-    already shuffles nothing — the write clusters while writing), then
-    amortized over every downstream read. ``n_buckets`` should be
-    sized so one bucket of the largest fact fits an executor's scan
-    budget (e.g. 100 TB / 4096 buckets ≈ 25 GB/bucket, split further
-    by date partitions).
-
-    ``partition_by`` layers directory partitioning UNDER the
-    bucketing (Spark writes ``n_buckets`` bucket files inside every
-    partition directory): date-ranged queries statically prune whole
-    directories AND join/agg on ``bucket_col`` still runs
-    Exchange-free — the layout a 100 TB zone actually wants. Applied
-    only to tables carrying both columns."""
-    out: dict[str, str] = {}
-    for name, df in tables.items():
-        table = f"{table_prefix}{name}"
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-        writer = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", f"{base_dir}/{name}")
-        )
-        spec: dict = {
-            "layout": "flat",
-            "path": f"{base_dir}/{name}",
-            "format": "parquet",
-            "table": table,
-        }
-        if partition_by and partition_by in df.columns and bucket_col in df.columns:
-            writer = writer.partitionBy(partition_by)
-            spec["partition_by"] = [partition_by]
-        if bucket_col in df.columns:
-            writer = writer.bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-            spec |= {
-                "layout": "bucketed",
-                "bucket_col": bucket_col,
-                "n_buckets": n_buckets,
-            }
-        writer.saveAsTable(table)
-        # self-describing zone (VERDICT r6 #7): the physical spec lands
-        # beside the data so readers (zone_equijoin, prunable_cols)
-        # reconstruct the plan from the manifest, not the call site
-        record_zone_layout(base_dir, name, spec)
-        out[name] = table
-    return out
-
-
-def read_validated_zone_bucketed(
-    spark: SparkSession, names: dict[str, str]
-) -> dict[str, DataFrame]:
-    """Read back bucketed-zone tables (catalog reads keep bucket
-    metadata; a raw ``spark.read.parquet`` of the same files would
-    not, and the join would re-shuffle)."""
-    return {name: spark.table(table) for name, table in names.items()}
 
 
 def write_processed_zone(
@@ -120,74 +33,6 @@ def write_processed_zone(
         if fmt == "csv":
             writer = writer.option("header", True)
         writer.save(f"{base_dir}/{run_ts}/{name}")
-
-
-def compact_bucketed_table(
-    spark: SparkSession,
-    table: str,
-    base_dir: str,
-    n_buckets: int = 32,
-    bucket_col: str = "order_id",
-    dedup_keys: list[str] | None = None,
-) -> str:
-    """Compact a streamed bucketed table's accumulated micro-batch file
-    sets into one clustered set — the small-files maintenance the
-    append-per-epoch ingest (`streaming.pipeline.run_bucketed_ingest`)
-    eventually needs: every append lands ``n_buckets`` new files, and a
-    bucket holding hundreds of epoch files pays per-file open/footer
-    cost and a per-file sort-merge on every read.
-
-    The rewrite reads THROUGH the catalog (keeping bucket metadata),
-    optionally folds the recovery dedup in (``dedup_keys`` — the same
-    primary keys ``read_bucketed_zone_deduped`` uses, so a crash-
-    replayed epoch is scrubbed during compaction instead of at every
-    read), writes a fresh bucketed table beside the old directory, and
-    swaps the catalog name last. The swap is DROP + RENAME — two
-    catalog statements, NOT atomic: this is a single-writer,
-    no-concurrent-reader maintenance operation (a reader resolving the
-    name between the two statements sees table-not-found; a truly
-    atomic swap needs an ACID table format's commit log — the epoch
-    manifest in ``streaming/pipeline.py`` is the no-new-dependency
-    half of that). If the RENAME itself fails, the old table is
-    re-registered from its on-disk files so the name never dangles.
-    The old directory is left for the caller to reap (at 100 TB that's
-    the snapshot-expiry job, not the compactor).
-
-    Because the scan is bucket-partitioned and the writer buckets by
-    the same column/count, the rewrite itself is Exchange-free — a
-    per-bucket read-sort-write, embarrassingly parallel.
-
-    Returns the new data directory.
-    """
-    import uuid
-
-    df = spark.table(table)
-    if dedup_keys:
-        df = df.dropDuplicates(dedup_keys)
-    new_dir = f"{base_dir}_compact_{uuid.uuid4().hex[:8]}"
-    tmp_table = f"{table}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    (
-        df.write.format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", new_dir)
-        .mode("overwrite")
-        .saveAsTable(tmp_table)
-    )
-    # name swap: drop the old catalog entry (files stay on disk), then
-    # re-point the name at the compacted data; if the RENAME fails the
-    # compacted table still exists under tmp_table and the original
-    # files under base_dir — re-register the original so the public
-    # name never dangles (as a plain parquet table: correct data,
-    # bucket metadata lost until a successful compaction re-creates it)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp_table} RENAME TO {table}")
-    except Exception:
-        spark.catalog.createTable(table, path=base_dir, source="parquet")
-        raise
-    return new_dir
 
 
 def write_zordered_zone(

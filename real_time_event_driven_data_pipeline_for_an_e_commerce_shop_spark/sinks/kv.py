@@ -9,10 +9,6 @@ date partitions it touches and leaves the rest of the table untouched.
 That is the 100 TB-safe shape: no read-modify-write of the full table,
 no driver-side row loop, atomic per-partition swap.
 
-For key columns that are not partitionable (arbitrary upsert keys) the
-sink falls back to a merge rewrite (read → anti-join → union → swap),
-which is what MERGE INTO does under the hood without a table format.
-
 A true KV store (DynamoDB, Redis, an HTTP bulk endpoint) plugs in via
 :class:`BatchedKVWriter` — the ``foreachPartition`` shape of the
 reference's writer, minus the row-at-a-time loop: each partition's
@@ -26,9 +22,6 @@ filesystem-backed fake.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 import time
 from collections.abc import Callable, Iterable, Sequence
 
@@ -133,54 +126,27 @@ class BatchedKVWriter:
 
 
 class KeyedParquetUpsertSink:
-    """Upsert-by-key parquet table.
+    """Upsert-by-key parquet table: ``partition_key`` (e.g.
+    ``order_date``) drives dynamic partition overwrite."""
 
-    ``partition_key`` (e.g. ``order_date``) drives dynamic partition
-    overwrite — the scalable path. ``extra_keys`` participate in row
-    identity for the merge fallback only.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        partition_key: str,
-        extra_keys: tuple[str, ...] = (),
-    ) -> None:
+    def __init__(self, path: str, partition_key: str) -> None:
         self.path = path
         self.partition_key = partition_key
-        self.extra_keys = extra_keys
 
     def upsert(self, batch: DataFrame) -> None:
-        """Replace exactly the partitions present in ``batch``."""
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch.write.mode("overwrite")
-                .partitionBy(self.partition_key)
-                .parquet(self.path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        """Replace exactly the partitions present in ``batch``.
 
-    def merge_upsert(self, batch: DataFrame) -> None:
-        """Full-key merge fallback: old rows not matching any batch key
-        survive, batch rows win on conflict. Rewrites the table — use
-        :meth:`upsert` whenever the key is the partition column."""
-        spark = batch.sparkSession
-        keys = [self.partition_key, *self.extra_keys]
-        if os.path.exists(self.path):
-            current = spark.read.parquet(self.path)
-            keep = current.join(batch.select(*keys), keys, "left_anti")
-            merged = keep.unionByName(batch)
-        else:
-            merged = batch
-        tmp = tempfile.mkdtemp(prefix="kv_upsert_", dir=os.path.dirname(self.path) or ".")
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        The dynamic overwrite mode is a per-write option, never the
+        session conf: the batch may belong to the caller's session
+        (``run_event_driven_pipeline(await_termination=False)``), where
+        flipping the session-wide mode would turn a concurrent static
+        overwrite into a dynamic one."""
+        (
+            batch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(self.partition_key)
+            .parquet(self.path)
+        )
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)

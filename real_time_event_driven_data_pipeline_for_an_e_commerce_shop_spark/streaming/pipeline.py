@@ -122,182 +122,16 @@ def run_event_driven_pipeline(
     return q
 
 
-def _append_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    n_buckets: int,
-    bucket_col: str = "order_id",
-) -> None:
-    """Append a micro-batch into a bucketed catalog table (created on
-    first append). Every append re-clusters only the new rows — one
-    bucket file set per micro-batch — and the catalog keeps the bucket
-    spec, so downstream equi-joins on ``bucket_col`` between
-    co-bucketed tables stay Exchange-free no matter how many batches
-    have landed."""
-    (
-        df.write.format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .mode("append")
-        .saveAsTable(table)
-    )
-
-
-def run_bucketed_ingest(
-    spark: SparkSession,
-    raw_dir: str,
-    zone_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 32,
-    table_prefix: str = "streamed_",
-    await_termination: bool = True,
-) -> dict[str, str]:
-    """Stream the raw zone into the *bucketed* validated zone — the
-    streaming half of the batch pipeline's ``bucketed_validated=True``
-    (ROADMAP #2: micro-batches land bucketed, so downstream KPI runs
-    against the zone never re-shuffle facts that streamed in).
-
-    Two file-source streams run Task-1-style validation and land in
-    catalog tables ``bucketBy(n_buckets, order_id)``:
-
-    1. ``orders`` runs first to completion (``availableNow``) — the
-       Task1→Task2 sequencing of the reference's state machine means
-       an item file never precedes its order file within an upload
-       batch (``/root/reference/StateMachine.txt``);
-    2. ``order_items`` then validates each micro-batch's referential
-       integrity against the *zone's own* orders table (a
-       stream-static join — the static side is re-read per batch, so
-       it sees every order landed so far) and appends.
-
-    The checkpoint makes file processing exactly-once across restarts
-    (operator S4); the parquet append itself is not transactional — a
-    crash between the append and the checkpoint commit can duplicate
-    one micro-batch on restart. :func:`read_bucketed_zone_deduped`
-    restores exactly-once at read time with ZERO added shuffles (the
-    pk dedup rides the bucket partitioning); an ACID table format with
-    the same bucket spec is the deployment-grade equivalent.
-
-    Returns ``{name: catalog_table}`` like
-    ``sinks.files.write_validated_zone_bucketed``.
-    """
-    tables = {
-        "orders": f"{table_prefix}orders",
-        "order_items": f"{table_prefix}order_items",
-    }
-
-    def land_orders(new_orders: DataFrame, epoch_id: int) -> None:
-        if new_orders.isEmpty():
-            return
-        _append_bucketed(
-            validate.validate_orders(new_orders),
-            tables["orders"],
-            os.path.join(zone_dir, "orders"),
-            n_buckets,
-        )
-
-    def land_items(new_items: DataFrame, epoch_id: int) -> None:
-        if new_items.isEmpty():
-            return
-        # items validate against the landed orders zone — if no orders
-        # ever landed (empty raw orders dir on a first run) the table
-        # does not exist; fail with the actual precondition rather
-        # than an opaque AnalysisException from spark.table
-        if not spark.catalog.tableExists(tables["orders"]):
-            raise RuntimeError(
-                f"bucketed zone table {tables['orders']!r} does not "
-                "exist: the orders stream must land at least one "
-                "micro-batch before order_items can be validated "
-                "against it"
-            )
-        # the orders appends ran on the micro-batch's cloned session;
-        # drop this session's cached file listing before reading
-        spark.catalog.refreshTable(tables["orders"])
-        landed_orders = spark.table(tables["orders"])
-        _append_bucketed(
-            validate.validate_order_items(new_items, landed_orders),
-            tables["order_items"],
-            os.path.join(zone_dir, "order_items"),
-            n_buckets,
-        )
-
-    for name, schema, land in (
-        ("orders", ORDERS_SCHEMA, land_orders),
-        ("order_items", ORDER_ITEMS_SCHEMA, land_items),
-    ):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("header", True)
-            .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
-            .option("maxFilesPerTrigger", 64)
-            .csv(os.path.join(raw_dir, name))
-        )
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # orders must finish before items validate against the zone
-        q.awaitTermination()
-    # appends ran on cloned micro-batch sessions whose catalog-cache
-    # invalidation does not propagate here — refresh so callers see
-    # every landed batch
-    for table in tables.values():
-        if spark.catalog.tableExists(table):
-            spark.catalog.refreshTable(table)
-    return tables
-
-
-def read_bucketed_zone_deduped(
-    spark: SparkSession, tables: dict[str, str], pk: dict[str, str] | None = None
-) -> dict[str, DataFrame]:
-    """Recovery-safe read of the streamed bucketed zone.
-
-    ``run_bucketed_ingest``'s parquet append is not transactional: a
-    crash between an append and its checkpoint commit replays that
-    micro-batch on restart, appending its rows twice. Validation is
-    deterministic per row, so replayed rows are exact duplicates of
-    their first landing — reader-side ``dropDuplicates`` on the
-    primary key restores exactly-once.
-
-    The point of doing it HERE rather than with a generic distinct:
-    the zone is bucketed by ``order_id``, and the dedup aggregates on a
-    key set containing the bucket column, so the catalog scan's bucket
-    partitioning already satisfies the aggregation's distribution —
-    the dedup adds NO Exchange, and its output keeps the bucket
-    partitioning, so downstream ``order_id`` joins stay Exchange-free
-    too (asserted in tests/test_streaming_bucketed.py). Exactly-once
-    reads cost zero extra shuffles.
-    """
-    keys = {"orders": ["order_id"], "order_items": ["order_id", "id"]}
-    if pk:
-        keys.update({k: [v] for k, v in pk.items()})
-    out: dict[str, DataFrame] = {}
-    for name, table in tables.items():
-        if name not in keys:
-            # guessing a key (e.g. the first column) could silently
-            # collapse distinct rows that merely share that value —
-            # exactly-once is a per-table contract, so demand the pk
-            raise KeyError(
-                f"no primary key known for zone table {name!r}: pass "
-                "pk={" + f"{name!r}: '<key column>'" + "}"
-            )
-        out[name] = spark.table(table).dropDuplicates(keys[name])
-    return out
-
-
 # --- epoch manifest: the commit-log half of an ACID table format -------
 #
-# run_bucketed_ingest's parquet append is not transactional; its two
-# recovery stories so far both pay at read time (read_bucketed_zone_
-# deduped's pk aggregate) or at compaction (dedup_keys). The manifest
-# closes the gap at WRITE time with no new dependency (ROADMAP r5 #1):
+# The streamed validated zone (and every model / corpus zone built on
+# the same discipline) is exactly-once at WRITE time with no new
+# dependency (ROADMAP r5 #1) — Structured Streaming's end-to-end
+# guarantee needs a replayable source plus an idempotent sink, and the
+# epoch commit is that sink:
 #
 # * every micro-batch lands as its own `_epoch=<id>` partition under
-#   the bucketed table (partition-under-bucket, the layout
-#   sinks.files.write_validated_zone_bucketed already supports);
+#   the bucketed table (directory partitions under the buckets);
 # * after the append returns, the epoch id is committed by writing a
 #   marker file and os.rename-ing it into the manifest directory —
 #   rename is atomic on POSIX and on HDFS; on S3 the same role is
@@ -309,7 +143,7 @@ def read_bucketed_zone_deduped(
 #   attempt produced, which a bare bucketed append cannot say;
 # * readers drop uncommitted epochs by partition pruning; in steady
 #   state there are none and the read is a plain bucketed-table scan —
-#   ZERO per-read dedup work, unlike read_bucketed_zone_deduped.
+#   zero per-read dedup work.
 
 
 def _manifest_dir(zone_dir: str, name: str) -> str:
@@ -2193,12 +2027,32 @@ def run_bucketed_ingest_manifest(
     await_termination: bool = True,
     commit_fn=None,
 ) -> dict[str, str]:
-    """:func:`run_bucketed_ingest` with the epoch manifest: every
-    micro-batch is an atomically-committed `_epoch` partition, so the
-    zone is exactly-once at WRITE time — a crash between append and
-    commit leaves an orphan partition that the replay scrubs and
-    readers prune, never duplicate rows. Read with
-    :func:`read_manifest_zone`.
+    """Stream the raw zone into the bucketed validated zone, exactly
+    once: micro-batches land ``bucketBy(n_buckets, order_id)`` in
+    catalog tables ``{table_prefix}orders`` / ``{table_prefix}
+    order_items``, so downstream fact⋈fact joins over the streamed zone
+    run Exchange-free however many epochs have landed.
+
+    Two file-source streams run Task-1-style validation:
+
+    1. ``orders`` runs first to completion (``availableNow``) — the
+       Task1→Task2 sequencing of the reference's state machine means
+       an item file never precedes its order file within an upload
+       batch (``StateMachine.txt``);
+    2. ``order_items`` then validates each micro-batch's referential
+       integrity against the *zone's own* landed orders (a
+       stream-static join — the static side is re-read per batch, so
+       it sees every order landed so far).
+
+    The checkpoint makes file processing exactly-once across restarts
+    (operator S4), and every micro-batch is an atomically-committed
+    ``_epoch`` partition (:func:`_land_epoch`), so the sink is
+    idempotent too: a crash between append and commit leaves an orphan
+    partition that the replay scrubs and readers prune, never
+    duplicate rows. ``commit_fn`` replaces the commit primitive
+    (:func:`_commit_epoch`). Read with :func:`read_manifest_zone`;
+    fold accumulated epochs with :func:`compact_manifest_zone`.
+    Returns ``{name: catalog_table}``.
     """
     tables = {
         "orders": f"{table_prefix}orders",
@@ -2224,6 +2078,10 @@ def run_bucketed_ingest_manifest(
     def land_items(new_items: DataFrame, epoch_id: int) -> None:
         if new_items.isEmpty():
             return
+        # items validate against the landed orders zone — if no orders
+        # ever landed (empty raw orders dir on a first run) the table
+        # does not exist; fail with the actual precondition rather
+        # than an opaque AnalysisException from spark.table
         if not spark.catalog.tableExists(tables["orders"]):
             raise RuntimeError(
                 f"bucketed zone table {tables['orders']!r} does not "
@@ -2231,6 +2089,8 @@ def run_bucketed_ingest_manifest(
                 "micro-batch before order_items can be validated "
                 "against it"
             )
+        # the orders epochs landed on the micro-batch's cloned session;
+        # drop this session's cached file listing before reading
         spark.catalog.refreshTable(tables["orders"])
         landed_orders = read_manifest_zone(
             spark, {"orders": tables["orders"]}, zone_dir
@@ -2264,7 +2124,11 @@ def run_bucketed_ingest_manifest(
             .trigger(availableNow=True)
             .start()
         )
+        # orders must finish before items validate against the zone
         q.awaitTermination()
+    # epochs landed on cloned micro-batch sessions whose catalog-cache
+    # invalidation does not propagate here — refresh so callers see
+    # every landed epoch
     for table in tables.values():
         if spark.catalog.tableExists(table):
             spark.catalog.refreshTable(table)
@@ -2282,21 +2146,27 @@ def compact_manifest_zone(
     extra_partition_cols: tuple[str, ...] = (),
 ) -> str:
     """Fold a manifest zone table's accumulated epoch partitions into
-    ONE — the small-files maintenance ``sinks.files.
-    compact_bucketed_table`` performs for the plain bucketed zone,
-    manifest-aware: only COMMITTED epochs are read (a crash orphan is
-    dropped by the rewrite instead of lingering), and the manifest is
-    reset to a single marker afterwards.
+    ONE — the small-files maintenance an epoch-per-append zone
+    eventually needs: every epoch lands ``n_buckets`` new files, and a
+    bucket holding hundreds of epoch files pays per-file open/footer
+    cost and a per-file sort-merge on every read. Only COMMITTED
+    epochs are read (a crash orphan is dropped by the rewrite instead
+    of lingering), and the manifest is reset to a single marker
+    afterwards.
 
     The compacted data keeps the epoch id ``max(committed)``: stream
     epoch ids are the checkpoint's monotonically increasing batch ids,
     so every future append lands strictly above it and the
     skip-if-committed guard stays correct across compactions.
 
-    Same single-writer/no-concurrent-reader semantics as
-    ``compact_bucketed_table`` (the catalog DROP+RENAME pair and the
-    manifest-directory swap are each atomic, but not jointly); run it
-    from the maintenance job, not beside a live reader. The rewrite
+    The rewrite lands beside the old directory and the catalog name is
+    swapped last, by DROP + RENAME; if the RENAME fails, the old table
+    is re-registered from its on-disk files so the name never dangles.
+    The catalog swap and the manifest-directory reset are each atomic,
+    but not jointly: this is a single-writer, no-concurrent-reader
+    maintenance operation — run it from the maintenance job, not
+    beside a live reader. The old directory is left for
+    :func:`vacuum_manifest_zone` to reap. The rewrite
     reads through the catalog and writes with the same partition-by-
     epoch-under-bucket spec, so it is a per-bucket read-sort-write and
     downstream joins stay Exchange-free. Returns the new data dir.
@@ -2381,8 +2251,8 @@ def vacuum_manifest_zone(
 ) -> dict[str, list[str]]:
     """Reclaim a manifest zone's dead files — the VACUUM half of the
     commit log (Delta/Iceberg's retention-guarded file reaper), closing
-    the loop the compactor leaves open on purpose ("the old directory
-    is left for the caller to reap"). Reaps, under one retention guard:
+    the loop :func:`compact_manifest_zone` leaves open on purpose (it
+    never deletes the old directory). Reaps, under one retention guard:
 
     * **crash-orphan epochs** — on-disk ``_epoch=`` directories with no
       commit marker. Readers already partition-prune them

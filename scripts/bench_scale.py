@@ -283,8 +283,8 @@ def main() -> None:
             mapping,
         )
         from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-            read_validated_zone_bucketed,
-            write_validated_zone_bucketed,
+            read_zone_tables,
+            write_zone_table,
         )
 
         n_buckets = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -304,15 +304,16 @@ def main() -> None:
                 z_orders.select("order_id", "order_year"), "order_id"
             )
             t0 = time.perf_counter()
-            names = write_validated_zone_bucketed(
-                {"orders": z_orders, "order_items": z_items},
-                pz,
-                n_buckets=n_buckets,
-                table_prefix="scale_pb_",
-                partition_by="order_year",
-            )
+            names = {
+                name: write_zone_table(
+                    df, pz, name, layout="bucketed",
+                    table=f"scale_pb_{name}", n_buckets=n_buckets,
+                    partition_by="order_year",
+                )["table"]
+                for name, df in (("orders", z_orders), ("order_items", z_items))
+            }
             pb_write_s = round(time.perf_counter() - t0, 3)
-            back = read_validated_zone_bucketed(spark, names)
+            back = read_zone_tables(spark, pz, ["orders", "order_items"])
             products = mapping.products_from_tpch(
                 spark.read.parquet(f"{tmp}/part.parquet")
             )

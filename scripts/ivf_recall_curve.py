@@ -6,7 +6,8 @@ Usage: python scripts/ivf_recall_curve.py [sf_dir]
 
 Prints one JSON line:
   {"sf": ..., "n_clusters": ..., "curve": [{"n_probe": p,
-   "recall_at_10": r, "sec": t}...], "codegen_check": {...}}
+   "recall_at_10": r, "sec": t}...], "quantizer_256": {"cells": c,
+   "curve": [...]}, "codegen_check": {...}}
 """
 
 from __future__ import annotations
@@ -67,13 +68,16 @@ def main() -> None:
             }
         )
 
-    # trained vs strided quantizer at n_clusters=256 (VERDICT r3 #9):
+    # trained vs strided quantizer at up to 256 cells (VERDICT r3 #9):
     # same plan shape, centroids from ml.kmeans_fixed (the engine's one
     # trained quantizer) instead of the strided sample — recall@10 at
-    # matched n_probe
+    # matched n_probe AND matched cell count: the strided sample only
+    # has ceil(n/7) candidates, so on small inputs it gets fewer than
+    # 256 cells and k-means must get the same number
+    n_cells = min(256, emb.filter(F.col("vec_id") % 7 == 0).count())
     trained = ml.kmeans_fixed(
         emb.select("vec_id", similarity.as_double(F.col("embedding")).alias("embedding")),
-        k=256, iterations=5, dim=64, id_col="vec_id", vec_col="embedding",
+        k=n_cells, iterations=5, dim=64, id_col="vec_id", vec_col="embedding",
         return_centroids=True,
     ).cache()
     trained.count()
@@ -84,8 +88,8 @@ def main() -> None:
             t0 = time.perf_counter()
             approx = topk_sets(
                 similarity.ivf_topk(
-                    emb, queries, n_clusters=256, n_probe=n_probe, k=10,
-                    stride=7, centroids=cent,
+                    emb, queries, n_clusters=n_cells, n_probe=n_probe,
+                    k=10, stride=7, centroids=cent,
                 )
             )
             sec = round(time.perf_counter() - t0, 3)
@@ -117,7 +121,7 @@ def main() -> None:
                 "sf": sf,
                 "n_clusters": n_clusters,
                 "curve": curve,
-                "quantizer_256": quantizers,
+                "quantizer_256": {"cells": n_cells, "curve": quantizers},
                 "codegen_check": codegen,
             }
         )

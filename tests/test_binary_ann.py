@@ -252,9 +252,14 @@ def test_ivf_binary_state_plan_prunes_columns_and_partitions(
         centroids=cent, thresholds=thr, lists=zlists,
     )
     plan = served._jdf.queryExecution().executedPlan().toString()
+    # the lists zone is the only scan that READS the packed codes (the
+    # embeddings scan derives them in-plan); match on ReadSchema, never
+    # on the Location path, which Spark truncates at
+    # spark.sql.maxMetadataStringLength
     zone_scans = [
         ln for ln in plan.splitlines()
-        if "FileScan" in ln and "lists" in ln and "code_lo" in ln
+        if "FileScan" in ln
+        and "code_lo" in ln.split("ReadSchema:", 1)[-1]
     ]
     assert zone_scans, f"no code-bearing lists scan in plan:\n{plan[:3000]}"
     for ln in zone_scans:

@@ -1,7 +1,7 @@
-"""S7 true-KV path: the generic batched foreachPartition writer —
-retry/backoff unit tests (driver-side, no Spark) and executor-side
-end-to-end writes against a filesystem-backed fake KV store, batch and
-streaming."""
+"""S7 sinks: the keyed parquet upsert table, and the true-KV path —
+the generic batched foreachPartition writer: retry/backoff unit tests
+(driver-side, no Spark) and executor-side end-to-end writes against a
+filesystem-backed fake KV store, batch and streaming."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.kv import (
     BatchedKVWriter,
+    KeyedParquetUpsertSink,
     flush_with_retry,
 )
 
@@ -149,3 +150,34 @@ def test_kv_writer_streaming_foreach_batch(spark, tmp_path):
         q.stop()
     assert _store_contents(store) == {"k1": 1, "k2": 22, "k3": 3}
     assert spark.read.parquet(pq).count() == 4
+
+
+def test_keyed_upsert_replaces_only_batch_dates_and_keeps_session_conf(
+    spark, tmp_path
+):
+    """The upsert replaces exactly the batch's date partitions, leaves
+    every other date untouched, and never flips the session-wide
+    partitionOverwriteMode (a concurrent static overwrite in the same
+    session must stay static)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    sink = KeyedParquetUpsertSink(str(tmp_path / "kpi"), "order_date")
+    schema = "category string, revenue double, order_date string"
+    sink.upsert(
+        spark.createDataFrame(
+            [("a", 1.0, "2025-03-08"), ("b", 2.0, "2025-03-08"),
+             ("a", 3.0, "2025-03-09")],
+            schema,
+        )
+    )
+    sink.upsert(spark.createDataFrame([("c", 9.0, "2025-03-09")], schema))
+    got = sorted(
+        (r["category"], r["revenue"], str(r["order_date"]))
+        for r in sink.read(spark).collect()
+    )
+    assert got == [
+        ("a", 1.0, "2025-03-08"),  # untouched partition survives
+        ("b", 2.0, "2025-03-08"),
+        ("c", 9.0, "2025-03-09"),  # the batch's date is replaced
+    ]
+    assert spark.conf.get(key) == before

@@ -151,7 +151,7 @@ def test_source_quota_prefilter_actually_filters(spark):
     assert "Window" in plan and "Filter" in plan
 
 
-# --- pipeline zone_layout="zorder" --------------------------------------
+# --- pipeline validated_layout ------------------------------------------
 
 
 def _write_raw(tmp_path):
@@ -189,43 +189,84 @@ def test_pipeline_zorder_zone(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
         pipeline_batch,
     )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
+        zone_table_layout,
+    )
 
     raw = _write_raw(tmp_path)
     paths = pipeline_batch.run(
-        spark, str(raw), str(tmp_path / "out"), zone_layout="zorder"
+        spark, str(raw), str(tmp_path / "out"), validated_layout="zorder"
     )
-    orders = spark.read.parquet(paths["validated"] + "/orders")
-    items = spark.read.parquet(paths["validated"] + "/order_items")
+    vdir = paths["validated"]
+    orders = spark.read.parquet(vdir + "/orders")
+    items = spark.read.parquet(vdir + "/order_items")
     assert orders.count() == 40 and items.count() == 40
-    import json
-
-    domains = json.loads(paths["zorder_domains"])  # JSON on the wire
-    assert set(domains) == {"orders", "order_items"}
-    assert set(domains["orders"]) == {"order_date", "user_id"}
-    lo, hi = domains["orders"]["user_id"]
+    # the clustering domains live in the zone manifest
+    spec_o = zone_table_layout(vdir, "orders")
+    spec_i = zone_table_layout(vdir, "order_items")
+    assert spec_o["layout"] == spec_i["layout"] == "zorder"
+    assert set(spec_o["zorder_domains"]) == {"order_date", "user_id"}
+    assert set(spec_i["zorder_domains"]) == {"order_id", "product_id"}
+    lo, hi = spec_o["zorder_domains"]["user_id"]
     assert lo == 100.0 and hi == 106.0
+    assert zone_table_layout(vdir, "products")["layout"] == "flat"
     # KPIs still produced alongside the clustered zone
     assert spark.read.parquet(paths["category_kpi"]).count() > 0
 
 
-def test_pipeline_zorder_excludes_bucketed(spark, tmp_path):
+def test_pipeline_unknown_validated_layout_raises(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
         pipeline_batch,
     )
 
     raw = _write_raw(tmp_path)
-    with pytest.raises(ValueError, match="mutually"):
+    with pytest.raises(ValueError, match="unknown validated_layout"):
         pipeline_batch.run(
-            spark,
-            str(raw),
-            str(tmp_path / "out2"),
-            zone_layout="zorder",
-            bucketed_validated=True,
+            spark, str(raw), str(tmp_path / "out"), validated_layout="hilbert"
         )
-    with pytest.raises(ValueError, match="unknown zone_layout"):
-        pipeline_batch.run(
-            spark, str(raw), str(tmp_path / "out3"), zone_layout="hilbert"
+    # the check runs before any Spark work: nothing was written
+    assert not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize("layout", ["flat", "bucketed", "zorder"])
+def test_pipeline_validated_zone_round_trips_kpis(spark, tmp_path, layout):
+    """Every validated_layout is a faithful copy of the validated star
+    schema: the KPIs rebuilt from the zone read back equal the
+    pipeline's own KPI tables, row for row."""
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
+        pipeline_batch,
+    )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        kpi,
+    )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
+        read_zone_tables,
+    )
+
+    raw = _write_raw(tmp_path)
+    paths = pipeline_batch.run(
+        spark, str(raw), str(tmp_path / "out"), validated_layout=layout
+    )
+    try:
+        zone = read_zone_tables(
+            spark, paths["validated"], ["products", "orders", "order_items"]
         )
+        # order_year exists only to partition the bucketed layout
+        zone = {n: df.drop("order_year") for n, df in zone.items()}
+        rebuilt = kpi.run_transformation(
+            zone["products"], zone["orders"], zone["order_items"]
+        )
+        for name, df in rebuilt.items():
+            cols = sorted(df.columns)
+            got = sorted(tuple(r) for r in df.select(*cols).collect())
+            want = sorted(
+                tuple(r)
+                for r in spark.read.parquet(paths[name]).select(*cols).collect()
+            )
+            assert got and got == want, (layout, name)
+    finally:
+        for t in ("validated_orders", "validated_order_items"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 # --- mixture_weights ----------------------------------------------------

@@ -61,14 +61,18 @@ def test_validated_zone_partition_pruning(spark, tmp_path):
     """Date-partitioned validated zone: a date-filtered read must prune
     to that partition (PartitionFilters in the scan, one directory)."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        write_validated_zone,
+        write_zone_table,
+        zone_table_layout,
     )
 
     df = spark.createDataFrame(
         [(1, "2025-03-08", 10.0), (2, "2025-03-09", 20.0), (3, "2025-03-09", 5.0)],
         "order_id long, order_date string, sale_price double",
     )
-    write_validated_zone({"order_items": df}, str(tmp_path))
+    write_zone_table(df, str(tmp_path), "order_items", partition_by="order_date")
+    assert zone_table_layout(str(tmp_path), "order_items")["partition_by"] == [
+        "order_date"
+    ]
     back = spark.read.parquet(str(tmp_path / "order_items")).filter(
         F.col("order_date") == "2025-03-09"
     )
@@ -80,7 +84,7 @@ def test_validated_zone_partition_pruning(spark, tmp_path):
 
 
 def test_pipeline_batch_bucketed_validated_zone(spark, tmp_path):
-    """pipeline_batch.run(bucketed_validated=True) — ROADMAP r4 #2 batch
+    """pipeline_batch.run(validated_layout="bucketed") — ROADMAP r4 #2 batch
     half: the validated zone lands as bucketed catalog tables, KPIs are
     produced, and a fact⋈fact join read back from the zone runs with no
     shuffle Exchange. Since ROADMAP r6 #3 the default is the UNIFIED
@@ -117,11 +121,20 @@ def test_pipeline_batch_bucketed_validated_zone(spark, tmp_path):
         "12,2,101,1,returned,2025-03-08T11:00:00,2025-03-08T13:00:00,"
         "2025-03-09T11:00:00,2025-03-10T09:00:00,10.0\n"
     )
-    paths = pipeline_batch.run(
-        spark, str(raw), str(tmp_path / "out"), bucketed_validated=True
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
+        zone_table_layout,
     )
-    tables = paths["validated_tables"].split(",")
-    assert any("orders" in t for t in tables)
+
+    paths = pipeline_batch.run(
+        spark, str(raw), str(tmp_path / "out"), validated_layout="bucketed"
+    )
+    specs = {
+        n: zone_table_layout(paths["validated"], n)
+        for n in ("orders", "order_items")
+    }
+    tables = [spec["table"] for spec in specs.values()]
+    assert all(spec["layout"] == "bucketed" for spec in specs.values())
+    assert specs["orders"]["table"] == "validated_orders"
     assert spark.read.parquet(paths["category_kpi"]).count() > 0
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -157,7 +170,7 @@ def test_pipeline_batch_bucketed_validated_zone(spark, tmp_path):
 
 def test_bucketed_validated_zone_kpi_join_no_shuffle(spark, tmp_path):
     """ROADMAP #3 / VERDICT r1 next #6: write the validated zone with
-    write_validated_zone_bucketed, rebuild the item fact from the
+    write_zone_table(layout="bucketed"), rebuild the item fact from the
     catalog tables, and the J2 items⋈orders join must contain no
     shuffle Exchange — the join-key clustering was paid at write time.
     Broadcast is disabled so the test can't pass via BHJ."""
@@ -165,8 +178,9 @@ def test_bucketed_validated_zone_kpi_join_no_shuffle(spark, tmp_path):
         kpi,
     )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        read_validated_zone_bucketed,
-        write_validated_zone_bucketed,
+        read_zone_tables,
+        write_zone_table,
+        zone_table_layout,
     )
 
     orders = spark.range(200).select(
@@ -186,12 +200,14 @@ def test_bucketed_validated_zone_kpi_join_no_shuffle(spark, tmp_path):
     products = spark.range(17).select(
         F.col("id"), F.concat(F.lit("cat"), F.col("id") % 3).alias("category")
     )
-    names = write_validated_zone_bucketed(
-        {"orders": orders, "order_items": items},
-        str(tmp_path / "zone"),
-        n_buckets=8,
-    )
-    back = read_validated_zone_bucketed(spark, names)
+    zone = str(tmp_path / "zone")
+    for name, df in (("orders", orders), ("order_items", items)):
+        write_zone_table(
+            df, zone, name, layout="bucketed", table=f"validated_{name}",
+            n_buckets=8,
+        )
+    names = {n: zone_table_layout(zone, n)["table"] for n in ("orders", "order_items")}
+    back = read_zone_tables(spark, zone, list(names))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -333,8 +349,9 @@ def test_partitioned_and_bucketed_zone_prunes_and_joins_shuffle_free(
     the same tables still runs with no shuffle Exchange — both layout
     benefits from one write."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        read_validated_zone_bucketed,
-        write_validated_zone_bucketed,
+        read_zone_tables,
+        write_zone_table,
+        zone_table_layout,
     )
 
     orders = spark.createDataFrame(
@@ -346,15 +363,18 @@ def test_partitioned_and_bucketed_zone_prunes_and_joins_shuffle_free(
          for i in range(300)],
         "id long, order_id long, order_date string, sale_price double",
     )
-    names = write_validated_zone_bucketed(
-        {"orders": orders, "order_items": items},
-        str(tmp_path / "zone"),
-        n_buckets=4,
-        table_prefix="pb_zone_test_",
-        partition_by="order_date",
-    )
+    zone = str(tmp_path / "zone")
+    for name, df in (("orders", orders), ("order_items", items)):
+        write_zone_table(
+            df, zone, name, layout="bucketed", table=f"pb_zone_test_{name}",
+            n_buckets=4, partition_by="order_date",
+        )
+    names = {n: zone_table_layout(zone, n)["table"] for n in ("orders", "order_items")}
     try:
-        back = read_validated_zone_bucketed(spark, names)
+        assert zone_table_layout(zone, "order_items")["partition_by"] == [
+            "order_date"
+        ]
+        back = read_zone_tables(spark, zone, list(names))
         one_day = back["order_items"].filter(F.col("order_date") == "2025-03-02")
         plan = one_day._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "order_date" in plan.split(
@@ -598,8 +618,8 @@ def test_unified_zone_metadata_drives_join_and_prune(spark, tmp_path):
 
 def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
     """pipeline_batch's bucketed validated zone records its layout spec
-    in the zone manifest (write_validated_zone_bucketed now publishes
-    it), so a later reader session needs NO call-site knowledge:
+    in the zone manifest (write_zone_table publishes it), so a later
+    reader session needs NO call-site knowledge:
     zone_table_layout round-trips the spec and zone_equijoin joins the
     facts Exchange-free from the manifest alone."""
     import os
@@ -617,7 +637,7 @@ def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
     raw = str(_write_raw(tmp_path))
     out = str(tmp_path / "out")
     try:
-        pipeline_batch.run(spark, raw, out, bucketed_validated=True)
+        pipeline_batch.run(spark, raw, out, validated_layout="bucketed")
         vdir = os.path.join(out, "validated")
         spec_o = zone_table_layout(vdir, "orders")
         spec_i = zone_table_layout(vdir, "order_items")
@@ -637,8 +657,7 @@ def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
-        for t in ("validated_orders", "validated_order_items",
-                  "validated_products"):
+        for t in ("validated_orders", "validated_order_items"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 

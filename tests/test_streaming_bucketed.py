@@ -1,7 +1,8 @@
 """Streaming ingest into the bucketed validated zone (ROADMAP #2):
-micro-batches land `bucketBy(order_id)` so downstream fact⋈fact joins
-over the streamed zone run Exchange-free — the streaming half of the
-batch pipeline's ``bucketed_validated=True``."""
+micro-batches land `bucketBy(order_id)` as atomically-committed epochs
+so downstream fact⋈fact joins over the streamed zone run Exchange-free
+— the streaming half of the batch pipeline's
+``validated_layout="bucketed"``."""
 
 from __future__ import annotations
 
@@ -10,7 +11,8 @@ import os
 from pyspark.sql import functions as F
 
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-    run_bucketed_ingest,
+    read_manifest_zone,
+    run_bucketed_ingest_manifest,
 )
 
 from test_streaming import ITEMS1_CSV, ITEMS2_CSV, ORDERS_CSV, _write
@@ -35,43 +37,44 @@ def test_streamed_zone_lands_bucketed_and_joins_exchange_free(spark, tmp_path):
     _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV)
 
     prefix = "streamed_zone_test_"
-    try:
-        tables = run_bucketed_ingest(
+
+    def ingest():
+        return run_bucketed_ingest_manifest(
             spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
         )
-        items = spark.table(tables["order_items"])
-        orders = spark.table(tables["orders"])
-        assert orders.count() == 3 and items.count() == 4
+
+    try:
+        tables = ingest()
+        z = read_manifest_zone(spark, tables, zone)
+        assert z["orders"].count() == 3 and z["order_items"].count() == 4
 
         # second upload batch: order 4 + its item; item 15 references a
         # nonexistent order and must be dropped by the stream-static
         # referential check against the zone's own orders table
         _write(f"{raw}/orders/part2.csv", ORDERS2_CSV)
         _write(f"{raw}/order_items/part3.csv", ITEMS3_CSV)
-        run_bucketed_ingest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
-        )
-        assert spark.table(tables["orders"]).count() == 4
-        landed = spark.table(tables["order_items"])
-        assert landed.count() == 5
-        assert landed.filter(F.col("order_id") == 999).count() == 0
+        ingest()
+        z = read_manifest_zone(spark, tables, zone)
+        assert z["orders"].count() == 4
+        assert z["order_items"].count() == 5
+        assert z["order_items"].filter(F.col("order_id") == 999).count() == 0
 
         # exactly-once across restarts: re-running with no new files
-        # appends nothing
-        run_bucketed_ingest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
-        )
-        assert spark.table(tables["order_items"]).count() == 5
+        # lands nothing
+        ingest()
+        assert read_manifest_zone(spark, tables, zone)[
+            "order_items"
+        ].count() == 5
 
         # the whole point: the streamed zone join is Exchange-free even
-        # after three separate appends per table (multiple file sets
-        # per bucket — Spark re-sorts within buckets, never re-shuffles)
+        # after several epochs per table (multiple file sets per bucket
+        # — Spark re-sorts within buckets, never re-shuffles)
+        z = read_manifest_zone(spark, tables, zone)
         joined = (
-            spark.table(tables["order_items"])
+            z["order_items"]
             .select("order_id", "id", "sale_price")
             .hint("merge")
-            .join(spark.table(tables["orders"]).select("order_id", "user_id"),
-                  "order_id")
+            .join(z["orders"].select("order_id", "user_id"), "order_id")
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
@@ -84,135 +87,6 @@ def test_streamed_zone_lands_bucketed_and_joins_exchange_free(spark, tmp_path):
     finally:
         for t in (f"{prefix}orders", f"{prefix}order_items"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_recovery_dedup_read_is_exchange_free(spark, tmp_path):
-    """A crash between append and checkpoint commit replays one
-    micro-batch (duplicate rows). read_bucketed_zone_deduped restores
-    exactly-once — and because the pk dedup rides the zone's bucket
-    partitioning, it adds NO Exchange, and the downstream order_id
-    join stays Exchange-free too."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-        _append_bucketed,
-        read_bucketed_zone_deduped,
-    )
-
-    prefix = "recovery_test_"
-    orders = spark.createDataFrame(
-        [(1, "2025-03-08"), (2, "2025-03-08"), (3, "2025-03-09")],
-        "order_id long, order_date string",
-    )
-    items = spark.createDataFrame(
-        [(10, 1, 5.0), (11, 1, 8.0), (12, 2, 3.0), (13, 3, 9.0)],
-        "id long, order_id long, sale_price double",
-    )
-    try:
-        for name, df in (("orders", orders), ("order_items", items)):
-            path = str(tmp_path / name)
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}{name}")
-            _append_bucketed(df, f"{prefix}{name}", path, n_buckets=4)
-        # replay the items micro-batch (the non-transactional append's
-        # failure mode): rows land twice
-        _append_bucketed(
-            items, f"{prefix}order_items", str(tmp_path / "order_items"), 4
-        )
-        spark.catalog.refreshTable(f"{prefix}order_items")
-        assert spark.table(f"{prefix}order_items").count() == 8
-
-        zone = read_bucketed_zone_deduped(
-            spark, {"orders": f"{prefix}orders",
-                    "order_items": f"{prefix}order_items"}
-        )
-        assert zone["order_items"].count() == 4
-        assert zone["orders"].count() == 3
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = zone["order_items"].join(zone["orders"], "order_id")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert joined.count() == 4
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}orders")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}order_items")
-
-
-def test_compaction_collapses_epoch_files_and_keeps_bucket_plan(spark, tmp_path):
-    """After several appends (plus one crash-replayed duplicate epoch),
-    compact_bucketed_table rewrites the accumulated per-epoch file sets
-    into one clustered set: file count drops to n_buckets, the replayed
-    rows are scrubbed (dedup folded into the rewrite), the catalog name
-    now serves the compacted data, and the bucket join is still
-    Exchange-free."""
-    import glob
-
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        compact_bucketed_table,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-        _append_bucketed,
-    )
-
-    table = "compact_test_items"
-    path = str(tmp_path / "items")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    batches = [
-        [(10 + i, (10 + i) % 3, float(i)) for i in range(4)],
-        [(20 + i, (20 + i) % 3, float(i)) for i in range(4)],
-        [(30 + i, (30 + i) % 3, float(i)) for i in range(4)],
-    ]
-    try:
-        for rows in batches:
-            df = spark.createDataFrame(
-                rows, "id long, order_id long, sale_price double"
-            )
-            _append_bucketed(df, table, path, n_buckets=4)
-        # crash-replay: batch 3 lands twice
-        _append_bucketed(
-            spark.createDataFrame(
-                batches[2], "id long, order_id long, sale_price double"
-            ),
-            table, path, n_buckets=4,
-        )
-        spark.catalog.refreshTable(table)
-        n_files_before = len(glob.glob(f"{path}/part-*.parquet"))
-        assert n_files_before > 4  # one file set per epoch
-        assert spark.table(table).count() == 16  # 12 + 4 replayed
-
-        new_dir = compact_bucketed_table(
-            spark, table, path, n_buckets=4,
-            dedup_keys=["order_id", "id"],
-        )
-        compacted = spark.table(table)
-        assert compacted.count() == 12  # replayed epoch scrubbed
-        n_files_after = len(glob.glob(f"{new_dir}/part-*.parquet"))
-        assert n_files_after <= 4, n_files_after
-
-        dim = spark.createDataFrame(
-            [(i, i * 10) for i in range(3)], "order_id long, v long"
-        )
-        spark.sql("DROP TABLE IF EXISTS compact_test_dim")
-        (dim.write.bucketBy(4, "order_id").sortBy("order_id")
-            .option("path", str(tmp_path / "dim"))
-            .mode("overwrite").saveAsTable("compact_test_dim"))
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = compacted.hint("merge").join(
-                spark.table("compact_test_dim"), "order_id"
-            )
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan and "Exchange" not in plan, plan
-            assert joined.count() == 12
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql("DROP TABLE IF EXISTS compact_test_dim")
-        spark.sql(f"DROP TABLE IF EXISTS {table}__compacting")
 
 
 def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
@@ -343,6 +217,7 @@ def test_manifest_zone_compaction(spark, tmp_path):
     crash orphans during the rewrite, resets the manifest, keeps the
     bucket spec (Exchange-free joins survive), and later epochs append
     into the compacted table's NEW location correctly."""
+    import glob
     import os
 
     import pyspark.sql.functions as F
@@ -391,6 +266,9 @@ def test_manifest_zone_compaction(spark, tmp_path):
         assert sorted(
             e for e in os.listdir(new_dir) if e.startswith("_epoch=")
         ) == ["_epoch=2"]
+        # the per-epoch file sets collapse to at most one file per bucket
+        n_files_after = len(glob.glob(f"{new_dir}/_epoch=*/part-*.parquet"))
+        assert n_files_after <= 4, n_files_after
         compacted = read_manifest_zone(
             spark, {"orders": orders_tbl}, zone
         )["orders"]
