@@ -17,7 +17,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+
+
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 8 GB capped at half the host's
+    memory (the driver JVM shares the host with its Python workers and
+    with any other session on it)."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(8192, half_mb)}m"
 
 
 def get_spark(
@@ -28,11 +41,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same
-    entrypoint works under the driver harness and on a real cluster
-    (where ``master`` is injected by spark-submit and must be None).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (else the CPUs
+    this process may run on) so the same entrypoint works under the
+    driver harness and on a real cluster (where ``master`` is injected
+    by spark-submit and must be None). The driver heap defaults to
+    ``$SPARK_GRAFT_DRIVER_MEM``, else 8 GB capped at half the host's
+    memory.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(_host_cpus())
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -41,7 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # AQE coalescing only shrinks the partition count — it never
         # grows it past spark.sql.shuffle.partitions. Starting from a
@@ -65,7 +81,7 @@ def get_spark(
         # instead of full scans; at 100 TB a count over a landed zone
         # stops costing a pass over the data.
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if master is not None:

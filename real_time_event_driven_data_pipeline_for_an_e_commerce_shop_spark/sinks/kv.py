@@ -137,10 +137,10 @@ class KeyedParquetUpsertSink:
         """Replace exactly the partitions present in ``batch``.
 
         The dynamic overwrite mode is a per-write option, never the
-        session conf: the batch may belong to the caller's session
-        (``run_event_driven_pipeline(await_termination=False)``), where
-        flipping the session-wide mode would turn a concurrent static
-        overwrite into a dynamic one."""
+        session conf: the batch may belong to a session that other
+        threads keep using while the stream runs (a micro-batch runs on
+        the query's own thread), where flipping the session-wide mode
+        would turn a concurrent static overwrite into a dynamic one."""
         (
             batch.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -27,16 +27,16 @@ reference does per trigger, so its input work grows with the history
 (about 20 Spark jobs per micro-batch). Only the output is narrowed: the
 KPIs are restricted to the date partitions touched by newly arrived
 items and upserted via dynamic partition overwrite (``sinks.kv``), so
-untouched dates are never rewritten. Making the input side incremental
-too (land validated rows per epoch, recompute from pruned date
-partitions) is ROADMAP direction 2.
+untouched dates are never rewritten. The input side is not yet
+incremental: landing validated rows per epoch and recomputing the
+touched dates from pruned date partitions would bound it.
 """
 
 from __future__ import annotations
 
 import logging
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,10 +56,10 @@ def run_event_driven_pipeline(
     out_dir: str,
     checkpoint_dir: str,
     archive_dir: str | None = None,
-    await_termination: bool = True,
 ):
-    """Start the file-triggered KPI pipeline over a reference-shaped raw
-    zone (``products.csv``, ``orders/``, ``order_items/``).
+    """Run the file-triggered KPI pipeline over a reference-shaped raw
+    zone (``products.csv``, ``orders/``, ``order_items/``) until every
+    arrived file is processed; returns the terminated query.
 
     The order_items stream drives processing (it is the fact at item
     grain), but it only decides WHICH dates to recompute. Every
@@ -70,25 +70,18 @@ def run_event_driven_pipeline(
     and only then restricts it to the order dates touched by the new
     items. The input work per micro-batch therefore grows with the
     history; what stays bounded is the output: only the touched dates'
-    KPI partitions are upserted. ROADMAP direction 2 covers landing
-    validated rows per epoch so the input side is incremental too.
+    KPI partitions are upserted. Landing validated rows per epoch would
+    make the input side incremental too.
     """
     cat_sink = KeyedParquetUpsertSink(
         os.path.join(out_dir, "category_kpi"), "order_date"
     )
     ord_sink = KeyedParquetUpsertSink(os.path.join(out_dir, "order_kpi"), "order_date")
 
-    reader = (
-        spark.readStream.schema(ORDER_ITEMS_SCHEMA)
-        .option("header", True)
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
-        .option("maxFilesPerTrigger", 64)
+    items_stream = _csv_stream(
+        spark, ORDER_ITEMS_SCHEMA, os.path.join(raw_dir, "order_items"),
+        archive_dir,
     )
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option(
-            "sourceArchiveDir", archive_dir
-        )
-    items_stream = reader.csv(os.path.join(raw_dir, "order_items"))
 
     def process_batch(new_items: DataFrame, epoch_id: int) -> None:
         if new_items.isEmpty():
@@ -111,15 +104,29 @@ def run_event_driven_pipeline(
         cat_sink.upsert(kpi.category_kpi(fact))
         ord_sink.upsert(kpi.order_kpi(fact))
 
-    q = (
-        items_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # the keyed upsert is idempotent by itself: no zone, no replay skip
+    return _run_epochs(spark, items_stream, checkpoint_dir, (), process_batch)
+
+
+def _csv_stream(
+    spark: SparkSession,
+    schema,
+    path: str,
+    archive_dir: str | None = None,
+) -> DataFrame:
+    """File-source stream over a reference-shaped CSV upload dir; with
+    ``archive_dir`` processed files are archived there."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("header", True)
+        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
+        .option("maxFilesPerTrigger", 64)
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
+    if archive_dir is not None:
+        reader = reader.option("cleanSource", "archive").option(
+            "sourceArchiveDir", archive_dir
+        )
+    return reader.csv(path)
 
 
 # --- epoch manifest: the commit-log half of an ACID table format -------
@@ -247,63 +254,135 @@ def _on_disk_epochs(path: str) -> set[int]:
     return out
 
 
-def _land_epoch(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    path: str,
-    zone_dir: str,
-    name: str,
-    epoch_id: int,
-    n_buckets: int,
-    bucket_col: str = "order_id",
-    commit_fn=None,
-    extra_partition_cols: tuple[str, ...] = (),
-) -> None:
-    """Idempotent, crash-safe landing of one micro-batch epoch.
+@dataclass(frozen=True)
+class _Zone:
+    """One streamed manifest zone: catalog ``table`` first created at
+    ``root/name``, epochs committed under ``root/_manifest/name``,
+    bucketed ``n_buckets`` ways on ``bucket_col``.
 
-    ``path`` is only the location for the CREATE on the first-ever
-    append; once the table exists its catalog location is
-    authoritative (compaction re-points it at a fresh directory).
-
-    ``extra_partition_cols`` nest further partition directories UNDER
-    the ``_epoch`` partition (e.g. ``("cluster_id",)`` for the
+    ``partition_cols`` nest further partition directories UNDER the
+    ``_epoch`` partition (e.g. ``("cluster_id",)`` for the
     inverted-list zones, so a probe join dynamic-partition-prunes to
     the probed cells' files). ``_epoch`` stays outermost so the
     crash-orphan scrub and the manifest's epoch pruning are untouched.
+
+    ``fold`` is how the zone compacts: the zone reader's own merge or
+    generation filter, applied to the committed epochs' union (None
+    when the epochs hold disjoint rows).
+    """
+
+    name: str
+    table: str
+    root: str
+    n_buckets: int
+    bucket_col: str
+    partition_cols: tuple[str, ...] = ()
+    fold: Callable[[DataFrame], DataFrame] | None = None
+
+    def committed(self, epoch_id: int) -> bool:
+        return epoch_id in committed_epochs(self.root, self.name)
+
+
+def _land_epoch(
+    spark: SparkSession,
+    df: DataFrame,
+    zone: _Zone,
+    epoch_id: int,
+    commit_fn=None,
+) -> None:
+    """Idempotent, crash-safe landing of one micro-batch epoch.
+
+    ``root/name`` is only the location for the CREATE on the
+    first-ever append; once the table exists its catalog location is
+    authoritative (compaction re-points it at a fresh directory).
     """
     import shutil
 
-    if epoch_id in committed_epochs(zone_dir, name):
+    if zone.committed(epoch_id):
         return  # checkpoint replay of a fully-landed epoch: no-op
-    exists = spark.catalog.tableExists(table)
-    loc = (_table_location(spark, table) or path) if exists else path
+    path = os.path.join(zone.root, zone.name)
+    exists = spark.catalog.tableExists(zone.table)
+    loc = (_table_location(spark, zone.table) or path) if exists else path
     orphan = os.path.join(loc, f"_epoch={epoch_id}")
     if os.path.isdir(orphan):
         # crash between append and commit: scrub the failed attempt's
         # files (the partition dir scopes them exactly), then retry
         shutil.rmtree(orphan)
         if exists:
-            spark.catalog.refreshTable(table)
+            spark.catalog.refreshTable(zone.table)
     staged = df.withColumn("_epoch", F.lit(epoch_id))
     # align tasks with the bucket spec before writing (same Murmur3
     # pmod as bucketBy): each of the n_buckets tasks then emits ONE
     # file per partition dir it touches, so an epoch costs
     # n_buckets × |dirs| files instead of |input splits| × |dirs| —
     # the small-files bound the soak test asserts
-    staged = staged.repartition(n_buckets, F.col(bucket_col))
+    staged = staged.repartition(zone.n_buckets, F.col(zone.bucket_col))
     writer = (
         staged.write.format("parquet")
-        .partitionBy("_epoch", *extra_partition_cols)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
+        .partitionBy("_epoch", *zone.partition_cols)
+        .bucketBy(zone.n_buckets, zone.bucket_col)
+        .sortBy(zone.bucket_col)
     )
     if not exists:
         writer = writer.option("path", path)
-    writer.mode("append").saveAsTable(table)
-    spark.catalog.refreshTable(table)
-    n_rows = spark.table(table).filter(F.col("_epoch") == epoch_id).count()
-    (commit_fn or _commit_epoch)(zone_dir, name, epoch_id, n_rows)
+    writer.mode("append").saveAsTable(zone.table)
+    spark.catalog.refreshTable(zone.table)
+    n_rows = spark.table(zone.table).filter(F.col("_epoch") == epoch_id).count()
+    (commit_fn or _commit_epoch)(zone.root, zone.name, epoch_id, n_rows)
+
+
+def _run_epochs(
+    spark: SparkSession,
+    stream: DataFrame,
+    checkpoint_dir: str,
+    zones: Sequence[_Zone],
+    body: Callable[[DataFrame, int], None],
+    compact_every: int | None = None,
+):
+    """THE epoch loop of every streamed zone: drive ``stream`` through
+    ``foreachBatch`` until its available input is processed, calling
+    ``body(batch, epoch_id)`` once per micro-batch, and return the
+    terminated query.
+
+    * An epoch that every zone in ``zones`` has committed is a
+      checkpoint replay of a fully-landed epoch and is skipped. A
+      zone-less stream is never skipped: its sink must be idempotent
+      by itself.
+    * After the body, each zone whose committed epoch count reached
+      ``compact_every`` folds back to ONE epoch
+      (:func:`compact_manifest_zone` with the zone's ``fold``), in
+      ``zones`` order — land order, aux zones before the primary, so a
+      fold interrupted between zones still leaves every aux row inside
+      the primary's epoch set. The fold runs after the epoch fully
+      commits: a crash in the fold window replays as an already-landed
+      epoch and the fold waits for the next trigger. VACUUM stays an
+      operator action (:func:`vacuum_manifest_zone` — its retention
+      guard must not run inside a live writer).
+    """
+
+    def run(batch: DataFrame, epoch_id: int) -> None:
+        if zones and all(z.committed(epoch_id) for z in zones):
+            return
+        body(batch, epoch_id)
+        for z in zones:
+            # folding resets the zone to one committed epoch
+            if compact_every and (
+                len(committed_epochs(z.root, z.name)) >= compact_every
+            ):
+                compact_manifest_zone(
+                    spark, z.table, z.root, z.name,
+                    n_buckets=z.n_buckets, bucket_col=z.bucket_col,
+                    transform=z.fold, extra_partition_cols=z.partition_cols,
+                )
+
+    q = (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 KMEANS_MODEL_DIR = "kmeans_model"
@@ -313,6 +392,15 @@ IVF_MODEL_DIR = "ivf_model"
 BINARY_MODEL_DIR = "binary_model"
 BPE_MODEL_DIR = "bpe_model"
 MODEL_META_FILE = "_model_meta.json"
+
+# the fixed shapes of the streamed gates (every deployment uses these)
+PRICE_SCHEMA = "l_linestatus string, l_extendedprice double"
+PRICE_GROUP_COL = "l_linestatus"
+PRICE_VALUE_COL = "l_extendedprice"
+IVF_ITERATIONS = 2
+DECONTAMINATE_N = 5
+CLUSTER_K = 4
+CLUSTER_ITERATIONS = 3
 
 
 def _read_model_meta(zone_dir: str, model_dir: str) -> dict | None:
@@ -371,12 +459,6 @@ def _mean_dist(encoded: DataFrame) -> float | None:
     return None if row["m"] is None else float(row["m"])
 
 
-def _compaction_due(zone_dir: str, name: str, every: int | None) -> bool:
-    """The ``auto_compact_every`` trigger: the zone's committed epoch
-    count reached the threshold (folding resets it to one)."""
-    return bool(every) and len(committed_epochs(zone_dir, name)) >= every
-
-
 @dataclass(frozen=True)
 class _ModelGate:
     """The per-gate pieces :func:`_run_model_gate` drives.
@@ -391,17 +473,17 @@ class _ModelGate:
       sibling).
     * ``refit_input(batch)`` is what a gen ≥ 1 fit learns from: the
       committed corpus plus the in-flight batch.
-    * ``land(batch, out, gen, epoch_id)`` lands the epoch's zone rows.
+    * ``rows(batch, out, gen)`` is what lands in ``zone`` this epoch.
     * ``statistic`` maps an encode to the drift statistic; the meta
       records its fit-time value under ``stat_key``.
     """
 
-    zone: str
+    zone: _Zone
     model_dir: str
     fit: Callable[[DataFrame, int, str], DataFrame]
     encode: Callable[[DataFrame, int], DataFrame]
     refit_input: Callable[[DataFrame], DataFrame]
-    land: Callable[[DataFrame, DataFrame, int, int], None]
+    rows: Callable[[DataFrame, DataFrame, int], DataFrame]
     empty_schema: str
     meta_params: dict
     statistic: Callable[[DataFrame], float | None] = _mean_dist
@@ -410,7 +492,6 @@ class _ModelGate:
 
 def _run_model_gate(
     spark: SparkSession,
-    zone_dir: str,
     gate: _ModelGate,
     batch: DataFrame,
     epoch_id: int,
@@ -443,8 +524,9 @@ def _run_model_gate(
     statistic and the landing both consume the encode, so it is
     persisted once (micro-batch-bounded rows) and released after the
     land — streams are long-lived."""
-    if epoch_id in committed_epochs(zone_dir, gate.zone):
+    if gate.zone.committed(epoch_id):
         return  # replayed, fully landed
+    zone_dir = gate.zone.root
 
     def fit(fit_input: DataFrame, gen: int) -> DataFrame:
         gdir = os.path.join(zone_dir, gate.model_dir, f"gen={gen}")
@@ -489,8 +571,60 @@ def _run_model_gate(
             out.unpersist()  # the refit replaces the batch encode
             gen += 1
             out = fit(gate.refit_input(batch), gen)
-    gate.land(batch, out, gen, epoch_id)
+    _land_epoch(spark, gate.rows(batch, out, gen), gate.zone, epoch_id)
     out.unpersist()
+
+
+# the reader-side merges of the mergeable-state zones: each reader folds
+# its committed epochs with one of these, and compaction applies the
+# SAME fold, so a compacted zone is reader-identical by construction
+def _sum_cells(df: DataFrame) -> DataFrame:
+    return df.groupBy("row_i", "col").agg(
+        F.sum("cell").cast("long").alias("cell")
+    )
+
+
+def _max_registers(df: DataFrame) -> DataFrame:
+    return df.groupBy("r_idx").agg(F.max("rho").cast("long").alias("rho"))
+
+
+def _sum_word_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("word").agg(F.sum("n").cast("long").alias("n"))
+
+
+def _sum_price_hist(df: DataFrame) -> DataFrame:
+    return df.groupBy(PRICE_GROUP_COL, "_c").agg(
+        F.sum("_cnt").cast("long").alias("_cnt")
+    )
+
+
+def _live_generation(
+    zone_dir: str, model_dir: str, retained_sample_mode: bool = False
+) -> Callable[[DataFrame], DataFrame]:
+    """The fold of a generation-tracked model zone: keep exactly the
+    rows its reader serves (see :func:`compact_model_zone`). The meta
+    is read when the fold runs, i.e. at compaction time."""
+
+    def fold(df: DataFrame) -> DataFrame:
+        meta = _read_model_meta(zone_dir, model_dir)
+        if meta is None:
+            raise ValueError(
+                f"no model meta under {model_dir!r} — nothing to compact"
+            )
+        gen = meta["gen"]
+        if not retained_sample_mode:
+            return df.filter(F.col("model_gen") == gen)
+        is_sample = (F.col("vec_id") % meta["stride"] == 0) | (
+            F.col("vec_id") % meta["cb_stride"] == 0
+        )
+        gmax = df.agg(F.max("model_gen")).collect()[0][0]
+        g = gen if gmax is None else min(int(gen), int(gmax))
+        return df.filter(
+            (F.col("model_gen") == g)
+            | (~is_sample & (F.col("model_gen") <= g))
+        )
+
+    return fold
 
 
 def read_kmeans_centroids(
@@ -533,11 +667,10 @@ def read_cms_cells(
     groupBy-sum — bit-exact vs the batch
     ``text.cms_cells_from_term_counts`` over the same corpus
     (integer addition is associative; replay-parity-tested)."""
-    df = read_manifest_zone(spark, {"cms_cells": table}, zone_dir)[
-        "cms_cells"
-    ]
-    return df.groupBy("row_i", "col").agg(
-        F.sum("cell").cast("long").alias("cell")
+    return _sum_cells(
+        read_manifest_zone(spark, {"cms_cells": table}, zone_dir)[
+            "cms_cells"
+        ]
     )
 
 
@@ -551,11 +684,10 @@ def read_hll_registers(
     associative/commutative/idempotent, so replay CAN'T even
     double-count; the CMS cells' sum-merge needs the manifest for
     that, the registers get it for free)."""
-    df = read_manifest_zone(
-        spark, {"hll_registers": table}, zone_dir
-    )["hll_registers"]
-    return df.groupBy("r_idx").agg(
-        F.max("rho").cast("long").alias("rho")
+    return _max_registers(
+        read_manifest_zone(spark, {"hll_registers": table}, zone_dir)[
+            "hll_registers"
+        ]
     )
 
 
@@ -572,10 +704,7 @@ def compact_hll_registers(
     ingest waves accumulated."""
     return compact_manifest_zone(
         spark, table, zone_dir, name,
-        n_buckets=n_buckets, bucket_col="r_idx",
-        transform=lambda df: df.groupBy("r_idx").agg(
-            F.max("rho").cast("long").alias("rho")
-        ),
+        n_buckets=n_buckets, bucket_col="r_idx", transform=_max_registers,
     )
 
 
@@ -584,12 +713,8 @@ def run_price_histogram_ingest(
     raw_dir: str,
     zone_dir: str,
     checkpoint_dir: str,
-    schema: str = "l_linestatus string, l_extendedprice double",
-    group_col: str = "l_linestatus",
-    value_col: str = "l_extendedprice",
     n_buckets: int = 8,
     table_prefix: str = "price_",
-    await_termination: bool = True,
 ) -> dict[str, str]:
     """Streaming maintenance for the EXACT-quantile tier (VERDICT r11
     #4 — the third mergeable-sketch zone beside CMS cells and HLL
@@ -613,52 +738,37 @@ def run_price_histogram_ingest(
     the batch tier (BASELINE.md ×30 line)."""
     from ..operators.olap_deep import price_histogram
 
-    name = "price_hist"
-    tables = {name: f"{table_prefix}price_hist"}
-
-    def land(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in committed_epochs(zone_dir, name):
-            return  # checkpoint replay of a fully-landed epoch
-        _land_epoch(
-            spark,
-            price_histogram(batch_df, group_col, value_col),
-            tables[name],
-            os.path.join(zone_dir, name),
-            zone_dir,
-            name,
-            epoch_id,
-            n_buckets,
-            bucket_col="_c",
-        )
-
-    stream = spark.readStream.schema(schema).parquet(raw_dir)
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    zone = _Zone(
+        "price_hist", f"{table_prefix}price_hist", zone_dir, n_buckets, "_c",
+        fold=_sum_price_hist,
     )
-    if await_termination:
-        q.awaitTermination()
-    return dict(tables)
+    _run_epochs(
+        spark,
+        spark.readStream.schema(PRICE_SCHEMA).parquet(raw_dir),
+        checkpoint_dir,
+        [zone],
+        lambda batch, epoch_id: _land_epoch(
+            spark,
+            price_histogram(batch, PRICE_GROUP_COL, PRICE_VALUE_COL),
+            zone,
+            epoch_id,
+        ),
+    )
+    return {zone.name: zone.table}
 
 
 def read_price_histogram(
-    spark: SparkSession,
-    table: str,
-    zone_dir: str,
-    group_col: str = "l_linestatus",
+    spark: SparkSession, table: str, zone_dir: str
 ) -> DataFrame:
     """The corpus cents histogram from the streamed zone: per-epoch
     counts are integer SUMS, so the manifest-pruned epoch union folds
     with one groupBy-sum — bit-exact vs the batch
     ``olap_deep.price_histogram`` over the same rows (and therefore
     the quartiles computed from it are bit-exact too)."""
-    df = read_manifest_zone(spark, {"price_hist": table}, zone_dir)[
-        "price_hist"
-    ]
-    return df.groupBy(group_col, "_c").agg(
-        F.sum("_cnt").cast("long").alias("_cnt")
+    return _sum_price_hist(
+        read_manifest_zone(spark, {"price_hist": table}, zone_dir)[
+            "price_hist"
+        ]
     )
 
 
@@ -667,7 +777,6 @@ def compact_price_histogram(
     table: str,
     zone_dir: str,
     name: str = "price_hist",
-    group_col: str = "l_linestatus",
     n_buckets: int = 8,
 ) -> str:
     """:func:`compact_cms_cells` for the histogram zone — epochs fold
@@ -676,10 +785,7 @@ def compact_price_histogram(
     matter how many ingest waves accumulated."""
     return compact_manifest_zone(
         spark, table, zone_dir, name,
-        n_buckets=n_buckets, bucket_col="_c",
-        transform=lambda df: df.groupBy(group_col, "_c").agg(
-            F.sum("_cnt").cast("long").alias("_cnt")
-        ),
+        n_buckets=n_buckets, bucket_col="_c", transform=_sum_price_hist,
     )
 
 
@@ -693,10 +799,11 @@ def read_bpe_word_counts(
     (``term_state.groupBy(term).sum(tf)`` under the ``[a-z0-9]+``
     filter) over the same corpus. |vocab| rows (Heaps-sublinear), the
     state BPE refits from WITHOUT re-scanning text."""
-    df = read_manifest_zone(
-        spark, {"bpe_word_counts": table}, zone_dir
-    )["bpe_word_counts"]
-    return df.groupBy("word").agg(F.sum("n").cast("long").alias("n"))
+    return _sum_word_counts(
+        read_manifest_zone(spark, {"bpe_word_counts": table}, zone_dir)[
+            "bpe_word_counts"
+        ]
+    )
 
 
 def compact_bpe_word_counts(
@@ -712,10 +819,7 @@ def compact_bpe_word_counts(
     many ingest waves accumulated."""
     return compact_manifest_zone(
         spark, table, zone_dir, name,
-        n_buckets=n_buckets, bucket_col="word",
-        transform=lambda df: df.groupBy("word").agg(
-            F.sum("n").cast("long").alias("n")
-        ),
+        n_buckets=n_buckets, bucket_col="word", transform=_sum_word_counts,
     )
 
 
@@ -757,10 +861,7 @@ def compact_cms_cells(
     ``max(committed)`` as usual and merge with the folded row set."""
     return compact_manifest_zone(
         spark, table, zone_dir, name,
-        n_buckets=n_buckets, bucket_col="col",
-        transform=lambda df: df.groupBy("row_i", "col").agg(
-            F.sum("cell").cast("long").alias("cell")
-        ),
+        n_buckets=n_buckets, bucket_col="col", transform=_sum_cells,
     )
 
 
@@ -798,32 +899,10 @@ def compact_model_zone(
     drop the sample ids' only landed encode. ``model_gen`` survives
     as a column (the multi-gen serve scores each row against its own
     generation's model)."""
-    meta = _read_model_meta(zone_dir, model_dir)
-    if meta is None:
-        raise ValueError(
-            f"no model meta under {model_dir!r} — nothing to compact"
-        )
-    gen = meta["gen"]
-    if retained_sample_mode:
-        is_sample = (F.col("vec_id") % meta["stride"] == 0) | (
-            F.col("vec_id") % meta["cb_stride"] == 0
-        )
-
-        def transform(df):
-            gmax = df.agg(F.max("model_gen")).collect()[0][0]
-            g = gen if gmax is None else min(int(gen), int(gmax))
-            return df.filter(
-                (F.col("model_gen") == g)
-                | (~is_sample & (F.col("model_gen") <= g))
-            )
-    else:
-        transform = lambda df: df.filter(  # noqa: E731
-            F.col("model_gen") == gen
-        )
     return compact_manifest_zone(
         spark, table, zone_dir, name,
         n_buckets=n_buckets, bucket_col=bucket_col,
-        transform=transform,
+        transform=_live_generation(zone_dir, model_dir, retained_sample_mode),
         extra_partition_cols=extra_partition_cols,
     )
 
@@ -947,7 +1026,7 @@ def read_ivf_lists(
     if isinstance(emb_field, ArrayType) and isinstance(
         emb_field.elementType, FloatType
     ):
-        # a lists_vector_dtype="float" zone: promote back to double —
+        # a float-stored zone (float32 ingest): promote back to double —
         # exact (float→double is lossless), so serving and refit
         # values are bit-identical to a double-stored zone
         df = df.withColumn(
@@ -1306,14 +1385,11 @@ def run_embedding_ingest(
     stride: int = 29,
     n_clusters: int = 16,
     cb_stride: int = 31,
-    ivf_iterations: int = 2,
     drift_refit_factor: float | None = 2.0,
     n_buckets: int = 8,
     table_prefix: str = "emb_",
     store_flat_embeddings: bool = True,
-    lists_vector_dtype: str = "auto",
     auto_compact_every: int | None = None,
-    await_termination: bool = True,
 ) -> dict[str, str]:
     """Streaming ingest for the EMBEDDINGS side of the house with a
     maintained product-quantization model (VERDICT r10 #1): the batch
@@ -1366,7 +1442,7 @@ def run_embedding_ingest(
     ``ivf`` adds the TRAINED coarse quantizer (the `_ivf_model_zone`
     batch land's streaming twin, closing the last ANN model zone):
     gen-0 runs the deterministic Lloyd fit (``kmeans_fixed(k=
-    n_clusters, iterations=ivf_iterations)``) on the first non-empty
+    n_clusters, iterations=IVF_ITERATIONS)``) on the first non-empty
     epoch and lands the k-row centroid table; every epoch files its
     arrivals into INVERTED LISTS (``similarity.ivf_list_assign`` —
     cosine membership, the search metric's rule, with the vector
@@ -1436,39 +1512,27 @@ def run_embedding_ingest(
     :func:`ivfpq_rerank_topk_streamed` refuses a zone without a flat
     table rather than offering sample-rerank.
 
-    ``lists_vector_dtype`` controls the IVF lists' on-disk vector
-    column. ``"float"`` stores ``array<float>`` instead of
-    ``array<double>`` — LOSSLESS when the ingest schema's vectors are
-    float32 (``array<float>``): float→double is exact, so the double
-    the assignment computed round-trips through float32 bit-exactly;
-    the reader promotes back to double and every serve/refit value is
-    bit-identical (test-gated). Halves the lists zone's vector bytes —
-    at 100 TB the lists ARE the corpus in the IVF store-once
-    deployment, so this is a 2× storage lever. The default ``"auto"``
-    (VERDICT r13 #6) resolves from the INGEST SCHEMA itself: float32
-    storage when the declared ``embedding`` element type is float (the
-    engine's ingest contract, so every current caller gets the 0.76×
-    zone for free), double otherwise — a caller who overrides the
-    schema to ``array<double>`` keeps full-precision storage without
-    touching the knob, so the compact default can never silently drop
-    bits. Pass ``"double"`` explicitly to force wide storage for a
-    float32 ingest.
+    The IVF lists' on-disk vector column follows the declared ingest
+    schema: ``array<float>`` when the ``embedding`` element type is
+    float, ``array<double>`` otherwise. Float storage is LOSSLESS for
+    float32 input (float→double is exact, so the double the assignment
+    computed round-trips through float32 bit-exactly); the reader
+    promotes back to double and every serve/refit value is
+    bit-identical to a double-stored zone (test-gated), at about half
+    the lists' vector bytes — at 100 TB the lists ARE the corpus in
+    the IVF store-once deployment.
 
     ``auto_compact_every=N`` folds each landed zone back to ONE epoch
     whenever its committed epoch count reaches N (r14 — the measured
     rule: at 20 epochs the store-once serve pays ~2.3 s of pure
     epoch-layout overhead vs the folded twin, and a compaction costs
-    ~one serve; scripts/bench_store_once_epochs.py). The fold is
-    :func:`compact_model_zone` for the generation-tracked code zones
-    (retained-sample-aware for the store-once deployment) and
-    :func:`compact_manifest_zone` for the plain fit_sample/embeddings
-    zones — both reader-identical by construction, and the manifest
-    resets to one marker so the trigger self-resets. Best-effort
-    maintenance: it runs AFTER the epoch fully commits, so a crash in
-    the compaction window replays as an already-landed epoch and the
-    fold simply waits for the next trigger. VACUUM stays an operator
-    action (`vacuum_manifest_zone` — its retention guard must not run
-    inside a live writer).
+    ~one serve; scripts/bench_store_once_epochs.py). The fold is the
+    generation filter of :func:`compact_model_zone` for the code zones
+    (retained-sample-aware for the store-once deployment) and a plain
+    fold for the fit_sample/embeddings zones — reader-identical by
+    construction; the manifest resets to one marker so the trigger
+    self-resets, and the fold runs only after the epoch fully commits
+    (:func:`_run_epochs`).
 
     At 100 TB: the model dir holds m·k rows per generation (64 at
     defaults — driver/broadcast-safe by construction), per-epoch work
@@ -1496,36 +1560,10 @@ def run_embedding_ingest(
             "ivfpq=True — PQ codes alone are compressed beyond "
             "recovery, so refits would have no committed-vector source"
         )
-    if lists_vector_dtype not in ("auto", "double", "float"):
-        raise ValueError(
-            f"lists_vector_dtype must be 'auto', 'double' or 'float', "
-            f"got {lists_vector_dtype!r}"
-        )
     if auto_compact_every is not None and auto_compact_every < 1:
         raise ValueError(
             f"auto_compact_every must be >= 1 or None, got "
             f"{auto_compact_every!r}"
-        )
-    if lists_vector_dtype == "auto":
-        # resolve from the declared ingest schema: float32 storage is
-        # lossless exactly when the arriving vectors are float32
-        from pyspark.sql.types import ArrayType, FloatType, StructType
-
-        st = (
-            StructType.fromDDL(schema)
-            if isinstance(schema, str)
-            else schema
-        )
-        emb_t = (
-            st["embedding"].dataType
-            if "embedding" in st.fieldNames()
-            else None
-        )
-        lists_vector_dtype = (
-            "float"
-            if isinstance(emb_t, ArrayType)
-            and isinstance(emb_t.elementType, FloatType)
-            else "double"
         )
     # the IVFPQ-only store-once deployment: codes + retained fit diet
     retain_fit_sample = not store_flat_embeddings and ivfpq and not ivf
@@ -1538,54 +1576,72 @@ def run_embedding_ingest(
             "binary=False, or enable ivf=True / "
             "store_flat_embeddings=True"
         )
-    name = "embeddings"
-    tables: dict[str, str] = {}
+
+    stream = spark.readStream.schema(schema).parquet(raw_dir)
+    # float32 lists storage is lossless exactly when the arriving
+    # vectors are float32
+    float_lists = (
+        stream.schema["embedding"].dataType.simpleString() == "array<float>"
+    )
+
+    def zone(zname, model_dir=None, partition_cols=()) -> _Zone:
+        """A code zone (``model_dir`` set) folds to its live rows."""
+        retained = retain_fit_sample and zname == "ivfpq_codes"
+        return _Zone(
+            zname, f"{table_prefix}{zname}", zone_dir, n_buckets, "vec_id",
+            partition_cols,
+            model_dir and _live_generation(zone_dir, model_dir, retained),
+        )
+
+    # land order: every code zone commits before the fit sample / flat
+    # embeddings zone. The inverted-list zones' rows carry the vector
+    # (IVF) or codes (IVFPQ) and the layout carries the cell, so the
+    # serving plans' codes/lists ⋈ broadcast(probes) join reads only
+    # the probed cells' files (DPP)
+    zones: dict[str, _Zone] = {}
     if pq:
-        tables["pq_codes"] = f"{table_prefix}pq_codes"
-    if ivfpq:
-        tables["ivfpq_codes"] = f"{table_prefix}ivfpq_codes"
-    if ivf:
-        tables["ivf_assign"] = f"{table_prefix}ivf_assign"
+        zones["pq_codes"] = zone("pq_codes", PQ_MODEL_DIR)
     if binary:
-        tables["binary_codes"] = f"{table_prefix}binary_codes"
+        zones["binary_codes"] = zone("binary_codes", BINARY_MODEL_DIR)
+    if ivfpq:
+        zones["ivfpq_codes"] = zone(
+            "ivfpq_codes", IVFPQ_MODEL_DIR, partition_cols=("cluster_id",)
+        )
+    if ivf:
+        zones["ivf_assign"] = zone(
+            "ivf_assign", IVF_MODEL_DIR, partition_cols=("cluster_id",)
+        )
     if retain_fit_sample:
-        tables["fit_sample"] = f"{table_prefix}fit_sample"  # lands LAST
+        zones["fit_sample"] = zone("fit_sample")
     if store_flat_embeddings:
-        tables[name] = f"{table_prefix}embeddings"  # lands LAST
+        zones["embeddings"] = zone("embeddings")
 
     def _committed_vectors() -> DataFrame | None:
         if store_flat_embeddings:
-            if not spark.catalog.tableExists(tables[name]):
-                return None
-            return read_manifest_zone(
-                spark, {name: tables[name]}, zone_dir
-            )[name].select("vec_id", "embedding")
-        if retain_fit_sample:
+            z = zones["embeddings"]
+        elif retain_fit_sample:
             # IVFPQ-only store-once: the retained strided fit diet is
             # the refit's committed-vector source. It lands LAST each
             # epoch (the flat zone's slot), so it never contains the
             # in-flight batch — the union below stays duplicate-free.
-            if not spark.catalog.tableExists(tables["fit_sample"]):
+            z = zones["fit_sample"]
+        else:
+            z = zones["ivf_assign"]
+        if not spark.catalog.tableExists(z.table):
+            return None
+        df = read_manifest_zone(spark, {z.name: z.table}, zone_dir)[z.name]
+        if z.name == "ivf_assign":
+            # store-once mode: the inverted lists ARE the corpus. Use
+            # the newest generation present IN THE ZONE, not the
+            # meta's — in a refit's crash window (meta committed, codes
+            # epoch not) the meta already names the new gen, which has
+            # no rows yet; the zone's max landed gen is always the full
+            # committed corpus.
+            gmax = df.agg(F.max("model_gen")).collect()[0][0]
+            if gmax is None or gmax < 0:
                 return None
-            return read_manifest_zone(
-                spark, {"fit_sample": tables["fit_sample"]}, zone_dir
-            )["fit_sample"].select("vec_id", "embedding")
-        # store-once mode: the inverted lists ARE the corpus. Use the
-        # newest generation present IN THE ZONE, not the meta's — in
-        # a refit's crash window (meta committed, codes epoch not) the
-        # meta already names the new gen, which has no rows yet; the
-        # zone's max landed gen is always the full committed corpus.
-        if not spark.catalog.tableExists(tables["ivf_assign"]):
-            return None
-        df = read_manifest_zone(
-            spark, {"ivf_assign": tables["ivf_assign"]}, zone_dir
-        )["ivf_assign"]
-        gmax = df.agg(F.max("model_gen")).collect()[0][0]
-        if gmax is None or gmax < 0:
-            return None
-        return df.filter(F.col("model_gen") == gmax).select(
-            "vec_id", "embedding"
-        )
+            df = df.filter(F.col("model_gen") == gmax)
+        return df.select("vec_id", "embedding")
 
     def _with_committed(vecs: DataFrame) -> DataFrame:
         """The PQ / binary / IVFPQ / IVF refit input: the full
@@ -1593,29 +1649,11 @@ def run_embedding_ingest(
         committed = _committed_vectors()
         return vecs if committed is None else committed.unionByName(vecs)
 
-    # inverted-list file layout: rows carry the vector (IVF) or codes
-    # (IVFPQ) and the layout carries the cell, so the serving plans'
-    # codes/lists ⋈ broadcast(probes) join reads only the probed
-    # cells' files (DPP)
-    cell_partitioned = {
-        "ivfpq_codes": ("cluster_id",),
-        "ivf_assign": ("cluster_id",),
-    }
-
-    def _land_codes(
-        zname: str, rows: DataFrame, gen: int, epoch_id: int
-    ) -> None:
-        _land_epoch(
-            spark,
-            rows.withColumn("model_gen", F.lit(gen)),
-            tables[zname],
-            os.path.join(zone_dir, zname),
-            zone_dir,
-            zname,
-            epoch_id,
-            n_buckets,
-            bucket_col="vec_id",
-            extra_partition_cols=cell_partitioned.get(zname, ()),
+    def _tagged(*cols: str):
+        """Gate rows of a code zone: the encode's ``cols`` tagged with
+        the generation that produced them."""
+        return lambda _batch, out, gen: out.select(*cols).withColumn(
+            "model_gen", F.lit(gen)
         )
 
     pq_params = {
@@ -1681,7 +1719,7 @@ def run_embedding_ingest(
 
     def _ivf_fit(vecs: DataFrame, gen: int, gdir: str) -> DataFrame:
         kmeans_fixed(
-            _ivf_vecs(vecs), k=n_clusters, iterations=ivf_iterations,
+            _ivf_vecs(vecs), k=n_clusters, iterations=IVF_ITERATIONS,
             dim=dim, id_col="vec_id", vec_col="embedding",
             return_centroids=True,
         ).coalesce(1).write.mode("overwrite").parquet(gdir)
@@ -1698,35 +1736,29 @@ def run_embedding_ingest(
             id_col="vec_id", vec_col="embedding", with_dist=True,
         )
 
-    def _ivf_land(_vecs, lists: DataFrame, gen: int, epoch_id: int):
-        if lists_vector_dtype == "float":
-            # lossless for float32-contract inputs (see the knob's
-            # docstring); the reader promotes back to double
+    def _ivf_rows(_vecs, lists: DataFrame, gen: int) -> DataFrame:
+        if float_lists:
+            # lossless for float32 input; the reader promotes back to
+            # double
             lists = lists.withColumn(
                 "embedding", F.col("embedding").cast("array<float>")
             )
-        _land_codes("ivf_assign", lists, gen, epoch_id)
+        return lists.withColumn("model_gen", F.lit(gen))
 
-    # gate order = land order; every code zone commits before the
-    # flat embeddings zone
+    # gate order = land order
     gates: list[_ModelGate] = []
     if pq:
         gates.append(_ModelGate(
-            "pq_codes", PQ_MODEL_DIR, _pq_fit, _pq_encode, _with_committed,
-            land=lambda _v, out, gen, e: _land_codes(
-                "pq_codes", out.select("vec_id", "s", "code"), gen, e
-            ),
+            zones["pq_codes"], PQ_MODEL_DIR, _pq_fit, _pq_encode,
+            _with_committed, rows=_tagged("vec_id", "s", "code"),
             empty_schema="vec_id long, s long, code long, dist double",
             meta_params=pq_params,
         ))
     if binary:
         gates.append(_ModelGate(
-            "binary_codes", BINARY_MODEL_DIR, _binary_fit, _binary_encode,
-            _with_committed,
-            land=lambda _v, out, gen, e: _land_codes(
-                "binary_codes",
-                out.select("vec_id", "code_lo", "code_hi"), gen, e,
-            ),
+            zones["binary_codes"], BINARY_MODEL_DIR, _binary_fit,
+            _binary_encode, _with_committed,
+            rows=_tagged("vec_id", "code_lo", "code_hi"),
             empty_schema=(
                 "vec_id long, code_lo long, code_hi long, dist double"
             ),
@@ -1734,12 +1766,9 @@ def run_embedding_ingest(
         ))
     if ivfpq:
         gates.append(_ModelGate(
-            "ivfpq_codes", IVFPQ_MODEL_DIR, _ivfpq_fit, _ivfpq_encode,
-            _with_committed,
-            land=lambda _v, out, gen, e: _land_codes(
-                "ivfpq_codes",
-                out.select("vec_id", "cluster_id", "s", "code"), gen, e,
-            ),
+            zones["ivfpq_codes"], IVFPQ_MODEL_DIR, _ivfpq_fit,
+            _ivfpq_encode, _with_committed,
+            rows=_tagged("vec_id", "cluster_id", "s", "code"),
             empty_schema=(
                 "vec_id long, cluster_id long, s long, code long, "
                 "dist double"
@@ -1748,27 +1777,21 @@ def run_embedding_ingest(
         ))
     if ivf:
         gates.append(_ModelGate(
-            "ivf_assign", IVF_MODEL_DIR, _ivf_fit, _ivf_encode,
-            _with_committed, land=_ivf_land,
+            zones["ivf_assign"], IVF_MODEL_DIR, _ivf_fit, _ivf_encode,
+            _with_committed, rows=_ivf_rows,
             empty_schema=(
                 "vec_id long, cluster_id long, dist double, "
                 "embedding array<double>"
             ),
             meta_params={
-                "k": n_clusters, "iterations": ivf_iterations, "dim": dim,
+                "k": n_clusters, "iterations": IVF_ITERATIONS, "dim": dim,
             },
         ))
 
     def land(batch_df: DataFrame, epoch_id: int) -> None:
-        if all(
-            epoch_id in committed_epochs(zone_dir, z) for z in tables
-        ):
-            return  # checkpoint replay of a fully-landed epoch
         vecs = batch_df.select("vec_id", "embedding")
         for gate in gates:
-            _run_model_gate(
-                spark, zone_dir, gate, vecs, epoch_id, drift_refit_factor
-            )
+            _run_model_gate(spark, gate, vecs, epoch_id, drift_refit_factor)
         if retain_fit_sample:
             # the strided fit diet, raw — a pure function of the
             # batch, landed AFTER the codes (aux-before-primary is
@@ -1781,59 +1804,17 @@ def run_embedding_ingest(
                     (F.col("vec_id") % stride == 0)
                     | (F.col("vec_id") % cb_stride == 0)
                 ).select("vec_id", "embedding"),
-                tables["fit_sample"],
-                os.path.join(zone_dir, "fit_sample"),
-                zone_dir,
-                "fit_sample",
+                zones["fit_sample"],
                 epoch_id,
-                n_buckets,
-                bucket_col="vec_id",
             )
         if store_flat_embeddings:
-            _land_epoch(
-                spark, batch_df, tables[name],
-                os.path.join(zone_dir, name), zone_dir, name, epoch_id,
-                n_buckets, bucket_col="vec_id",
-            )
-        _maybe_auto_compact()
+            _land_epoch(spark, batch_df, zones["embeddings"], epoch_id)
 
-    def _maybe_auto_compact() -> None:
-        """Fold any zone whose committed epoch count reached the
-        threshold (runs after the epoch fully commits — a crash here
-        replays as an already-landed epoch and the fold waits for the
-        next trigger)."""
-        for gate in gates:
-            if _compaction_due(zone_dir, gate.zone, auto_compact_every):
-                compact_model_zone(
-                    spark, tables[gate.zone], zone_dir, gate.zone,
-                    gate.model_dir, n_buckets=n_buckets,
-                    bucket_col="vec_id",
-                    extra_partition_cols=cell_partitioned.get(
-                        gate.zone, ()
-                    ),
-                    retained_sample_mode=(
-                        retain_fit_sample and gate.zone == "ivfpq_codes"
-                    ),
-                )
-        for zname in ("fit_sample", name):
-            if zname in tables and _compaction_due(
-                zone_dir, zname, auto_compact_every
-            ):
-                compact_manifest_zone(
-                    spark, tables[zname], zone_dir, zname,
-                    n_buckets=n_buckets, bucket_col="vec_id",
-                )
-
-    stream = spark.readStream.schema(schema).parquet(raw_dir)
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, stream, checkpoint_dir, list(zones.values()), land,
+        auto_compact_every,
     )
-    if await_termination:
-        q.awaitTermination()
-    return dict(tables)
+    return {n: z.table for n, z in zones.items()}
 
 
 def stream_zone_freshness(
@@ -2024,7 +2005,6 @@ def run_bucketed_ingest_manifest(
     checkpoint_dir: str,
     n_buckets: int = 32,
     table_prefix: str = "streamed_m_",
-    await_termination: bool = True,
     commit_fn=None,
 ) -> dict[str, str]:
     """Stream the raw zone into the bucketed validated zone, exactly
@@ -2054,25 +2034,18 @@ def run_bucketed_ingest_manifest(
     fold accumulated epochs with :func:`compact_manifest_zone`.
     Returns ``{name: catalog_table}``.
     """
-    tables = {
-        "orders": f"{table_prefix}orders",
-        "order_items": f"{table_prefix}order_items",
+    zones = {
+        n: _Zone(n, f"{table_prefix}{n}", zone_dir, n_buckets, "order_id")
+        for n in ("orders", "order_items")
     }
-    paths = {n: os.path.join(zone_dir, n) for n in tables}
+    tables = {n: z.table for n, z in zones.items()}
 
     def land_orders(new_orders: DataFrame, epoch_id: int) -> None:
         if new_orders.isEmpty():
             return
         _land_epoch(
-            spark,
-            validate.validate_orders(new_orders),
-            tables["orders"],
-            paths["orders"],
-            zone_dir,
-            "orders",
-            epoch_id,
-            n_buckets,
-            commit_fn=commit_fn,
+            spark, validate.validate_orders(new_orders), zones["orders"],
+            epoch_id, commit_fn=commit_fn,
         )
 
     def land_items(new_items: DataFrame, epoch_id: int) -> None:
@@ -2098,34 +2071,23 @@ def run_bucketed_ingest_manifest(
         _land_epoch(
             spark,
             validate.validate_order_items(new_items, landed_orders),
-            tables["order_items"],
-            paths["order_items"],
-            zone_dir,
-            "order_items",
+            zones["order_items"],
             epoch_id,
-            n_buckets,
             commit_fn=commit_fn,
         )
 
+    # orders run to completion before items validate against the zone
     for name, schema, land in (
         ("orders", ORDERS_SCHEMA, land_orders),
         ("order_items", ORDER_ITEMS_SCHEMA, land_items),
     ):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("header", True)
-            .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
-            .option("maxFilesPerTrigger", 64)
-            .csv(os.path.join(raw_dir, name))
+        _run_epochs(
+            spark,
+            _csv_stream(spark, schema, os.path.join(raw_dir, name)),
+            os.path.join(checkpoint_dir, name),
+            [zones[name]],
+            land,
         )
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # orders must finish before items validate against the zone
-        q.awaitTermination()
     # epochs landed on cloned micro-batch sessions whose catalog-cache
     # invalidation does not propagate here — refresh so callers see
     # every landed epoch
@@ -2381,11 +2343,9 @@ def run_corpus_ingest(
     checkpoint_dir: str,
     schema: str = "doc_id long, text string",
     decontaminate_probes: DataFrame | None = None,
-    decontaminate_n: int = 5,
     exact_dedup: bool = False,
     semantic_dedup: bool = False,
     state_refresh: bool = False,
-    base_fingerprints: DataFrame | None = None,
     dim: int = 64,
     n_planes: int = 8,
     threshold: float = 0.8,
@@ -2393,8 +2353,6 @@ def run_corpus_ingest(
     n_buckets: int = 8,
     shingle_n: int = 5,
     cluster_assign: bool = False,
-    cluster_k: int = 4,
-    cluster_iterations: int = 3,
     drift_refit_factor: float | None = 2.0,
     sketch_cms: bool = False,
     cms_width: int = 1024,
@@ -2404,8 +2362,6 @@ def run_corpus_ingest(
     learn_bpe: bool = False,
     bpe_merges: int = 8,
     table_prefix: str = "corpus_",
-    auto_compact_every: int | None = None,
-    await_termination: bool = True,
 ) -> dict[str, str]:
     """THE canonical corpus ingest (VERDICT r8 #1): one streaming
     entry point where a deployment picks ingest SEMANTICS as
@@ -2424,8 +2380,7 @@ def run_corpus_ingest(
       dropped (a fully-contaminated doc must not land as ""). The gate
       is a pure function of (batch, probes) — replays bit-identically.
     * ``exact_dedup`` — the ``operators.dedup.incremental_dedup``
-      fingerprint gate against the ALREADY-LANDED corpus (plus an
-      optional external ``base_fingerprints`` snapshot): only
+      fingerprint gate against the ALREADY-LANDED corpus: only
       ``status='new'`` rows survive — batch-internal dups collapse to
       the min-id keeper, corpus dups drop. The fingerprint set is
       DERIVED from the committed zone at gate time (never a second
@@ -2516,15 +2471,6 @@ def run_corpus_ingest(
     arriving document serves dedup AND state maintenance, and the
     grain never contains dropped near-dups.
 
-    ``auto_compact_every=N`` (r14, the embedding ingest's knob applied
-    symmetrically) folds any landed zone back to ONE epoch whenever
-    its committed epoch count reaches N, each through its own
-    reader-identical compactor (groupBy-SUM for cms/bpe counts,
-    groupBy-MAX for hll registers, the generation filter for the
-    kmeans assignment, plain folds for documents/grain/vectors/pairs);
-    aux zones fold before documents, the fold runs only after the
-    epoch fully commits, and vacuum stays an operator action.
-
     Crash-window discipline (unchanged from the folded entries):
     auxiliary tables land BEFORE the documents table and each
     ``_land_epoch`` is an idempotent no-op once its own manifest holds
@@ -2569,18 +2515,21 @@ def run_corpus_ingest(
             "learn_bpe requires state_refresh=True — per-epoch word "
             "counts derive from the batch grain's 't' slice"
         )
-    if auto_compact_every is not None and auto_compact_every < 1:
-        raise ValueError(
-            f"auto_compact_every must be >= 1 or None, got "
-            f"{auto_compact_every!r}"
-        )
     name = "documents"
-    tables: dict[str, str] = {}
+
+    def zone(zname: str, bucket_col: str = "doc_id", fold=None) -> _Zone:
+        return _Zone(
+            zname, f"{table_prefix}{zname}", zone_dir, n_buckets,
+            bucket_col, fold=fold,
+        )
+
+    # land order: every auxiliary zone commits before the documents
+    zones: dict[str, _Zone] = {}
     if semantic_dedup:
-        tables["doc_vectors"] = f"{table_prefix}doc_vectors"
-        tables["neardup_pairs"] = f"{table_prefix}neardup_pairs"
+        zones["doc_vectors"] = zone("doc_vectors")
+        zones["neardup_pairs"] = zone("neardup_pairs", "vec_a")
     if state_refresh:
-        tables["token_events"] = f"{table_prefix}token_events"
+        zones["token_events"] = zone("token_events")
         # a resumed ingest must never append current-version grain
         # epochs beside an older zone's files (ADVICE r9): fail fast
         # with the rebuild-required message, then stamp the version
@@ -2593,14 +2542,20 @@ def run_corpus_ingest(
         check_grain_version(zone_dir)
         record_grain_version(zone_dir)
     if cluster_assign:
-        tables["cluster_assignment"] = f"{table_prefix}cluster_assignment"
+        zones["cluster_assignment"] = zone(
+            "cluster_assignment",
+            fold=_live_generation(zone_dir, KMEANS_MODEL_DIR),
+        )
     if sketch_cms:
-        tables["cms_cells"] = f"{table_prefix}cms_cells"
+        zones["cms_cells"] = zone("cms_cells", "col", _sum_cells)
     if sketch_hll:
-        tables["hll_registers"] = f"{table_prefix}hll_registers"
+        zones["hll_registers"] = zone("hll_registers", "r_idx", _max_registers)
     if learn_bpe:
-        tables["bpe_word_counts"] = f"{table_prefix}bpe_word_counts"
-    tables[name] = f"{table_prefix}documents"  # lands LAST — see above
+        zones["bpe_word_counts"] = zone(
+            "bpe_word_counts", "word", _sum_word_counts
+        )
+    zones[name] = zone(name)
+    tables = {n: z.table for n, z in zones.items()}
 
     def _grain_vectors() -> DataFrame:
         """Full-corpus feature-hash vectors from the COMMITTED grain
@@ -2618,39 +2573,30 @@ def run_corpus_ingest(
         # the batch cluster seam over the same docs
         assigned, cent_df = kmeans_fixed(
             vecs,
-            k=cluster_k,
-            iterations=cluster_iterations,
+            k=CLUSTER_K,
+            iterations=CLUSTER_ITERATIONS,
             dim=dim,
             return_model=True,
         )
         cent_df.coalesce(1).write.mode("overwrite").parquet(gdir)
         return assigned
 
-    cluster_gate = _ModelGate(
-        "cluster_assignment",
-        KMEANS_MODEL_DIR,
-        _kmeans_fit,
-        # broadcast-argmin against the k landed centroids
-        encode=lambda vecs, gen: kmeans_assign(
-            vecs, read_kmeans_centroids(spark, zone_dir, gen)
-        ),
-        refit_input=lambda _vecs: _grain_vectors(),
-        land=lambda _v, out, gen, epoch_id: _land_epoch(
-            spark,
-            out.withColumn("model_gen", F.lit(gen)),
-            tables["cluster_assignment"],
-            os.path.join(zone_dir, "cluster_assignment"),
-            zone_dir,
-            "cluster_assignment",
-            epoch_id,
-            n_buckets,
-            bucket_col="doc_id",
-        ),
-        empty_schema="doc_id long, cluster_id long, dist double",
-        meta_params={
-            "k": cluster_k, "iterations": cluster_iterations, "dim": dim,
-        },
-    )
+    if cluster_assign:
+        cluster_gate = _ModelGate(
+            zones["cluster_assignment"],
+            KMEANS_MODEL_DIR,
+            _kmeans_fit,
+            # broadcast-argmin against the k landed centroids
+            encode=lambda vecs, gen: kmeans_assign(
+                vecs, read_kmeans_centroids(spark, zone_dir, gen)
+            ),
+            refit_input=lambda _vecs: _grain_vectors(),
+            rows=lambda _v, out, gen: out.withColumn("model_gen", F.lit(gen)),
+            empty_schema="doc_id long, cluster_id long, dist double",
+            meta_params={
+                "k": CLUSTER_K, "iterations": CLUSTER_ITERATIONS, "dim": dim,
+            },
+        )
 
     def _bpe_batch_words(grain: DataFrame) -> DataFrame:
         """The batch's weighted word-type slice under the training
@@ -2673,11 +2619,7 @@ def run_corpus_ingest(
         committed = read_bpe_word_counts(
             spark, tables["bpe_word_counts"], zone_dir
         )
-        return (
-            committed.unionByName(batch_words)
-            .groupBy("word")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        return _sum_word_counts(committed.unionByName(batch_words))
 
     def _bpe_mean_tokens(vocab: DataFrame) -> float | None:
         """Weighted mean subwords per word OCCURRENCE of a merged
@@ -2746,23 +2688,19 @@ def run_corpus_ingest(
 
     # the counts epoch lands whatever the model decision: the fit
     # lands no zone rows of its own
-    bpe_gate = _ModelGate(
-        "bpe_word_counts",
-        BPE_MODEL_DIR,
-        _bpe_fit,
-        _bpe_encode,
-        refit_input=_bpe_folded_words,
-        land=lambda words, _out, _gen, epoch_id: _land_epoch(
-            spark, words, tables["bpe_word_counts"],
-            os.path.join(zone_dir, "bpe_word_counts"), zone_dir,
-            "bpe_word_counts", epoch_id, n_buckets,
-            bucket_col="word",
-        ),
-        empty_schema="seq string, n long",
-        meta_params={"n_merges": bpe_merges},
-        statistic=_bpe_mean_tokens,
-        stat_key="fit_mean_tokens",
-    )
+    if learn_bpe:
+        bpe_gate = _ModelGate(
+            zones["bpe_word_counts"],
+            BPE_MODEL_DIR,
+            _bpe_fit,
+            _bpe_encode,
+            refit_input=_bpe_folded_words,
+            rows=lambda words, _out, _gen: words,
+            empty_schema="seq string, n long",
+            meta_params={"n_merges": bpe_merges},
+            statistic=_bpe_mean_tokens,
+            stat_key="fit_mean_tokens",
+        )
 
     # ADVICE r8: a crash mid-epoch leaves its staging dir behind and a
     # LATER epoch's success would strand it forever (replay only
@@ -2782,11 +2720,6 @@ def run_corpus_ingest(
         n_decontaminate_probes = decontaminate_probes.count()
 
     def land(batch_df: DataFrame, epoch_id: int) -> None:
-        if all(
-            epoch_id in committed_epochs(zone_dir, z) for z in tables
-        ):
-            return  # checkpoint replay of a fully-landed epoch
-
         keep = batch_df
         batch_vecs = None  # set by the semantic gate; cluster gate shares
         if decontaminate_probes is not None:
@@ -2798,7 +2731,7 @@ def run_corpus_ingest(
             cleaned = decontaminate_spans(
                 keep,
                 decontaminate_probes,
-                n=decontaminate_n,
+                n=DECONTAMINATE_N,
                 probe_count=n_decontaminate_probes,
             ).select(
                 "doc_id",
@@ -2837,9 +2770,6 @@ def run_corpus_ingest(
                 fps = corpus.select(
                     F.md5(norm.cast("binary")).alias("fingerprint")
                 )
-            if base_fingerprints is not None:
-                snap = base_fingerprints.select("fingerprint")
-                fps = snap if fps is None else fps.unionByName(snap)
             if fps is None:
                 fps = spark.createDataFrame([], "fingerprint string")
             keep = keep.join(
@@ -2966,33 +2896,18 @@ def run_corpus_ingest(
                     keep.select("doc_id"), "doc_id"
                 ).select("doc_id", "feature_vec")
                 batch_vecs = kept_vecs  # share with the cluster gate
-                _land_epoch(
-                    spark, kept_vecs, tables["doc_vectors"],
-                    os.path.join(zone_dir, "doc_vectors"), zone_dir,
-                    "doc_vectors", epoch_id, n_buckets,
-                    bucket_col="doc_id",
-                )
-                _land_epoch(
-                    spark, pairs, tables["neardup_pairs"],
-                    os.path.join(zone_dir, "neardup_pairs"), zone_dir,
-                    "neardup_pairs", epoch_id, n_buckets,
-                    bucket_col="vec_a",
-                )
+                _land_epoch(spark, kept_vecs, zones["doc_vectors"], epoch_id)
+                _land_epoch(spark, pairs, zones["neardup_pairs"], epoch_id)
             if state_refresh:
                 grain = (
                     ev.join(keep.select("doc_id"), "doc_id")
                     if semantic_dedup
                     else ev
                 )
-                _land_epoch(
-                    spark, grain, tables["token_events"],
-                    os.path.join(zone_dir, "token_events"), zone_dir,
-                    "token_events", epoch_id, n_buckets,
-                    bucket_col="doc_id",
-                )
+                _land_epoch(spark, grain, zones["token_events"], epoch_id)
                 if cluster_assign:
                     _run_model_gate(
-                        spark, zone_dir, cluster_gate,
+                        spark, cluster_gate,
                         (
                             batch_vecs
                             if batch_vecs is not None
@@ -3015,13 +2930,8 @@ def run_corpus_ingest(
                         cms_cells_from_term_counts(
                             batch_terms, width=cms_width, depth=cms_depth
                         ),
-                        tables["cms_cells"],
-                        os.path.join(zone_dir, "cms_cells"),
-                        zone_dir,
-                        "cms_cells",
+                        zones["cms_cells"],
                         epoch_id,
-                        n_buckets,
-                        bucket_col="col",
                     )
                 if sketch_hll:
                     from ..operators.text import hll_registers_from_terms
@@ -3034,99 +2944,23 @@ def run_corpus_ingest(
                             ),
                             p=hll_p,
                         ),
-                        tables["hll_registers"],
-                        os.path.join(zone_dir, "hll_registers"),
-                        zone_dir,
-                        "hll_registers",
+                        zones["hll_registers"],
                         epoch_id,
-                        n_buckets,
-                        bucket_col="r_idx",
                     )
                 if learn_bpe:
                     _run_model_gate(
-                        spark, zone_dir, bpe_gate, _bpe_batch_words(grain),
+                        spark, bpe_gate, _bpe_batch_words(grain),
                         epoch_id, drift_refit_factor,
                     )
-            _land_epoch(
-                spark, keep, tables[name],
-                os.path.join(zone_dir, name), zone_dir, name, epoch_id,
-                n_buckets, bucket_col="doc_id",
-            )
-            _maybe_auto_compact()
+            _land_epoch(spark, keep, zones[name], epoch_id)
         finally:
             if staging is not None:
                 shutil.rmtree(staging, ignore_errors=True)
 
-    def _maybe_auto_compact() -> None:
-        """auto_compact_every for the corpus gates (the embedding
-        ingest's r14 knob, symmetric here): fold any zone whose
-        committed epoch count reached the threshold, using each
-        zone's OWN reader-identical compactor — groupBy-SUM for
-        cms/bpe counts, groupBy-MAX for hll registers, the
-        generation filter for the kmeans assignment, a plain fold
-        for documents/grain/vectors/pairs. Aux zones fold BEFORE
-        documents (the aux-before-primary crash rule: the semantic
-        gate filters doc_vectors by the DOCUMENTS zone's committed
-        epochs, so a fold interrupted after vectors but before docs
-        still leaves every vector row inside the docs' epoch set).
-        Runs after the epoch fully commits — a crash in the fold
-        window replays as an already-landed epoch and the fold waits
-        for the next trigger."""
-        def due(zname: str) -> bool:
-            return _compaction_due(zone_dir, zname, auto_compact_every)
-
-        if semantic_dedup:
-            for zname, bcol in (
-                ("doc_vectors", "doc_id"),
-                ("neardup_pairs", "vec_a"),
-            ):
-                if due(zname):
-                    compact_manifest_zone(
-                        spark, tables[zname], zone_dir, zname,
-                        n_buckets=n_buckets, bucket_col=bcol,
-                    )
-        if state_refresh and due("token_events"):
-            compact_manifest_zone(
-                spark, tables["token_events"], zone_dir,
-                "token_events", n_buckets=n_buckets,
-                bucket_col="doc_id",
-            )
-        if cluster_assign and due("cluster_assignment"):
-            compact_model_zone(
-                spark, tables["cluster_assignment"], zone_dir,
-                "cluster_assignment", KMEANS_MODEL_DIR,
-                n_buckets=n_buckets, bucket_col="doc_id",
-            )
-        if sketch_cms and due("cms_cells"):
-            compact_cms_cells(
-                spark, tables["cms_cells"], zone_dir,
-                n_buckets=n_buckets,
-            )
-        if sketch_hll and due("hll_registers"):
-            compact_hll_registers(
-                spark, tables["hll_registers"], zone_dir,
-                n_buckets=n_buckets,
-            )
-        if learn_bpe and due("bpe_word_counts"):
-            compact_bpe_word_counts(
-                spark, tables["bpe_word_counts"], zone_dir,
-                n_buckets=n_buckets,
-            )
-        if due(name):
-            compact_manifest_zone(
-                spark, tables[name], zone_dir, name,
-                n_buckets=n_buckets, bucket_col="doc_id",
-            )
-
-    stream = spark.readStream.schema(schema).parquet(raw_dir)
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, spark.readStream.schema(schema).parquet(raw_dir),
+        checkpoint_dir, list(zones.values()), land,
     )
-    if await_termination:
-        q.awaitTermination()
-        if decontaminate_probes is not None:
-            decontaminate_probes.unpersist()
-    return dict(tables)
+    if decontaminate_probes is not None:
+        decontaminate_probes.unpersist()
+    return tables

@@ -4,7 +4,8 @@ storage deployments (VERDICT r12 #3's BASELINE line):
 1. ``flat``      — store_flat_embeddings=True,  ivfpq=True (codes +
                    the flat corpus-of-record zone)
 2. ``lists``     — store_flat_embeddings=False, ivf=True (the
-                   IVF-Flat inverted lists ARE the corpus)
+                   IVF-Flat inverted lists ARE the corpus; the float32
+                   ingest lands them as array<float>)
 3. ``ivfpq_only``— store_flat_embeddings=False, ivfpq=True, ivf=False
                    (64x-compressed codes + the retained strided
                    fit-diet sample)
@@ -65,9 +66,6 @@ def main() -> None:
                      store_flat_embeddings=True),
         "lists": dict(pq=False, ivfpq=False, ivf=True,
                       store_flat_embeddings=False),
-        "lists_f32": dict(pq=False, ivfpq=False, ivf=True,
-                          store_flat_embeddings=False,
-                          lists_vector_dtype="float"),
         "ivfpq_only": dict(pq=False, ivfpq=True, ivf=False,
                            store_flat_embeddings=False),
     }
@@ -107,7 +105,7 @@ def main() -> None:
                 "zones": zones,
             }
         flat_b = out["flat"]["total_bytes"]
-        for mode in ("lists", "lists_f32", "ivfpq_only"):
+        for mode in ("lists", "ivfpq_only"):
             out[mode]["vs_flat"] = round(
                 out[mode]["total_bytes"] / flat_b, 4
             )

@@ -99,6 +99,7 @@ def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
+        _Zone,
         committed_epochs,
         read_manifest_zone,
         run_bucketed_ingest_manifest,
@@ -179,14 +180,8 @@ def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
         # restart replays epoch 999: the orphan partition is scrubbed
         # before re-append, so the rows land exactly once
         _land_epoch(
-            spark,
-            aligned.drop("_epoch"),
-            tables["order_items"],
-            f"{zone}/order_items",
-            zone,
-            "order_items",
-            999,
-            4,
+            spark, aligned.drop("_epoch"),
+            _Zone("order_items", tables["order_items"], zone, 4, "order_id"), 999,
         )
         assert 999 in committed_epochs(zone, "order_items")
         landed = read_manifest_zone(spark, tables, zone)["order_items"]
@@ -195,14 +190,8 @@ def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
 
         # a second replay of the now-committed epoch is a no-op
         _land_epoch(
-            spark,
-            aligned.drop("_epoch"),
-            tables["order_items"],
-            f"{zone}/order_items",
-            zone,
-            "order_items",
-            999,
-            4,
+            spark, aligned.drop("_epoch"),
+            _Zone("order_items", tables["order_items"], zone, 4, "order_id"), 999,
         )
         assert read_manifest_zone(spark, tables, zone)[
             "order_items"
@@ -224,6 +213,7 @@ def test_manifest_zone_compaction(spark, tmp_path):
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
+        _Zone,
         committed_epochs,
         compact_manifest_zone,
         read_manifest_zone,
@@ -245,8 +235,8 @@ def test_manifest_zone_compaction(spark, tmp_path):
             (2, [(4, "2025-03-09"), (5, "2025-03-10")]),
         ):
             _land_epoch(
-                spark, mk(rows), orders_tbl, f"{zone}/orders", zone,
-                "orders", ep, 4,
+                spark, mk(rows),
+                _Zone("orders", orders_tbl, zone, 4, "order_id"), ep,
             )
         # plus one crash orphan (files, no marker)
         (
@@ -278,8 +268,8 @@ def test_manifest_zone_compaction(spark, tmp_path):
 
         # post-compaction epochs append into the NEW location
         _land_epoch(
-            spark, mk([(6, "2025-03-12")]), orders_tbl, f"{zone}/orders",
-            zone, "orders", 3, 4,
+            spark, mk([(6, "2025-03-12")]),
+            _Zone("orders", orders_tbl, zone, 4, "order_id"), 3,
         )
         assert committed_epochs(zone, "orders") == {2, 3}
         assert os.path.isdir(os.path.join(new_dir, "_epoch=3"))
@@ -314,6 +304,7 @@ def test_manifest_commit_fn_is_injectable(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _commit_epoch,
         _land_epoch,
+        _Zone,
         committed_epochs,
     )
 
@@ -333,8 +324,8 @@ def test_manifest_commit_fn_is_injectable(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         for _ in range(2):  # second call = replay of a committed epoch
             _land_epoch(
-                spark, df, table, f"{zone}/orders", zone, "orders", 0, 4,
-                commit_fn=recording_commit,
+                spark, df,
+                _Zone("orders", table, zone, 4, "order_id"), 0, commit_fn=recording_commit,
             )
         assert calls == [("orders", 0, 2)]  # exactly once, full args
         assert committed_epochs(zone, "orders") == {0}
@@ -352,6 +343,7 @@ def test_manifest_zone_snapshot_read(spark, tmp_path):
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
+        _Zone,
         read_manifest_zone,
     )
 
@@ -369,8 +361,8 @@ def test_manifest_zone_snapshot_read(spark, tmp_path):
             (2, [(3, "2025-03-10")]),
         ):
             _land_epoch(
-                spark, mk(rows), table, f"{zone}/orders", zone, "orders",
-                ep, 4,
+                spark, mk(rows),
+                _Zone("orders", table, zone, 4, "order_id"), ep,
             )
         snap = read_manifest_zone(
             spark, {"orders": table}, zone, as_of_epoch=1
@@ -545,6 +537,7 @@ def test_manifest_zone_vacuum(spark, tmp_path):
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
+        _Zone,
         committed_epochs,
         compact_manifest_zone,
         read_manifest_zone,
@@ -561,7 +554,8 @@ def test_manifest_zone_vacuum(spark, tmp_path):
         )
         for ep, rows in ((0, [(1, "2025-03-08")]), (1, [(2, "2025-03-09")])):
             _land_epoch(
-                spark, mk(rows), tbl, f"{zone}/orders", zone, "orders", ep, 4
+                spark, mk(rows),
+                _Zone("orders", tbl, zone, 4, "order_id"), ep,
             )
         old_dir = str(tmp_path / "zone" / "orders")
 
@@ -603,8 +597,8 @@ def test_manifest_zone_vacuum(spark, tmp_path):
 
         # a second compaction strands the first compact dir → reaped next
         _land_epoch(
-            spark, mk([(3, "2025-03-12")]), tbl, f"{zone}/orders", zone,
-            "orders", 2, 4,
+            spark, mk([(3, "2025-03-12")]),
+            _Zone("orders", tbl, zone, 4, "order_id"), 2,
         )
         newer_dir = compact_manifest_zone(spark, tbl, zone, "orders", n_buckets=4)
         reaped2 = vacuum_manifest_zone(
@@ -633,6 +627,7 @@ def test_manifest_zone_vacuum_safety_guards(spark, tmp_path):
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
+        _Zone,
         vacuum_manifest_zone,
     )
 
@@ -644,7 +639,10 @@ def test_manifest_zone_vacuum_safety_guards(spark, tmp_path):
         df = spark.createDataFrame(
             [(1, "2025-03-08")], "order_id long, order_date string"
         )
-        _land_epoch(spark, df, tbl, f"{zone}/orders", zone, "orders", 0, 4)
+        _land_epoch(
+            spark, df,
+            _Zone("orders", tbl, zone, 4, "order_id"), 0,
+        )
 
         # (b) sibling zone tables that LOOK like generations but are not
         for sibling in ("orders_compact_archive", "orders_compact_0"):

@@ -833,14 +833,12 @@ def test_store_once_ivfpq_only_mode(spark, tmp_path):
 
 @pytest.mark.slow
 def test_float32_lists_zone_is_lossless_and_smaller(spark, tmp_path):
-    """lists_vector_dtype="float" (r13): the IVF lists zone stores the
-    vector column as array<float> — lossless for the ingest contract's
-    float32 vectors (float→double is exact both ways), so the reader's
-    promoted doubles, the serve, and a drift refit are all
-    BIT-IDENTICAL to the double-stored twin, at roughly half the
-    vector bytes on disk."""
-    import pytest
-
+    """A float32 ingest (the default ``array<float>`` schema) stores
+    the IVF lists' vector column as array<float> — lossless (float→
+    double is exact both ways), so the reader's promoted doubles, the
+    serve, and a drift refit are all BIT-IDENTICAL to the twin that
+    declares ``array<double>`` over the same values, at roughly half
+    the vector bytes on disk."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.similarity import (
         ivf_topk,
     )
@@ -848,12 +846,6 @@ def test_float32_lists_zone_is_lossless_and_smaller(spark, tmp_path):
         read_ivf_centroids,
         read_ivf_lists,
     )
-
-    with pytest.raises(ValueError, match="lists_vector_dtype"):
-        run_embedding_ingest(
-            spark, str(tmp_path / "r0"), str(tmp_path / "z0"),
-            str(tmp_path / "c0"), ivf=True, lists_vector_dtype="half",
-        )
 
     base = _emb(spark)
     drift = base.select(
@@ -879,13 +871,15 @@ def test_float32_lists_zone_is_lossless_and_smaller(spark, tmp_path):
                 for d in ("raw", "zone", "ckpt")
             )
             for wave in (base, drift):
-                wave.write.mode("append").parquet(raw)
+                wave.withColumn(
+                    "embedding", F.col("embedding").cast(f"array<{mode}>")
+                ).write.mode("append").parquet(raw)
                 tabs[mode] = run_embedding_ingest(
                     spark, raw, zone, ckpt,
                     pq=False, ivf=True, n_buckets=4,
                     table_prefix=f"t_f32_{mode}_",
                     store_flat_embeddings=False,
-                    lists_vector_dtype=mode,
+                    schema=f"vec_id long, embedding array<{mode}>",
                 )
 
         zd, zf = str(tmp_path / "zone_double"), str(tmp_path / "zone_float")
@@ -944,14 +938,11 @@ def test_float32_lists_zone_is_lossless_and_smaller(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_lists_vector_dtype_auto_resolves_from_ingest_schema(
-    spark, tmp_path
-):
-    """lists_vector_dtype="auto" (the r14 default — VERDICT r13 #6):
-    the storage dtype resolves from the DECLARED ingest schema, so the
-    float32-contract callers get the compact float zone for free while
-    a true-float64 ingest keeps double storage without touching the
-    knob — the compact default can never silently drop bits."""
+def test_lists_vector_dtype_follows_ingest_schema(spark, tmp_path):
+    """The lists' storage dtype resolves from the DECLARED ingest
+    schema, so float32-contract callers get the compact float zone
+    while a true-float64 ingest keeps double storage — the compact
+    zone can never silently drop bits."""
     base = _emb(spark, limit=100)
     tabs = {}
     try:

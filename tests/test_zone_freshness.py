@@ -424,17 +424,22 @@ def test_auto_compact_interleaves_with_drift_refit(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_corpus_auto_compact_preserves_every_gate_state(
-    spark, tmp_path
-):
-    """auto_compact_every on the CORPUS ingest (r14): three waves
-    through every gate with N=2 must leave each zone's epoch count
-    bounded and every served state — documents, token grain, kmeans
-    assignment, folded BPE word counts, CMS cells, HLL registers —
-    exactly equal to the never-compacted twin's (each compactor is
-    the reader's own fold, so this is an identity, not a tolerance)."""
+def test_corpus_compactors_preserve_every_gate_state(spark, tmp_path):
+    """Three corpus-ingest waves through every gate, with each zone
+    folded by its own compactor whenever it holds N=2 epochs, must
+    leave each zone's epoch count bounded and every served state —
+    documents, token grain, kmeans assignment, folded BPE word counts,
+    CMS cells, HLL registers — exactly equal to the never-compacted
+    twin's (each compactor is the reader's own fold, so this is an
+    identity, not a tolerance), with later waves landing on the
+    folded zones."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
+        KMEANS_MODEL_DIR,
         committed_epochs,
+        compact_bpe_word_counts,
+        compact_cms_cells,
+        compact_hll_registers,
+        compact_manifest_zone,
         read_bpe_word_counts,
         read_cluster_assignment,
         read_cms_cells,
@@ -453,6 +458,26 @@ def test_corpus_auto_compact_preserves_every_gate_state(
         docs.filter(F.col("doc_id") % 3 == 1),
         docs.filter(F.col("doc_id") % 3 == 2),
     )
+    # aux zones fold before documents
+    folds = {
+        "token_events": lambda t, z: compact_manifest_zone(
+            spark, t, z, "token_events", n_buckets=4, bucket_col="doc_id"
+        ),
+        "cluster_assignment": lambda t, z: compact_model_zone(
+            spark, t, z, "cluster_assignment", KMEANS_MODEL_DIR,
+            n_buckets=4, bucket_col="doc_id",
+        ),
+        "cms_cells": lambda t, z: compact_cms_cells(spark, t, z, n_buckets=4),
+        "hll_registers": lambda t, z: compact_hll_registers(
+            spark, t, z, n_buckets=4
+        ),
+        "bpe_word_counts": lambda t, z: compact_bpe_word_counts(
+            spark, t, z, n_buckets=4
+        ),
+        "documents": lambda t, z: compact_manifest_zone(
+            spark, t, z, "documents", n_buckets=4, bucket_col="doc_id"
+        ),
+    }
     tabs, zones = {}, {}
     try:
         for mode, every in (("auto", 2), ("plain", None)):
@@ -468,14 +493,11 @@ def test_corpus_auto_compact_preserves_every_gate_state(
                     state_refresh=True, cluster_assign=True,
                     sketch_cms=True, sketch_hll=True, learn_bpe=True,
                     n_buckets=4, table_prefix=f"t_cac_{mode}_",
-                    auto_compact_every=every,
                 )
                 if every:
-                    for zname in (
-                        "documents", "token_events",
-                        "cluster_assignment", "cms_cells",
-                        "hll_registers", "bpe_word_counts",
-                    ):
+                    for zname, fold in folds.items():
+                        if len(committed_epochs(zone, zname)) >= every:
+                            fold(tabs[mode][zname], zone)
                         assert (
                             len(committed_epochs(zone, zname)) <= every
                         ), (zname,)
