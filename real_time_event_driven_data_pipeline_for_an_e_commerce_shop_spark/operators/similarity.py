@@ -2336,8 +2336,8 @@ def _ivfpq_scores_multigen(
     plan over a multi-generation store-once zone (VERDICT r13 #2: the
     measured per-generation plan constant of the loop-of-chains serve
     was ~1.2 s/gen at ×10, linear to 8.9 s at 7 live generations —
-    scripts/bench_store_once_gens.py — so the shared serve earned its
-    build). ``cents_g`` / ``cb_g`` are the per-generation model tables
+    BASELINE.md, "Round-14 store-once serve vs generation count" — so
+    the shared serve earned its build). ``cents_g`` / ``cb_g`` are the per-generation model tables
     UNIONED with a ``gen`` column (k·G and m·k·G rows — still
     broadcast-sized); ``codes`` carries ``gen`` per row. Every
     model-side LUT, the probe window, and every scoring join gain

@@ -5361,16 +5361,17 @@ def q_stream_zone_freshness_once(
     stream`` lifecycle — wave 1 the whole corpus (gen-0 fit+encode,
     the strided fit diet retained raw in ``fit_sample``), wave 2 the
     corpus ×100 under offset ids (drift refit to gen 1, re-encoding
-    exactly retained-sample ∪ batch) — then ``stream_zone_freshness``
-    with the ``retained_sample`` flag. Generations ACCRETE here, so
-    live/dead must follow the reader's keep predicate: the gen-0
-    NON-sample encodes are live (row math: live = 4·2n — every vector
-    exactly once), only the sample ids' superseded gen-0 encodes are
-    reclaimable (dead = 4·s0), and no epoch is ever wholly superseded
-    (dead_epochs = 0). The naive full-re-encode accounting would call
-    every gen-0 row dead — this oracle derives each cell from the
-    ingest protocol's arithmetic, so that regression (or a marker
-    double-count, a missed refit, or a wrong fan-out) hash-mismatches."""
+    exactly retained-sample ∪ batch) — then ``stream_zone_freshness``,
+    which reads the deployment from the model meta. Generations
+    ACCRETE here, so live/dead must follow the reader's keep
+    predicate: the gen-0 NON-sample encodes are live (row math: live
+    = 4·2n — every vector exactly once), only the sample ids'
+    superseded gen-0 encodes are reclaimable (dead = 4·s0), and no
+    epoch is ever wholly superseded (dead_epochs = 0). The naive
+    full-re-encode accounting would call every gen-0 row dead — this
+    oracle derives each cell from the ingest protocol's arithmetic, so
+    that regression (or a marker double-count, a missed refit, or a
+    wrong fan-out) hash-mismatches."""
     import shutil
 
     from .streaming.pipeline import (
@@ -5406,11 +5407,7 @@ def q_stream_zone_freshness_once(
             spark, zone,
             {
                 "fit_sample": (tables["fit_sample"], None),
-                "ivfpq_codes": (
-                    tables["ivfpq_codes"],
-                    IVFPQ_MODEL_DIR,
-                    "retained_sample",
-                ),
+                "ivfpq_codes": (tables["ivfpq_codes"], IVFPQ_MODEL_DIR),
             },
         )
         res_dir = os.path.join(base, "result")
@@ -5505,11 +5502,7 @@ def q_stream_zone_freshness_compacted(
             spark, zone,
             {
                 "fit_sample": (tables["fit_sample"], None),
-                "ivfpq_codes": (
-                    tables["ivfpq_codes"],
-                    IVFPQ_MODEL_DIR,
-                    "retained_sample",
-                ),
+                "ivfpq_codes": (tables["ivfpq_codes"], IVFPQ_MODEL_DIR),
             },
         )
         res_dir = os.path.join(base, "result")

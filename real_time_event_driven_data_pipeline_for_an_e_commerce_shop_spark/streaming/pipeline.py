@@ -39,7 +39,7 @@ import os
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
@@ -598,12 +598,74 @@ def _sum_price_hist(df: DataFrame) -> DataFrame:
     )
 
 
+def _fit_sample(stride: int, cb_stride: int) -> Column:
+    """The IVFPQ fit diet as an id predicate
+    (:func:`operators.similarity.ivfpq_model`'s strided sampling): the
+    ids an IVFPQ-only store-once zone retains raw and re-encodes on
+    every refit."""
+    return (F.col("vec_id") % stride == 0) | (F.col("vec_id") % cb_stride == 0)
+
+
+def _accretes(meta: dict) -> bool:
+    """Whether the model's generations ACCRETE in its zone: the model
+    meta records it (the IVFPQ-only store-once deployment writes
+    ``retained_sample: true``); a meta without the key is a
+    full-re-encode model."""
+    return bool(meta.get("retained_sample"))
+
+
+def _live_rows(
+    df: DataFrame, meta: dict, *, clamp: bool
+) -> tuple[int, Column]:
+    """THE live-row rule of a generation-tracked model zone ``df``
+    under its model ``meta``: returns ``(serving generation, keep
+    predicate)``. Every reader, the compaction fold, the freshness
+    report and the IVF store-once refit source decide liveness here.
+
+    * A full-re-encode zone (every drift refit re-lands the whole
+      corpus under the new generation) serves ``model_gen == gen``,
+      the meta's generation.
+    * An accreting zone (:func:`_accretes`: a refit re-encodes only the
+      retained fit sample ∪ its batch) serves the zone-clamped
+      generation ``g = min(meta gen, max landed model_gen)``: sample
+      ids (:func:`_fit_sample`) at ``g``, non-sample ids — encoded
+      exactly once — at any generation ≤ ``g``. Both arms are plain
+      filters, so scans keep predicate pushdown and cluster_id DPP (a
+      per-vector ``max(model_gen)`` window would block both). The clamp
+      keeps the sample ids' newest encode live through a refit's crash
+      window (meta at gen+1, its epoch not landed); it costs one
+      bounded column-stats MAX.
+
+    ``clamp=True`` zone-clamps a full-re-encode zone too — the refit
+    source's pick of the newest LANDED generation, which inside a
+    crash window is still the whole committed corpus."""
+    gen = int(meta["gen"])
+    accretes = _accretes(meta)
+    if accretes or clamp:
+        gmax = df.agg(F.max("model_gen")).collect()[0][0]
+        if gmax is not None:
+            gen = min(gen, int(gmax))
+    live = F.col("model_gen") == gen
+    if accretes:
+        live = live | (
+            ~_fit_sample(meta["stride"], meta["cb_stride"])
+            & (F.col("model_gen") <= gen)
+        )
+    return gen, live
+
+
 def _live_generation(
-    zone_dir: str, model_dir: str, retained_sample_mode: bool = False
+    zone_dir: str, model_dir: str
 ) -> Callable[[DataFrame], DataFrame]:
     """The fold of a generation-tracked model zone: keep exactly the
-    rows its reader serves (see :func:`compact_model_zone`). The meta
-    is read when the fold runs, i.e. at compaction time."""
+    rows its reader serves (:func:`_live_rows`). The meta is read when
+    the fold runs, i.e. at compaction time.
+
+    Raises, before anything is written, when the zone has rows but
+    none at its serving generation: a full-re-encode zone inside a
+    refit's crash window (meta at gen+1, the gen+1 epoch not landed).
+    Folding then would delete every committed row — in the IVF
+    store-once deployment the only copy of the corpus."""
 
     def fold(df: DataFrame) -> DataFrame:
         meta = _read_model_meta(zone_dir, model_dir)
@@ -611,20 +673,40 @@ def _live_generation(
             raise ValueError(
                 f"no model meta under {model_dir!r} — nothing to compact"
             )
-        gen = meta["gen"]
-        if not retained_sample_mode:
-            return df.filter(F.col("model_gen") == gen)
-        is_sample = (F.col("vec_id") % meta["stride"] == 0) | (
-            F.col("vec_id") % meta["cb_stride"] == 0
-        )
-        gmax = df.agg(F.max("model_gen")).collect()[0][0]
-        g = gen if gmax is None else min(int(gen), int(gmax))
-        return df.filter(
-            (F.col("model_gen") == g)
-            | (~is_sample & (F.col("model_gen") <= g))
-        )
+        gen, live = _live_rows(df, meta, clamp=False)
+        if df.filter(live).isEmpty() and not df.isEmpty():
+            raise ValueError(
+                f"the zone keyed off {model_dir!r} holds rows but none "
+                f"at its serving generation {gen}: the model meta "
+                f"names a refit whose epoch has not landed. Replay the "
+                f"stream to land it, then compact."
+            )
+        return df.filter(live)
 
     return fold
+
+
+def _read_live(
+    spark: SparkSession,
+    table: str,
+    zone_dir: str,
+    name: str,
+    model_dir: str,
+    schema: str,
+) -> DataFrame:
+    """What a model-zone reader serves: the committed rows of zone
+    ``name`` that :func:`_live_rows` keeps, projected to ``schema``'s
+    columns — plus ``model_gen`` in an accreting zone, whose serve
+    scores each row against its own generation's model. An empty
+    ``schema`` frame before the first model lands."""
+    meta = _read_model_meta(zone_dir, model_dir)
+    if meta is None:
+        return spark.createDataFrame([], schema)
+    df = read_manifest_zone(spark, {name: table}, zone_dir)[name]
+    cols = [field.split()[0] for field in schema.split(",")]
+    if _accretes(meta):
+        cols.append("model_gen")
+    return df.filter(_live_rows(df, meta, clamp=False)[1]).select(*cols)
 
 
 def read_kmeans_centroids(
@@ -646,16 +728,9 @@ def read_cluster_assignment(
     row per doc (older-generation rows are dead weight until
     compaction, the same trade as superseded data generations in
     ``vacuum_manifest_zone``)."""
-    meta = _read_model_meta(zone_dir, KMEANS_MODEL_DIR)
-    df = read_manifest_zone(
-        spark, {"cluster_assignment": table}, zone_dir
-    )["cluster_assignment"]
-    if meta is None:
-        return df.filter(F.lit(False)).select(
-            "doc_id", "cluster_id", "dist"
-        )
-    return df.filter(F.col("model_gen") == meta["gen"]).select(
-        "doc_id", "cluster_id", "dist"
+    return _read_live(
+        spark, table, zone_dir, "cluster_assignment", KMEANS_MODEL_DIR,
+        "doc_id long, cluster_id long, dist double",
     )
 
 
@@ -874,35 +949,35 @@ def compact_model_zone(
     n_buckets: int = 8,
     bucket_col: str = "vec_id",
     extra_partition_cols: tuple[str, ...] = (),
-    retained_sample_mode: bool = False,
 ) -> str:
     """Compact a generation-tracked model-state zone table
-    (``cluster_assignment`` / ``pq_codes`` / ``ivfpq_codes`` /
-    ``ivf_assign``): every drift refit re-lands the FULL corpus under
-    a new ``model_gen`` and the readers filter to the current one, so
-    superseded generations are dead rows the scan still pays for
-    until compaction — this folds the zone to exactly the live
-    generation (reader-identical by construction, since the filter IS
-    the reader's own) and one epoch. ``model_dir`` names the meta dir
-    the table's generations key off (KMEANS_MODEL_DIR / PQ_MODEL_DIR /
+    (``cluster_assignment`` / ``pq_codes`` / ``binary_codes`` /
+    ``ivfpq_codes`` / ``ivf_assign``) to exactly the rows its reader
+    serves and one epoch — reader-identical by construction, since the
+    fold IS the readers' live-row rule (:func:`_live_rows`).
+    ``model_dir`` names the meta dir the table's generations key off
+    (KMEANS_MODEL_DIR / PQ_MODEL_DIR / BINARY_MODEL_DIR /
     IVFPQ_MODEL_DIR / IVF_MODEL_DIR).
 
-    ``retained_sample_mode=True`` compacts an IVFPQ-only store-once
-    zone, where generations ACCRETE (only the retained sample ∪ the
-    refit batch is re-encoded, older non-sample rows stay live): the
-    kept set is :func:`read_ivfpq_codes`'s own retained-sample live
-    predicate — sample ids at the current generation plus non-sample
-    ids at any — so only the sample ids' superseded encodes drop.
-    Like the reader, the generation is clamped to the zone's max
-    landed ``model_gen`` (ADVICE r13 #2): compacting inside a refit's
-    crash window (meta at gen+1, gen+1 epoch not landed) must not
-    drop the sample ids' only landed encode. ``model_gen`` survives
+    The model meta records which rows are live. In a full-re-encode
+    zone every drift refit re-lands the FULL corpus under a new
+    ``model_gen``, so the superseded generations are dead rows the
+    scan still pays for until compaction. In the IVFPQ-only store-once
+    zone (meta ``retained_sample: true``) generations ACCRETE: only
+    the sample ids' superseded encodes drop, and ``model_gen`` survives
     as a column (the multi-gen serve scores each row against its own
-    generation's model)."""
+    generation's model).
+
+    Compaction refuses, writing nothing, when the zone has rows but
+    none at its serving generation — a full-re-encode zone inside a
+    refit's crash window (meta at gen+1, the gen+1 epoch not landed).
+    Replay the stream first: in the IVF store-once deployment
+    (``ivf=True, store_flat_embeddings=False``) ``ivf_assign`` is the
+    only copy of the corpus, and the replayed refit reads it."""
     return compact_manifest_zone(
         spark, table, zone_dir, name,
         n_buckets=n_buckets, bucket_col=bucket_col,
-        transform=_live_generation(zone_dir, model_dir, retained_sample_mode),
+        transform=_live_generation(zone_dir, model_dir),
         extra_partition_cols=extra_partition_cols,
     )
 
@@ -926,14 +1001,9 @@ def read_pq_codes(
     own epoch, so the filter sees exactly one live (vec_id, s) row
     per vector (the read_cluster_assignment discipline; older-gen
     rows are dead weight until compaction)."""
-    meta = _read_model_meta(zone_dir, PQ_MODEL_DIR)
-    if meta is None:
-        return spark.createDataFrame([], "vec_id long, s long, code long")
-    df = read_manifest_zone(spark, {"pq_codes": table}, zone_dir)[
-        "pq_codes"
-    ]
-    return df.filter(F.col("model_gen") == meta["gen"]).select(
-        "vec_id", "s", "code"
+    return _read_live(
+        spark, table, zone_dir, "pq_codes", PQ_MODEL_DIR,
+        "vec_id long, s long, code long",
     )
 
 
@@ -955,16 +1025,9 @@ def read_binary_codes(
     (the read_pq_codes discipline — a drift refit re-encodes the full
     corpus under the new generation in its own epoch, so exactly one
     live row per vector survives the filter)."""
-    meta = _read_model_meta(zone_dir, BINARY_MODEL_DIR)
-    if meta is None:
-        return spark.createDataFrame(
-            [], "vec_id long, code_lo long, code_hi long"
-        )
-    df = read_manifest_zone(spark, {"binary_codes": table}, zone_dir)[
-        "binary_codes"
-    ]
-    return df.filter(F.col("model_gen") == meta["gen"]).select(
-        "vec_id", "code_lo", "code_hi"
+    return _read_live(
+        spark, table, zone_dir, "binary_codes", BINARY_MODEL_DIR,
+        "vec_id long, code_lo long, code_hi long",
     )
 
 
@@ -988,16 +1051,9 @@ def read_ivf_assign(
     assigns with); ``dist`` is the squared-L2 distortion to the
     assigned centroid, kept scale-SENSITIVE on purpose so the drift
     gate can see magnitude shifts cosine is blind to."""
-    meta = _read_model_meta(zone_dir, IVF_MODEL_DIR)
-    if meta is None:
-        return spark.createDataFrame(
-            [], "vec_id long, cluster_id long, dist double"
-        )
-    df = read_manifest_zone(spark, {"ivf_assign": table}, zone_dir)[
-        "ivf_assign"
-    ]
-    return df.filter(F.col("model_gen") == meta["gen"]).select(
-        "vec_id", "cluster_id", "dist"
+    return _read_live(
+        spark, table, zone_dir, "ivf_assign", IVF_MODEL_DIR,
+        "vec_id long, cluster_id long, dist double",
     )
 
 
@@ -1012,28 +1068,16 @@ def read_ivf_lists(
     reads n_probe/n_clusters of the corpus bytes and never rescans
     the embeddings table (plan-asserted in
     tests/test_ivf_winnowing.py)."""
-    meta = _read_model_meta(zone_dir, IVF_MODEL_DIR)
-    if meta is None:
-        return spark.createDataFrame(
-            [], "vec_id long, cluster_id long, embedding array<double>"
-        )
-    df = read_manifest_zone(spark, {"ivf_assign": table}, zone_dir)[
-        "ivf_assign"
-    ]
-    from pyspark.sql.types import ArrayType, FloatType
-
-    emb_field = df.schema["embedding"].dataType
-    if isinstance(emb_field, ArrayType) and isinstance(
-        emb_field.elementType, FloatType
-    ):
-        # a float-stored zone (float32 ingest): promote back to double —
-        # exact (float→double is lossless), so serving and refit
-        # values are bit-identical to a double-stored zone
-        df = df.withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-    return df.filter(F.col("model_gen") == meta["gen"]).select(
-        "vec_id", "cluster_id", "embedding"
+    lists = _read_live(
+        spark, table, zone_dir, "ivf_assign", IVF_MODEL_DIR,
+        "vec_id long, cluster_id long, embedding array<double>",
+    )
+    # a float-stored zone (float32 ingest) promotes back to double —
+    # exact (float→double is lossless), so serving and refit values
+    # are bit-identical to a double-stored zone (where the cast is a
+    # no-op the optimizer drops)
+    return lists.withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
     )
 
 
@@ -1053,71 +1097,27 @@ def read_ivfpq_model(
 
 
 def read_ivfpq_codes(
-    spark: SparkSession,
-    table: str,
-    zone_dir: str,
-    retained_sample_mode: bool = False,
+    spark: SparkSession, table: str, zone_dir: str
 ) -> DataFrame:
-    """Current-generation IVFPQ codes from the streamed zone —
+    """Live IVFPQ codes from the streamed zone —
     :func:`read_pq_codes` with the cell id alongside (the probe join
     key the ADC scan prunes on).
 
-    ``retained_sample_mode=True`` is the reader for the IVFPQ-only
-    store-once zone (``run_embedding_ingest(store_flat_embeddings=
-    False, ivfpq=True, ivf=False)``), where generations ACCRETE: a
-    drift refit re-encodes only the retained fit sample ∪ its batch
-    under the new generation, so each vector's newest encode — the one
-    to serve — is resolved by PURE PREDICATE rather than a per-vector
-    window: sample ids (``vec_id % stride == 0`` or ``% cb_stride ==
-    0``, the strides pinned in the model meta) are re-encoded by every
-    refit and therefore live only at the CURRENT generation, while
-    non-sample ids are encoded exactly once, at whatever generation
-    was current when they arrived. Both arms are plain filters that
-    push to the parquet scan, so the serving plan keeps predicate
-    pushdown and cluster_id DPP — the reason this is not a
-    ``max(model_gen) over (partition by vec_id)`` window, which would
-    block both. Returns ``model_gen`` alongside so the multi-gen serve
-    (:func:`ivfpq_topk_streamed`) can score each row against its own
-    generation's model.
-
-    The serving generation is ``min(meta gen, max model_gen landed in
-    the zone)`` — the zone-resolved rule the IVF store-once refit
-    source already uses (ADVICE r13 #2): in a refit's crash window the
-    meta names gen+1 before the gen+1 codes epoch lands, and a
-    meta-resolved filter would drop every retained-sample id until
-    replay (their newest landed encode sits at gen, excluded by both
-    predicate arms). Clamping to the zone's max landed generation
-    keeps the full committed corpus served through that window; the
-    clamp is one column-stats MAX (a bounded 1-row collect), and in
-    the steady state meta and zone agree so the plan is unchanged."""
-    meta = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
-    if meta is None:
-        schema = "vec_id long, cluster_id long, s long, code long"
-        if retained_sample_mode:
-            schema += ", model_gen long"
-        return spark.createDataFrame([], schema)
-    df = read_manifest_zone(spark, {"ivfpq_codes": table}, zone_dir)[
-        "ivfpq_codes"
-    ]
-    if not retained_sample_mode:
-        return df.filter(F.col("model_gen") == meta["gen"]).select(
-            "vec_id", "cluster_id", "s", "code"
-        )
-    gmax = df.agg(F.max("model_gen")).collect()[0][0]
-    if gmax is None:
-        return spark.createDataFrame(
-            [],
-            "vec_id long, cluster_id long, s long, code long, "
-            "model_gen long",
-        )
-    gen_serve = min(int(meta["gen"]), int(gmax))
-    is_sample = (F.col("vec_id") % meta["stride"] == 0) | (
-        F.col("vec_id") % meta["cb_stride"] == 0
+    The model meta records the deployment, and the rows served follow
+    it (:func:`_live_rows`). A flat deployment re-encodes the full
+    corpus on every refit, so the current generation is served. The
+    IVFPQ-only store-once deployment (``run_embedding_ingest(
+    store_flat_embeddings=False, ivfpq=True, ivf=False)``, meta
+    ``retained_sample: true``) ACCRETES generations: a refit re-encodes
+    only the retained fit sample ∪ its batch, so sample ids serve at
+    the zone-clamped current generation and non-sample ids at the
+    generation they arrived under. Such a zone returns ``model_gen``
+    alongside, so the multi-gen serve (:func:`ivfpq_topk_streamed`)
+    can score each row against its own generation's model."""
+    return _read_live(
+        spark, table, zone_dir, "ivfpq_codes", IVFPQ_MODEL_DIR,
+        "vec_id long, cluster_id long, s long, code long",
     )
-    return df.filter(
-        (F.col("model_gen") == gen_serve)
-        | (~is_sample & (F.col("model_gen") <= gen_serve))
-    ).select("vec_id", "cluster_id", "s", "code", "model_gen")
 
 
 def read_fit_sample(
@@ -1137,8 +1137,8 @@ def _load_ivfpq_multigen(
     spark: SparkSession, table: str, zone_dir: str
 ):
     """The store-once serve's model state: ``(meta, codes_g, cents_g,
-    cb_g)`` with every table carrying a ``gen`` column (codes via the
-    retained-sample reader; centroids/codebooks unioned per live
+    cb_g)`` with every table carrying a ``gen`` column (codes via
+    :func:`read_ivfpq_codes`; centroids/codebooks unioned per live
     generation), or None when no model/generations have landed.
     The model-loading half of :func:`ivfpq_topk_streamed`."""
     from ..operators.similarity import _coarse_centroids
@@ -1146,9 +1146,7 @@ def _load_ivfpq_multigen(
     meta = _read_model_meta(zone_dir, IVFPQ_MODEL_DIR)
     if meta is None:
         return None
-    codes = read_ivfpq_codes(
-        spark, table, zone_dir, retained_sample_mode=True
-    )
+    codes = read_ivfpq_codes(spark, table, zone_dir)
     gens = sorted(
         r["model_gen"]
         for r in codes.select("model_gen").distinct().collect()
@@ -1192,7 +1190,7 @@ def ivfpq_topk_streamed(
 ) -> DataFrame:
     """Multi-generation ADC top-k over an IVFPQ-only store-once zone.
 
-    In retained-sample mode generations accrete (see
+    The zone's model meta records that its generations accrete (see
     :func:`read_ivfpq_codes`), so one query must score codes encoded
     under DIFFERENT models: each generation's rows against that
     generation's own coarse centroids + residual codebook. The serve
@@ -1215,8 +1213,8 @@ def ivfpq_topk_streamed(
     stay Σ_g |probed cells of gen g| — the same I/O floor the
     per-generation loop paid — while the per-generation PLAN constant
     (measured ~1.2 s/gen at ×10, linear to 8.9 s at 7 live gens for
-    the loop: scripts/bench_store_once_gens.py) collapses to one
-    plan's worth.
+    the loop: BASELINE.md, "Round-14 store-once serve vs generation
+    count") collapses to one plan's worth.
 
     A mixed batch is served whole: DPP admits the union of its probed
     (gen, cell) partitions in one scan. Splitting it into probe-affine
@@ -1294,11 +1292,10 @@ def ivfpq_rerank_topk_streamed(
     With a flat deployment (``run_embedding_ingest(
     store_flat_embeddings=True)``), the ADC stage serves the landed
     model + CURRENT-generation codes through the flat deployment's own
-    reader (:func:`read_ivfpq_codes` without retained-sample mode — a
-    flat refit re-encodes everything, so the store-once accretion
-    predicate would double-serve superseded rows here), and the refine
-    stage broadcasts the |q|·shortlist id set against ONE pass over
-    the landed flat zone — the corpus is never crossed, same shape as
+    reader (:func:`read_ivfpq_codes`: the flat zone's meta records a
+    full re-encode, so only the current generation serves), and the
+    refine stage broadcasts the |q|·shortlist id set against ONE pass
+    over the landed flat zone — the corpus is never crossed, same shape as
     :func:`operators.similarity.ivfpq_rerank_topk`."""
     from ..operators.similarity import as_double, cosine, ivfpq_topk
     from ..operators.similarity import det_round as _det_round
@@ -1487,12 +1484,13 @@ def run_embedding_ingest(
     was never retained, so generations accrete instead of superseding:
     the refit epoch re-encodes (sample ∪ batch) under gen+1, committed
     non-sample codes stay live at their original generation, and
-    serving is multi-generation — :func:`read_ivfpq_codes` with
-    ``retained_sample_mode=True`` resolves each vector's newest encode
-    BY PREDICATE (sample ids live only at the current gen; non-sample
-    ids are encoded exactly once), keeping the scan filter-pushdown-
-    and DPP-prunable, and :func:`ivfpq_topk_streamed` unions
-    per-generation ADC scores before one global rank. The fit-time
+    serving is multi-generation — the model meta records
+    ``retained_sample: true``, and :func:`read_ivfpq_codes` then
+    resolves each vector's newest encode BY PREDICATE (sample ids live
+    only at the current gen; non-sample ids are encoded exactly once),
+    keeping the scan filter-pushdown- and DPP-prunable, and
+    :func:`ivfpq_topk_streamed` unions per-generation ADC scores
+    before one global rank. The fit-time
     ``fit_mean_dist`` baseline in this mode is measured over the
     retained diet ∪ batch (the full corpus's raw distortion is
     unobservable without its raw vectors), so later drift decisions
@@ -1526,11 +1524,12 @@ def run_embedding_ingest(
     whenever its committed epoch count reaches N (r14 — the measured
     rule: at 20 epochs the store-once serve pays ~2.3 s of pure
     epoch-layout overhead vs the folded twin, and a compaction costs
-    ~one serve; scripts/bench_store_once_epochs.py). The fold is the
-    generation filter of :func:`compact_model_zone` for the code zones
-    (retained-sample-aware for the store-once deployment) and a plain
-    fold for the fit_sample/embeddings zones — reader-identical by
-    construction; the manifest resets to one marker so the trigger
+    ~one serve; BASELINE.md, "Round-14 store-once serve vs epoch
+    count"). The fold is the live-row rule of
+    :func:`compact_model_zone` for the code zones (the model meta says
+    whether generations accrete) and a plain fold for the
+    fit_sample/embeddings zones — reader-identical by construction;
+    the manifest resets to one marker so the trigger
     self-resets, and the fold runs only after the epoch fully commits
     (:func:`_run_epochs`).
 
@@ -1586,11 +1585,10 @@ def run_embedding_ingest(
 
     def zone(zname, model_dir=None, partition_cols=()) -> _Zone:
         """A code zone (``model_dir`` set) folds to its live rows."""
-        retained = retain_fit_sample and zname == "ivfpq_codes"
         return _Zone(
             zname, f"{table_prefix}{zname}", zone_dir, n_buckets, "vec_id",
             partition_cols,
-            model_dir and _live_generation(zone_dir, model_dir, retained),
+            model_dir and _live_generation(zone_dir, model_dir),
         )
 
     # land order: every code zone commits before the fit sample / flat
@@ -1632,15 +1630,13 @@ def run_embedding_ingest(
         df = read_manifest_zone(spark, {z.name: z.table}, zone_dir)[z.name]
         if z.name == "ivf_assign":
             # store-once mode: the inverted lists ARE the corpus. Use
-            # the newest generation present IN THE ZONE, not the
-            # meta's — in a refit's crash window (meta committed, codes
-            # epoch not) the meta already names the new gen, which has
-            # no rows yet; the zone's max landed gen is always the full
+            # the newest generation landed IN THE ZONE, not the meta's
+            # — in a refit's crash window (meta committed, codes epoch
+            # not) the meta already names the new gen, which has no
+            # rows yet; the zone's newest landed gen is always the full
             # committed corpus.
-            gmax = df.agg(F.max("model_gen")).collect()[0][0]
-            if gmax is None or gmax < 0:
-                return None
-            df = df.filter(F.col("model_gen") == gmax)
+            meta = _read_model_meta(zone_dir, IVF_MODEL_DIR)
+            df = df.filter(_live_rows(df, meta, clamp=True)[1])
         return df.select("vec_id", "embedding")
 
     def _with_committed(vecs: DataFrame) -> DataFrame:
@@ -1773,7 +1769,7 @@ def run_embedding_ingest(
                 "vec_id long, cluster_id long, s long, code long, "
                 "dist double"
             ),
-            meta_params=ivfpq_params,
+            meta_params=dict(ivfpq_params, retained_sample=retain_fit_sample),
         ))
     if ivf:
         gates.append(_ModelGate(
@@ -1800,10 +1796,9 @@ def run_embedding_ingest(
             # replays and re-lands only the sample, idempotently)
             _land_epoch(
                 spark,
-                batch_df.filter(
-                    (F.col("vec_id") % stride == 0)
-                    | (F.col("vec_id") % cb_stride == 0)
-                ).select("vec_id", "embedding"),
+                batch_df.filter(_fit_sample(stride, cb_stride)).select(
+                    "vec_id", "embedding"
+                ),
                 zones["fit_sample"],
                 epoch_id,
             )
@@ -1830,31 +1825,27 @@ def stream_zone_freshness(
     ``zones`` maps zone name → ``(catalog table, model_dir or None)``
     — pass the model dir (IVF_MODEL_DIR / IVFPQ_MODEL_DIR /
     PQ_MODEL_DIR / KMEANS_MODEL_DIR) for generation-tracked zones,
-    None for plain zones like the flat embeddings corpus. A third
-    tuple element ``"retained_sample"`` marks an IVFPQ-only store-once
-    codes zone (ADVICE r13 #1), where generations ACCRETE: live/dead
-    are computed with :func:`read_ivfpq_codes`'s own keep predicate —
-    sample ids (``vec_id % stride == 0`` or ``% cb_stride == 0``, the
-    strides from the meta) at the serving generation plus non-sample
-    ids at any generation ≤ it — under the same zone-clamped serving
-    generation the reader uses, and ``dead_epochs`` is 0 by definition
-    (no epoch is ever wholly superseded when non-sample rows stay
-    live). Without the flag a ``model_gen != gen`` count would report
-    every older-generation non-sample row — rows the reader SERVES —
-    as reclaimable.
+    None for plain zones like the flat embeddings corpus. Live/dead
+    and the serving generation come from the readers' own live-row
+    rule (:func:`_live_rows`), and the model meta records which rule
+    applies. In the IVFPQ-only store-once codes zone (meta
+    ``retained_sample: true``, ADVICE r13 #1) generations ACCRETE:
+    older-generation non-sample rows are live — the reader SERVES
+    them — under the zone-clamped serving generation, and
+    ``dead_epochs`` is 0 by definition (no epoch is ever wholly
+    superseded when non-sample rows stay live).
 
     Columns: ``zone``, ``n_epochs`` / ``last_epoch`` /
     ``committed_rows`` (from the manifest markers alone),
-    ``model_gen`` / ``fit_epoch`` (the current generation — for
-    retained-sample zones the zone-clamped SERVING generation — and
-    the epoch of its fit, i.e. the last drift refit, from the model
-    meta; -1 where no model), ``live_rows`` / ``dead_rows`` (the
+    ``model_gen`` / ``fit_epoch`` (the SERVING generation — zone-
+    clamped in an accreting zone — and the epoch of its fit, i.e. the
+    last drift refit, from the model meta; -1 where no model), ``live_rows`` / ``dead_rows`` (the
     zone's rows the generation-filtered reader serves vs the
     superseded rows compaction would reclaim — a count-only scan of
     the generation column), and ``dead_epochs`` (epochs wholly
     superseded by the last full-re-encode refit: every epoch before
     ``fit_epoch``; meaningful for the full-re-encode zones, 0 for
-    plain and retained-sample zones).
+    plain and accreting zones).
 
     A zone that has not landed yet degrades gracefully (ADVICE r13
     #3) instead of raising: an absent manifest dir or missing catalog
@@ -1880,32 +1871,30 @@ def stream_zone_freshness(
     row-scaled stays a DataFrame aggregation."""
     out: DataFrame | None = None
     for name in sorted(zones):
-        table, model_dir, *mode = zones[name]
-        retained = bool(mode) and mode[0] == "retained_sample"
-        if mode and mode[0] not in (None, "retained_sample"):
-            raise ValueError(
-                f"zone {name!r}: unknown mode {mode[0]!r} — expected "
-                "'retained_sample' or a 2-tuple"
-            )
+        table, model_dir = zones[name]
         if model_dir is None:
             meta, gen, fit_epoch = None, -1, -1
         else:
             meta = _read_model_meta(zone_dir, model_dir)
             gen = -1 if meta is None else meta["gen"]
             fit_epoch = -1 if meta is None else meta.get("fit_epoch", -1)
-        zone_exists = spark.catalog.tableExists(table)
         zdf = (
             read_manifest_zone(spark, {name: table}, zone_dir)[name]
-            if zone_exists
+            if spark.catalog.tableExists(table)
             else None
         )
-        if retained and meta is not None and zdf is not None:
-            # the reader's zone-clamped serving generation (the crash-
-            # window rule read_ivfpq_codes applies) — one bounded
-            # column-stats MAX
-            gmax = zdf.agg(F.max("model_gen")).collect()[0][0]
-            if gmax is not None:
-                gen = min(int(gen), int(gmax))
+        # a model zone whose rows carry their generation keeps what its
+        # reader serves; every other zone keeps every committed row —
+        # plain zones, and counts-shaped model zones (no model_gen
+        # column: BPE word counts, CMS cells), whose rows are
+        # generation-independent folded state
+        gen_rows = (
+            meta is not None and zdf is not None
+            and "model_gen" in zdf.columns
+        )
+        live_pred = F.lit(True)
+        if gen_rows:
+            gen, live_pred = _live_rows(zdf, meta, clamp=False)
         # the directory, not a *.json glob: Spark's file index already
         # skips the dot-prefixed in-flight marker tmps, and a glob
         # path makes the reader probe it for stream metadata (noisy
@@ -1917,15 +1906,11 @@ def stream_zone_freshness(
             )
         else:
             markers = spark.createDataFrame([], "epoch long, rows long")
-        # epochs are wholly superseded ONLY in full-re-encode
-        # generation-tracked zones: retained-sample zones keep old
-        # non-sample rows live, and counts-shaped zones (no model_gen
-        # column — BPE word counts, CMS cells) fold rather than
-        # supersede
-        gen_rows = zdf is not None and "model_gen" in zdf.columns
+        # epochs are wholly superseded ONLY by a full-re-encode refit:
+        # an accreting zone keeps old non-sample rows live
         dead_epoch_pred = (
-            (F.col("epoch") < fit_epoch)
-            if (model_dir is not None and not retained and gen_rows)
+            F.col("epoch") < fit_epoch
+            if gen_rows and not _accretes(meta)
             else F.lit(False)
         )
         m = markers.agg(
@@ -1943,28 +1928,7 @@ def stream_zone_freshness(
             z = spark.createDataFrame(
                 [(0, 0)], "live_rows long, dead_rows long"
             )
-        elif model_dir is None or "model_gen" not in zdf.columns:
-            # plain zones, and model-tracked zones whose TABLE carries
-            # no generation column (the BPE word-count / CMS-cell
-            # shape: the model generations live in the model dir, the
-            # zone rows are generation-independent folded state) —
-            # every committed row is live; gen/fit_epoch still report
-            # from the meta where one exists
-            z = zdf.agg(
-                F.count(F.lit(1)).cast("long").alias("live_rows")
-            ).select(
-                "live_rows", F.lit(0).cast("long").alias("dead_rows")
-            )
         else:
-            if retained and meta is not None:
-                is_sample = (
-                    F.col("vec_id") % meta["stride"] == 0
-                ) | (F.col("vec_id") % meta["cb_stride"] == 0)
-                live_pred = (F.col("model_gen") == gen) | (
-                    ~is_sample & (F.col("model_gen") <= gen)
-                )
-            else:
-                live_pred = F.col("model_gen") == gen
             z = zdf.agg(
                 F.coalesce(
                     F.sum(

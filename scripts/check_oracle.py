@@ -11,10 +11,17 @@ from __future__ import annotations
 
 import hashlib
 import sys
+import tempfile
 import time
 
 import duckdb
 import pandas as pd
+
+# DuckDB shares the host with the Spark session: a fixed memory share and
+# a capped spill directory outside the checkout. An oracle that needs
+# more fails as its own entry instead of stalling the host.
+DUCKDB_MEMORY_LIMIT = "2GB"
+DUCKDB_MAX_TEMP_SIZE = "4GB"
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -36,7 +43,7 @@ def _cell(v) -> str:
     return str(v)
 
 
-def main() -> int:
+def main(spill: str) -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -51,7 +58,13 @@ def main() -> int:
     )
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "temp_directory": spill,
+            "max_temp_directory_size": DUCKDB_MAX_TEMP_SIZE,
+        }
+    )
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings".split()
@@ -71,7 +84,12 @@ def main() -> int:
         if name not in oracles:
             print(f"  {name}: rows-only check — {len(sdf)} rows ({spark_s:.1f}s)")
             continue
-        odf = con.execute(oracles[name]).df()
+        try:
+            odf = con.execute(oracles[name]).df()
+        except duckdb.Error as exc:
+            print(f"  {name}: FAIL: oracle error {exc}")
+            failures.append(name)
+            continue
         problems = []
         if len(sdf) != len(odf):
             problems.append(f"rowcount {len(sdf)} != {len(odf)}")
@@ -100,4 +118,5 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    with tempfile.TemporaryDirectory(prefix="check_oracle_duckdb_") as d:
+        raise SystemExit(main(d))

@@ -497,7 +497,6 @@ def test_store_once_ivfpq_soak(spark, tmp_path):
         # sample ids at the current generation
         got = read_ivfpq_codes(
             spark, tables["ivfpq_codes"], zone,
-            retained_sample_mode=True,
         ).collect()
         per_vec: dict[int, set[int]] = {}
         for r in got:
@@ -547,7 +546,6 @@ def test_store_once_ivfpq_soak(spark, tmp_path):
             spark, tables["ivfpq_codes"], zone, "ivfpq_codes",
             IVFPQ_MODEL_DIR, n_buckets=4,
             extra_partition_cols=("cluster_id",),
-            retained_sample_mode=True,
         )
         assert len(committed_epochs(zone, "ivfpq_codes")) == 1
         after = spark.table(tables["ivfpq_codes"]).count()
@@ -559,7 +557,6 @@ def test_store_once_ivfpq_soak(spark, tmp_path):
         assert gen_key(
             read_ivfpq_codes(
                 spark, tables["ivfpq_codes"], zone,
-                retained_sample_mode=True,
             ).drop("model_gen").collect()
         ) == gen_key(got)
         assert sorted(
@@ -615,7 +612,6 @@ def test_store_once_ivfpq_soak(spark, tmp_path):
             assert gen_key(
                 read_ivfpq_codes(
                     spark, tables2["ivfpq_codes"], zone2,
-                    retained_sample_mode=True,
                 ).drop("model_gen").collect()
             ) == gen_key(got)
             assert sorted(

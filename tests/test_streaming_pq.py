@@ -27,6 +27,7 @@ from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming
     IVF_MODEL_DIR,
     IVFPQ_MODEL_DIR,
     PQ_MODEL_DIR,
+    _accretes,
     _read_model_meta,
     read_ivf_assign,
     read_ivf_centroids,
@@ -203,6 +204,8 @@ def test_ivfpq_gate_incremental_then_drift_refit(spark, tmp_path):
         )
         meta = _read_model_meta(zone, IVFPQ_MODEL_DIR)
         assert meta["gen"] == 0 and meta["fit_mean_dist"] is not None
+        # a flat deployment re-encodes the full corpus on every refit
+        assert not _accretes(meta)
         cent0, cb0 = read_ivfpq_model(spark, zone)
         _, _, want_full = ivfpq_model(
             base, centroids=cent0, codebook=cb0
@@ -650,7 +653,6 @@ def test_store_once_ivfpq_only_mode(spark, tmp_path):
         # single-generation: retained reader == flat twin's reader
         got0 = read_ivfpq_codes(
             spark, tabs["once"]["ivfpq_codes"], zo,
-            retained_sample_mode=True,
         )
         assert set(r["model_gen"] for r in got0.collect()) == {0}
         assert icodes_key(got0.drop("model_gen")) == icodes_key(
@@ -689,7 +691,6 @@ def test_store_once_ivfpq_only_mode(spark, tmp_path):
         # ids serve from gen 1, old non-sample ids still from gen 0
         got = read_ivfpq_codes(
             spark, tabs["once"]["ivfpq_codes"], zo,
-            retained_sample_mode=True,
         ).collect()
         per_vec = {}
         for r in got:
@@ -815,7 +816,6 @@ def test_store_once_ivfpq_only_mode(spark, tmp_path):
             spark, tabs["once"]["ivfpq_codes"], zo, "ivfpq_codes",
             IVFPQ_MODEL_DIR, n_buckets=4,
             extra_partition_cols=("cluster_id",),
-            retained_sample_mode=True,
         )
         assert len(committed_epochs(zo, "ivfpq_codes")) == 1
         after = spark.table(tabs["once"]["ivfpq_codes"]).count()
@@ -927,7 +927,8 @@ def test_float32_lists_zone_is_lossless_and_smaller(spark, tmp_path):
         # and the zone is materially smaller (at this 200-vector test
         # scale parquet framing + the non-vector columns dilute the 2x
         # vector-payload cut to ~0.77x; the factor-10 measurement in
-        # scripts/bench_store_once_footprint.py shows the real ratio)
+        # BASELINE.md, "Round-13 store-once footprint lines", shows the
+        # real ratio)
         bf = zone_bytes(zf, "ivf_assign")
         bd = zone_bytes(zd, "ivf_assign")
         assert bf < 0.85 * bd, (bf, bd)

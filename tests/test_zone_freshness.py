@@ -18,8 +18,10 @@ import pyspark.sql.functions as F
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
     IVF_MODEL_DIR,
     IVFPQ_MODEL_DIR,
+    _accretes,
     _read_model_meta,
     _write_model_meta,
+    committed_epochs,
     compact_model_zone,
     read_ivfpq_codes,
     run_embedding_ingest,
@@ -69,11 +71,18 @@ def _codes_key(df):
 
 def test_retained_reader_survives_refit_crash_window(spark, tmp_path):
     """ADVICE r13 #2: with the meta already at gen+1 but no gen+1
-    codes landed (the refit crash window), the retained-sample reader
-    must clamp to the zone's max landed generation and keep serving
-    the full committed corpus — a meta-resolved filter would drop
-    every sample id (its newest landed encode is at gen, excluded by
-    both predicate arms)."""
+    rows landed (the refit crash window), compaction must not delete
+    committed rows. Two store-once deployments:
+
+    * IVFPQ-only: the reader clamps to the zone's max landed
+      generation and keeps serving the full committed corpus — a
+      meta-resolved filter would drop every sample id (its newest
+      landed encode is at gen, excluded by both predicate arms) — and
+      the compactor keeps exactly what the reader serves.
+    * IVF (``ivf=True, store_flat_embeddings=False``): the lists zone
+      is the only copy of the corpus and re-encodes in full, so its
+      serving generation has no rows yet. Compaction refuses and the
+      zone keeps every row for the replayed refit to read."""
     base = _emb(spark)
     prefix = "t_zfcw_"
     try:
@@ -83,9 +92,7 @@ def test_retained_reader_survives_refit_crash_window(spark, tmp_path):
              base.filter(F.col("vec_id") >= 150)),
         )
         table = tables["ivfpq_codes"]
-        before = _codes_key(
-            read_ivfpq_codes(spark, table, zone, retained_sample_mode=True)
-        )
+        before = _codes_key(read_ivfpq_codes(spark, table, zone))
         assert len(before) == 200 * M
         n_samples = sum(
             1 for i in range(200)
@@ -98,9 +105,7 @@ def test_retained_reader_survives_refit_crash_window(spark, tmp_path):
         assert meta["gen"] == 0
         _write_model_meta(zone, IVFPQ_MODEL_DIR, {**meta, "gen": 1})
 
-        during = _codes_key(
-            read_ivfpq_codes(spark, table, zone, retained_sample_mode=True)
-        )
+        during = _codes_key(read_ivfpq_codes(spark, table, zone))
         assert during == before  # full corpus still served
 
         # compaction inside the window must not reclaim the sample
@@ -108,12 +113,37 @@ def test_retained_reader_survives_refit_crash_window(spark, tmp_path):
         compact_model_zone(
             spark, table, zone, "ivfpq_codes", IVFPQ_MODEL_DIR,
             n_buckets=4, extra_partition_cols=("cluster_id",),
-            retained_sample_mode=True,
         )
-        after = _codes_key(
-            read_ivfpq_codes(spark, table, zone, retained_sample_mode=True)
-        )
+        after = _codes_key(read_ivfpq_codes(spark, table, zone))
         assert after == before
+    finally:
+        _drop_tables(spark, prefix)
+
+    prefix = "t_zfcwivf_"
+    raw, zone, ckpt = (
+        str(tmp_path / f"{d}_ivf") for d in ("raw", "zone", "ckpt")
+    )
+    try:
+        base.write.parquet(raw)
+        table = run_embedding_ingest(
+            spark, raw, zone, ckpt,
+            pq=False, ivf=True, ivfpq=False, n_buckets=4,
+            table_prefix=prefix, store_flat_embeddings=False,
+        )["ivf_assign"]
+        epochs = committed_epochs(zone, "ivf_assign")
+        assert spark.table(table).count() == 200
+
+        meta = _read_model_meta(zone, IVF_MODEL_DIR)
+        _write_model_meta(
+            zone, IVF_MODEL_DIR, {**meta, "gen": meta["gen"] + 1}
+        )
+        with pytest.raises(ValueError, match="Replay the stream"):
+            compact_model_zone(
+                spark, table, zone, "ivf_assign", IVF_MODEL_DIR,
+                n_buckets=4, extra_partition_cols=("cluster_id",),
+            )
+        assert spark.table(table).count() == 200
+        assert committed_epochs(zone, "ivf_assign") == epochs
     finally:
         _drop_tables(spark, prefix)
 
@@ -123,8 +153,11 @@ def test_freshness_retained_sample_accounting(spark, tmp_path):
     must count live/dead with the reader's own keep predicate — after
     a drift refit, older-generation NON-sample rows are live (the
     reader serves them) and only the sample ids' superseded encodes
-    are reclaimable; dead_epochs is 0 by definition. The naive
-    ``model_gen != gen`` accounting would report every gen-0 row dead."""
+    are reclaimable; dead_epochs is 0 by definition. The store-once
+    ingest records the deployment in the model meta, so the report,
+    the reader and the compactor follow it with no flag passed: a
+    compaction keeps all 250 vectors served (a full-re-encode fold of
+    this zone kept 63)."""
     base = _emb(spark)
     w3 = base.filter(F.col("vec_id") >= 150).select(
         (F.col("vec_id") + 1000).alias("vec_id"),
@@ -144,13 +177,10 @@ def test_freshness_retained_sample_accounting(spark, tmp_path):
         assert _read_model_meta(zone, IVFPQ_MODEL_DIR)["gen"] == 1
 
         row = stream_zone_freshness(
-            spark, zone,
-            {"ivfpq_codes": (table, IVFPQ_MODEL_DIR, "retained_sample")},
+            spark, zone, {"ivfpq_codes": (table, IVFPQ_MODEL_DIR)}
         ).collect()[0]
 
-        served = read_ivfpq_codes(
-            spark, table, zone, retained_sample_mode=True
-        ).count()
+        served = read_ivfpq_codes(spark, table, zone).count()
         # the reader's count IS the live count; 250 vectors × M rows
         assert row["live_rows"] == served == 250 * M
         # dead = the pre-refit sample ids' superseded gen-0 encodes
@@ -166,13 +196,20 @@ def test_freshness_retained_sample_accounting(spark, tmp_path):
             row["committed_rows"] == row["live_rows"] + row["dead_rows"]
         )
 
-        # contrast: WITHOUT the flag the same zone reads as a
-        # full-re-encode zone and overstates reclaimable rows/epochs
-        naive = stream_zone_freshness(
+        # the store-once ingest records its deployment in the meta, and
+        # the compactor follows it with no flag passed: only the sample
+        # ids' superseded encodes drop, every vector is still served
+        assert _accretes(_read_model_meta(zone, IVFPQ_MODEL_DIR))
+        compact_model_zone(
+            spark, table, zone, "ivfpq_codes", IVFPQ_MODEL_DIR,
+            n_buckets=4, extra_partition_cols=("cluster_id",),
+        )
+        assert read_ivfpq_codes(spark, table, zone).count() == 250 * M
+        row = stream_zone_freshness(
             spark, zone, {"ivfpq_codes": (table, IVFPQ_MODEL_DIR)}
         ).collect()[0]
-        assert naive["dead_rows"] > row["dead_rows"]
-        assert naive["dead_epochs"] == 2
+        assert row["live_rows"] == row["committed_rows"] == 250 * M
+        assert row["dead_rows"] == 0 and row["n_epochs"] == 1
 
         # counts-shaped zone under a model dir (no model_gen column —
         # the BPE/CMS shape): every committed row live, dead_epochs 0,
@@ -204,7 +241,7 @@ def test_freshness_clamps_serving_gen_in_crash_window(spark, tmp_path):
 
         row = stream_zone_freshness(
             spark, zone,
-            {"ivfpq_codes": (table, IVFPQ_MODEL_DIR, "retained_sample")},
+            {"ivfpq_codes": (table, IVFPQ_MODEL_DIR)},
         ).collect()[0]
         assert row["model_gen"] == 0  # clamped to max landed gen
         assert row["live_rows"] == 200 * M and row["dead_rows"] == 0
@@ -233,16 +270,6 @@ def test_freshness_absent_and_empty_zone_degrade(spark, tmp_path):
         assert r["live_rows"] == 0 and r["dead_rows"] == 0
         assert r["dead_epochs"] == 0
         assert r["model_gen"] == -1 and r["fit_epoch"] == -1
-
-
-def test_freshness_rejects_unknown_mode(spark, tmp_path):
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown mode"):
-        stream_zone_freshness(
-            spark, str(tmp_path),
-            {"z": ("t", IVFPQ_MODEL_DIR, "bogus")},
-        ).collect()
 
 
 @pytest.mark.slow
@@ -305,13 +332,11 @@ def test_auto_compact_every_folds_epochs_and_preserves_serving(
         ka = _codes_key(
             read_ivfpq_codes(
                 spark, tabs["auto"]["ivfpq_codes"], zones["auto"],
-                retained_sample_mode=True,
             )
         )
         kb = _codes_key(
             read_ivfpq_codes(
                 spark, tabs["plain"]["ivfpq_codes"], zones["plain"],
-                retained_sample_mode=True,
             )
         )
         assert ka == kb and len(ka) == 6 * 120 * M
@@ -398,7 +423,6 @@ def test_auto_compact_interleaves_with_drift_refit(spark, tmp_path):
             _codes_key(
                 read_ivfpq_codes(
                     spark, tabs[m]["ivfpq_codes"], zones[m],
-                    retained_sample_mode=True,
                 )
             )
             for m in ("auto", "plain")
