@@ -50,18 +50,29 @@ def validate_orders(orders: DataFrame) -> DataFrame:
     return out
 
 
+def validate_order_item_rows(
+    order_items: DataFrame, strict: bool = False
+) -> DataFrame:
+    """P2 + P3: the row-local item rules, null-drop and positive price
+    (J1 needs the orders; the event pipeline applies it when an item's
+    order lands)."""
+    items = order_items.na.drop(subset=list(ORDER_ITEMS_REQUIRED)).filter(
+        F.col("sale_price") > 0
+    )
+    if strict and "quantity" in items.columns:
+        items = items.filter(F.col("quantity") > 0)
+    return items
+
+
 def validate_order_items(
     order_items: DataFrame,
     valid_orders: DataFrame,
     strict: bool = False,
 ) -> DataFrame:
     """P2 + P3 + J1: null-drop, positive price, order-existence semi-join."""
-    items = order_items.na.drop(subset=list(ORDER_ITEMS_REQUIRED)).filter(
-        F.col("sale_price") > 0
+    return validate_order_item_rows(order_items, strict=strict).join(
+        valid_orders.select("order_id"), "order_id", "left_semi"
     )
-    if strict and "quantity" in items.columns:
-        items = items.filter(F.col("quantity") > 0)
-    return items.join(valid_orders.select("order_id"), "order_id", "left_semi")
 
 
 def validate_products(products: DataFrame, strict: bool = False) -> DataFrame:

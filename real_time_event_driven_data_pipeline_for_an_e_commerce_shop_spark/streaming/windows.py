@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import det_round, exact_sum, ratio
+from ..functions.core import exact_sum
 
 
 def watermarked_daily_rollup(
@@ -47,106 +47,6 @@ def watermarked_daily_rollup(
             "n_events",
             "total_value",
             "approx_unique_users",
-        )
-    )
-
-
-def order_kpi_streaming_update(
-    items_stream: DataFrame,
-    watermark: str = "1 day",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Update-mode streaming twin of ``operators.kpi.order_kpi`` with
-    BOUNDED state (SURVEY.md §7 trap 8 / ROADMAP #4).
-
-    Input is the item-fact stream shape (``created_at`` event time,
-    ``order_id``, ``user_id``, ``id``, ``sale_price``,
-    ``is_returned``). Exact ``countDistinct`` is rejected by Spark on
-    streams — and would need state linear in distinct keys per group
-    anyway. ``approx_count_distinct`` keeps one fixed-size HLL sketch
-    (2^p registers at relative error ``rsd``) per open day, so state =
-    open-days × constant bytes regardless of how many distinct orders
-    or customers arrive — the property the flat-state streaming test
-    asserts via ``stateOperators.numRowsTotal``. The watermark evicts
-    days older than the lateness bound, bounding the open-day count in
-    turn. Sums/counts are exact; only the two distinct counts are
-    approximate (±rsd) — the documented divergence from the batch twin.
-    """
-    return (
-        items_stream.withWatermark("created_at", watermark)
-        .groupBy(F.window("created_at", "1 day"))
-        .agg(
-            F.approx_count_distinct("order_id", rsd).alias("total_orders"),
-            exact_sum(det_round(F.col("sale_price"), 2), 2).alias(
-                "total_revenue"
-            ),
-            F.count("id").alias("total_items_sold"),
-            F.sum(F.col("is_returned").cast("long")).alias("_returns"),
-            F.count(F.lit(1)).alias("_items"),
-            F.approx_count_distinct("user_id", rsd).alias("unique_customers"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd").alias("order_date"),
-            "total_orders",
-            "total_revenue",
-            "total_items_sold",
-            (det_round(ratio(F.col("_returns"), F.col("_items")), 4) * 100).alias(
-                "return_rate"
-            ),
-            "unique_customers",
-        )
-    )
-
-
-def category_kpi_streaming_update(
-    items_stream: DataFrame,
-    products_dim: DataFrame,
-    watermark: str = "1 day",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Update-mode streaming twin of ``operators.kpi.category_kpi`` —
-    the stream-static join surface the order twin doesn't exercise.
-
-    ``products_dim`` is a STATIC DataFrame (``id`` + ``category``)
-    joined to the item stream as an explicit broadcast stream-static
-    join: Spark re-plans the static side per micro-batch, no state
-    store is involved in the join itself, and the stream side never
-    shuffles for it — the same J3 shape as batch, which is exactly how
-    a dimension lookup should ride on a 100 TB/day stream. The A9
-    null-category drop applies post-join, as in batch.
-
-    State per (open day × category) is one fixed-size HLL sketch for
-    the distinct-order denominator (same bounded-state argument as
-    ``order_kpi_streaming_update``); revenue and return counts are
-    exact, so ``daily_revenue`` matches batch to the cent while
-    ``avg_order_value`` / ``avg_return_rate`` carry the documented
-    ±rsd divergence of their denominator.
-    """
-    dim = products_dim.select(
-        F.col("id").alias("product_id"), "category"
-    )
-    enriched = items_stream.join(F.broadcast(dim), "product_id", "left")
-    return (
-        enriched.filter(F.col("category").isNotNull())
-        .withWatermark("created_at", watermark)
-        .groupBy(F.window("created_at", "1 day"), "category")
-        .agg(
-            exact_sum(det_round(F.col("sale_price"), 2), 2).alias(
-                "daily_revenue"
-            ),
-            F.approx_count_distinct("order_id", rsd).alias("_orders"),
-            F.sum(F.col("is_returned").cast("long")).alias("_returns"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd").alias("order_date"),
-            "category",
-            "daily_revenue",
-            det_round(
-                F.col("daily_revenue") / F.col("_orders"), 2
-            ).alias("avg_order_value"),
-            (det_round(ratio(F.col("_returns"), F.col("_orders")), 4) * 100).alias(
-                "avg_return_rate"
-            ),
         )
     )
 

@@ -83,6 +83,181 @@ def test_event_driven_pipeline_incremental(spark, tmp_path):
     assert spark.read.parquet(f"{out}/order_kpi").count() == 2
 
 
+def _kpi_hashes(spark, out_dir: str) -> dict[str, tuple[int, str]]:
+    """{KPI table: (rows, order-insensitive value hash)} under ``out_dir``."""
+    from scripts.check_oracle import value_hash
+
+    out = {}
+    for name in ("category_kpi", "order_kpi"):
+        df = spark.read.parquet(f"{out_dir}/{name}").toPandas()
+        df["order_date"] = df["order_date"].astype(str)
+        out[name] = (len(df), value_hash(df))
+    return out
+
+
+def _batch_kpi_hashes(spark, raw: str, check_dir: str) -> dict[str, tuple[int, str]]:
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
+        pipeline_batch,
+    )
+
+    pipeline_batch.run(spark, raw, check_dir)
+    return _kpi_hashes(spark, check_dir)
+
+
+def test_event_driven_pipeline_late_order(spark, tmp_path):
+    """An item that lands before its order counts once the order lands,
+    even when that upload holds orders alone; an item whose order never
+    lands is never counted. The streamed tables then equal a batch run
+    over the same raw zone."""
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    header, order1, order2, order3 = ORDERS_CSV.strip().splitlines()
+    orphan = "14,99,103,1,delivered,2025-03-09T09:00:00,,,,5.0\n"
+    _write(f"{raw}/products.csv", PRODUCTS_CSV)
+    _write(f"{raw}/orders/part1.csv", "\n".join([header, order1, order2, ""]))
+    _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
+    _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV + orphan)
+
+    run_event_driven_pipeline(spark, raw, out, ckpt)
+    dates = {str(r["order_date"]) for r in spark.read.parquet(f"{out}/order_kpi").collect()}
+    assert dates == {"2025-03-08"}  # order 3's item waits for its order
+
+    # an upload of orders alone: order 3 lands, and its waiting item counts
+    _write(f"{raw}/orders/part2.csv", "\n".join([header, order3, ""]))
+    run_event_driven_pipeline(spark, raw, out, ckpt)
+    days = {str(r["order_date"]): r for r in spark.read.parquet(f"{out}/order_kpi").collect()}
+    assert set(days) == {"2025-03-08", "2025-03-09"}
+    assert days["2025-03-09"]["total_items_sold"] == 1  # item 14's order never landed
+    assert _kpi_hashes(spark, out) == _batch_kpi_hashes(spark, raw, str(tmp_path / "check"))
+
+
+def test_event_driven_pipeline_archives_uploads(spark, tmp_path):
+    """``archive_dir``: after a call, the orders and order_items files it
+    processed sit under ``archive_dir`` at their absolute paths, and a
+    rerun with no new files changes no KPI row."""
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    archive = str(tmp_path / "archive")
+    _write(f"{raw}/products.csv", PRODUCTS_CSV)
+    _write(f"{raw}/orders/part1.csv", ORDERS_CSV)
+    _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
+    _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV)
+
+    run_event_driven_pipeline(spark, raw, out, ckpt, archive_dir=archive)
+    for name, files in (("orders", ["part1.csv"]),
+                        ("order_items", ["part1.csv", "part2.csv"])):
+        assert os.listdir(f"{raw}/{name}") == []
+        moved = os.path.join(archive, os.path.abspath(f"{raw}/{name}").lstrip("/"))
+        assert sorted(os.listdir(moved)) == files
+    assert os.path.exists(f"{raw}/products.csv")
+    kpis = _kpi_hashes(spark, out)
+    assert kpis["order_kpi"][0] == 2
+
+    run_event_driven_pipeline(spark, raw, out, ckpt, archive_dir=archive)
+    assert _kpi_hashes(spark, out) == kpis
+
+
+@pytest.mark.slow
+def test_event_driven_pipeline_crash_replay(spark, tmp_path, monkeypatch):
+    """Two crash windows of one epoch, each healed by the restart:
+
+    1. the items append lands but its commit marker is never written —
+       the replay scrubs the orphan ``_epoch`` directory and the rows
+       land once;
+    2. the landing commits but the KPI upserts never run — the replay
+       finds the landing committed and still upserts.
+
+    Afterwards the KPI tables equal a batch run and every zone holds
+    each key exactly once."""
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.kv import (
+        KeyedParquetUpsertSink,
+    )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
+        pipeline as stream_pipeline,
+    )
+
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    zone = f"{out}/{stream_pipeline.EVENT_ZONE_DIR}"
+    _write(f"{raw}/products.csv", PRODUCTS_CSV)
+    _write(f"{raw}/orders/part1.csv", ORDERS_CSV)
+    _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
+
+    commit = stream_pipeline._commit_epoch
+
+    def crash_before_items_commit(zone_dir, name, epoch_id, n_rows):
+        if name == "order_items":
+            raise RuntimeError("crash between the items append and its commit")
+        commit(zone_dir, name, epoch_id, n_rows)
+
+    monkeypatch.setattr(stream_pipeline, "_commit_epoch", crash_before_items_commit)
+    with pytest.raises(Exception):
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert stream_pipeline.committed_epochs(zone, "orders") == {0}
+    assert stream_pipeline.committed_epochs(zone, "order_items") == set()
+    assert os.path.isdir(f"{zone}/order_items/_epoch=0")
+    monkeypatch.undo()
+    run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert stream_pipeline.committed_epochs(zone, "order_items") == {0}
+    assert _kpi_hashes(spark, out) == _batch_kpi_hashes(spark, raw, str(tmp_path / "check1"))
+
+    def crash_before_upsert(self, batch):
+        raise RuntimeError("crash between the commit and the KPI upsert")
+
+    _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV)
+    monkeypatch.setattr(KeyedParquetUpsertSink, "upsert", crash_before_upsert)
+    with pytest.raises(Exception):
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert stream_pipeline.committed_epochs(zone, "order_items") == {0, 1}
+    monkeypatch.undo()
+    run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert _kpi_hashes(spark, out) == _batch_kpi_hashes(spark, raw, str(tmp_path / "check2"))
+    for name, key in (("orders", "order_id"), ("order_items", "id")):
+        landed = spark.read.parquet(f"{zone}/{name}")
+        assert landed.count() == landed.select(key).distinct().count() > 0
+
+
+#: Per-wave bound on the bytes the JVM reads, for the flat-read test below.
+WAVE_READ_BOUND_MB = 8.0
+
+
+@pytest.mark.slow
+def test_event_driven_pipeline_reads_flat_per_wave(spark, tmp_path, monkeypatch):
+    """Bytes the driver JVM reads per upload wave (``rchar`` of
+    ``/proc/<pid>/io``, as perfbench's ``op_input_mb`` measures them)
+    stay under a bound from wave 2 to wave 10 on a 30-day zone: a wave
+    reads its upload, products and the touched dates, not the CSV
+    history."""
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench"))
+    import gen
+
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    spec = gen.ZoneSpec(seed=7)
+    gen.write_history(spec, raw)
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+
+    def rchar() -> int:
+        with open(f"/proc/{pid}/io") as f:
+            return next(int(line.split()[1]) for line in f if line.startswith("rchar:"))
+
+    read_mb = []
+    for wave in range(1, 11):  # wave 1 also ingests the history
+        paths, _ = gen.write_wave(spec, wave, str(tmp_path / "staging"))
+        for table in ("orders", "order_items"):
+            os.rename(paths[table], os.path.join(raw, table, os.path.basename(paths[table])))
+        before = rchar()
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+        read_mb.append((rchar() - before) / 1e6)
+    assert max(read_mb[1:]) < WAVE_READ_BOUND_MB, read_mb
+    assert _kpi_hashes(spark, out) == _batch_kpi_hashes(spark, raw, str(tmp_path / "check"))
+
+
 @pytest.fixture()
 def events_stream(spark, tmp_path):
     events = load_testdata(spark, SF, ("events",))["events"]
@@ -363,216 +538,6 @@ def test_streaming_dedup_drops_redelivered_events(spark, tmp_path):
         op = q.lastProgress["stateOperators"][0]
         assert op["operatorName"] == "dedupeWithinWatermark"
         assert op["numRowsDroppedByWatermark"] == 0
-    finally:
-        q.stop()
-
-
-def test_streaming_kpi_values_converge_to_batch(spark, tmp_path):
-    """VERDICT r3 item #5 — the value-parity gate for the streaming KPI
-    twin: replay the ENTIRE sf0.001 item-fact as a finite stream (two
-    micro-batches, then drained) and the final update-mode row per day
-    must equal batch ``order_kpi`` — exactly for the sums/counts/rate,
-    within the documented HLL tolerance for the two distinct counts."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
-        kpi,
-        mapping,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        order_kpi_streaming_update,
-    )
-
-    t = load_testdata(spark, SF, ("orders", "lineitem", "part"))
-    fact = mapping.item_fact_from_tpch(t["lineitem"], t["orders"], t["part"])
-    stream_input = fact.select(
-        "id",
-        "order_id",
-        "user_id",
-        "sale_price",
-        "is_returned",
-        F.col("order_date").cast("timestamp").alias("created_at"),
-    )
-
-    src = str(tmp_path / "kpi_parity_src")
-    ckpt = str(tmp_path / "kpi_parity_ckpt")
-    # two micro-batches, split by EVENT TIME (an ordered replay): the
-    # 1-day watermark advances to max(batch1)-1d after the first batch,
-    # so a batch 2 containing older events would see them dropped as
-    # late — which is watermark semantics, not a parity bug
-    cutoff = "1996-01-01"
-    stream_input.filter(F.col("created_at") < cutoff).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(stream_input.schema).parquet(src)
-    rsd = 0.05
-    q = (
-        order_kpi_streaming_update(stream, rsd=rsd)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("kpi_parity")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        stream_input.filter(F.col("created_at") >= cutoff).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-        # update-mode memory sink appends one row per updated window per
-        # batch — insertion order makes the LAST row per day the final
-        got = {
-            r["order_date"]: r
-            for r in spark.sql("SELECT * FROM kpi_parity").collect()
-        }
-    finally:
-        q.stop()
-
-    expected = {
-        str(r["order_date"]): r for r in kpi.order_kpi(fact).collect()
-    }
-    assert set(got) == set(expected)
-    tol = 3 * rsd  # documented HLL divergence, 3-sigma
-    for day, exp in expected.items():
-        g = got[day]
-        assert g["total_revenue"] == exp["total_revenue"], day
-        assert g["total_items_sold"] == exp["total_items_sold"], day
-        assert g["return_rate"] == exp["return_rate"], day
-        assert abs(g["total_orders"] - exp["total_orders"]) <= max(
-            1, tol * exp["total_orders"]
-        ), day
-        assert abs(g["unique_customers"] - exp["unique_customers"]) <= max(
-            1, tol * exp["unique_customers"]
-        ), day
-
-
-def test_streaming_category_kpi_stream_static_join_parity(spark, tmp_path):
-    """category_kpi's streaming twin: the dim lookup is a stream-static
-    BROADCAST join (re-planned per micro-batch, no join state), and a
-    full ordered replay must converge to batch category_kpi — exactly
-    on daily_revenue, within HLL tolerance on the two
-    distinct-order-denominated metrics."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
-        kpi,
-        mapping,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        category_kpi_streaming_update,
-    )
-
-    t = load_testdata(spark, SF, ("orders", "lineitem", "part"))
-    fact = mapping.item_fact_from_tpch(t["lineitem"], t["orders"], t["part"])
-    stream_input = fact.select(
-        "id",
-        "order_id",
-        "product_id",
-        "sale_price",
-        "is_returned",
-        F.col("order_date").cast("timestamp").alias("created_at"),
-    )
-    products = mapping.products_from_tpch(t["part"])
-
-    src = str(tmp_path / "cat_parity_src")
-    ckpt = str(tmp_path / "cat_parity_ckpt")
-    cutoff = "1996-01-01"
-    stream_input.filter(F.col("created_at") < cutoff).write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema(stream_input.schema).parquet(src)
-    rsd = 0.05
-    q = (
-        category_kpi_streaming_update(stream, products, rsd=rsd)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cat_parity")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        stream_input.filter(F.col("created_at") >= cutoff).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-        got = {
-            (r["order_date"], r["category"]): r
-            for r in spark.sql("SELECT * FROM cat_parity").collect()
-        }
-    finally:
-        q.stop()
-
-    expected = {
-        (str(r["order_date"]), r["category"]): r
-        for r in kpi.category_kpi(fact).collect()
-    }
-    assert set(got) == set(expected)
-    tol = 3 * rsd
-    for key, exp in expected.items():
-        g = got[key]
-        assert g["daily_revenue"] == exp["daily_revenue"], key
-        assert abs(g["avg_order_value"] - exp["avg_order_value"]) <= max(
-            0.01, tol * exp["avg_order_value"]
-        ), key
-        assert abs(g["avg_return_rate"] - exp["avg_return_rate"]) <= max(
-            0.01, tol * max(exp["avg_return_rate"], 1.0)
-        ), key
-
-
-def test_update_mode_kpi_state_stays_flat(spark, tmp_path):
-    """ROADMAP #4: the update-mode daily KPI keeps one HLL sketch per
-    open day, so the state-store row count must NOT grow as thousands
-    of new distinct orders/customers stream in — and the approximate
-    distinct counts must land within the sketch's error bound."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        order_kpi_streaming_update,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    schema = (
-        "id long, order_id long, user_id long, sale_price double, "
-        "is_returned boolean, created_at timestamp"
-    )
-
-    def chunk(start):  # 1000 items, 500 orders, 500 users — all new ids
-        return spark.range(start, start + 1000).select(
-            F.col("id"),
-            (F.col("id") / 2).cast("long").alias("order_id"),
-            (F.col("id") / 2).cast("long").alias("user_id"),
-            F.lit(10.0).alias("sale_price"),
-            (F.col("id") % 4 == 0).alias("is_returned"),
-            F.to_timestamp(F.lit("2025-03-08 12:00:00")).alias("created_at"),
-        )
-
-    chunk(0).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        order_kpi_streaming_update(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("kpi_update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        state_rows = []
-        for i in range(1, 4):
-            q.processAllAvailable()
-            state_rows.append(q.lastProgress["stateOperators"][0]["numRowsTotal"])
-            if i < 3:
-                chunk(i * 1000).write.mode("append").parquet(src)
-        # one open day → exactly one state row, every batch, despite
-        # 1500 distinct orders/users by the end
-        assert state_rows == [1, 1, 1], state_rows
-        final = {r["order_date"]: r for r in spark.sql(
-            "SELECT * FROM kpi_update"
-        ).collect()}
-        row = final["2025-03-08"]
-        assert row["total_items_sold"] == 3000
-        assert row["total_revenue"] == 30000.0
-        assert row["return_rate"] == 25.0
-        # HLL at rsd=0.05 on 1500 distinct ids — allow 3 sigma
-        assert abs(row["total_orders"] - 1500) <= 0.15 * 1500
-        assert abs(row["unique_customers"] - 1500) <= 0.15 * 1500
     finally:
         q.stop()
 
