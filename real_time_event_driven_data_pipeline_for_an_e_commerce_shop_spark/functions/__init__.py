@@ -1,3 +1,3 @@
-from .core import det_round, exact_sum, money_sum, ratio
+from .core import det_round, exact_sum, ratio
 
-__all__ = ["det_round", "exact_sum", "money_sum", "ratio"]
+__all__ = ["det_round", "exact_sum", "ratio"]

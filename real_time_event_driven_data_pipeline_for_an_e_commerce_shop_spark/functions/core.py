@@ -15,8 +15,9 @@ that must hash-match across engines cannot use either engine's native
    calculator. Semantically round-half-up, matching the reference's
    positive-valued KPIs.
 
-``sql_det_round``/``sql_money_sum`` emit the mirror-image ANSI SQL for
-the DuckDB oracle so both sides compute literally the same doubles.
+``queries.round_sql``/``queries.exact_sum_sql`` emit the mirror-image
+ANSI SQL for the DuckDB oracle so both sides compute literally the same
+doubles.
 """
 
 from __future__ import annotations
@@ -55,15 +56,10 @@ def det_round(col: Column, digits: int = 2) -> Column:
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
 
-def money_sum(col: Column) -> Column:
-    """Order-independent exact sum of a 2-decimal money column, as double."""
-    return exact_sum(col, 2)
-
-
 def exact_sum(col: Column, digits: int = 2) -> Column:
     """Deterministic sum of a derived numeric column: det-round to
     ``digits``, cast to DECIMAL (exact, order-independent sum), back to
-    double. Mirror: :func:`sql_exact_sum`."""
+    double. Mirror: ``queries.exact_sum_sql``."""
     return F.sum(det_round(col, digits).cast(f"decimal(18,{digits})")).cast("double")
 
 
@@ -89,20 +85,6 @@ def md5_long(col: Column, hex_chars: int = 12) -> Column:
 def sql_md5_long(expr: str, hex_chars: int = 12) -> str:
     """DuckDB mirror of :func:`md5_long` (bit-identical, verified)."""
     return f"CAST(('0x' || substring(md5({expr}), 1, {hex_chars})) AS BIGINT)"
-
-
-def sql_det_round(expr: str, digits: int = 2) -> str:
-    """DuckDB/ANSI mirror of :func:`det_round`."""
-    scale = float(10**digits)
-    return f"(FLOOR(({expr}) * {scale} + 0.5) / {scale})"
-
-
-def sql_exact_sum(expr: str, digits: int = 2) -> str:
-    """DuckDB/ANSI mirror of :func:`exact_sum`."""
-    return (
-        f"CAST(SUM(CAST({sql_det_round(expr, digits)} AS"
-        f" DECIMAL(18,{digits}))) AS DOUBLE)"
-    )
 
 
 def scale_to_bits(col: Column, lo: float, hi: float, bits: int = 12) -> Column:

@@ -16,33 +16,70 @@ task_1.py:106-141``):
   (``task_1.py:133-136``); ``to_date`` is null-preserving exactly like
   ``pd.to_datetime(...).dt.date``.
 
-Everything is built-in Catalyst expressions: predicates push into the
-scan, and because validation is a DataFrame→DataFrame function the
-optimizer can see through it into the KPI stage when the intermediate
+P1–P3 are stated once, in :data:`RULES`: the validators keep the rows
+no rule fails, and :func:`validation_reject_summary` counts each reject
+under its first failing rule. Everything is built-in Catalyst
+expressions: the null rules push into the scan as ``IsNotNull``, and
+because validation is a DataFrame→DataFrame function the optimizer can
+see through it into the KPI stage when the intermediate
 materialization is skipped.
-
-The README documents two extra rules the reference never implemented
-(``README.md:33-34`` — products.price > 0, quantity > 0); they are
-available behind ``strict=True`` so golden-parity runs default to the
-shipped code behavior (SURVEY.md §2.2 divergence note).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-ORDERS_REQUIRED = ("order_id", "user_id", "created_at")
-ORDER_ITEMS_REQUIRED = ("id", "product_id", "sale_price")
+
+def _is_null(col: str) -> Callable[[], Column]:
+    return lambda: F.col(col).isNull()
+
+
+#: Task-1 row rules per table, in priority order: ``(rule, fails)``
+#: where ``fails()`` builds the Column that is true on a reject (built
+#: on call — a Column needs an active SparkContext). A reject counts
+#: under its FIRST failing rule, so reasons are deterministic; a
+#: ``fails`` may be null only on rows an earlier rule already fails.
+#: The reference README says invalid records are "logged and skipped"
+#: (README.md:35); its task_1.py:106-141 drops them silently
+#: (SURVEY.md §2.2).
+RULES: dict[str, tuple[tuple[str, Callable[[], Column]], ...]] = {
+    "orders": (
+        ("null_order_id", _is_null("order_id")),
+        ("null_user_id", _is_null("user_id")),
+        ("null_created_at", _is_null("created_at")),
+    ),
+    "order_items": (
+        ("null_id", _is_null("id")),
+        ("null_product_id", _is_null("product_id")),
+        # NaN is missing too, as for pandas ``dropna`` and ``na.drop``
+        ("null_sale_price",
+         lambda: F.col("sale_price").isNull() | F.isnan("sale_price")),
+        ("nonpositive_sale_price", lambda: F.col("sale_price") <= 0),
+    ),
+}
+
+
+def _passes(table: str) -> Column:
+    return reduce(Column.__and__, (~fails() for _, fails in RULES[table]))
+
+
+def _first_failing(table: str) -> Column:
+    return F.coalesce(
+        *(F.when(fails(), F.lit(rule)) for rule, fails in RULES[table])
+    )
 
 
 def validate_orders(orders: DataFrame) -> DataFrame:
-    """P1 + P4: mandatory-column null-drop, then date projections.
+    """P1 + P4: the orders rules, then date projections.
 
     ``return_date`` is derived only when the source carries
     ``returned_at`` (the TPC-H-mapped corpus has no order-level return
     timestamp; FIXTURES.md §B)."""
-    out = orders.na.drop(subset=list(ORDERS_REQUIRED)).withColumn(
+    out = orders.filter(_passes("orders")).withColumn(
         "order_date", F.to_date("created_at")
     )
     if "returned_at" in orders.columns:
@@ -50,146 +87,50 @@ def validate_orders(orders: DataFrame) -> DataFrame:
     return out
 
 
-def validate_order_item_rows(
-    order_items: DataFrame, strict: bool = False
-) -> DataFrame:
-    """P2 + P3: the row-local item rules, null-drop and positive price
-    (J1 needs the orders; the event pipeline applies it when an item's
-    order lands)."""
-    items = order_items.na.drop(subset=list(ORDER_ITEMS_REQUIRED)).filter(
-        F.col("sale_price") > 0
-    )
-    if strict and "quantity" in items.columns:
-        items = items.filter(F.col("quantity") > 0)
-    return items
+def validate_order_item_rows(order_items: DataFrame) -> DataFrame:
+    """P2 + P3: the row-local item rules (J1 needs the orders; the
+    event pipeline applies it when an item's order lands)."""
+    return order_items.filter(_passes("order_items"))
 
 
 def validate_order_items(
-    order_items: DataFrame,
-    valid_orders: DataFrame,
-    strict: bool = False,
+    order_items: DataFrame, valid_orders: DataFrame
 ) -> DataFrame:
-    """P2 + P3 + J1: null-drop, positive price, order-existence semi-join."""
-    return validate_order_item_rows(order_items, strict=strict).join(
+    """P2 + P3 + J1: the item rules, then the order-existence semi-join."""
+    return validate_order_item_rows(order_items).join(
         valid_orders.select("order_id"), "order_id", "left_semi"
     )
-
-
-def validate_products(products: DataFrame, strict: bool = False) -> DataFrame:
-    """Products pass through unvalidated in the reference
-    (``task_1.py:120,141``); ``strict`` applies the README-documented
-    positive-price rule."""
-    if strict:
-        return products.filter(F.col("retail_price") > 0)
-    return products
-
-
-#: Reject rules in priority order — a record is quarantined under its
-#: FIRST failing rule, so reasons are deterministic and counts partition
-#: the reject set (reference README.md:35 "Invalid records are logged
-#: and skipped" — unimplemented in the reference's task_1.py:106-141,
-#: which drops silently; SURVEY.md §2.2 flags the gap).
-ORDERS_REJECT_RULES: tuple[tuple[str, str], ...] = (
-    ("null_order_id", "order_id"),
-    ("null_user_id", "user_id"),
-    ("null_created_at", "created_at"),
-)
-ITEMS_NULL_REJECT_RULES: tuple[tuple[str, str], ...] = (
-    ("null_id", "id"),
-    ("null_product_id", "product_id"),
-    ("null_sale_price", "sale_price"),
-)
-
-
-def _null_reason(rules: tuple[tuple[str, str], ...]) -> Column:
-    reason = F.lit(None).cast("string")
-    for rule, col in reversed(rules):
-        reason = F.when(F.col(col).isNull(), F.lit(rule)).otherwise(reason)
-    return reason
-
-
-def validate_orders_with_rejects(
-    orders: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """P1 + P4 with quarantine: returns (valid, rejects) where
-    ``valid`` equals :func:`validate_orders` exactly (tested) and
-    ``rejects`` carries the source row plus a ``reject_reason``.
-
-    One annotation projection, two filters — Catalyst shares the scan
-    when both sides are consumed in one action, and each side alone
-    collapses to a single filtered scan. No extra shuffle."""
-    annotated = orders.withColumn(
-        "reject_reason", _null_reason(ORDERS_REJECT_RULES)
-    )
-    valid = annotated.filter(F.col("reject_reason").isNull()).drop(
-        "reject_reason"
-    )
-    valid = valid.withColumn("order_date", F.to_date("created_at"))
-    if "returned_at" in orders.columns:
-        valid = valid.withColumn("return_date", F.to_date("returned_at"))
-    rejects = annotated.filter(F.col("reject_reason").isNotNull())
-    return valid, rejects
-
-
-def validate_order_items_with_rejects(
-    order_items: DataFrame,
-    valid_orders: DataFrame,
-    strict: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """P2 + P3 + J1 with quarantine. Reject reasons, in priority order:
-    the null rules, ``nonpositive_sale_price``, then ``unknown_order``
-    (the J1 anti-join — the rows the reference's ``isin`` filter drops
-    with no trace). ``valid`` equals :func:`validate_order_items`."""
-    reason = _null_reason(ITEMS_NULL_REJECT_RULES)
-    reason = F.when(reason.isNotNull(), reason).otherwise(
-        F.when(F.col("sale_price") <= 0, F.lit("nonpositive_sale_price"))
-    )
-    if strict and "quantity" in order_items.columns:
-        reason = F.when(reason.isNotNull(), reason).otherwise(
-            F.when(F.col("quantity") <= 0, F.lit("nonpositive_quantity"))
-        )
-    annotated = order_items.withColumn("reject_reason", reason)
-    passed = annotated.filter(F.col("reject_reason").isNull()).drop(
-        "reject_reason"
-    )
-    order_keys = valid_orders.select("order_id")
-    valid = passed.join(order_keys, "order_id", "left_semi")
-    orphans = passed.join(order_keys, "order_id", "left_anti").withColumn(
-        "reject_reason", F.lit("unknown_order")
-    )
-    rejects = annotated.filter(F.col("reject_reason").isNotNull()).unionByName(
-        orphans
-    )
-    return valid, rejects
 
 
 def validation_reject_summary(
     orders: DataFrame, order_items: DataFrame
 ) -> DataFrame:
-    """Reject counts per (table, rule) — every declared rule appears,
+    """Reject counts per (table, rule): each row of :data:`RULES`, then
+    ``order_items``/``unknown_order`` — the J1 anti-join, the rows the
+    reference's ``isin`` filter drops with no trace. Every rule appears,
     zero or not, so the output shape is data-independent (a clean
     corpus yields all-zero counts, not an empty frame the correctness
-    gate would compare vacuously). The per-rule counts are one
-    aggregation over each annotated scan plus the orphan anti-join."""
-    v_orders, o_rej = validate_orders_with_rejects(orders)
-    _, i_rej = validate_order_items_with_rejects(order_items, v_orders)
-    spark = orders.sparkSession
-    rules = spark.createDataFrame(
-        [("orders", r) for r, _ in ORDERS_REJECT_RULES]
-        + [("order_items", r) for r, _ in ITEMS_NULL_REJECT_RULES]
-        + [("order_items", "nonpositive_sale_price"),
-           ("order_items", "unknown_order")],
-        "table_name string, rule string",
+    gate would compare vacuously)."""
+    orphans = validate_order_item_rows(order_items).join(
+        validate_orders(orders).select("order_id"), "order_id", "left_anti"
     )
     counts = (
-        o_rej.select(F.lit("orders").alias("table_name"),
-                     F.col("reject_reason").alias("rule"))
-        .unionByName(
-            i_rej.select(F.lit("order_items").alias("table_name"),
-                         F.col("reject_reason").alias("rule"))
-        )
+        orders.select(F.lit("orders").alias("table_name"),
+                      _first_failing("orders").alias("rule"))
+        .unionByName(order_items.select(
+            F.lit("order_items").alias("table_name"),
+            _first_failing("order_items").alias("rule")))
+        .unionByName(orphans.select(
+            F.lit("order_items").alias("table_name"),
+            F.lit("unknown_order").alias("rule")))
+        .filter(F.col("rule").isNotNull())
         .groupBy("table_name", "rule")
         .agg(F.count(F.lit(1)).alias("_n"))
+    )
+    rules = orders.sparkSession.createDataFrame(
+        [(table, rule) for table, entries in RULES.items() for rule, _ in entries]
+        + [("order_items", "unknown_order")],
+        "table_name string, rule string",
     )
     return rules.join(counts, ["table_name", "rule"], "left").select(
         "table_name",
@@ -199,15 +140,14 @@ def validation_reject_summary(
 
 
 def run_validation(
-    products: DataFrame,
-    orders: DataFrame,
-    order_items: DataFrame,
-    strict: bool = False,
+    products: DataFrame, orders: DataFrame, order_items: DataFrame
 ) -> dict[str, DataFrame]:
-    """Full Task-1 stage: returns the validated star schema, lazily."""
+    """Full Task-1 stage: returns the validated star schema, lazily.
+    Products pass through unvalidated, as in the reference
+    (``task_1.py:120,141``)."""
     v_orders = validate_orders(orders)
     return {
-        "products": validate_products(products, strict=strict),
+        "products": products,
         "orders": v_orders,
-        "order_items": validate_order_items(order_items, v_orders, strict=strict),
+        "order_items": validate_order_items(order_items, v_orders),
     }

@@ -110,7 +110,7 @@ def round_sql(expr: str, digits: int = 2) -> str:
     return f"(FLOOR(({expr}) * {scale} + 0.5) / {scale})"
 
 
-def moneysum_sql(expr: str, digits: int = 2) -> str:
+def exact_sum_sql(expr: str, digits: int = 2) -> str:
     return (
         f"CAST(SUM(CAST({round_sql(expr, digits)} AS DECIMAL(18,{digits})))"
         " AS DOUBLE)"
@@ -217,8 +217,8 @@ def q_validation_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH fact AS ({SQL_FACT})
     SELECT category, order_date,
-           {round_sql(moneysum_sql("sale_price"))} AS daily_revenue,
-           {round_sql(moneysum_sql("sale_price") + " / COUNT(DISTINCT order_id)")}
+           {round_sql(exact_sum_sql("sale_price"))} AS daily_revenue,
+           {round_sql(exact_sum_sql("sale_price") + " / COUNT(DISTINCT order_id)")}
                AS avg_order_value,
            {round_sql(
                "CAST(SUM(CASE WHEN is_returned THEN 1 ELSE 0 END) AS DOUBLE)"
@@ -241,7 +241,7 @@ def q_category_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH fact AS ({SQL_FACT})
     SELECT order_date,
            COUNT(DISTINCT order_id) AS total_orders,
-           {round_sql(moneysum_sql("sale_price"))} AS total_revenue,
+           {round_sql(exact_sum_sql("sale_price"))} AS total_revenue,
            COUNT(id) AS total_items_sold,
            {round_sql(
                "CAST(SUM(CASE WHEN is_returned THEN 1 ELSE 0 END) AS DOUBLE)"
@@ -330,8 +330,8 @@ def q_order_kpi_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH fact AS ({SQL_FACT}),
     cat AS (
         SELECT category, order_date,
-               {round_sql(moneysum_sql("sale_price"))} AS daily_revenue,
-               {round_sql(moneysum_sql("sale_price")
+               {round_sql(exact_sum_sql("sale_price"))} AS daily_revenue,
+               {round_sql(exact_sum_sql("sale_price")
                           + " / COUNT(DISTINCT order_id)")} AS avg_order_value,
                {round_sql(
                    "CAST(SUM(CASE WHEN is_returned THEN 1 ELSE 0 END) AS DOUBLE)"
@@ -361,13 +361,6 @@ def q_category_rank_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- OLAP breadth (§2.4/2.5 missing-surface extensions) ---------------
 
 from .operators import dedup, events, olap, similarity, text  # noqa: E402
-
-
-def exact_sum_sql(expr: str, digits: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST({round_sql(expr, digits)} AS DECIMAL(18,{digits})))"
-        " AS DOUBLE)"
-    )
 
 
 @query(
@@ -2534,7 +2527,7 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {moneysum_sql("o_totalprice", 2)} AS revenue
+           {exact_sum_sql("o_totalprice", 2)} AS revenue
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
@@ -2738,7 +2731,7 @@ def q_event_props_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "salted_join_agg",
     oracle=f"""
     SELECT c_mktsegment, COUNT(*) AS n_orders,
-           {moneysum_sql("o_totalprice", 2)} AS revenue
+           {exact_sum_sql("o_totalprice", 2)} AS revenue
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,

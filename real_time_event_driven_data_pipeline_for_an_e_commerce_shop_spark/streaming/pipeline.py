@@ -166,10 +166,8 @@ def run_event_driven_pipeline(
                 .filter(touched)
                 .drop("order_date"),
                 _read_path_zone(spark, orders_zone, orders.schema).filter(touched),
-                validate.validate_products(
-                    read_csv_table(
-                        spark, os.path.join(raw_dir, "products.csv"), PRODUCTS_SCHEMA
-                    )
+                read_csv_table(
+                    spark, os.path.join(raw_dir, "products.csv"), PRODUCTS_SCHEMA
                 ),
             )
             .persist()

@@ -328,6 +328,10 @@ def test_validate_filter_pushdown(spark):
     assert "GreaterThan(l_extendedprice,0" in pushed.replace(" ", "") or (
         "l_extendedprice" in pushed
     )
+    # the orders null rules reach the scan as IsNotNull
+    pushed = " ".join(pushed_filters(QUERIES["validate_orders"](spark, SF)))
+    for col in ("o_orderkey", "o_custkey", "o_orderdate"):
+        assert f"IsNotNull({col})" in pushed, pushed
 
 
 def test_narrow_ops_have_no_shuffle(spark):

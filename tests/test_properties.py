@@ -5,16 +5,18 @@ from __future__ import annotations
 
 import pytest
 
+import datetime as dt
 import math
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
     asof,
     events,
+    validate,
 )
 
 FAST = settings(
@@ -641,3 +643,69 @@ def test_recall_report_hits_are_exact_intersections(
     for q, hits in want_hits.items():
         assert got[q][0] == hits
         assert got[q][1] == math.floor(hits / k * 1e4 + 0.5) / 1e4
+
+
+def _maybe(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            _maybe(st.integers(0, 5)),
+            _maybe(st.integers(0, 3)),
+            _maybe(st.just(dt.datetime(2025, 3, 8, 10))),
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    st.lists(
+        st.tuples(
+            _maybe(st.integers(0, 100)),
+            _maybe(st.integers(0, 8)),  # order ids 6..8 never exist
+            _maybe(st.integers(0, 3)),
+            _maybe(
+                st.sampled_from([float("nan"), 0.0, -0.0, -2.5, 0.01, 9.99])
+            ),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+)
+@example(  # NaN and -0.0 prices on items whose order is valid
+    order_rows=[(1, 1, dt.datetime(2025, 3, 8, 10)), (2, None, None)],
+    item_rows=[(1, 1, 1, float("nan")), (2, 1, 1, -0.0), (3, 2, 1, 9.99),
+               (4, None, 1, 0.01), (5, 1, 2, 0.01)],
+)
+@FAST
+def test_validation_rejects_partition_the_input(spark, order_rows, item_rows):
+    """Per table, the valid rows plus the reject summary's counts are
+    exactly the input rows, for rows with nulls, NaN, signed zeros,
+    negative prices and dangling order ids; the valid items are the
+    ones the Task-1 rules keep, computed in Python."""
+    orders = spark.createDataFrame(
+        order_rows, "order_id long, user_id long, created_at timestamp"
+    )
+    items = spark.createDataFrame(
+        item_rows, "id long, order_id long, product_id long, sale_price double"
+    )
+    v_orders = validate.validate_orders(orders)
+    v_items = validate.validate_order_items(items, v_orders)
+    rejected = {"orders": 0, "order_items": 0}
+    for r in validate.validation_reject_summary(orders, items).collect():
+        rejected[r["table_name"]] += r["n_rejected"]
+    assert v_orders.count() + rejected["orders"] == len(order_rows)
+    assert v_items.count() + rejected["order_items"] == len(item_rows)
+
+    order_ids = {o for o, u, c in order_rows if None not in (o, u, c)}
+    want = sorted(
+        (i, o, p, s)
+        for i, o, p, s in item_rows
+        if None not in (i, p, s) and not math.isnan(s) and s > 0
+        and o in order_ids
+    )
+    got = sorted(
+        (r["id"], r["order_id"], r["product_id"], r["sale_price"])
+        for r in v_items.collect()
+    )
+    assert got == want
