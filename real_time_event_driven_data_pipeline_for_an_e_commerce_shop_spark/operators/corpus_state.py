@@ -48,11 +48,12 @@ md5-prefix hashes (:func:`~..functions.core.md5_long`) are applied to
 the same strings. ``tests/test_corpus_state.py`` asserts row-exact
 equality for all four states and plan-asserts the one-scan property.
 
-Streaming twin: ``streaming.windows.token_event_counts_streaming``
-maintains the same (doc_id, kind, s, h, c) grain as ONE update-mode
-aggregate, so live ingest feeds all four state families through a
-single stateful operator instead of four parallel streams over the
-same input.
+:func:`token_event_counts` is the grain's one definition on every
+path: ``streaming.pipeline.run_corpus_ingest`` lands it per
+micro-batch, and over a document stream it runs unchanged as ONE
+update-mode aggregate, so live ingest feeds all four state families
+through a single stateful operator instead of four parallel streams
+over the same input.
 """
 
 from __future__ import annotations
@@ -241,7 +242,18 @@ def token_event_counts(
     for 't' events — the term state's key; 'b'/'s' events carry only
     their 8-byte md5 prefix ``h``, which is all any consumer keys on,
     so the grain's shuffle and parquet bytes stay near the SMALLEST
-    of the four independent states it replaces."""
+    of the four independent states it replaces.
+
+    Over a document stream it is one update-mode aggregate (counts
+    are mergeable): state is Σ|distinct (doc, kind, string)| rows,
+    paid once per arriving document instead of once per state family,
+    and hash-sharded by the state store.
+
+    COMPATIBILITY: the stateful groupBy key is the grain schema
+    (:data:`GRAIN_SCHEMA_VERSION` — h2 joined the key in v2), so a
+    streaming checkpoint taken under an older grain version CANNOT
+    resume against this aggregate: rebuild the checkpoint (and any
+    landed grain zone) together (ADVICE r9)."""
     from .text import tokens
 
     return (

@@ -593,22 +593,31 @@ def mixture_weights(
     one-row scalar broadcasts (corpus total, normalizer); nothing else
     moves.
     """
-    counts = documents.groupBy(
+    return mixture_weights_from_counts(
+        stratum_counts(documents, stratum_col), alpha=alpha
+    )
+
+
+def stratum_counts(
+    documents: DataFrame, stratum_col: str = "source"
+) -> DataFrame:
+    """The per-stratum ``(stratum, n_docs)`` document-count grain
+    :func:`mixture_weights_from_counts` derives the mixture from.
+    Counts are mergeable, so over a document stream it runs as an
+    update-mode aggregate whose state never grows past |strata|."""
+    return documents.groupBy(
         F.col(stratum_col).alias("stratum")
     ).agg(F.count(F.lit(1)).alias("n_docs"))
-    return mixture_weights_from_counts(counts, alpha=alpha)
 
 
 def mixture_weights_from_counts(
     counts: DataFrame, alpha: float = 0.3
 ) -> DataFrame:
-    """:func:`mixture_weights` derived from an existing per-stratum
-    ``(stratum, n_docs)`` count table — the grain an update-mode
-    streaming aggregate maintains for free (counts are mergeable), so
-    a live ingest keeps stratum counts and the mixture rebalancing is
-    a millisecond batch derivation over that state, never a corpus
-    re-scan (full-replay parity vs the scan-based operator asserted in
-    tests/test_streaming.py, same twin pattern as the BM25/LM state)."""
+    """:func:`mixture_weights` derived from a :func:`stratum_counts`
+    table — the grain an update-mode streaming aggregate maintains for
+    free, so a live ingest keeps stratum counts and the mixture
+    rebalancing is a millisecond batch derivation over that state,
+    never a corpus re-scan."""
     total = counts.agg(F.sum("n_docs").cast("double").alias("n_total"))
     pa = det_round(
         F.pow(F.col("n_docs").cast("double") / F.col("n_total"), F.lit(alpha)),
@@ -807,11 +816,7 @@ def dsir_importance_weights(
     retrieval tier uses — no stage keys on anything unbounded except
     the per-doc hash-agg.
     """
-    doc_feats = (
-        hashed_ngram_features(documents, id_col, n_buckets)
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("c_doc"))
-    )
+    doc_feats = doc_feature_counts(documents, n_buckets, id_col)
     tgt_model = (
         hashed_ngram_features(target, id_col, n_buckets)
         .groupBy("bucket")
@@ -838,6 +843,21 @@ def dsir_importance_weights(
     )
 
 
+def doc_feature_counts(
+    documents: DataFrame, n_buckets: int = 4096, id_col: str = "doc_id"
+) -> DataFrame:
+    """The ``(id_col, bucket, c_doc)`` hashed-ngram feature grain
+    :func:`dsir_from_feature_state` scores from: one row per distinct
+    (doc, bucket) of :func:`hashed_ngram_features`. Counts are
+    mergeable, so over a document stream it runs as an update-mode
+    aggregate whose state is capped at n_buckets rows per doc."""
+    return (
+        hashed_ngram_features(documents, id_col, n_buckets)
+        .groupBy(id_col, "bucket")
+        .agg(F.count(F.lit(1)).alias("c_doc"))
+    )
+
+
 def dsir_from_feature_state(
     doc_feats: DataFrame,
     tgt_model: DataFrame,
@@ -850,15 +870,12 @@ def dsir_from_feature_state(
     """:func:`dsir_importance_weights` derived from the
     ``(doc_id, bucket, c_doc)`` feature-count STATE grain — the same
     state-table seam as ``text.bm25_from_term_state``: a stream
-    maintains hashed-ngram counts as an update-mode aggregate
-    (``streaming.windows.doc_feature_counts_streaming``), and the
-    selector becomes a millisecond batch derivation over live ingest
-    state instead of a corpus re-scan. The raw model falls out of the
-    state with one ≤ n_buckets-row aggregate; the target model is
-    whatever (bucket, c_tgt) table the caller pins (a fixed target
-    corpus scored once, or its own streamed state). Full-replay
-    parity vs the scan-based operator is row-exact (identical plan
-    after the count grain)."""
+    maintains :func:`doc_feature_counts` as an update-mode aggregate,
+    and the selector becomes a millisecond batch derivation over live
+    ingest state instead of a corpus re-scan. The raw model falls out
+    of the state with one ≤ n_buckets-row aggregate; the target model
+    is whatever (bucket, c_tgt) table the caller pins (a fixed target
+    corpus scored once, or its own streamed state)."""
     raw_model = doc_feats.groupBy("bucket").agg(
         F.sum("c_doc").alias("c_raw")
     )
@@ -1197,7 +1214,7 @@ def curation_funnel(
     which the composed plan may derive as two scans (exchange reuse is
     best-effort under composition); pass ``shingle_state`` — the
     (doc_id, _h, _tf) table the streaming/zone tier already maintains
-    (``doc_shingle_counts_streaming``) — and the funnel derives
+    (``text.doc_shingle_counts``) — and the funnel derives
     novelty from the state with ZERO extra corpus scans (the same
     state seam every corpus-model operator exposes). Then ONE
     aggregate collapses the corpus to four counters and a 4-row
@@ -1371,10 +1388,8 @@ def doc_curation_flags(
     """Per-doc curation flags ``(doc_id, _fp, _q)`` — normalized
     fingerprint + quality-gate boolean from ONE shared scan (the
     funnel's first two signals). A pure per-doc projection, so it
-    runs unchanged over a STREAM (append mode, stateless) — the
-    streaming funnel's flag feed (``streaming.windows.
-    doc_curation_flags_streaming`` is this function applied to the
-    micro-batch stream)."""
+    runs unchanged over a STREAM (append mode, stateless) as the
+    streaming funnel's flag feed."""
     from .text import quality_score
 
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))

@@ -13,6 +13,12 @@ streaming module reuses the same aggregations under watermarks.
   gap flag → cumulative session id), the batch equivalent of
   ``session_window``; one shuffle on user_id, everything else within
   the partition.
+* funnel_firsts / user_day_activity / daily_value_rollup — the
+  mergeable grains ``conversion_funnel``, ``cohort_retention`` and
+  ``daily_anomalies`` / ``daily_trend`` are derived from. Each is
+  one function: the batch operator calls it on the table, and a
+  stream calls it unchanged as an update- or complete-mode aggregate
+  whose state the same ``*_from_*`` derivation reads.
 """
 
 from __future__ import annotations
@@ -311,18 +317,43 @@ def conversion_funnel(
     ``first(step_0) <= first(step_1) <= … <= first(step_k)`` (the
     standard "did A before first B" funnel semantics; ties allowed).
 
-    One shuffle: the per-user pivot ``min(when(type=s, ts))`` collapses
+    One shuffle: the per-user pivot :func:`funnel_firsts` collapses
     the event log to |users| rows with one timestamp per step — the
-    ordered-prefix test and the step counts are then a single tiny
-    aggregate. No self-joins, no window over the raw log: at 100 TB
-    the funnel costs one pass + one |users|-row reduce.
+    ordered-prefix test and the step counts (:func:`funnel_from_firsts`)
+    are then a single tiny aggregate. No self-joins, no window over the
+    raw log: at 100 TB the funnel costs one pass + one |users|-row
+    reduce.
     """
-    firsts = events.groupBy("user_id").agg(
+    return funnel_from_firsts(funnel_firsts(events, steps), steps)
+
+
+def funnel_firsts(
+    events: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")
+) -> DataFrame:
+    """The funnel's incremental grain: per user, ``_t{i}`` = the first
+    timestamp of ``steps[i]`` (null when the user never did it).
+
+    ``min`` is mergeable, so over an event stream this runs as an
+    update-mode aggregate whose state is exactly ``len(steps)``
+    timestamps per user — bounded, no watermark needed — and each
+    micro-batch emits only the users whose firsts changed. The state
+    table IS the product: :func:`funnel_from_firsts` derives the funnel
+    from it in a batch pass (the reference recomputes everything per
+    trigger, task_2.py:271-273)."""
+    return events.groupBy("user_id").agg(
         *[
             F.min(F.when(F.col("event_type") == s, F.col("ts"))).alias(f"_t{i}")
             for i, s in enumerate(steps)
         ]
     )
+
+
+def funnel_from_firsts(
+    firsts: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")
+) -> DataFrame:
+    """The funnel report from a :func:`funnel_firsts` table: per step,
+    the users whose firsts reach it in order, and their share of the
+    entry step."""
     reached = F.lit(True)
     counts = []
     for i in range(len(steps)):
@@ -359,23 +390,67 @@ def cohort_retention(events: DataFrame, max_weeks: int = 8) -> DataFrame:
     Shuffle shape: one user-grain aggregate for first days, one
     broadcast-back join (user grain vs event grain on user_id), one
     distinct to (user, offset) grain, one tiny (cohort, offset)
-    aggregate. The cohort SIZE is recovered from the same aggregate —
-    every user's first event sits at offset 0, so ``active_users`` at
-    week 0 IS the cohort size, read via a window over the tiny result
-    instead of a second scan/branch (a separate ``sizes`` subplan
-    would make Catalyst re-scan events and re-run the user-grain
-    aggregate: plan branches don't share work without materialization).
-    Net: events is scanned twice total, never three times.
+    aggregate. Events is scanned twice total, never three times.
+
+    The event log feeds ``_retention`` directly: collapsing it to
+    :func:`user_day_activity` first (:func:`retention_from_activity`)
+    adds a shuffle, and measured slower on the sf0.1 corpus.
     """
     firsts = events.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("_first_day")
     )
+    days = events.select("user_id", F.to_date("ts").alias("_day"))
+    return _retention(firsts, days, max_weeks)
+
+
+def user_day_activity(events: DataFrame) -> DataFrame:
+    """Retention's incremental grain: per (user_id, active_day), the
+    event count ``n_events``.
+
+    ``count`` is mergeable, so over an event stream this runs as an
+    update-mode aggregate whose state is one row per distinct
+    (user, day), and each micro-batch emits only the pairs it touched.
+    The state table IS the product: :func:`retention_from_activity`
+    derives retention from it in a batch pass instead of chaining a
+    second stateful aggregate (which would force append-mode
+    watermarking and delay results by the watermark). State grows one
+    row per user per active day; a deployment bounds it to the
+    analysis horizon with a watermark + state TTL."""
+    return events.groupBy(
+        "user_id", F.to_date("ts").alias("active_day")
+    ).agg(F.count(F.lit(1)).alias("n_events"))
+
+
+def retention_from_activity(
+    activity: DataFrame, max_weeks: int = 8
+) -> DataFrame:
+    """:func:`cohort_retention` from a :func:`user_day_activity` table;
+    a user's first day is ``min(active_day)``, which the table holds
+    by construction."""
+    firsts = activity.groupBy("user_id").agg(
+        F.min("active_day").alias("_first_day")
+    )
+    days = activity.select("user_id", F.col("active_day").alias("_day"))
+    return _retention(firsts, days, max_weeks)
+
+
+def _retention(
+    firsts: DataFrame, days: DataFrame, max_weeks: int
+) -> DataFrame:
+    """The retention tail both entry points share, from per-user
+    ``(user_id, _first_day)`` and the ``(user_id, _day)`` activity
+    days. The cohort SIZE is recovered from the (cohort, offset)
+    aggregate itself — every user's first day sits at offset 0, so
+    ``active_users`` at week 0 IS the cohort size, read via a window
+    over the tiny result instead of a second branch (a separate
+    ``sizes`` subplan would make Catalyst re-scan the input and re-run
+    the user-grain aggregate: plan branches don't share work without
+    materialization)."""
     cohorts = firsts.withColumn(
         "cohort", F.date_format(F.date_trunc("week", "_first_day"), "yyyy-MM-dd")
     )
     offsets = (
-        events.select("user_id", F.to_date("ts").alias("_day"))
-        .join(cohorts, "user_id")
+        days.join(cohorts, "user_id")
         .select(
             "cohort",
             "user_id",
@@ -418,15 +493,24 @@ def daily_anomalies(events: DataFrame, z_thresh: float = 2.0) -> DataFrame:
     identical in the DuckDB oracle. Types with a single day emit null
     z (no variance estimate), preserved as null in both engines.
 
-    The daily rollup is exactly the state
-    ``streaming.windows.daily_value_rollup_streaming`` maintains, and
-    the z derivation is factored as :func:`anomalies_from_daily` so
-    the streaming twin shares it verbatim.
+    The (type, day) grain is :func:`daily_value_rollup`, which an
+    event stream maintains as the same aggregate; the z derivation is
+    :func:`anomalies_from_daily`.
     """
-    daily = events.groupBy(
+    return anomalies_from_daily(daily_value_rollup(events), z_thresh)
+
+
+def daily_value_rollup(events: DataFrame) -> DataFrame:
+    """The (event_type, _day, day_value) total-value rollup that
+    :func:`daily_anomalies` and :func:`daily_trend` consume. A decimal
+    sum is mergeable, so over an event stream this runs as an
+    incrementally merged aggregate whose state is one exact sum per
+    (type, day): run it in complete mode into a small sink (the state
+    table is |types| × |days|), and each evaluation is a batch pass
+    over it."""
+    return events.groupBy(
         "event_type", F.to_date("ts").alias("_day")
     ).agg(exact_sum(F.col("value"), 2).alias("day_value"))
-    return anomalies_from_daily(daily, z_thresh)
 
 
 def anomalies_from_daily(
@@ -471,9 +555,7 @@ def daily_trend(events: DataFrame) -> DataFrame:
     fit itself never sees row-grain data, so at 100 TB the cost IS
     the daily rollup scan.
     """
-    daily = events.groupBy(
-        "event_type", F.to_date("ts").alias("_day")
-    ).agg(exact_sum(F.col("value"), 2).alias("day_value"))
+    daily = daily_value_rollup(events)
     first = Window.partitionBy("event_type")
     with_x = daily.withColumn(
         "_x",

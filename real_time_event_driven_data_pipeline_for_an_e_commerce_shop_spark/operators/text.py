@@ -557,21 +557,31 @@ def bm25_topk(
     collapsing map-side; everything after the tf groupBy is bounded
     by |matched docs| rows of a few columns.
     """
-    from pyspark.sql import Window
-
     terms = sorted({t.lower() for t in query_terms})
     toks = documents.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     doc_len = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = doc_len.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
     tf = (
         toks.filter(F.col("term").isin(terms))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return _bm25_rank(tf, doc_len, k, k1, b)
+
+
+def _bm25_rank(
+    tf: DataFrame, doc_len: DataFrame, k: int, k1: float, b: float
+) -> DataFrame:
+    """The scoring tail :func:`bm25_topk` and :func:`bm25_from_term_state`
+    share: from the query-term ``(doc_id, term, tf)`` rows and every
+    document's ``(doc_id, dl)`` length, the corpus stats, df, the
+    det-rounded decimal score sum and the ranked top-k."""
+    from pyspark.sql import Window
+
+    stats = doc_len.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
@@ -738,16 +748,11 @@ def bm25_from_term_state(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """BM25 top-k derived from the (doc_id, term, tf) state table an
-    incrementally-maintained inverted index holds (streaming twin:
-    ``streaming.windows.doc_term_counts_streaming`` keeps exactly this
-    grain as an update-mode aggregate) — same scoring, same
-    determinism discipline, same TakeOrderedAndProject top-k as
-    :func:`bm25_topk`, so full-replay parity is row-exact. The corpus
-    stats (N, avgdl, df) that the scan-based operator computes from
-    raw text fall out of the state table with one aggregate each."""
-    from pyspark.sql import Window
-
+    """BM25 top-k derived from the :func:`doc_term_counts` state table
+    an incrementally-maintained inverted index holds — same scoring
+    tail as :func:`bm25_topk` (``_bm25_rank``), so full-replay parity
+    is row-exact. Document lengths are the state's per-doc tf sums;
+    the query terms are a filter on it."""
     terms = sorted({t.lower() for t in query_terms})
     state = term_state.select("doc_id", "term", "tf")
     doc_len = (
@@ -755,47 +760,26 @@ def bm25_from_term_state(
         .groupBy("doc_id")
         .agg(F.sum("tf").alias("dl"))
     )
-    stats = doc_len.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
     tf = (
         state.alias("tf_side")
         .filter(F.col("term").isin(terms))
         .select("doc_id", "term", "tf")
     )
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .join(doc_len, "doc_id")
-        .crossJoin(F.broadcast(stats))
+    return _bm25_rank(tf, doc_len, k, k1, b)
+
+
+def doc_term_counts(documents: DataFrame) -> DataFrame:
+    """The ``(doc_id, term, tf)`` inverted-index grain over lowercased
+    :func:`tokens`: :func:`lm_perplexity` scores from it and
+    :func:`bm25_from_term_state` ranks from it. Counts are mergeable,
+    so over a document stream it runs as an update-mode aggregate whose
+    state is one row per distinct (doc, term) — the size of the
+    inverted index itself — and each query is a batch derivation over
+    that state with no reindex step."""
+    toks = documents.select(
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    norm_tf = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    contrib = det_round(idf * norm_tf, 8).cast("decimal(18,8)")
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum(contrib).cast("double").alias("_s"),
-        F.count(F.lit(1)).alias("n_terms_matched"),
-    )
-    topk = per_doc.orderBy(F.desc("_s"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("_s"), F.asc("doc_id"))
-    return (
-        topk.withColumn("bm25_rank", F.row_number().over(w).cast("long"))
-        .select(
-            "bm25_rank",
-            "doc_id",
-            det_round(F.col("_s"), 6).alias("bm25_score"),
-            "n_terms_matched",
-        )
-    )
+    return toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def lm_perplexity(
@@ -831,26 +815,20 @@ def lm_perplexity(
     shuffle 4. Every stage is key-partitioned; the only scalar is the
     one-row token total, broadcast like every corpus stat here.
     """
-    toks = documents.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
+    return lm_perplexity_from_term_state(
+        doc_term_counts(documents), threshold=threshold
     )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    return lm_perplexity_from_term_state(tf, threshold=threshold)
 
 
 def lm_perplexity_from_term_state(
     term_state: DataFrame, threshold: float = 800.0
 ) -> DataFrame:
-    """:func:`lm_perplexity` scored from a (doc_id, term, tf) state
-    table instead of raw text — the SAME grain the streaming inverted
-    index maintains (``streaming.windows.doc_term_counts_streaming``,
-    already feeding :func:`bm25_from_term_state`), so one update-mode
-    aggregate serves both the retrieval tier AND the LM quality
-    filter: stream keeps counts, each scoring run is a batch
-    derivation over the state with zero re-tokenization. Full-replay
-    parity vs the scan-based operator is row-exact by construction
-    (identical plan after the tf grain; asserted in
-    tests/test_streaming.py)."""
+    """:func:`lm_perplexity` scored from a :func:`doc_term_counts`
+    state table instead of raw text — the grain that also feeds
+    :func:`bm25_from_term_state`, so one update-mode aggregate serves
+    both the retrieval tier AND the LM quality filter: stream keeps
+    counts, each scoring run is a batch derivation over the state with
+    zero re-tokenization."""
     tf = term_state.select("doc_id", "term", "tf")
     model = tf.groupBy("term").agg(F.sum("tf").alias("ct"))
     total = model.agg(F.sum("ct").cast("double").alias("n_total"))
@@ -1551,27 +1529,40 @@ def ngram_novelty(
     ``lm_perplexity``'s vocab). No pair join anywhere: cost is
     Σ n-grams, never n-grams².
     """
+    return ngram_novelty_from_shingle_state(
+        doc_shingle_counts(documents, n), threshold=threshold
+    )
+
+
+def doc_shingle_counts(documents: DataFrame, n: int = 5) -> DataFrame:
+    """The ``(doc_id, _h, _tf)`` n-gram-hash count grain
+    :func:`ngram_novelty_from_shingle_state` derives the audit from:
+    :func:`lower_shingle_array` grams, hashed with ``md5_long``. Docs
+    with < n tokens contribute no rows (mirrored by the oracle's
+    WHERE). Counts are mergeable, so over a document stream it runs as
+    an update-mode aggregate and the before/after dedup metric updates
+    with ingest instead of re-shingling the corpus."""
     t = tokens(F.lower(F.col("text")))
-    occ = (
+    return (
         documents.select(
             "doc_id", t.alias("_t"), lower_shingle_array(n).alias("_sh")
         )
         .filter(F.size("_t") >= n)
         .select("doc_id", F.explode("_sh").alias("_sgl"))
         .select("doc_id", md5_long(F.col("_sgl")).alias("_h"))
+        .groupBy("doc_id", "_h")
+        .agg(F.count(F.lit(1)).alias("_tf"))
     )
-    tf = occ.groupBy("doc_id", "_h").agg(F.count(F.lit(1)).alias("_tf"))
-    return ngram_novelty_from_shingle_state(tf, threshold=threshold)
 
 
 def lower_shingle_array(n: int) -> Column:
     """Lowercased n-gram array over ``text`` via the O(k) ``zip_with``
-    chain — :func:`ngram_novelty`'s shingle construction, factored
+    chain — :func:`doc_shingle_counts`' shingle construction, factored
     (r17) so a composing caller (``curation.curation_funnel``'s fused
     one-scan path) derives the identical grams from a shared
     projection. A document with fewer than n tokens yields an EMPTY
     array (the slice length clamps to 0) — the same docs
-    ``ngram_novelty``'s ``size(_t) >= n`` filter excludes."""
+    ``doc_shingle_counts``' ``size(_t) >= n`` filter excludes."""
     t = tokens(F.lower(F.col("text")))
     sz = F.size(t)
     sh = t
@@ -1607,8 +1598,8 @@ def duplicate_span_removal(
     per-doc aggregate (``array_sort`` of (pos, token) structs — no
     collect_list order dependence). Windows partition by doc_id —
     bounded by document length. Cost is Σ n-grams + Σ duplicated
-    positions, never pairs². The streamed shingle state
-    (``doc_shingle_counts_streaming``) carries counts but not
+    positions, never pairs². The shingle state
+    (:func:`doc_shingle_counts`) carries counts but not
     positions, so the span pass is deliberately scan-served; at 100 TB
     it runs as the periodic corpus-rewrite job it is in production.
     """
@@ -1788,13 +1779,12 @@ def ngram_novelty_from_shingle_state(
     shingle_state: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """:func:`ngram_novelty` derived from the ``(doc_id, _h, _tf)``
-    shingle-count STATE grain — the same state-table seam as
-    ``bm25_from_term_state`` / ``dsir_from_feature_state``: a stream
-    maintains n-gram-hash counts as an update-mode aggregate
-    (``streaming.windows.doc_shingle_counts_streaming``) and the
-    memorization audit becomes a derivation over live ingest state
-    (corpus totals fall out with one hash aggregate). Full-replay
-    parity vs the scan-based operator is row-exact."""
+    shingle-count STATE grain (:func:`doc_shingle_counts`) — the same
+    state-table seam as ``bm25_from_term_state`` /
+    ``dsir_from_feature_state``: a stream maintains n-gram-hash counts
+    as an update-mode aggregate and the memorization audit becomes a
+    derivation over live ingest state (corpus totals fall out with one
+    hash aggregate)."""
     tf = shingle_state.select("doc_id", "_h", "_tf")
     # Corpus totals as a MAP-SIDE-COMBINED aggregate + one left join
     # (optimization r17, guide §2.5 — skew): the r16 window sum over

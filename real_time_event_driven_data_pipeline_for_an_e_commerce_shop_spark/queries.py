@@ -139,7 +139,7 @@ def q_validate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            (l_returnflag = 'R') AS is_returned
     FROM lineitem
     WHERE l_partkey IS NOT NULL AND l_extendedprice IS NOT NULL
-      AND l_extendedprice > 0
+      AND NOT isnan(l_extendedprice) AND l_extendedprice > 0
       AND l_orderkey IN (
             SELECT o_orderkey FROM orders
             WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
@@ -183,18 +183,21 @@ def q_validate_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((SELECT COUNT(*) FROM lineitem
                  WHERE (l_orderkey * 10 + l_linenumber) IS NOT NULL
                    AND l_partkey IS NOT NULL
-                   AND l_extendedprice IS NULL) AS BIGINT)
+                   AND (l_extendedprice IS NULL OR isnan(l_extendedprice)))
+                AS BIGINT)
     UNION ALL SELECT 'order_items', 'nonpositive_sale_price',
            CAST((SELECT COUNT(*) FROM lineitem
                  WHERE (l_orderkey * 10 + l_linenumber) IS NOT NULL
                    AND l_partkey IS NOT NULL
                    AND l_extendedprice IS NOT NULL
+                   AND NOT isnan(l_extendedprice)
                    AND l_extendedprice <= 0) AS BIGINT)
     UNION ALL SELECT 'order_items', 'unknown_order',
            CAST((SELECT COUNT(*) FROM lineitem
                  WHERE (l_orderkey * 10 + l_linenumber) IS NOT NULL
                    AND l_partkey IS NOT NULL
-                   AND l_extendedprice IS NOT NULL AND l_extendedprice > 0
+                   AND l_extendedprice IS NOT NULL
+                   AND NOT isnan(l_extendedprice) AND l_extendedprice > 0
                    AND l_orderkey NOT IN (SELECT o_orderkey FROM vo))
                 AS BIGINT)
     """,
@@ -8601,7 +8604,7 @@ def q_curation_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint signals still share their one scan, so the whole
     report costs two text passes total — and in the deployment shape
     the state zone is ALREADY maintained by ingest
-    (token_event_counts_streaming), making the funnel a derivation
+    (corpus_state.token_event_counts), making the funnel a derivation
     with a single corpus scan. Served from the SHARED session corpus
     zone. Same oracle as curation_funnel."""
     from .operators import curation

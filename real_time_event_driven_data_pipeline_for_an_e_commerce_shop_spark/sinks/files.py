@@ -25,14 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_processed_zone(
-    kpis: dict[str, DataFrame], base_dir: str, run_ts: str, fmt: str = "csv"
+    kpis: dict[str, DataFrame], base_dir: str, run_ts: str
 ) -> None:
-    """Run-timestamped KPI outputs (S6): ``{base}/{run_ts}/{name}``."""
+    """Run-timestamped KPI outputs (S6) as headed CSV:
+    ``{base}/{run_ts}/{name}``."""
     for name, df in kpis.items():
-        writer = df.write.mode("overwrite").format(fmt)
-        if fmt == "csv":
-            writer = writer.option("header", True)
-        writer.save(f"{base_dir}/{run_ts}/{name}")
+        df.write.mode("overwrite").option("header", True).csv(
+            f"{base_dir}/{run_ts}/{name}"
+        )
 
 
 def write_zordered_zone(

@@ -5,37 +5,21 @@ from .pipeline import (
     run_event_driven_pipeline,
 )
 from .windows import (
-    cohort_retention_from_activity,
-    daily_value_rollup_streaming,
     dedup_events_stream,
-    doc_feature_counts_streaming,
-    doc_shingle_counts_streaming,
-    doc_term_counts_streaming,
-    stratum_counts_streaming,
     incremental_dedup_stream,
-    funnel_firsts_streaming,
     interval_joined_events_stream,
     sessionized_stream,
-    user_day_activity_streaming,
     watermarked_daily_rollup,
 )
 
 __all__ = [
-    "cohort_retention_from_activity",
-    "daily_value_rollup_streaming",
     "dedup_events_stream",
-    "doc_feature_counts_streaming",
-    "doc_shingle_counts_streaming",
-    "doc_term_counts_streaming",
-    "stratum_counts_streaming",
     "incremental_dedup_stream",
-    "funnel_firsts_streaming",
     "interval_joined_events_stream",
     "read_manifest_zone",
     "vacuum_manifest_zone",
     "run_bucketed_ingest_manifest",
     "run_event_driven_pipeline",
     "sessionized_stream",
-    "user_day_activity_streaming",
     "watermarked_daily_rollup",
 ]

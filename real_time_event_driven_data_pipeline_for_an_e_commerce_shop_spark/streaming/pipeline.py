@@ -56,7 +56,11 @@ from ..schemas import ORDER_ITEMS_SCHEMA, ORDERS_SCHEMA, PRODUCTS_SCHEMA
 from ..sinks.kv import KeyedParquetUpsertSink
 # ``load_ecommerce_csv`` stays importable here: perfbench's tracer wraps
 # it under this module's name
-from ..sources.readers import load_ecommerce_csv, read_csv_table  # noqa: F401
+from ..sources.readers import (  # noqa: F401
+    load_ecommerce_csv,
+    read_csv_table,
+    require_inputs,
+)
 
 #: Directory under ``out_dir`` that holds the event pipeline's landed zone.
 EVENT_ZONE_DIR = "_landed"
@@ -110,6 +114,7 @@ def run_event_driven_pipeline(
     that lands in two order rows stamps its items twice, and its dates'
     KPIs then differ from a batch run.
     """
+    require_inputs(raw_dir)  # S3 readiness gate, before any landing
     zone_dir = os.path.join(out_dir, EVENT_ZONE_DIR)
     orders_zone, items_zone = (
         _Zone(name, None, zone_dir, partition_cols=("order_date",))

@@ -1,8 +1,8 @@
 """Single-scan multi-state corpus ingest (VERDICT r7 #1): one
 documents scan maintains the term / feature / shingle / vector state
 tables; every derived state is row-exact vs its independent
-scan-based operator, and the streaming twin replays to the same
-grain."""
+scan-based operator, and the same grain function run as a stream
+replays to the same grain."""
 
 from __future__ import annotations
 
@@ -39,41 +39,31 @@ def state(spark, tmp_path_factory):
 
 
 def test_term_state_matches_scan_based_grain(spark, state):
-    """The 't' slice equals the (doc_id, term, tf) grain
-    doc_term_counts_streaming / lm_perplexity build from raw text."""
+    """The 't' slice equals ``text.doc_term_counts``, the (doc_id,
+    term, tf) grain lm_perplexity builds from raw text."""
     tables, _ = state
-    docs = _docs(spark)
-    want = (
-        docs.select(
-            "doc_id",
-            F.explode(text.tokens(F.lower(F.col("text")))).alias("term"),
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    want = text.doc_term_counts(_docs(spark))
     assert _key(tables["term_state"]) == _key(want)
     assert len(_key(tables["term_state"])) > 0
 
 
 def test_feature_state_matches_hashed_ngram_features(spark, state):
-    """The t+b slices re-hashed per bucket equal curation's
-    hashed-ngram (doc_id, bucket, c_doc) grain."""
+    """The t+b slices re-hashed per bucket equal
+    ``curation.doc_feature_counts``, the hashed-ngram (doc_id, bucket,
+    c_doc) grain dsir_importance_weights scores from."""
     tables, _ = state
-    docs = _docs(spark)
-    want = (
-        curation.hashed_ngram_features(docs, "doc_id", 512)
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("c_doc"))
-    )
+    want = curation.doc_feature_counts(_docs(spark), n_buckets=512)
     assert _key(tables["feature_state"]) == _key(want)
 
 
 def test_shingle_state_matches_ngram_novelty_grain(spark, state):
-    """The 's' slice hashed to 48 bits equals ngram_novelty's
-    (doc_id, _h, _tf) grain — so the audit derived from the state is
-    row-exact vs the scan-based operator."""
+    """The 's' slice hashed to 48 bits equals
+    ``text.doc_shingle_counts``, ngram_novelty's (doc_id, _h, _tf)
+    grain — so the audit derived from the state is row-exact vs the
+    scan-based operator."""
     tables, _ = state
     docs = _docs(spark)
+    assert _key(tables["shingle_state"]) == _key(text.doc_shingle_counts(docs, n=5))
     got = _key(text.ngram_novelty_from_shingle_state(tables["shingle_state"]))
     want = _key(text.ngram_novelty(docs, n=5))
     assert got == want and len(got) > 0
@@ -186,19 +176,16 @@ def test_read_corpus_state_roundtrip(spark, state):
 
 
 def test_streaming_twin_full_replay_parity(spark, state, tmp_path):
-    """token_event_counts_streaming replayed over the corpus yields
-    the identical (doc_id, kind, s, c) grain as the batch pass — so
-    ONE stateful stream serves all four state families."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.windows import (
-        token_event_counts_streaming,
-    )
-
+    """``corpus_state.token_event_counts`` run as an update-mode
+    stream and replayed over the corpus yields the identical
+    (doc_id, kind, s, h, h2, c) grain as the batch pass — so ONE
+    stateful stream serves all four state families."""
     docs = _docs(spark)
     src = str(tmp_path / "ces_src")
     docs.write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     q = (
-        token_event_counts_streaming(stream, shingle_n=5)
+        corpus_state.token_event_counts(stream, shingle_n=5)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("token_events_out")

@@ -171,6 +171,56 @@ def test_validation_rejects_reasons(spark):
         assert valid.count() + rejected == df.count(), table
 
 
+def test_validation_oracles_count_nan_price():
+    """The DuckDB oracles of validate_order_items and validation_rejects
+    apply the same rules as ``validate.RULES``: a NaN price is a missing
+    price, dropped from the valid items and counted under
+    null_sale_price. The rows mirror test_validation_rejects_reasons in
+    TPC-H columns (id = l_orderkey * 10 + l_linenumber)."""
+    import duckdb
+
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.queries import (
+        ORACLES,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE orders (o_orderkey BIGINT, o_custkey BIGINT, "
+        "o_orderdate DATE)"
+    )
+    con.execute(
+        "INSERT INTO orders VALUES (1, 1, DATE '2025-03-08'), "
+        "(NULL, NULL, DATE '2025-03-08'), (3, NULL, DATE '2025-03-08'), "
+        "(4, 4, NULL)"
+    )
+    con.execute(
+        "CREATE TABLE lineitem (l_orderkey BIGINT, l_linenumber BIGINT, "
+        "l_partkey BIGINT, l_extendedprice DOUBLE, l_returnflag VARCHAR)"
+    )
+    con.execute(
+        "INSERT INTO lineitem VALUES (1, 1, 1, 5.0, 'N'), "
+        "(1, NULL, NULL, 5.0, 'N'), (1, 3, NULL, 5.0, 'N'), "
+        "(1, 4, 1, NULL, 'N'), (1, 5, 1, 0.0, 'N'), (99, 6, 1, 5.0, 'N'), "
+        "(1, 7, 1, 'NaN'::DOUBLE, 'N')"
+    )
+    valid = con.execute(ORACLES["validate_order_items"]).fetchall()
+    assert [r[0] for r in valid] == [11]
+    summary = {
+        (t, rule): n
+        for t, rule, n in con.execute(ORACLES["validation_rejects"]).fetchall()
+    }
+    assert summary == {
+        ("orders", "null_order_id"): 1,
+        ("orders", "null_user_id"): 1,
+        ("orders", "null_created_at"): 1,
+        ("order_items", "null_id"): 1,
+        ("order_items", "null_product_id"): 1,
+        ("order_items", "null_sale_price"): 2,
+        ("order_items", "nonpositive_sale_price"): 1,
+        ("order_items", "unknown_order"): 1,
+    }
+
+
 def test_rank_daily_tie_break(spark):
     products, orders, items = make_star(spark)
     fact = kpi.build_item_fact(items, kpi.with_return_flag(orders), products)

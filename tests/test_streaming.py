@@ -159,6 +159,33 @@ def test_event_driven_pipeline_archives_uploads(spark, tmp_path):
     assert _kpi_hashes(spark, out) == kpis
 
 
+def test_event_driven_pipeline_requires_inputs(spark, tmp_path):
+    """The readiness gate runs before any other work: a raw zone without
+    ``products.csv`` raises a FileNotFoundError that names it, and
+    leaves no landed zone and no checkpoint; one without ``orders/``
+    names that directory."""
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
+        pipeline as stream_pipeline,
+    )
+
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    _write(f"{raw}/orders/part1.csv", ORDERS_CSV)
+    _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
+
+    with pytest.raises(FileNotFoundError, match="products.csv"):
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert not os.path.exists(f"{out}/{stream_pipeline.EVENT_ZONE_DIR}")
+    assert not os.path.exists(ckpt)
+
+    _write(f"{raw}/products.csv", PRODUCTS_CSV)
+    os.rename(f"{raw}/orders", str(tmp_path / "orders_elsewhere"))
+    with pytest.raises(FileNotFoundError, match="'orders'"):
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert not os.path.exists(ckpt)
+
+
 @pytest.mark.slow
 def test_event_driven_pipeline_crash_replay(spark, tmp_path, monkeypatch):
     """Two crash windows of one epoch, each healed by the restart:
@@ -581,22 +608,18 @@ def test_interval_joined_stream_matches_batch(spark, events_stream, tmp_path):
 
 
 def test_funnel_firsts_streaming_converges_to_batch(spark, events_stream, tmp_path):
-    """Update-mode per-user first-occurrence state, replayed to
-    completion, equals the batch funnel pivot exactly — and the funnel
-    summary computed from the final state matches the batch
-    conversion_funnel row for row. The memory sink keeps every update;
-    min() per user over them recovers the final state (firsts only
-    ever decrease)."""
+    """``events.funnel_firsts`` run as an update-mode stream, replayed
+    to completion, and fed to ``events.funnel_from_firsts`` equals the
+    batch conversion_funnel row for row. The memory sink keeps every
+    update; min() per user over them recovers the final state (firsts
+    only ever decrease)."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.queries import (
         QUERIES,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        funnel_firsts_streaming,
     )
 
     stream, batch = events_stream
     q = (
-        funnel_firsts_streaming(stream)
+        events_ops.funnel_firsts(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("funnel_firsts_out")
@@ -605,64 +628,31 @@ def test_funnel_firsts_streaming_converges_to_batch(spark, events_stream, tmp_pa
         .start()
     )
     q.awaitTermination()
-    final = spark.sql(
-        "SELECT user_id, MIN(first_view) AS t0, MIN(first_click) AS t1, "
-        "MIN(first_purchase) AS t2 FROM funnel_firsts_out GROUP BY user_id"
+    state = spark.sql(
+        "SELECT user_id, MIN(_t0) AS _t0, MIN(_t1) AS _t1, MIN(_t2) AS _t2 "
+        "FROM funnel_firsts_out GROUP BY user_id"
     )
-    got_firsts = {
-        r["user_id"]: (r["t0"], r["t1"], r["t2"]) for r in final.collect()
-    }
-    expected_firsts = {
-        r["user_id"]: (r["t0"], r["t1"], r["t2"])
-        for r in batch.groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t0"),
-            F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t1"),
-            F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("t2"),
-        )
-        .collect()
-    }
-    assert got_firsts == expected_firsts and got_firsts
-
-    n0 = sum(1 for t in got_firsts.values() if t[0] is not None)
-    n1 = sum(
-        1
-        for t in got_firsts.values()
-        if t[0] is not None and t[1] is not None and t[0] <= t[1]
-    )
-    n2 = sum(
-        1
-        for t in got_firsts.values()
-        if t[0] is not None
-        and t[1] is not None
-        and t[2] is not None
-        and t[0] <= t[1] <= t[2]
-    )
-    batch_funnel = {
-        r["step"]: r["n_users"]
-        for r in QUERIES["conversion_funnel"](spark, SF).collect()
-    }
-    assert batch_funnel == {"view": n0, "click": n1, "purchase": n2}
+    assert state.count() == batch.select("user_id").distinct().count()
+    key = lambda df: sorted(tuple(r) for r in df.collect())
+    got = key(events_ops.funnel_from_firsts(state))
+    want = key(QUERIES["conversion_funnel"](spark, SF))
+    assert got == want and len(got) == 3 and got[0][2] > 0
 
 
 def test_cohort_retention_streaming_converges_to_batch(spark, events_stream, tmp_path):
-    """The (user, day) activity state, replayed to completion and fed
-    through the batch derivation, equals the batch cohort_retention
-    query row for row — the retention twin of the funnel-firsts
-    convergence test. Update mode may emit a (user, day) key several
+    """``events.user_day_activity`` run as an update-mode stream,
+    replayed to completion and fed through
+    ``events.retention_from_activity``, equals the batch
+    cohort_retention query row for row. Update mode may emit a (user, day) key several
     times as its count grows; only the key set feeds retention, so
     DISTINCT over the sink recovers the final state."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.queries import (
         QUERIES,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        cohort_retention_from_activity,
-        user_day_activity_streaming,
-    )
 
     stream, batch = events_stream
     q = (
-        user_day_activity_streaming(stream)
+        events_ops.user_day_activity(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("uda_out")
@@ -682,7 +672,7 @@ def test_cohort_retention_streaming_converges_to_batch(spark, events_stream, tmp
         (r["cohort"], r["week_offset"]): (
             r["active_users"], r["cohort_size"], r["retention_pct"],
         )
-        for r in cohort_retention_from_activity(state, max_weeks=8).collect()
+        for r in events_ops.retention_from_activity(state, max_weeks=8).collect()
     }
     expected = {
         (r["cohort"], r["week_offset"]): (
@@ -694,24 +684,18 @@ def test_cohort_retention_streaming_converges_to_batch(spark, events_stream, tmp
 
 
 def test_daily_anomalies_streaming_converges_to_batch(spark, events_stream, tmp_path):
-    """The (type, day) rollup state, streamed to completion in complete
-    mode and fed through anomalies_from_daily, equals the batch
+    """``events.daily_value_rollup`` streamed to completion in complete
+    mode and fed through anomalies_from_daily equals the batch
     daily_anomalies query row for row — the monitoring twin: the
     stream maintains the rollup, each evaluation is a batch pass over
     the tiny state table."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators.events import (
-        anomalies_from_daily,
-    )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.queries import (
         QUERIES,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.windows import (
-        daily_value_rollup_streaming,
     )
 
     stream, batch = events_stream
     q = (
-        daily_value_rollup_streaming(stream)
+        events_ops.daily_value_rollup(stream)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("daily_rollup_out")
@@ -725,7 +709,7 @@ def test_daily_anomalies_streaming_converges_to_batch(spark, events_stream, tmp_
         (r["event_type"], r["day"]): (
             r["day_value"], r["z_score"], r["is_anomaly"],
         )
-        for r in anomalies_from_daily(state, z_thresh=2.0).collect()
+        for r in events_ops.anomalies_from_daily(state, z_thresh=2.0).collect()
     }
     expected = {
         (r["event_type"], r["day"]): (
@@ -815,9 +799,6 @@ def test_streaming_bm25_index_matches_batch(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         text,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        doc_term_counts_streaming,
-    )
 
     docs = load_testdata(spark, SF, ("documents",))["documents"].select(
         "doc_id", "text"
@@ -826,7 +807,7 @@ def test_streaming_bm25_index_matches_batch(spark, tmp_path):
     docs.write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     q = (
-        doc_term_counts_streaming(stream)
+        text.doc_term_counts(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("bm25_state_out")
@@ -867,9 +848,6 @@ def test_streaming_lm_perplexity_matches_batch(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         text,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        doc_term_counts_streaming,
-    )
 
     docs = load_testdata(spark, SF, ("documents",))["documents"].select(
         "doc_id", "text"
@@ -878,7 +856,7 @@ def test_streaming_lm_perplexity_matches_batch(spark, tmp_path):
     docs.write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     q = (
-        doc_term_counts_streaming(stream)
+        text.doc_term_counts(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("lm_state_out")
@@ -912,9 +890,6 @@ def test_streaming_mixture_weights_matches_batch(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         curation,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        stratum_counts_streaming,
-    )
 
     docs = load_testdata(spark, SF, ("documents",))["documents"].select(
         "doc_id", "source"
@@ -923,7 +898,7 @@ def test_streaming_mixture_weights_matches_batch(spark, tmp_path):
     docs.write.parquet(src)
     stream = spark.readStream.schema("doc_id long, source string").parquet(src)
     q = (
-        stratum_counts_streaming(stream)
+        curation.stratum_counts(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("mix_state_out")
@@ -957,9 +932,6 @@ def test_streaming_dsir_state_matches_batch(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         curation,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        doc_feature_counts_streaming,
-    )
     from pyspark.sql import functions as F
 
     docs = load_testdata(spark, SF, ("documents",))["documents"].select(
@@ -975,7 +947,7 @@ def test_streaming_dsir_state_matches_batch(spark, tmp_path):
     docs.select("doc_id", "text").write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     q = (
-        doc_feature_counts_streaming(stream, n_buckets=512)
+        curation.doc_feature_counts(stream, n_buckets=512)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("dsir_state_out")
@@ -1013,9 +985,6 @@ def test_streaming_ngram_novelty_state_matches_batch(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         text,
     )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming import (
-        doc_shingle_counts_streaming,
-    )
 
     docs = load_testdata(spark, SF, ("documents",))["documents"].select(
         "doc_id", "text"
@@ -1024,7 +993,7 @@ def test_streaming_ngram_novelty_state_matches_batch(spark, tmp_path):
     docs.write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     q = (
-        doc_shingle_counts_streaming(stream, n=5)
+        text.doc_shingle_counts(stream, n=5)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("novelty_state_out")
@@ -1058,9 +1027,10 @@ def test_streaming_funnel_replay_parity(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
         curation,
     )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        text,
+    )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.windows import (
-        doc_curation_flags_streaming,
-        doc_shingle_counts_streaming,
         fingerprint_keeper_streaming,
     )
 
@@ -1074,7 +1044,7 @@ def test_streaming_funnel_replay_parity(spark, tmp_path):
     ).parquet(src)
 
     flags_q = (
-        doc_curation_flags_streaming(stream(), quality_threshold=0.5)
+        curation.doc_curation_flags(stream(), quality_threshold=0.5)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("funnel_flags_out")
@@ -1084,7 +1054,7 @@ def test_streaming_funnel_replay_parity(spark, tmp_path):
     )
     keeper_q = (
         fingerprint_keeper_streaming(
-            doc_curation_flags_streaming(stream(), quality_threshold=0.5)
+            curation.doc_curation_flags(stream(), quality_threshold=0.5)
         )
         .writeStream.outputMode("update")
         .format("memory")
@@ -1094,7 +1064,7 @@ def test_streaming_funnel_replay_parity(spark, tmp_path):
         .start()
     )
     shingle_q = (
-        doc_shingle_counts_streaming(stream(), n=5)
+        text.doc_shingle_counts(stream(), n=5)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("funnel_shingle_out")
