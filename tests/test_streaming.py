@@ -608,9 +608,10 @@ def test_interval_joined_stream_matches_batch(spark, events_stream, tmp_path):
 
 
 def test_funnel_firsts_streaming_converges_to_batch(spark, events_stream, tmp_path):
-    """``events.funnel_firsts`` run as an update-mode stream, replayed
-    to completion, and fed to ``events.funnel_from_firsts`` equals the
-    batch conversion_funnel row for row. The memory sink keeps every
+    """``events.funnel_firsts`` run as an update-mode stream and
+    replayed to completion equals the batch grain user for user, and
+    fed to ``events.funnel_from_firsts`` it equals the batch
+    conversion_funnel row for row. The memory sink keeps every
     update; min() per user over them recovers the final state (firsts
     only ever decrease)."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.queries import (
@@ -632,7 +633,9 @@ def test_funnel_firsts_streaming_converges_to_batch(spark, events_stream, tmp_pa
         "SELECT user_id, MIN(_t0) AS _t0, MIN(_t1) AS _t1, MIN(_t2) AS _t2 "
         "FROM funnel_firsts_out GROUP BY user_id"
     )
-    assert state.count() == batch.select("user_id").distinct().count()
+    firsts = lambda df: {r["user_id"]: tuple(r)[1:] for r in df.collect()}
+    got_firsts = firsts(state)
+    assert got_firsts == firsts(events_ops.funnel_firsts(batch)) and got_firsts
     key = lambda df: sorted(tuple(r) for r in df.collect())
     got = key(events_ops.funnel_from_firsts(state))
     want = key(QUERIES["conversion_funnel"](spark, SF))
