@@ -13,11 +13,23 @@ or ``python -m real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark
 
 Differences from the reference, on purpose (SURVEY.md §3/§7):
 
-* the two stages compose lazily, so Catalyst optimizes across the
-  Task-1/Task-2 boundary; the ``validated/`` zone is written only when
-  a ``validated_layout`` is asked for, through the one zone writer
+* each KPI is computed once, as the reference's Task 2 does: the two
+  frames ``kpi.run_transformation`` returns are materialized with an
+  eager ``localCheckpoint`` before the four writes (two upserts, two
+  ``processed/`` CSVs), which then read the checkpoint, not the CSVs.
+  That is safe at any input scale because the KPI tables are dates ×
+  7 categories and dates (KB-sized), and it means neither KPI table is
+  written unless both computed. It halves the raw reads (26 → 17 jobs,
+  Spark input 4 → 2 passes on the benchmark zone). ``cache()`` of the
+  two frames measured 3,101 tasks and 20–42 s a run on that zone (4
+  cores), and a later run over the same paths is served from that
+  cache; the item fact is not persisted because it is input-sized;
+* the ``validated/`` zone is written only when a ``validated_layout``
+  is asked for, through the one zone writer
   (``sinks.files.write_zone_table``), which records each table's
-  layout in the zone manifest;
+  layout in the zone manifest; the KPIs are then computed from the
+  zone read back, so the zone is on the critical path and what the
+  KPI tables are built from is exactly what the zone holds;
 * the KPI "DynamoDB tables" are keyed parquet upsert tables
   (``sinks.kv``) — same upsert contract, no row-at-a-time puts;
 * the archive step moves processed raw files only when asked
@@ -35,7 +47,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .operators import kpi, validate
-from .sinks.files import write_processed_zone, write_zone_table
+from .sinks.files import read_zone_tables, write_processed_zone, write_zone_table
 from .sinks.kv import KeyedParquetUpsertSink
 from .sources.readers import load_ecommerce_csv, require_inputs
 
@@ -94,6 +106,12 @@ def run(
       user_id)``, items on ``(order_id, product_id)``; box probes on
       either clustered dimension prune row groups (pruning matrix in
       BASELINE.md).
+
+    With a layout set, the KPIs are computed from the zone read back
+    (``read_zone_tables``, ``order_year`` dropped), the same rule for
+    every layout; without one they are computed from the validated
+    CSV frames. Either way each KPI frame is computed once and feeds
+    both its upsert table and its ``processed/`` CSV.
     """
     if validated_layout is not None and validated_layout not in VALIDATED_LAYOUTS:
         raise ValueError(f"unknown validated_layout: {validated_layout!r}")
@@ -117,8 +135,14 @@ def run(
         for name, df in zone.items():
             write_zone_table(df, vdir, name, **specs.get(name, {}))
         paths["validated"] = vdir
+        valid = {
+            name: df.drop("order_year")
+            for name, df in read_zone_tables(spark, vdir, list(zone)).items()
+        }
 
     kpis = kpi.run_transformation(valid["products"], valid["orders"], valid["order_items"])
+    # KB-sized at any scale: one pass each, read by all four writes
+    kpis = {name: df.localCheckpoint() for name, df in kpis.items()}
 
     cat_sink = KeyedParquetUpsertSink(os.path.join(out_dir, "category_kpi"), "order_date")
     ord_sink = KeyedParquetUpsertSink(os.path.join(out_dir, "order_kpi"), "order_date")

@@ -37,7 +37,7 @@ def split_sf(tmp_path_factory):
 @pytest.mark.parametrize(
     "name", ["ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk", "ivf_cell_stats"]
 )
-def test_scan_stages_run_more_than_one_task(spark, split_sf, name):
+def test_scan_stages_run_more_than_one_task(spark, split_sf, group_stages, name):
     sc = spark.sparkContext
     group = f"scan_parallelism_{name}"
     sc.setJobGroup(group, name)
@@ -47,16 +47,11 @@ def test_scan_stages_run_more_than_one_task(spark, split_sf, name):
         ).save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    scans = {}
-    for jid in sc.statusTracker().getJobIdsForGroup(group):
-        stage_ids = store.job(jid).stageIds()
-        for i in range(stage_ids.size()):
-            sd = store.lastStageAttempt(stage_ids.apply(i))
-            if sd.status().toString() != "SKIPPED" and sd.inputBytes() > 0:
-                scans[sd.stageId()] = (sd.numTasks(), sd.name())
+    scans = {
+        sd.stageId(): (sd.numTasks(), sd.name())
+        for sd in group_stages(group)
+        if sd.inputBytes() > 0
+    }
     assert scans, f"{name}: no stage read input under job group {group}"
     serial = {sid: s for sid, s in scans.items() if s[0] <= 1}
     assert not serial, (
