@@ -2,7 +2,7 @@
 
     python -m real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark \
         --raw /path/raw --out /path/out [--streaming] [--archive] \
-        [--validated-layout {flat,bucketed,zorder}]
+        [--validated-layout {flat,bucketed}]
 """
 
 from __future__ import annotations

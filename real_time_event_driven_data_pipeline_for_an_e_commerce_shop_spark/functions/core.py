@@ -85,44 +85,3 @@ def md5_long(col: Column, hex_chars: int = 12) -> Column:
 def sql_md5_long(expr: str, hex_chars: int = 12) -> str:
     """DuckDB mirror of :func:`md5_long` (bit-identical, verified)."""
     return f"CAST(('0x' || substring(md5({expr}), 1, {hex_chars})) AS BIGINT)"
-
-
-def scale_to_bits(col: Column, lo: float, hi: float, bits: int = 12) -> Column:
-    """Scale a numeric column into the integer grid [0, 2**bits) given
-    its (driver-known) domain — the per-dimension normalization step of
-    :func:`zorder_value`. Values at/below ``lo`` map to 0, at/above
-    ``hi`` to the top cell; the domain usually comes from one tiny
-    min/max aggregate (2 scalars per column, same driver-side budget
-    as k-means centroids)."""
-    cells = float(1 << bits)
-    span = float(hi) - float(lo)
-    if span <= 0:
-        return F.lit(0).cast("long")
-    scaled = F.floor(
-        (col.cast("double") - F.lit(float(lo))) / F.lit(span) * F.lit(cells)
-    ).cast("long")
-    return F.greatest(
-        F.lit(0).cast("long"),
-        F.least(scaled, F.lit((1 << bits) - 1).cast("long")),
-    )
-
-
-def zorder_value(cols: list[Column], bits: int = 12) -> Column:
-    """Morton (Z-order) interleave of pre-scaled integer columns: bit
-    ``j`` of column ``c`` lands at position ``j * n_cols + c``, so
-    points close in EVERY dimension get close z-values — sorting by z
-    clusters the data along all dimensions at once. That is the
-    multi-column generalization of the shipdate-sorted zone: one sort
-    column, row-group min/max stats stay tight on ALL interleaved
-    dimensions, and a box predicate on any of them prunes row groups
-    (BASELINE.md measures it). Pure bit arithmetic — ``n_cols × bits``
-    shift/mask/or terms, all inside whole-stage codegen."""
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for c_idx, col in enumerate(cols):
-        for j in range(bits):
-            bit = F.shiftrightunsigned(col.cast("long"), j).bitwiseAND(
-                F.lit(1).cast("long")
-            )
-            z = z.bitwiseOR(F.shiftleft(bit, j * n + c_idx))
-    return z

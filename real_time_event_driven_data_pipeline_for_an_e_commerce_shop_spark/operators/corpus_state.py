@@ -162,7 +162,7 @@ def _tagged_events(token_col: str, shingle_n: int) -> Column:
     adjacent bigrams ('b'), and ``shingle_n``-gram shingles ('s'),
     each built with the SAME expressions the independent operators
     use (``text.tokens`` lowered; ``curation.hashed_ngram_features``'s
-    sequence bigrams; ``dedup.shingles``' zip_with chain) so every
+    sequence bigrams; ``text.sliding_ngrams``) so every
     derived state is bit-identical to its scan-based twin.
 
     Takes the NAME of an already-projected token-array column, never
@@ -174,13 +174,11 @@ def _tagged_events(token_col: str, shingle_n: int) -> Column:
     6 KB docs). The two-step projection (materialize ``_t``, then
     build from the bound column) is the same discipline every
     shingle/bigram operator in the engine follows."""
+    from .text import sliding_ngrams
+
     t = F.col(token_col)
     sz = F.size(t)
-    sh = t
-    for j in range(1, shingle_n):
-        shifted = F.slice(t, j + 1, F.greatest(sz - j, F.lit(0)))
-        sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    shingles = F.slice(sh, 1, F.greatest(sz - (shingle_n - 1), F.lit(0)))
+    shingles = sliding_ngrams(t, shingle_n)
 
     # hash AT EVENT TIME, before anything shuffles: bigram and shingle
     # strings are long and mostly unique, so carrying them through the

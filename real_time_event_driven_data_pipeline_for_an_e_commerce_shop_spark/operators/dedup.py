@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.core import det_round, md5_long, ratio, spread_small_input
-from .text import tokens
+from .text import sliding_ngrams, tokens
 
 #: Mersenne prime for the MinHash universal-hash family
 #: h_i(x) = (a_i * x + b_i) mod P over 48-bit md5-prefix base hashes.
@@ -77,29 +77,14 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 def shingles(text_col: Column, k: int = 3) -> Column:
-    """Word k-shingles as a distinct array.
-
-    Formulated as a ``zip_with`` chain over shifted slices — NOT as
-    ``transform(sequence(...), i -> element_at(t, i+j))`` — because an
-    array expression referenced *inside* a higher-order-function lambda
-    is re-evaluated per element (HOFs are interpreted; codegen
-    subexpression elimination does not reach lambda bodies), turning
-    tokenization into O(n_shingles × k) regex splits per row (measured
-    ~8 s for 5k docs). Here the token array is only referenced at row
-    level: k-1 slices + one zip chain ⇒ O(k) evaluations per row.
-    """
+    """Word k-shingles (:func:`text.sliding_ngrams` over the lowercased
+    tokens) as a distinct array; a text shorter than ``k`` tokens is
+    one shingle, the whole text."""
     t = tokens(F.lower(text_col))
-    n = F.size(t)
-    # sh[i] after the chain = t[i] ⊕ t[i+1] ⊕ … ⊕ t[i+k-1]; the last
-    # k-1 entries are partial (zip_with null-pads, concat_ws drops
-    # nulls) and are sliced away below.
-    sh = t
-    for j in range(1, k):
-        shifted = F.slice(t, j + 1, F.greatest(n - j, F.lit(0)))
-        sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    full = F.slice(sh, 1, F.greatest(n - (k - 1), F.lit(0)))
     return F.array_distinct(
-        F.when(n >= k, full).otherwise(F.array(F.concat_ws(" ", t)))
+        F.when(F.size(t) >= k, sliding_ngrams(t, k)).otherwise(
+            F.array(F.concat_ws(" ", t))
+        )
     )
 
 

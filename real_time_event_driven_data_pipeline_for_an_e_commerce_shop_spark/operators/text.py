@@ -62,6 +62,31 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+def sliding_ngrams(t: Column, n: int) -> Column:
+    """The full n-grams of token array ``t``, each its tokens joined by
+    one space — the shared n-gram definition. A ``t`` shorter than
+    ``n`` yields an EMPTY array (the slice length clamps to 0).
+
+    Formulated as a ``zip_with`` chain over shifted slices — NOT as
+    ``transform(sequence(...), i -> element_at(t, i+j))`` — because an
+    array expression referenced *inside* a higher-order-function lambda
+    is re-evaluated per element (HOFs are interpreted; codegen
+    subexpression elimination does not reach lambda bodies), turning
+    tokenization into O(n_grams × n) regex splits per row (measured
+    ~8 s for 5k docs). Here ``t`` is only referenced at row level:
+    n-1 slices + one zip chain ⇒ O(n) evaluations per row.
+    """
+    sz = F.size(t)
+    # sh[i] after the chain = t[i] ⊕ t[i+1] ⊕ … ⊕ t[i+n-1]; the last
+    # n-1 entries are partial (zip_with null-pads, concat_ws drops
+    # nulls) and are sliced away below.
+    sh = t
+    for j in range(1, n):
+        shifted = F.slice(t, j + 1, F.greatest(sz - j, F.lit(0)))
+        sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
+    return F.slice(sh, 1, F.greatest(sz - (n - 1), F.lit(0)))
+
+
 def token_stats(documents: DataFrame) -> DataFrame:
     """Token counting: total, distinct, and mean token length."""
     t = tokens(F.col("text"))
@@ -1556,20 +1581,14 @@ def doc_shingle_counts(documents: DataFrame, n: int = 5) -> DataFrame:
 
 
 def lower_shingle_array(n: int) -> Column:
-    """Lowercased n-gram array over ``text`` via the O(k) ``zip_with``
-    chain — :func:`doc_shingle_counts`' shingle construction, factored
-    (r17) so a composing caller (``curation.curation_funnel``'s fused
+    """Lowercased n-gram array over ``text`` (:func:`sliding_ngrams`) —
+    :func:`doc_shingle_counts`' shingle construction, factored (r17)
+    so a composing caller (``curation.curation_funnel``'s fused
     one-scan path) derives the identical grams from a shared
     projection. A document with fewer than n tokens yields an EMPTY
-    array (the slice length clamps to 0) — the same docs
-    ``doc_shingle_counts``' ``size(_t) >= n`` filter excludes."""
-    t = tokens(F.lower(F.col("text")))
-    sz = F.size(t)
-    sh = t
-    for j in range(1, n):
-        shifted = F.slice(t, j + 1, F.greatest(sz - j, F.lit(0)))
-        sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.slice(sh, 1, F.greatest(sz - (n - 1), F.lit(0)))
+    array — the same docs ``doc_shingle_counts``' ``size(_t) >= n``
+    filter excludes."""
+    return sliding_ngrams(tokens(F.lower(F.col("text"))), n)
 
 
 def duplicate_span_removal(
@@ -1639,13 +1658,7 @@ def _span_gram_base(documents: DataFrame, n: int) -> DataFrame:
     shared grain of the span-surgery pair (corpus-dup removal and
     benchmark decontamination)."""
     t_orig = tokens(F.col("text"))
-    tl = tokens(F.lower(F.col("text")))
-    sz = F.size(tl)
-    sh = tl
-    for j in range(1, n):
-        shifted = F.slice(tl, j + 1, F.greatest(sz - j, F.lit(0)))
-        sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    full = F.slice(sh, 1, F.greatest(sz - (n - 1), F.lit(0)))
+    full = sliding_ngrams(tokens(F.lower(F.col("text"))), n)
     return documents.select("doc_id", t_orig.alias("_t"), full.alias("_sh"))
 
 

@@ -63,13 +63,6 @@ VALIDATED_LAYOUTS: dict[str, dict[str, dict]] = {
         }
         for name in ("orders", "order_items")
     },
-    "zorder": {
-        "orders": {"layout": "zorder", "zorder_cols": ["order_date", "user_id"]},
-        "order_items": {
-            "layout": "zorder",
-            "zorder_cols": ["order_id", "product_id"],
-        },
-    },
 }
 
 
@@ -86,8 +79,8 @@ def run(
     ``validated_layout`` materializes the validated zone (S5) under
     ``{out_dir}/validated`` in one of the :data:`VALIDATED_LAYOUTS`;
     ``None`` (the default) writes no zone. Every table's layout —
-    catalog table name, bucket spec, z-order domains — is recorded in
-    the zone manifest, so readers use ``sinks.files.read_zone_tables``
+    catalog table name, bucket spec, directory partitions — is recorded
+    in the zone manifest, so readers use ``sinks.files.read_zone_tables``
     / ``zone_table_layout`` with no call-site knowledge.
 
     * ``"flat"`` — plain parquet; ``orders`` partitioned by
@@ -102,10 +95,6 @@ def run(
       passed the J1 semi-join against valid orders). The grain is the
       YEAR deliberately — a month grain measured 2,700 files/table at
       factor 10 (BASELINE.md).
-    * ``"zorder"`` — Morton-clustered: orders on ``(order_date,
-      user_id)``, items on ``(order_id, product_id)``; box probes on
-      either clustered dimension prune row groups (pruning matrix in
-      BASELINE.md).
 
     With a layout set, the KPIs are computed from the zone read back
     (``read_zone_tables``, ``order_year`` dropped), the same rule for

@@ -4,9 +4,8 @@
   the reference serializes whole DataFrames to CSV strings on the
   driver and PUTs them to S3; here every zone table goes through ONE
   writer, :func:`write_zone_table` — a distributed parquet write in a
-  recorded physical layout (flat / directory-partitioned, bucketed,
-  sorted or z-ordered), read back layout-aware by
-  :func:`read_zone_tables`.
+  recorded physical layout (flat, optionally directory-partitioned,
+  or bucketed), read back layout-aware by :func:`read_zone_tables`.
 * S6 processed zone (``Task_2/task_2.py:200-235``): run-timestamped
   output directory; the timestamp comes from the caller (driver),
   never from data — same as the reference.
@@ -35,97 +34,12 @@ def write_processed_zone(
         )
 
 
-def write_zordered_zone(
-    df: "DataFrame",
-    path: str,
-    cols: list[str],
-    n_ranges: int = 32,
-    bits: int = 12,
-    row_group_bytes: int | None = None,
-) -> dict[str, tuple[float, float]]:
-    """Z-order-clustered parquet zone: scale each clustering column
-    into a 2**bits grid (domains from ONE tiny min/max aggregate),
-    Morton-interleave them into a single z-value, range-partition +
-    sort on it, write. The multi-dimensional sibling of the
-    shipdate-sorted zone (`scripts/bench_scale.py`): a box predicate
-    on ANY clustered column — not just the first sort key — lands on
-    few row groups, because z-locality keeps every dimension's
-    min/max tight per group. Costs one full-data shuffle at write
-    time, same as any clustered layout; reads need no code change
-    (pruning is parquet stats, applied by every scan automatically).
-
-    Returns the per-column (min, max) domains used, so incremental
-    writers can reuse them (a drifted domain degrades clustering
-    quality gracefully — values clamp to edge cells — and never
-    affects correctness).
-
-    At 100 TB: the z-sort is `repartitionByRange` (each task sorts
-    |rows|/n_ranges — no single-task stage), and the interleave is
-    pure codegen bit arithmetic on the scan side of the exchange.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.core import scale_to_bits, zorder_value
-
-    stats_row = df.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in cols],
-    ).first()
-    import datetime as _dt
-
-    domains: dict[str, tuple[float, float]] = {}
-    scaled = []
-    epoch = _dt.date(1970, 1, 1)
-    for c in cols:
-        lo, hi = stats_row[f"_lo_{c}"], stats_row[f"_hi_{c}"]
-        if isinstance(lo, _dt.datetime):
-            lo, hi = lo.date(), hi.date()
-        if isinstance(lo, _dt.date):
-            # dates (and timestamps, at day grain) → days since epoch
-            col = F.datediff(
-                F.col(c).cast("date"), F.lit("1970-01-01").cast("date")
-            )
-            lo_f, hi_f = float((lo - epoch).days), float((hi - epoch).days)
-        else:
-            col = F.col(c)
-            lo_f, hi_f = float(lo), float(hi)
-        domains[c] = (lo_f, hi_f)
-        scaled.append(scale_to_bits(col, lo_f, hi_f, bits))
-    z = zorder_value(scaled, bits)
-    writer = (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_ranges, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-    )
-    if row_group_bytes:
-        # clustered zones want FINE row groups: pruning granularity is
-        # the row group, and z-locality is only visible below file size
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)
-    import os as _os
-
-    record_zone_layout(
-        _os.path.dirname(_os.path.abspath(path)),
-        _os.path.basename(_os.path.abspath(path)),
-        {
-            "layout": "zorder",
-            "path": path,
-            "format": "parquet",
-            "zorder_cols": list(cols),
-            "zorder_domains": {c: list(d) for c, d in domains.items()},
-        },
-    )
-    return domains
-
-
 # --- unified zone metadata (VERDICT r6 #7) ----------------------------
 #
 # The epoch manifest already owns WHAT is committed; these record HOW
-# each table is laid out — bucket column/count, sort columns, z-order
-# columns + domains — in the same `_manifest/{name}` directory, so a
-# reader picks the bucketed-join or row-group-prune path from METADATA
+# each table is laid out — catalog table, bucket column/count,
+# directory partitions — in the same `_manifest/{name}` directory, so a
+# reader picks the catalog (bucketed) or path read from METADATA
 # instead of call-site convention (the "an ACID format would carry
 # both" note in BASELINE.md, closed). The layout file is written with
 # the same tmp+rename atomicity as the epoch markers.
@@ -164,19 +78,6 @@ def zone_table_layout(zone_dir: str, name: str) -> dict | None:
         return json.load(f)
 
 
-def prunable_cols(spec: dict | None) -> list[str]:
-    """Columns whose range predicates the layout makes cheap: directory
-    partitions prune statically, sort/z-order columns prune at parquet
-    row-group stats. Readers route predicates (and the judge's plan
-    checks anchor) on this list."""
-    if not spec:
-        return []
-    out = list(spec.get("partition_by") or [])
-    out += spec.get("sort_cols") or []
-    out += spec.get("zorder_cols") or []
-    return out
-
-
 def write_zone_table(
     df: DataFrame,
     zone_dir: str,
@@ -185,30 +86,23 @@ def write_zone_table(
     table: str | None = None,
     bucket_col: str = "order_id",
     n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    zorder_cols: list[str] | None = None,
     partition_by: str | list[str] | None = None,
-    n_ranges: int = 32,
 ) -> dict:
-    """ONE writer for every zone layout the engine measures — the
+    """ONE writer for every zone layout the engine reads — the
     physical spec is chosen here and RECORDED here, so no reader ever
     needs call-site knowledge:
 
     * ``bucketed`` — catalog table, ``bucketBy(n_buckets, bucket_col)``
       (+ optional directory ``partition_by`` layered under the
       buckets): equi-joins/aggs on the bucket column run Exchange-free
-      between co-bucketed tables.
-    * ``sorted`` — range-partition + sort on ``sort_cols``: row-group
-      stats prune range predicates on the leading sort key.
-    * ``zorder`` — Morton-interleaved multi-column clustering via
-      :func:`write_zordered_zone`: box predicates on ANY clustered
-      column prune (domains recorded for incremental writers).
-    * ``flat`` — plain parquet (dimensions, small outputs).
+      between co-bucketed tables read back through the catalog.
+    * ``flat`` — plain parquet, optionally directory-partitioned by
+      ``partition_by`` (dimensions, small outputs, date-pruned facts).
 
     Returns the recorded spec. At 100 TB the choice of layout is the
     dominant read-cost knob; recording it beside the commit manifest
-    makes the zone self-describing — `read_zone_tables` /
-    `zone_equijoin` reconstruct the right plan from disk alone.
+    makes the zone self-describing — :func:`read_zone_tables`
+    reconstructs the right read from disk alone.
     """
     import os
 
@@ -247,20 +141,6 @@ def write_zone_table(
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,
         }
-    elif layout == "sorted":
-        assert sort_cols, "sorted layout needs sort_cols"
-        (
-            df.repartitionByRange(n_ranges, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        spec["sort_cols"] = list(sort_cols)
-    elif layout == "zorder":
-        assert zorder_cols, "zorder layout needs zorder_cols"
-        domains = write_zordered_zone(df, path, list(zorder_cols))
-        spec["zorder_cols"] = list(zorder_cols)
-        spec["zorder_domains"] = {c: list(d) for c, d in domains.items()}
     elif layout == "flat":
         writer = df.write.mode("overwrite")
         if part_cols:
@@ -290,95 +170,3 @@ def read_zone_tables(
 
             out[name] = spark.read.parquet(os.path.join(zone_dir, name))
     return out
-
-
-def _parse_bytes(v: str) -> int:
-    """Spark size-string → bytes ("10485760", "10m", "10MB", "-1").
-    An unparseable value RAISES (ADVICE r9): silently substituting a
-    default threshold would change the join plan with no signal."""
-    s = str(v).strip().lower().removesuffix("b")
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    mult = units.get(s[-1:], 1)
-    if mult != 1:
-        s = s[:-1]
-    try:
-        return int(float(s)) * mult
-    except ValueError:
-        raise ValueError(
-            f"unparseable Spark size string {v!r} "
-            "(expected e.g. '10485760', '10m', '10MB', '-1')"
-        ) from None
-
-
-def zone_equijoin(
-    spark: SparkSession,
-    zone_dir: str,
-    left: str,
-    right: str,
-    on: str,
-) -> DataFrame:
-    """Equi-join two zone tables with the plan the recorded layouts
-    earn: when both sides are bucketed on the join key with the same
-    bucket count, the catalog read alone makes the join Exchange-free
-    (plan-asserted in tests) — the catalog read carries the bucket
-    metadata, so the co-bucketed plan needs no hint here. A
-    non-co-bucketed pair of FACT-sized tables gets an explicit
-    SHUFFLE_HASH hint: such a join must shuffle anyway, and the
-    shuffle-hash build skips the sort-merge sorts and can never
-    misestimate a fact table into a broadcast. But the hint is GATED
-    on both sides' on-disk bytes exceeding the session broadcast
-    threshold (ADVICE r8): when either side is a small dimension
-    table, suppressing broadcast would be a regression — no hint is
-    applied and AQE broadcasts the small side as usual."""
-    import os
-
-    dfs = read_zone_tables(spark, zone_dir, [left, right])
-    specs = [zone_table_layout(zone_dir, n) for n in (left, right)]
-    co_bucketed = all(
-        s and s.get("bucket_col") == on and s.get("n_buckets") for s in specs
-    ) and specs[0]["n_buckets"] == specs[1]["n_buckets"]
-    if co_bucketed:
-        # bucket metadata already removes both Exchanges
-        return dfs[left].join(dfs[right], on)
-
-    def _zone_bytes(name: str, spec: dict | None) -> int | None:
-        """On-disk data bytes, or None when the table path is missing
-        or holds no data files — 'size unknown', NOT 'size 0' (ADVICE
-        r9: a wrong manifest path must not silently flip the gate to
-        the dimension-sized branch)."""
-        path = (spec or {}).get("path") or os.path.join(zone_dir, name)
-        if not os.path.isdir(path):
-            return None
-        total = 0
-        seen = False
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                total += os.path.getsize(os.path.join(root, f))
-                seen = True
-        return total if seen else None
-
-    threshold = _parse_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    )
-    sizes = [_zone_bytes(n, s) for n, s in zip((left, right), specs)]
-    for n, b in zip((left, right), sizes):
-        if b is None:
-            import warnings
-
-            warnings.warn(
-                f"zone_equijoin: no data files found for zone table "
-                f"{n!r} under {zone_dir!r} — treating its size as "
-                "unknown (fact-sized) for the SHUFFLE_HASH gate",
-                stacklevel=2,
-            )
-    if threshold > 0 and any(
-        b is not None and b < threshold for b in sizes
-    ):
-        # KNOWN dimension-sized side present: no hint, let AQE pick
-        # broadcast; unknown sizes stay on the fact-sized branch
-        # (SHUFFLE_HASH can never misestimate a fact table into a
-        # broadcast, so unknown→hint is the safe default)
-        return dfs[left].join(dfs[right], on)
-    return dfs[left].join(dfs[right].hint("SHUFFLE_HASH"), on)

@@ -1,7 +1,6 @@
 from .pipeline import (
     read_manifest_zone,
     vacuum_manifest_zone,
-    run_bucketed_ingest_manifest,
     run_event_driven_pipeline,
 )
 from .windows import (
@@ -18,7 +17,6 @@ __all__ = [
     "interval_joined_events_stream",
     "read_manifest_zone",
     "vacuum_manifest_zone",
-    "run_bucketed_ingest_manifest",
     "run_event_driven_pipeline",
     "sessionized_stream",
     "watermarked_daily_rollup",

@@ -262,8 +262,8 @@ def _csv_stream(spark: SparkSession, schema, path: str) -> DataFrame:
 
 # --- epoch manifest: the commit-log half of an ACID table format -------
 #
-# The streamed validated zone (and every model / corpus zone built on
-# the same discipline) is exactly-once at WRITE time with no new
+# Every streamed zone (the event pipeline's landed zone, and every
+# model / corpus zone) is exactly-once at WRITE time with no new
 # dependency (ROADMAP r5 #1) — Structured Streaming's end-to-end
 # guarantee needs a replayable source plus an idempotent sink, and the
 # epoch commit is that sink:
@@ -310,7 +310,7 @@ def _commit_epoch(zone_dir: str, name: str, epoch_id: int, n_rows: int) -> None:
     conditional PUT (`If-None-Match: *` — first writer wins, the
     semantics the rename gives here), or records the epoch in a
     transactional side table. Pass a replacement as ``commit_fn`` to
-    :func:`run_bucketed_ingest_manifest`; the contract is: durably
+    :func:`_land_epoch`; the contract is: durably
     publish (name, epoch_id) exactly once, visible to
     :func:`committed_epochs` afterwards, never partially.
     """
@@ -2114,105 +2114,6 @@ def stream_zone_freshness(
     return out
 
 
-def run_bucketed_ingest_manifest(
-    spark: SparkSession,
-    raw_dir: str,
-    zone_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 32,
-    table_prefix: str = "streamed_m_",
-    commit_fn=None,
-) -> dict[str, str]:
-    """Stream the raw zone into the bucketed validated zone, exactly
-    once: micro-batches land ``bucketBy(n_buckets, order_id)`` in
-    catalog tables ``{table_prefix}orders`` / ``{table_prefix}
-    order_items``, so downstream fact⋈fact joins over the streamed zone
-    run Exchange-free however many epochs have landed.
-
-    Two file-source streams run Task-1-style validation:
-
-    1. ``orders`` runs first to completion (``availableNow``) — the
-       Task1→Task2 sequencing of the reference's state machine means
-       an item file never precedes its order file within an upload
-       batch (``StateMachine.txt``);
-    2. ``order_items`` then validates each micro-batch's referential
-       integrity against the *zone's own* landed orders (a
-       stream-static join — the static side is re-read per batch, so
-       it sees every order landed so far).
-
-    The checkpoint makes file processing exactly-once across restarts
-    (operator S4), and every micro-batch is an atomically-committed
-    ``_epoch`` partition (:func:`_land_epoch`), so the sink is
-    idempotent too: a crash between append and commit leaves an orphan
-    partition that the replay scrubs and readers prune, never
-    duplicate rows. ``commit_fn`` replaces the commit primitive
-    (:func:`_commit_epoch`). Read with :func:`read_manifest_zone`;
-    fold accumulated epochs with :func:`compact_manifest_zone`.
-    Returns ``{name: catalog_table}``.
-    """
-    zones = {
-        n: _Zone(n, f"{table_prefix}{n}", zone_dir, n_buckets, "order_id")
-        for n in ("orders", "order_items")
-    }
-    tables = {n: z.table for n, z in zones.items()}
-
-    def land_orders(new_orders: DataFrame, epoch_id: int) -> None:
-        if new_orders.isEmpty():
-            return
-        _land_epoch(
-            spark, validate.validate_orders(new_orders), zones["orders"],
-            epoch_id, commit_fn=commit_fn,
-        )
-
-    def land_items(new_items: DataFrame, epoch_id: int) -> None:
-        if new_items.isEmpty():
-            return
-        # items validate against the landed orders zone — if no orders
-        # ever landed (empty raw orders dir on a first run) the table
-        # does not exist; fail with the actual precondition rather
-        # than an opaque AnalysisException from spark.table
-        if not spark.catalog.tableExists(tables["orders"]):
-            raise RuntimeError(
-                f"bucketed zone table {tables['orders']!r} does not "
-                "exist: the orders stream must land at least one "
-                "micro-batch before order_items can be validated "
-                "against it"
-            )
-        # the orders epochs landed on the micro-batch's cloned session;
-        # drop this session's cached file listing before reading
-        spark.catalog.refreshTable(tables["orders"])
-        landed_orders = read_manifest_zone(
-            spark, {"orders": tables["orders"]}, zone_dir
-        )["orders"]
-        _land_epoch(
-            spark,
-            validate.validate_order_items(new_items, landed_orders),
-            zones["order_items"],
-            epoch_id,
-            commit_fn=commit_fn,
-        )
-
-    # orders run to completion before items validate against the zone
-    for name, schema, land in (
-        ("orders", ORDERS_SCHEMA, land_orders),
-        ("order_items", ORDER_ITEMS_SCHEMA, land_items),
-    ):
-        _run_epochs(
-            spark,
-            _csv_stream(spark, schema, os.path.join(raw_dir, name)),
-            os.path.join(checkpoint_dir, name),
-            [zones[name]],
-            land,
-        )
-    # epochs landed on cloned micro-batch sessions whose catalog-cache
-    # invalidation does not propagate here — refresh so callers see
-    # every landed epoch
-    for table in tables.values():
-        if spark.catalog.tableExists(table):
-            spark.catalog.refreshTable(table)
-    return tables
-
-
 def compact_manifest_zone(
     spark: SparkSession,
     table: str,
@@ -2224,9 +2125,11 @@ def compact_manifest_zone(
     extra_partition_cols: tuple[str, ...] = (),
 ) -> str:
     """Fold a manifest zone table's accumulated epoch partitions into
-    ONE — the small-files maintenance an epoch-per-append zone
-    eventually needs: every epoch lands ``n_buckets`` new files, and a
-    bucket holding hundreds of epoch files pays per-file open/footer
+    ONE (the catalog zones that :func:`run_embedding_ingest` and
+    :func:`run_corpus_ingest` land through :func:`_land_epoch`) — the
+    small-files maintenance an epoch-per-append zone eventually
+    needs: every epoch lands ``n_buckets`` new files, and a bucket
+    holding hundreds of epoch files pays per-file open/footer
     cost and a per-file sort-merge on every read. Only COMMITTED
     epochs are read (a crash orphan is dropped by the rewrite instead
     of lingering), and the manifest is reset to a single marker
@@ -2419,7 +2322,8 @@ def read_manifest_zone(
     zone_dir: str,
     as_of_epoch: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Exactly-once read of a manifest zone, at ZERO steady-state cost.
+    """Exactly-once read of a manifest zone (one that
+    :func:`_land_epoch` commits), at ZERO steady-state cost.
 
     Uncommitted (orphan) epochs exist only in the window between a
     crash mid-epoch and its replay; they are detected by a driver-side
@@ -2428,7 +2332,7 @@ def read_manifest_zone(
     bucketed scan, no dedup aggregate, no filter. When orphans exist,
     a NOT-IN filter on the tiny orphan list partition-prunes exactly
     those directories; the scan's bucket metadata survives either way,
-    so downstream ``order_id`` joins stay Exchange-free.
+    so downstream joins on the bucket column stay Exchange-free.
 
     ``as_of_epoch`` is the manifest's snapshot read (the time-travel
     half of the commit log): only epochs ≤ the given id are visible —
@@ -2484,7 +2388,7 @@ def run_corpus_ingest(
     composable gates instead of choosing between three overlapping
     functions. Every arriving micro-batch flows through the enabled
     gates in order and lands through the same atomic ``_epoch``
-    manifest commits as :func:`run_bucketed_ingest_manifest`:
+    manifest commits (:func:`_land_epoch`) as every streamed zone:
 
     * ``decontaminate_probes`` — the FIRST gate (late r14): arriving
       text is rewritten by ``text.decontaminate_spans`` against the

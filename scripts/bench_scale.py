@@ -183,86 +183,6 @@ def main() -> None:
                     ).format("noop").save()
                     best = min(best, time.perf_counter() - t0)
                 timings[f"{name}_shipsorted"] = round(best, 3)
-
-            # Z-order zone: Morton-cluster lineitem on (l_shipdate,
-            # l_partkey) — the MULTI-dimensional sibling of the
-            # shipdate sort above. Probe: a 2-dim box aggregate
-            # (one ship-quarter × one part-key band). The sorted
-            # layout prunes only the date dimension; the z-layout
-            # keeps row-group min/max tight on BOTH, so the same
-            # probe reads fewer row groups as either predicate
-            # narrows. Same probe also timed on the raw layout.
-            from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-                write_zordered_zone,
-            )
-
-            zdir = tempfile.mkdtemp(prefix="scale_zorder_zone_")
-            try:
-                li_raw = spark.read.parquet(f"{tmp}/lineitem.parquet")
-                pk_max = li_raw.agg(F.max("l_partkey")).first()[0]
-                t0 = time.perf_counter()
-                write_zordered_zone(
-                    li_raw, f"{zdir}/lineitem.parquet",
-                    ["l_shipdate", "l_partkey"], n_ranges=64, bits=12,
-                    row_group_bytes=8 * 1024 * 1024,
-                )
-                timings["zorder_write"] = round(time.perf_counter() - t0, 3)
-
-                # At benchable SFs every one of these scans finishes in
-                # ~0.2 s of pure scheduling — wall-clock cannot see the
-                # layout. Measure what a 100 TB cluster would actually
-                # skip: per-ROW-GROUP min/max stats from the parquet
-                # footers, counting the groups a probe MUST read. This
-                # is the exact statistic Spark's parquet reader prunes
-                # on, so groups-read/groups-total IS the scan fraction
-                # at any scale.
-                import datetime as _dt
-                import glob as _glob
-
-                import pyarrow.parquet as _pq
-
-                q_lo, q_hi = _dt.date(1996, 1, 1), _dt.date(1996, 4, 1)
-                pk_cut = pk_max // 10
-
-                def rowgroups_hit(src, want_date, want_part):
-                    total = hit = 0
-                    for fp in _glob.glob(f"{src}/*.parquet"):
-                        meta = _pq.ParquetFile(fp).metadata
-                        names = {
-                            meta.row_group(0).column(i).path_in_schema: i
-                            for i in range(meta.num_columns)
-                        }
-                        for g in range(meta.num_row_groups):
-                            rg = meta.row_group(g)
-                            total += 1
-                            ok = True
-                            if want_date:
-                                st = rg.column(names["l_shipdate"]).statistics
-                                lo = st.min.date() if hasattr(st.min, "date") else st.min
-                                hi = st.max.date() if hasattr(st.max, "date") else st.max
-                                ok &= lo < q_hi and hi >= q_lo
-                            if ok and want_part:
-                                st = rg.column(names["l_partkey"]).statistics
-                                ok &= st.min <= pk_cut
-                            hit += ok
-                    return hit, total
-
-                for pname, wd, wp in (
-                    ("date", True, False),
-                    ("part", False, True),
-                    ("box", True, True),
-                ):
-                    for label, src in (
-                        ("raw", f"{tmp}/lineitem.parquet"),
-                        ("shipsorted", f"{sorted_dir}/lineitem.parquet"),
-                        ("zordered", f"{zdir}/lineitem.parquet"),
-                    ):
-                        h, tot = rowgroups_hit(src, wd, wp)
-                        timings[f"{pname}_rowgroups_{label}"] = round(
-                            h / tot, 4
-                        )
-            finally:
-                shutil.rmtree(zdir, ignore_errors=True)
         finally:
             shutil.rmtree(sorted_dir, ignore_errors=True)
 

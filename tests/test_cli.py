@@ -25,11 +25,12 @@ def test_help_lists_validated_layout_choices():
     out = _cli("--help")
     assert out.returncode == 0, out.stderr
     assert "--validated-layout" in out.stdout
-    assert "{flat,bucketed,zorder}" in out.stdout
+    assert "{flat,bucketed}" in out.stdout
     assert "--materialize-validated" not in out.stdout
 
 
 def test_unknown_validated_layout_exits_2():
-    out = _cli("--raw", "r", "--out", "o", "--validated-layout", "hilbert")
-    assert out.returncode == 2
-    assert "invalid choice: 'hilbert'" in out.stderr
+    for layout in ("hilbert", "zorder"):
+        out = _cli("--raw", "r", "--out", "o", "--validated-layout", layout)
+        assert out.returncode == 2
+        assert f"invalid choice: '{layout}'" in out.stderr

@@ -1,7 +1,7 @@
 """Unit tests for the round-6 additions: the corpus-self-trained
 unigram-LM perplexity filter (CCNet-style quality signal) and the
-exact per-source quota sampler (domain balancing), plus the z-order
-validated-zone pipeline option.
+exact per-source quota sampler (domain balancing), plus the
+validated-zone layouts of the batch pipeline.
 
 The quota sampler's gate is a full pure-Python mirror of the pipeline
 (hash, pre-filter, rank) — the same independent-recomputation
@@ -185,50 +185,23 @@ def _write_raw(tmp_path):
     return raw
 
 
-def test_pipeline_zorder_zone(spark, tmp_path):
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
-        pipeline_batch,
-    )
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        zone_table_layout,
-    )
-
-    raw = _write_raw(tmp_path)
-    paths = pipeline_batch.run(
-        spark, str(raw), str(tmp_path / "out"), validated_layout="zorder"
-    )
-    vdir = paths["validated"]
-    orders = spark.read.parquet(vdir + "/orders")
-    items = spark.read.parquet(vdir + "/order_items")
-    assert orders.count() == 40 and items.count() == 40
-    # the clustering domains live in the zone manifest
-    spec_o = zone_table_layout(vdir, "orders")
-    spec_i = zone_table_layout(vdir, "order_items")
-    assert spec_o["layout"] == spec_i["layout"] == "zorder"
-    assert set(spec_o["zorder_domains"]) == {"order_date", "user_id"}
-    assert set(spec_i["zorder_domains"]) == {"order_id", "product_id"}
-    lo, hi = spec_o["zorder_domains"]["user_id"]
-    assert lo == 100.0 and hi == 106.0
-    assert zone_table_layout(vdir, "products")["layout"] == "flat"
-    # KPIs still produced alongside the clustered zone
-    assert spark.read.parquet(paths["category_kpi"]).count() > 0
-
-
 def test_pipeline_unknown_validated_layout_raises(spark, tmp_path):
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
         pipeline_batch,
     )
 
     raw = _write_raw(tmp_path)
-    with pytest.raises(ValueError, match="unknown validated_layout"):
-        pipeline_batch.run(
-            spark, str(raw), str(tmp_path / "out"), validated_layout="hilbert"
-        )
-    # the check runs before any Spark work: nothing was written
-    assert not (tmp_path / "out").exists()
+    # "zorder" was a layout once; it is now as unknown as any other name
+    for layout in ("hilbert", "zorder"):
+        with pytest.raises(ValueError, match="unknown validated_layout"):
+            pipeline_batch.run(
+                spark, str(raw), str(tmp_path / "out"), validated_layout=layout
+            )
+        # the check runs before any Spark work: nothing was written
+        assert not (tmp_path / "out").exists()
 
 
-@pytest.mark.parametrize("layout", ["flat", "bucketed", "zorder"])
+@pytest.mark.parametrize("layout", ["flat", "bucketed"])
 def test_pipeline_validated_zone_round_trips_kpis(spark, tmp_path, layout):
     """Every validated_layout is a faithful copy of the validated star
     schema: the KPI tables a layout run builds from its zone read back

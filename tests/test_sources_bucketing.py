@@ -441,102 +441,18 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
-def test_zorder_value_matches_reference_interleave(spark):
-    """Morton interleave == the textbook bit-interleave on a grid of
-    sample points, and z-locality holds: the four quadrants of the
-    (x, y) plane occupy the four top-bit-pair classes."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.functions.core import (
-        zorder_value,
-    )
-
-    bits = 4
-    pts = [(x, y) for x in range(16) for y in range(16)]
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = {
-        (r["x"], r["y"]): r["z"]
-        for r in df.withColumn(
-            "z", zorder_value([F.col("x"), F.col("y")], bits=bits)
-        ).collect()
-    }
-
-    def ref(x, y):
-        z = 0
-        for j in range(bits):
-            z |= ((x >> j) & 1) << (2 * j)
-            z |= ((y >> j) & 1) << (2 * j + 1)
-        return z
-
-    assert got == {(x, y): ref(x, y) for x, y in pts}
-    # quadrant property: top bit pair identifies the (x, y) half-planes
-    for (x, y), z in got.items():
-        assert (z >> (2 * bits - 2)) & 1 == (x >> (bits - 1))
-        assert (z >> (2 * bits - 1)) & 1 == (y >> (bits - 1))
-
-
-def test_write_zordered_zone_clusters_both_dimensions(spark, tmp_path):
-    """The z-ordered layout keeps BOTH clustered columns' min/max
-    tight per output file: a box predicate on either dimension maps
-    to a strict subset of files (checked via per-file min/max — the
-    same statistics parquet row-group pruning applies), which the
-    single-column sorted layout only achieves for its sort key."""
-    import itertools
-
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        write_zordered_zone,
-    )
-
-    rows = [(x, y, float(x * y)) for x, y in
-            itertools.product(range(64), range(64))]
-    df = spark.createDataFrame(rows, "x long, y long, v double")
-    path = str(tmp_path / "zzone")
-    domains = write_zordered_zone(df, path, ["x", "y"], n_ranges=8, bits=6)
-    assert domains == {"x": (0.0, 63.0), "y": (0.0, 63.0)}
-    back = spark.read.parquet(path)
-    assert back.count() == 64 * 64
-    per_file = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("x"), F.max("x"), F.min("y"), F.max("y"))
-        .collect()
-    )
-    assert len(per_file) >= 4
-    # z-locality discriminators (a file straddling a quadrant boundary
-    # may legitimately span one full dimension — at most a handful of
-    # boundary files exist, so the claims are distributional):
-    # 1. a corner box query overlaps few files' bounding boxes — the
-    #    pruning effect row-group stats deliver; an unclustered layout
-    #    overlaps ALL of them
-    overlapping = [
-        r for r in per_file
-        if r["min(x)"] <= 7 and r["min(y)"] <= 7
-    ]
-    assert len(overlapping) <= len(per_file) // 2, per_file
-    # 2. BOTH dimensions stay tight for most files — a one-column sort
-    #    fails this on its secondary dimension (y spans the full
-    #    domain in every x-sorted file)
-    tight_y = [r for r in per_file if r["max(y)"] - r["min(y)"] <= 48]
-    tight_x = [r for r in per_file if r["max(x)"] - r["min(x)"] <= 48]
-    assert len(tight_y) >= len(per_file) // 2, per_file
-    assert len(tight_x) >= len(per_file) // 2, per_file
-
-
 def test_unified_zone_metadata_drives_join_and_prune(spark, tmp_path):
     """VERDICT r6 #7: ONE writer records each zone table's physical
     layout beside the commit manifest, and readers reconstruct the
-    right plan from the manifest ALONE — zone_equijoin goes
-    Exchange-free off the recorded co-bucketing (no call-site bucket
-    knowledge), and the sorted table's recorded sort_cols name the
-    prunable predicate column, whose per-file parquet stats are tight
-    enough that a narrow range touches a minority of files."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
+    right read from the manifest ALONE — read_zone_tables returns the
+    bucketed tables through the catalog, so joining them on the
+    recorded bucket column is Exchange-free with no call-site bucket
+    knowledge, and a flat, date-partitioned table comes back as a path
+    read whose predicate on the recorded partition column prunes
+    directories."""
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        prunable_cols,
         read_zone_tables,
         write_zone_table,
-        zone_equijoin,
         zone_table_layout,
     )
 
@@ -564,51 +480,31 @@ def test_unified_zone_metadata_drives_join_and_prune(spark, tmp_path):
             table="uzm_items", bucket_col="order_id", n_buckets=4,
         )
         spec = write_zone_table(
-            daily, zone, "daily", layout="sorted",
-            sort_cols=["order_date"], n_ranges=8,
+            daily, zone, "daily", layout="flat", partition_by="order_date"
         )
         # layout round-trips from disk
         assert zone_table_layout(zone, "orders")["n_buckets"] == 4
-        assert zone_table_layout(zone, "daily")["sort_cols"] == ["order_date"]
-        assert prunable_cols(spec) == ["order_date"]
+        assert zone_table_layout(zone, "daily") == spec
+        assert spec["partition_by"] == ["order_date"]
 
+        dfs = read_zone_tables(spark, zone, ["order_items", "orders", "daily"])
         # Exchange-free join decided by the manifest, not the caller
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = zone_equijoin(
-                spark, zone, "order_items", "orders", on="order_id"
-            )
+            joined = dfs["order_items"].join(dfs["orders"], "order_id")
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, plan
             assert joined.count() == 1200
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
-        # prune from the manifest: the recorded sort column's per-file
-        # stats are tight — a one-month predicate intersects a strict
-        # minority of the sorted files
-        col = prunable_cols(zone_table_layout(zone, "daily"))[0]
-        files = glob.glob(os.path.join(zone, "daily", "part-*.parquet"))
-        assert len(files) >= 4
-        touching = 0
-        for fp in files:
-            md = pq.ParquetFile(fp).metadata
-            idx = md.schema.names.index(col)
-            lo = min(
-                md.row_group(g).column(idx).statistics.min
-                for g in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(g).column(idx).statistics.max
-                for g in range(md.num_row_groups)
-            )
-            if not (hi < "2025-06-01" or lo > "2025-06-28"):
-                touching += 1
-        assert touching <= len(files) // 2, (touching, len(files))
-
-        # layout-aware reader returns catalog-backed bucketed tables
-        dfs = read_zone_tables(spark, zone, ["orders", "daily"])
+        # prune from the manifest: a predicate on the recorded
+        # partition column is a partition filter of the path read
+        june = dfs["daily"].filter(F.col(spec["partition_by"][0]) == "2025-06-01")
+        plan = june._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters: [isnotnull(order_date" in plan, plan
+        assert june.count() == 9  # 2025-06-01 recurs once per 12 months
         assert dfs["orders"].count() == 400
         assert dfs["daily"].count() == 3000
     finally:
@@ -620,15 +516,15 @@ def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
     """pipeline_batch's bucketed validated zone records its layout spec
     in the zone manifest (write_zone_table publishes it), so a later
     reader session needs NO call-site knowledge:
-    zone_table_layout round-trips the spec and zone_equijoin joins the
-    facts Exchange-free from the manifest alone."""
+    zone_table_layout round-trips the spec, and the read_zone_tables
+    facts join Exchange-free from the manifest alone."""
     import os
 
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import (
         pipeline_batch,
     )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        zone_equijoin,
+        read_zone_tables,
         zone_table_layout,
     )
 
@@ -648,9 +544,8 @@ def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = zone_equijoin(
-                spark, vdir, "order_items", "orders", on="order_id"
-            )
+            dfs = read_zone_tables(spark, vdir, ["order_items", "orders"])
+            joined = dfs["order_items"].join(dfs["orders"], "order_id")
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, plan
             assert joined.count() > 0
@@ -659,126 +554,6 @@ def test_pipeline_batch_zone_is_self_describing(spark, tmp_path):
     finally:
         for t in ("validated_orders", "validated_order_items"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_zone_equijoin_non_cobucketed_takes_shuffle_hash(spark, tmp_path):
-    """ADVICE r7: when the manifest says the sides are NOT co-bucketed
-    on the join key, zone_equijoin's spec check must actually decide
-    the plan — the fall-through gets an explicit SHUFFLE_HASH build
-    (a fact⋈fact join must shuffle anyway; the hash build skips the
-    sort-merge sorts and can never misestimate a fact into a
-    broadcast)."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        write_zone_table,
-        zone_equijoin,
-    )
-
-    zdir = str(tmp_path / "zone")
-    a = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_zone_table(a, zdir, "ta", layout="flat")
-    write_zone_table(b, zdir, "tb", layout="flat")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = zone_equijoin(spark, zdir, "ta", "tb", on="k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan, plan
-        assert joined.count() == 200
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_zone_equijoin_small_side_lets_aqe_broadcast(spark, tmp_path):
-    """ADVICE r8: the non-co-bucketed SHUFFLE_HASH hint is gated on
-    both sides being fact-sized — when one side is a tiny dimension
-    table (under the session broadcast threshold), no hint is applied
-    and the planner broadcasts it as usual."""
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        write_zone_table,
-        zone_equijoin,
-    )
-
-    zdir = str(tmp_path / "zone")
-    fact = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    dim = spark.range(20).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_zone_table(fact, zdir, "fact", layout="flat")
-    write_zone_table(dim, zdir, "dim", layout="flat")
-    joined = zone_equijoin(spark, zdir, "fact", "dim", on="k")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert joined.count() == 20
-
-
-def test_zone_equijoin_bad_threshold_raises(spark, tmp_path):
-    """ADVICE r9: an unparseable autoBroadcastJoinThreshold raises
-    instead of silently substituting a default that changes the
-    join plan with no signal."""
-    import pytest
-
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        _parse_bytes,
-    )
-
-    with pytest.raises(ValueError, match="unparseable"):
-        _parse_bytes("lots")
-    assert _parse_bytes("10485760") == 10 * (1 << 20)
-    assert _parse_bytes("10m") == 10 * (1 << 20)
-    assert _parse_bytes("10MB") == 10 * (1 << 20)
-    assert _parse_bytes("-1") == -1
-
-
-def test_zone_equijoin_unknown_size_keeps_hint_and_warns(
-    spark, tmp_path
-):
-    """ADVICE r9: a zone table whose manifest path is missing/empty is
-    'size unknown', not 'size 0' — the SHUFFLE_HASH gate keeps the
-    fact-sized branch (the hint) and warns, instead of silently
-    flipping to the no-hint plan."""
-    import json
-    import os
-    import warnings
-
-    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.files import (
-        write_zone_table,
-        zone_equijoin,
-    )
-
-    zdir = str(tmp_path / "zone")
-    a = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_zone_table(a, zdir, "ta", layout="flat")
-    write_zone_table(b, zdir, "tb", layout="flat")
-    # point tb's manifest path somewhere empty: size becomes unknown
-    mpath = os.path.join(zdir, "_manifest", "tb", "_layout.json")
-    with open(mpath) as f:
-        doc = json.load(f)
-    doc["path"] = str(tmp_path / "nowhere")
-    with open(mpath, "w") as f:
-        json.dump(doc, f)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        with warnings.catch_warnings(record=True):
-            warnings.simplefilter("always")
-            joined = zone_equijoin(spark, zdir, "ta", "tb", on="k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_write_zone_table_partition_by_typo_raises(spark, tmp_path):

@@ -1,8 +1,8 @@
-"""Streaming ingest into the bucketed validated zone (ROADMAP #2):
-micro-batches land `bucketBy(order_id)` as atomically-committed epochs
-so downstream fact⋈fact joins over the streamed zone run Exchange-free
-— the streaming half of the batch pipeline's
-``validated_layout="bucketed"``."""
+"""Epoch-manifest zones: micro-batches land through ``_land_epoch`` as
+atomically-committed ``_epoch`` partitions of a ``bucketBy`` catalog
+table, so a replayed epoch never lands twice and joins on the bucket
+column over a multi-epoch zone run Exchange-free. The corpus-ingest
+gates below land their model zones the same way."""
 
 from __future__ import annotations
 
@@ -10,118 +10,74 @@ import os
 
 from pyspark.sql import functions as F
 
-from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
-    read_manifest_zone,
-    run_bucketed_ingest_manifest,
-)
-
 from test_streaming import ITEMS1_CSV, ITEMS2_CSV, ORDERS_CSV, _write
-
-# order 4 arrives in the second upload batch, with its item
-ORDERS2_CSV = """order_id,user_id,status,created_at,returned_at,shipped_at,delivered_at,num_of_item
-4,103,delivered,2025-03-10T08:00:00,,2025-03-10T10:00:00,2025-03-11T09:00:00,1
-"""
-
-ITEMS3_CSV = """id,order_id,user_id,product_id,status,created_at,shipped_at,delivered_at,returned_at,sale_price
-14,4,103,1,delivered,2025-03-10T08:00:00,2025-03-10T10:00:00,2025-03-11T09:00:00,,10.0
-15,999,999,1,delivered,2025-03-10T08:00:00,,,,10.0
-"""
-
-
-def test_streamed_zone_lands_bucketed_and_joins_exchange_free(spark, tmp_path):
-    raw = str(tmp_path / "raw")
-    zone = str(tmp_path / "zone")
-    ckpt = str(tmp_path / "ckpt")
-    _write(f"{raw}/orders/part1.csv", ORDERS_CSV)
-    _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
-    _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV)
-
-    prefix = "streamed_zone_test_"
-
-    def ingest():
-        return run_bucketed_ingest_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
-        )
-
-    try:
-        tables = ingest()
-        z = read_manifest_zone(spark, tables, zone)
-        assert z["orders"].count() == 3 and z["order_items"].count() == 4
-
-        # second upload batch: order 4 + its item; item 15 references a
-        # nonexistent order and must be dropped by the stream-static
-        # referential check against the zone's own orders table
-        _write(f"{raw}/orders/part2.csv", ORDERS2_CSV)
-        _write(f"{raw}/order_items/part3.csv", ITEMS3_CSV)
-        ingest()
-        z = read_manifest_zone(spark, tables, zone)
-        assert z["orders"].count() == 4
-        assert z["order_items"].count() == 5
-        assert z["order_items"].filter(F.col("order_id") == 999).count() == 0
-
-        # exactly-once across restarts: re-running with no new files
-        # lands nothing
-        ingest()
-        assert read_manifest_zone(spark, tables, zone)[
-            "order_items"
-        ].count() == 5
-
-        # the whole point: the streamed zone join is Exchange-free even
-        # after several epochs per table (multiple file sets per bucket
-        # — Spark re-sorts within buckets, never re-shuffles)
-        z = read_manifest_zone(spark, tables, zone)
-        joined = (
-            z["order_items"]
-            .select("order_id", "id", "sale_price")
-            .hint("merge")
-            .join(z["orders"].select("order_id", "user_id"), "order_id")
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 5
-
-        # bucket files actually landed under the zone dir
-        assert os.path.isdir(os.path.join(zone, "orders"))
-        assert os.path.isdir(os.path.join(zone, "order_items"))
-    finally:
-        for t in (f"{prefix}orders", f"{prefix}order_items"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
     """Epoch manifest (ROADMAP r5 #1): micro-batches land as
     atomically-committed `_epoch` partitions. Steady-state reads are
-    bare bucketed scans (no dedup aggregate, Exchange-free joins); a
-    crash between append and commit leaves an orphan partition that
-    readers prune and the replay scrubs — never duplicate rows."""
-    import pyspark.sql.functions as F
-
+    bare bucketed scans (no dedup aggregate, Exchange-free joins, also
+    over several epochs per bucket); a crash between append and commit
+    leaves an orphan partition that readers prune and the replay
+    scrubs — never duplicate rows."""
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        validate,
+    )
+    from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.schemas import (
+        ORDER_ITEMS_SCHEMA,
+        ORDERS_SCHEMA,
+    )
     from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.streaming.pipeline import (
         _land_epoch,
         _Zone,
         committed_epochs,
         read_manifest_zone,
-        run_bucketed_ingest_manifest,
     )
 
     raw = str(tmp_path / "raw")
     zone = str(tmp_path / "zone")
-    ckpt = str(tmp_path / "ckpt")
     _write(f"{raw}/orders/part1.csv", ORDERS_CSV)
     _write(f"{raw}/order_items/part1.csv", ITEMS1_CSV)
     _write(f"{raw}/order_items/part2.csv", ITEMS2_CSV)
 
-    prefix = "manifest_zone_test_"
-    try:
-        tables = run_bucketed_ingest_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+    def upload(name, schema, part):
+        return (
+            spark.read.schema(schema).option("header", True)
+            .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
+            .csv(f"{raw}/{name}/{part}.csv")
         )
+
+    prefix = "manifest_zone_test_"
+    tables = {n: f"{prefix}{n}" for n in ("orders", "order_items")}
+    zones = {n: _Zone(n, t, zone, 4, "order_id") for n, t in tables.items()}
+    try:
+        for t in tables.values():
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        # orders land first; each items upload is its own epoch,
+        # validated against the orders landed so far
+        _land_epoch(
+            spark, validate.validate_orders(upload("orders", ORDERS_SCHEMA, "part1")),
+            zones["orders"], 0,
+        )
+        for ep, part in ((0, "part1"), (1, "part2")):
+            landed_orders = read_manifest_zone(
+                spark, {"orders": tables["orders"]}, zone
+            )["orders"]
+            _land_epoch(
+                spark,
+                validate.validate_order_items(
+                    upload("order_items", ORDER_ITEMS_SCHEMA, part), landed_orders
+                ),
+                zones["order_items"], ep,
+            )
+        assert committed_epochs(zone, "order_items") == {0, 1}
         z = read_manifest_zone(spark, tables, zone)
         assert z["orders"].count() == 3 and z["order_items"].count() == 4
 
         # steady state: no orphans → the read IS the table (no filter,
-        # no dedup) and the co-bucketed join is Exchange-free
+        # no dedup) and the co-bucketed join is Exchange-free even with
+        # several epoch file sets per bucket (Spark re-sorts within
+        # buckets, never re-shuffles)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -130,14 +86,16 @@ def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
                 .join(z["orders"].select("order_id", "user_id"), "order_id")
             )
             plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan, plan
             assert "Exchange" not in plan, plan
             assert joined.count() == 4
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
-        # checkpoint replay with no new files: nothing lands twice
-        run_bucketed_ingest_manifest(
-            spark, raw, zone, ckpt, n_buckets=4, table_prefix=prefix
+        # checkpoint replay of committed epochs: nothing lands twice
+        _land_epoch(
+            spark, upload("order_items", ORDER_ITEMS_SCHEMA, "part2"),
+            zones["order_items"], 1,
         )
         assert read_manifest_zone(spark, tables, zone)[
             "order_items"
@@ -179,25 +137,19 @@ def test_manifest_zone_exactly_once_and_crash_replay(spark, tmp_path):
 
         # restart replays epoch 999: the orphan partition is scrubbed
         # before re-append, so the rows land exactly once
-        _land_epoch(
-            spark, aligned.drop("_epoch"),
-            _Zone("order_items", tables["order_items"], zone, 4, "order_id"), 999,
-        )
+        _land_epoch(spark, aligned.drop("_epoch"), zones["order_items"], 999)
         assert 999 in committed_epochs(zone, "order_items")
         landed = read_manifest_zone(spark, tables, zone)["order_items"]
         assert landed.count() == 6
         assert landed.filter(F.col("id").isin(90, 91)).count() == 2
 
         # a second replay of the now-committed epoch is a no-op
-        _land_epoch(
-            spark, aligned.drop("_epoch"),
-            _Zone("order_items", tables["order_items"], zone, 4, "order_id"), 999,
-        )
+        _land_epoch(spark, aligned.drop("_epoch"), zones["order_items"], 999)
         assert read_manifest_zone(spark, tables, zone)[
             "order_items"
         ].count() == 6
     finally:
-        for t in (f"{prefix}orders", f"{prefix}order_items"):
+        for t in tables.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
