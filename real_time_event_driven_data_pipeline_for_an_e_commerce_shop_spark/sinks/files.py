@@ -20,6 +20,9 @@ the batch pipeline offers for the validated zone.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -48,16 +51,11 @@ ZONE_LAYOUT_FILE = "_layout.json"
 
 
 def _zone_meta_dir(zone_dir: str, name: str) -> str:
-    import os
-
     return os.path.join(zone_dir, "_manifest", name)
 
 
 def record_zone_layout(zone_dir: str, name: str, spec: dict) -> None:
     """Atomically publish a zone table's physical-layout spec."""
-    import json
-    import os
-
     d = _zone_meta_dir(zone_dir, name)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".{ZONE_LAYOUT_FILE}.tmp")
@@ -68,9 +66,6 @@ def record_zone_layout(zone_dir: str, name: str, spec: dict) -> None:
 
 def zone_table_layout(zone_dir: str, name: str) -> dict | None:
     """The recorded layout spec, or None for an unmanaged table."""
-    import json
-    import os
-
     p = os.path.join(_zone_meta_dir(zone_dir, name), ZONE_LAYOUT_FILE)
     if not os.path.isfile(p):
         return None
@@ -104,8 +99,6 @@ def write_zone_table(
     makes the zone self-describing — :func:`read_zone_tables`
     reconstructs the right read from disk alone.
     """
-    import os
-
     # normalize to a list: multi-level directory partitioning
     # (e.g. phase/shard for the curriculum zone) is one writer path
     part_cols = (
@@ -122,33 +115,27 @@ def write_zone_table(
             f"write_zone_table: partition_by={missing_parts!r} are not "
             f"columns of {name!r} (columns: {df.columns})"
         )
+    if layout not in ("flat", "bucketed"):
+        raise ValueError(f"unknown zone layout {layout!r}")
     path = os.path.join(zone_dir, name)
     spec: dict = {"layout": layout, "path": path, "format": "parquet"}
+    writer = df.write.mode("overwrite")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+        spec["partition_by"] = part_cols
     if layout == "bucketed":
         table = table or f"zone_{name}"
         df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-        writer = (
-            df.write.mode("overwrite").format("parquet").option("path", path)
-        )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-            spec["partition_by"] = part_cols
-        writer.bucketBy(n_buckets, bucket_col).sortBy(bucket_col).saveAsTable(
-            table
-        )
+        writer.format("parquet").option("path", path).bucketBy(
+            n_buckets, bucket_col
+        ).sortBy(bucket_col).saveAsTable(table)
         spec |= {
             "table": table,
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,
         }
-    elif layout == "flat":
-        writer = df.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-            spec["partition_by"] = part_cols
-        writer.parquet(path)
     else:
-        raise ValueError(f"unknown zone layout {layout!r}")
+        writer.parquet(path)
     record_zone_layout(zone_dir, name, spec)
     return spec
 
@@ -166,7 +153,5 @@ def read_zone_tables(
         if spec and spec.get("table"):
             out[name] = spark.table(spec["table"])
         else:
-            import os
-
             out[name] = spark.read.parquet(os.path.join(zone_dir, name))
     return out
